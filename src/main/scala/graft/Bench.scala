@@ -782,21 +782,18 @@ object Bench {
     val compactLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"n_failed":${failed.size},"failed":$failedJson,"calibration":${fmt(calibMedian)},"calibration_sched":${fmt(schedMedian)}$adjudication$watchJson$servedJson$intraJson,"sf":"$sfDir","cpus":"${GraftSession.cpus}"}"""
     println(detailLine)
     println(compactLine)
-    // Durability (r21, VERDICT r20 item #2): the compact line above is
-    // the ONLY record the driver grades, and it survives only as a
-    // ~2000-char stdout TAIL — r19's line head-truncated into
-    // parsed:null and the round lost its official perf comparison.
-    // Write the full line (compact first — line 1 parses standalone —
-    // then the detail line) to files as well, best-effort: stdout
-    // stays the contract, the files are the recovery path.
-    for (p <- Seq("bench_out.json", "/tmp/graft_bench_line.json")) {
-      try {
-        val w = new java.io.PrintWriter(new java.io.File(p), "UTF-8")
-        try { w.println(compactLine); w.println(detailLine) }
-        finally w.close()
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] could not write $p: ${e.getMessage}")
-      }
+    // Durability: the compact line above is the only record the run is
+    // graded on, and stdout keeps only a ~2000-char tail of it. Write the
+    // full line (compact first — line 1 parses standalone — then the
+    // detail line) to bench_out.json as well, best-effort: stdout stays
+    // the contract, the file in the working directory is the recovery
+    // path.
+    try {
+      val w = new java.io.PrintWriter(new java.io.File("bench_out.json"), "UTF-8")
+      try { w.println(compactLine); w.println(detailLine) }
+      finally w.close()
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] could not write bench_out.json: ${e.getMessage}")
     }
     spark.stop()
   }

@@ -46,9 +46,8 @@ object GraftSession {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       // Historical events.parquet layouts carried TIMESTAMP(NANOS),
       // which Spark has no type for; read as epoch-nanos long and let
-      // Tables.events convert to micros. (Current layouts write tz-less
-      // timestamp[us] → TIMESTAMP_NTZ; Tables.events/FileStreamSource
-      // normalize that too.)
+      // FileStreamSource convert to micros. (Current layouts write
+      // tz-less timestamp[us] → TIMESTAMP_NTZ, the type Tables declares.)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", enableUi.toString)
     val spark = (if (rocksDbState)

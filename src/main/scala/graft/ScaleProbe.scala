@@ -42,7 +42,7 @@ object ScaleProbe {
     // honor the harness convention (Bench reads the same variable)
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = java.nio.file.Files.createTempDirectory("graft_probe").toString
-    val docs = spark.read.parquet(s"$src/documents.parquet")
+    val docs = graft.sources.Tables.documents(spark, src)
     // max() is NULL on an empty table — treat it as "no ids taken"
     val maxRow = docs.agg(max(col("doc_id"))).head()
     val maxId = (if (maxRow.isNullAt(0)) -1L else maxRow.getLong(0)) + 1L
@@ -50,7 +50,7 @@ object ScaleProbe {
         docs.withColumn("doc_id", col("doc_id") + lit(i.toLong * maxId)))
       .reduce(_ union _)
     big.write.mode(SaveMode.Overwrite).parquet(s"$out/documents.parquet")
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
+    val emb = graft.sources.Tables.embeddings(spark, src)
     val maxVecRow = emb.agg(max(col("vec_id"))).head()
     val maxVec = (if (maxVecRow.isNullAt(0)) -1L else maxVecRow.getLong(0)) + 1L
     val dim = emb.select(size(col("embedding"))).head().getInt(0)

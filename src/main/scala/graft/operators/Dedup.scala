@@ -1235,10 +1235,13 @@ object Dedup {
     // fast path read ids with Row.getLong (NPE on null) while the
     // distributed loop silently dropped them through its joins — both
     // paths now agree that a malformed pair row contributes nothing.
+    // The filter runs AFTER the cast, and try_cast (a plain cast throws
+    // under ANSI) turns a non-numeric string id into a null, so such a
+    // row is dropped on both paths too.
     val p2 = pairs
-      .filter(col("id_a").isNotNull && col("id_b").isNotNull)
-      .select(col("id_a").cast("long").as("src"),
-        col("id_b").cast("long").as("dst"))
+      .select(col("id_a").try_cast("long").as("src"),
+        col("id_b").try_cast("long").as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
       .localCheckpoint(true)
     if (sys.env.contains("SPARK_GRAFT_CLUSTERS_DEBUG"))
       println(f"clusters edges_ckpt sec=${(System.nanoTime() - tEdges) / 1e9}%.3f at=${System.nanoTime() / 1e9}%.3f")
@@ -2288,13 +2291,22 @@ object Dedup {
     * call [[CacheTracker.persistTracked]] under a [[CacheTracker.scoped]]
     * bracket it expects to ride — scopes are thread-local (the bodies
     * used here only collect/checkpoint; they take no tracked
-    * persists). Failures propagate to the joining thread. */
+    * persists). Failures propagate to the joining thread.
+    *
+    * The body runs on a fresh named daemon thread started from the
+    * caller: Spark's local properties are inheritable, so its jobs
+    * carry the caller's (job group, scheduler pool, any span tags),
+    * which a pooled thread created for some earlier caller would not. */
   private def onThread[T](body: => T): () => T = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val f = Future(body)
-    () => Await.result(f, Duration.Inf)
+    val result = new java.util.concurrent.CompletableFuture[T]()
+    val t = new Thread(() =>
+      try result.complete(body)
+      catch { case e: Throwable => result.completeExceptionally(e) },
+      "graft-helper")
+    t.setDaemon(true)
+    t.start()
+    () => try result.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
   }
 
   /** The election TAIL alone — max-score keeper (min doc_id on ties)

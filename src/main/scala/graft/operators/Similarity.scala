@@ -1092,8 +1092,13 @@ object Similarity {
     * bucketed projection instead of paying [[knnGraph]]'s second
     * corpus plane-hash. `edges` should already be persisted by the
     * caller (it is read every iteration). Same quantized, N-scaled,
-    * bit-replayable update as [[knnPagerank]] — see that scaladoc. */
-  private[operators] def pagerankFromEdges(edges: DataFrame, ids: DataFrame,
+    * bit-replayable update as [[knnPagerank]] — see that scaladoc.
+    *
+    * Precondition: `edges.src ⊆ ids`. It is not checked. A source
+    * outside `ids` still sends rank along its out-edges (1 in the first
+    * round, then (1−d) + d·inflow), but it gets no output row and is
+    * not counted in N. */
+  private[graft] def pagerankFromEdges(edges: DataFrame, ids: DataFrame,
                                            iters: Int,
                                            damping: Double): DataFrame = {
     // both reused every iteration: persist the slim id frame and the

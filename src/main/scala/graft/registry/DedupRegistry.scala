@@ -3,7 +3,7 @@ package graft.registry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.Dedup
-import graft.sources.Tables
+import graft.sources.{StoredTable, Tables}
 
 /** D-family bindings. Since r12 the hash-sketch family (dd_minhash,
   * dd_simhash and their delta/composed forms) is ORACLE-checked too:
@@ -377,9 +377,9 @@ object DedupRegistry {
           // read-back restores the build's geometry EXPLICITLY
           // (ADVICE r18): the store above was built with the Dedup
           // family's 6×4×64 defaults
-          Dedup.embeddingLshStoreReadBack(s.read.parquet(paths.head),
+          Dedup.embeddingLshStoreReadBack(StoredTable.read(s, paths.head),
             nTables = 6, planesPerTable = 4, dim = 64),
-          s.read.parquet(paths(1))),
+          StoredTable.read(s, paths(1))),
         emb.filter(c % DeltaMod === 0), CosineTau).assignment
     }),
     "dd_minhash_dedup" -> ((s, d) => {
@@ -406,9 +406,9 @@ object DedupRegistry {
         (Seq(st.bits, st.graph, st.assignment, st.pairs), 0L)
       }
       Dedup.semanticKeepersBestDelta(
-        Dedup.SemanticBestStore(s.read.parquet(paths.head),
-          s.read.parquet(paths(1)), s.read.parquet(paths(2)),
-          s.read.parquet(paths(3)),
+        Dedup.SemanticBestStore(StoredTable.read(s, paths.head),
+          StoredTable.read(s, paths(1)), StoredTable.read(s, paths(2)),
+          StoredTable.read(s, paths(3)),
           CosineTau, SimilarityRegistry.K),
         emb.filter(c % DeltaMod === 0), CosineTau,
         SimilarityRegistry.K).assignment
@@ -435,14 +435,14 @@ object DedupRegistry {
         (Seq(Dedup.keeperStore(docs), Dedup.memberStore(docs)), 0L)
       }
       val r = Dedup.exactRetract(
-        s.read.parquet(paths.head), s.read.parquet(paths(1)),
+        StoredTable.read(s, paths.head), StoredTable.read(s, paths(1)),
         docs.filter(c % RetractMod === RetractRem).select("doc_id"))
       val pub = graft.sources.VersionedStore.write(
         exactRetractStoreDir.getOrElseUpdate(d,
           graft.sources.Sinks.TempDirs.create("graft_exact_rstore")),
         Seq("keepers" -> r.updatedKeepers, "members" -> r.updatedMembers))
-      val k1 = s.read.parquet(pub.head)
-      val m1 = s.read.parquet(pub(1))
+      val k1 = StoredTable.read(s, pub.head)
+      val m1 = StoredTable.read(s, pub(1))
       m1.join(k1, Seq("fp"))
         .select(org.apache.spark.sql.functions.col("doc_id"),
           org.apache.spark.sql.functions.col("keep_id"),
@@ -471,9 +471,9 @@ object DedupRegistry {
         (Seq(st.bits, st.graph, st.assignment, st.pairs), 0L)
       }
       Dedup.semanticBestRetract(
-        Dedup.SemanticBestStore(s.read.parquet(paths.head),
-          s.read.parquet(paths(1)), s.read.parquet(paths(2)),
-          s.read.parquet(paths(3)),
+        Dedup.SemanticBestStore(StoredTable.read(s, paths.head),
+          StoredTable.read(s, paths(1)), StoredTable.read(s, paths(2)),
+          StoredTable.read(s, paths(3)),
           CosineTau, SimilarityRegistry.K),
         emb.filter(c % RetractMod === RetractRem).select("vec_id"),
         CosineTau, SimilarityRegistry.K).assignment

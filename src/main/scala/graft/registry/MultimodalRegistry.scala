@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Multimodal
-import graft.sources.Tables
+import graft.sources.{StoredTable, Tables}
 
 /** F-family bindings. The oracle works on `text` directly: the payload
   * is its UTF-8 encoding and the corpus is pure ASCII (verified, and
@@ -82,7 +82,7 @@ object MultimodalRegistry {
       Multimodal.payloadNearDupDelta(
         Multimodal.PayloadNearDupStore(
           graft.operators.Dedup.ItemJaccardStore(
-            s.read.parquet(paths.head), s.read.parquet(paths(1)),
+            StoredTable.read(s, paths.head), StoredTable.read(s, paths(1)),
             NearDupTau),
           Multimodal.DefaultFrameLen, Multimodal.DefaultStride),
         docs.filter(c % DedupRegistry.DeltaMod === 0), NearDupTau).pairs

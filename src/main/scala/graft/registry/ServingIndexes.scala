@@ -12,7 +12,9 @@ import org.apache.spark.sql.DataFrame
   * index — so these bindings build the index exactly once per corpus
   * directory (the bench's warm-up pass pays it, outside the timed
   * passes; Verify pays it once before the output write) and every
-  * subsequent call reads the persisted parquet back.
+  * subsequent call reads the persisted parquet back through
+  * [[graft.sources.StoredTable.read]], with the schema recorded at
+  * build time (no schema-inference job per query).
   *
   * The indexes land in fresh temp directories — the harness binding.
   * A deployment would write them as managed BUCKETED tables on their
@@ -72,7 +74,7 @@ object ServingIndexes {
           // keeps the read parallel on the test box while cutting
           // per-query open overhead 4x; a deployment sizes this by
           // index bytes (writeBucketed's bucket count).
-          df.coalesce(8).write.mode("overwrite").parquet(path)
+          graft.sources.StoredTable.write(df.coalesce(8), path)
           path
         }
         (paths, payload)

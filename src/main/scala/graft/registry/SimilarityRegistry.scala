@@ -3,7 +3,7 @@ package graft.registry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.Similarity
-import graft.sources.Tables
+import graft.sources.{StoredTable, Tables}
 
 /** E-family bindings. Every E row is oracle-checked — the
   * hyperplanes and the seed codebook are deterministic, so the
@@ -169,7 +169,7 @@ object SimilarityRegistry {
         (Seq(graft.operators.Dedup.embeddingLshStore(Tables.embeddings(s, d),
           nTables = 4, planesPerTable = 6).bucketed), 0L)
       }
-      Similarity.knnLshIndexed(s.read.parquet(paths.head), probes(s, d), K)
+      Similarity.knnLshIndexed(StoredTable.read(s, paths.head), probes(s, d), K)
     }),
     "knn_ivf_served" -> ((s, d) => {
       val (paths, _) = ServingIndexes.once("ivf", d) {
@@ -177,7 +177,7 @@ object SimilarityRegistry {
         (Seq(idx.assigned, idx.centroids), 0L)
       }
       Similarity.knnIvfIndexed(
-        Similarity.IvfIndex(s.read.parquet(paths.head), s.read.parquet(paths(1))),
+        Similarity.IvfIndex(StoredTable.read(s, paths.head), StoredTable.read(s, paths(1))),
         probes(s, d), K, NProbe)
     }),
     // retraction reaching the VECTOR serving store (r18, VERDICT r17
@@ -200,7 +200,7 @@ object SimilarityRegistry {
       }
       val c = org.apache.spark.sql.functions.col("vec_id")
       val shrunk = Similarity.ivfRetract(
-        Similarity.IvfIndex(s.read.parquet(paths.head), s.read.parquet(paths(1))),
+        Similarity.IvfIndex(StoredTable.read(s, paths.head), StoredTable.read(s, paths(1))),
         Tables.embeddings(s, d).filter(c % RetractVecMod === 0)
           .select("vec_id"))
       Similarity.knnIvfIndexed(shrunk,
@@ -219,7 +219,7 @@ object SimilarityRegistry {
       val (paths, _) = ServingIndexes.once("knngraph", d) {
         (Seq(Similarity.knnGraph(Tables.embeddings(s, d), K)), 0L)
       }
-      s.read.parquet(paths.head)
+      StoredTable.read(s, paths.head)
         .filter(org.apache.spark.sql.functions.col("vec_id")
           % ProbeMod === 0)
     }),
@@ -238,7 +238,7 @@ object SimilarityRegistry {
         (Seq(idx.assigned, idx.centroids), 0L)
       }
       Similarity.knnIvfIndexed(
-        Similarity.IvfIndex(s.read.parquet(paths.head), s.read.parquet(paths(1))),
+        Similarity.IvfIndex(StoredTable.read(s, paths.head), StoredTable.read(s, paths(1))),
         probes(s, d), K, NProbe)
     }),
     // attribute-filtered serving (r13): the ONE persisted
@@ -253,7 +253,7 @@ object SimilarityRegistry {
         (Seq(idx.assigned, idx.centroids), 0L)
       }
       Similarity.knnIvfFilteredIndexed(
-        Similarity.IvfIndex(s.read.parquet(paths.head), s.read.parquet(paths(1))),
+        Similarity.IvfIndex(StoredTable.read(s, paths.head), StoredTable.read(s, paths(1))),
         probes(s, d), K, NProbe)
     }),
     "knn_ivfpq_served" -> ((s, d) => {
@@ -262,8 +262,8 @@ object SimilarityRegistry {
         (Seq(idx.indexed, idx.centroids, idx.seeds), 0L)
       }
       Similarity.knnIvfPqIndexed(
-        Similarity.IvfPqIndex(s.read.parquet(paths.head),
-          s.read.parquet(paths(1)), s.read.parquet(paths(2))),
+        Similarity.IvfPqIndex(StoredTable.read(s, paths.head),
+          StoredTable.read(s, paths(1)), StoredTable.read(s, paths(2))),
         probes(s, d), K, NProbe)
     }),
     "knn_pq_served" -> ((s, d) => {
@@ -272,7 +272,7 @@ object SimilarityRegistry {
         (Seq(idx.codes, idx.seeds), 0L)
       }
       Similarity.knnPqIndexed(
-        Similarity.PqIndex(s.read.parquet(paths.head), s.read.parquet(paths(1))),
+        Similarity.PqIndex(StoredTable.read(s, paths.head), StoredTable.read(s, paths(1))),
         probes(s, d), K)
     }),
   )

@@ -2,7 +2,7 @@ package graft.registry
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.Tables
+import graft.sources.{StoredTable, Tables}
 import graft.streaming.Streams
 
 /** G-family bindings. Both queries execute a real Structured Streaming
@@ -87,7 +87,7 @@ object StreamsRegistry {
       // set from the oracle if ProbeMod ever changed
       Streams.knnIndexedServe(s, d,
         graft.operators.Similarity.IvfIndex(
-          s.read.parquet(paths.head), s.read.parquet(paths(1))),
+          StoredTable.read(s, paths.head), StoredTable.read(s, paths(1))),
         SimilarityRegistry.K, SimilarityRegistry.NProbe,
         SimilarityRegistry.ProbeMod)
     }),

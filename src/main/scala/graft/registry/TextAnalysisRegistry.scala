@@ -3,7 +3,7 @@ package graft.registry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.TextAnalysis
-import graft.sources.Tables
+import graft.sources.{StoredTable, Tables}
 
 /** C-family bindings. The oracle SQL is generated from the same
   * stopword lists as the Spark side (single source of truth) and uses
@@ -114,7 +114,7 @@ object TextAnalysisRegistry {
         (Seq(TextAnalysis.lmModel(Tables.documents(s, d))), 0L)
       }
       TextAnalysis.lmScoreIndexed(Tables.documents(s, d),
-        s.read.parquet(paths.head))
+        StoredTable.read(s, paths.head))
     }),
     "ta_search" -> ((s, d) =>
       TextAnalysis.search(Tables.documents(s, d), SearchTerms, SearchK)),
@@ -125,7 +125,7 @@ object TextAnalysisRegistry {
     // (TextAnalysisSpec) — shares its oracle verbatim.
     "ta_search_served" -> ((s, d) => {
       val (paths, nDocs) = postingsOnce(s, d)
-      TextAnalysis.searchIndexed(s.read.parquet(paths.head), nDocs,
+      TextAnalysis.searchIndexed(StoredTable.read(s, paths.head), nDocs,
         SearchTerms, SearchK)
     }),
     // retraction reaching the SERVING store (r17, VERDICT r16 item
@@ -143,12 +143,12 @@ object TextAnalysisRegistry {
     "ta_search_retract" -> ((s, d) => {
       val (paths, _) = postingsOnce(s, d)
       val (_, survN) = ServingIndexes.once("postings_survn", d) {
-        (Seq.empty, s.read.parquet(paths(1))
+        (Seq.empty, StoredTable.read(s, paths(1))
           .filter(org.apache.spark.sql.functions.col("doc_id")
             % RetractMod =!= 0).count())
       }
       val store = TextAnalysis.PostingsStore(
-        s.read.parquet(paths.head), s.read.parquet(paths(1)))
+        StoredTable.read(s, paths.head), StoredTable.read(s, paths(1)))
       val c = org.apache.spark.sql.functions.col("doc_id")
       val shrunk = TextAnalysis.postingsRetract(store,
         store.docIds.filter(c % RetractMod === 0))
@@ -160,7 +160,7 @@ object TextAnalysisRegistry {
     "ta_search_batch" -> ((s, d) => {
       val (paths, nDocs) = postingsOnce(s, d)
       import s.implicits._
-      TextAnalysis.searchIndexedBatch(s.read.parquet(paths.head), nDocs,
+      TextAnalysis.searchIndexedBatch(StoredTable.read(s, paths.head), nDocs,
         BatchQueries.toDF("query_id", "w"), SearchK)
     }),
   )

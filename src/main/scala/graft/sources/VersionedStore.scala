@@ -31,6 +31,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    REJECTED at resolve time (a half-deleted version can never be
   *    trusted into a serve), so even external mutilation degrades to
   *    "no store" rather than a torn one;
+  *  - every table a store version holds carries its writer's schema
+  *    ([[StoredTable]]'s record, written before the pointer move);
+  *    reads never infer, so reading a store submits no Spark job, and
+  *    a table without its record fails the read loudly;
   *  - the previously-live version survives its successor's promotion
   *    for ONE generation (a reader that resolved the old pointer just
   *    before promotion may still be mid-scan; deleting its files
@@ -156,17 +160,19 @@ object VersionedStore {
   }
 
   /** [[resolve]] + read: the live tables as DataFrames, in `tables`
-    * order. */
+    * order, each read with the schema its writer recorded (no Spark
+    * job; a table without its record fails loudly). */
   def read(spark: SparkSession, storeDir: String,
            tables: Seq[String]): Option[Seq[DataFrame]] =
-    resolve(storeDir, tables).map(_.map(spark.read.parquet(_)))
+    resolve(storeDir, tables).map(_.map(StoredTable.read(spark, _)))
 
   /** Persist all `tables` as ONE atomic store version: CLAIM a fresh
     * `vNNNNN/` subdir atomically (starting at max existing + 1 —
     * counting orphans from crashed writes so a retry never reuses a
     * half-written dir — and retrying upward past dirs a concurrent
     * writer claimed first, so racers always land DISTINCT versions),
-    * write every frame into it, promote with one atomic `CURRENT`
+    * write every frame into it (each with its schema record,
+    * [[StoredTable.write]]), promote with one atomic `CURRENT`
     * move, then best-effort reclaim superseded OLDER versions
     * (keeping the immediately prior one as the one-generation reader
     * grace; versions newer than this writer's claim are a concurrent
@@ -205,7 +211,7 @@ object VersionedStore {
     val marker = java.nio.file.Paths.get(storeDir, vName, WritingMarker)
     java.nio.file.Files.createFile(marker)
     tables.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$storeDir/$vName/$name")
+      StoredTable.write(df, s"$storeDir/$vName/$name")
       // heartbeat (r20): refresh the claim after EACH table lands, so
       // claimStaleMs measures idle time ("no table for 1 h"), not
       // elapsed time since claim — a legitimate long multi-table write

@@ -38,11 +38,12 @@ final case class FileStreamSource(file: String) extends StreamSource {
   def stream(spark: SparkSession): DataFrame = {
     val schema = spark.read.parquet(file).schema
     val raw = spark.readStream.schema(schema).parquet(Streams.stageAsDir(file))
-    // Ingest normalization, mirroring Tables.events' FULL contract
-    // (ParquetIngestContractSpec): any TIMESTAMP_NTZ column (tz-less
-    // timestamp[us], which watermarks and unix_micros() reject) casts
-    // to TimestampType — bit-identical micros under the UTC session
-    // zone — and a LongType `ts` (how TIMESTAMP(NANOS) reads under
+    // Ingest normalization (ParquetIngestContractSpec) for any file
+    // layout, where Tables.events reads only the declared NTZ micros:
+    // any TIMESTAMP_NTZ column (tz-less timestamp[us], which
+    // watermarks and unix_micros() reject) casts to TimestampType —
+    // bit-identical micros under the UTC session zone — and a
+    // LongType `ts` (how TIMESTAMP(NANOS) reads under
     // legacy.parquet.nanosAsLong) truncates to micros. New streaming
     // operators can rely on instants whatever the driver's writer
     // encoded; the per-callsite LongType branches in older Streams

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 import graft.functions.Text
+import graft.sources.{StoredTable, Tables}
 
 /** G-family: Structured Streaming surfaces of the batch operators.
   *
@@ -639,7 +640,7 @@ object Streams {
   def minhashVerified(spark: SparkSession, dir: String, n: Int = 3,
                       tau: Double = 0.8): DataFrame = {
     val store = graft.operators.Dedup.shingleRows(
-      spark.read.parquet(s"$dir/documents.parquet"), n)
+      Tables.documents(spark, dir), n)
     val outDir = TempDirs.create("graft_mh_ver")
     try
       minhashVerifiedFromStream(
@@ -748,7 +749,7 @@ object Streams {
     * eval set is the static side, the train side streams. */
   def contaminationScreen(spark: SparkSession, dir: String, n: Int,
                           tau: Double, evalMod: Int): DataFrame = {
-    val evalDocs = spark.read.parquet(s"$dir/documents.parquet")
+    val evalDocs = Tables.documents(spark, dir)
       .filter(col("doc_id") % evalMod === 0)
     val stream = FileStreamSource(s"$dir/documents.parquet").stream(spark)
       .filter(col("doc_id") % evalMod =!= 0)
@@ -803,7 +804,7 @@ object Streams {
     val probeStream = FileStreamSource(s"$dir/embeddings.parquet").stream(spark)
       .filter(col("vec_id") % mod === 0)
     knnFromStream(probeStream,
-      spark.read.parquet(s"$dir/embeddings.parquet"), outDir, k)
+      Tables.embeddings(spark, dir), outDir, k)
     spark.read.parquet(outDir)
   }
 
@@ -976,7 +977,7 @@ object Streams {
     val model = graft.operators.TextAnalysis.lmModelFromCounts(
       spark.read.parquet(countsDir).select("bigram", "c12"))
     graft.operators.TextAnalysis.lmScoreIndexed(
-      spark.read.parquet(s"$dir/documents.parquet"), model)
+      Tables.documents(spark, dir), model)
   }
 
   /** Source-agnostic index-maintenance core: drain any document
@@ -1151,23 +1152,13 @@ object Streams {
     * half-written or deleted version is REJECTED (both tables must
     * exist — the r12 advice scenario where a crash left an assignment
     * beside a stale/deleted lsh store can no longer be trusted into a
-    * drain). The pre-r13 flat layout (`storeDir/assignment` +
-    * `storeDir/lsh`) is accepted read-only — also only when both
-    * halves exist — and is superseded by the first versioned write. */
-  private[graft] def semanticStorePaths(storeDir: String): Option[(String, String)] = {
-    def complete(asg: String, lsh: String): Option[(String, String)] =
-      if (new java.io.File(asg).isDirectory && new java.io.File(lsh).isDirectory)
-        Some((asg, lsh))
-      else None
-    // versioned resolution through the shared seam (r18 — the r13
-    // contract generalized to graft.sources.VersionedStore so batch
-    // retraction write-backs get the same atomicity); the flat-layout
-    // fallback is this store's own pre-r13 compatibility path
+    * drain). Resolution goes through the shared
+    * [[graft.sources.VersionedStore]] seam, so batch retraction
+    * write-backs get the same atomicity. */
+  private[graft] def semanticStorePaths(storeDir: String): Option[(String, String)] =
     graft.sources.VersionedStore
       .resolve(storeDir, Seq("assignment", "lsh"))
       .map { case Seq(asg, lsh) => (asg, lsh) }
-      .orElse(complete(s"$storeDir/assignment", s"$storeDir/lsh"))
-  }
 
   /** [[semanticServe]] with a CALLER-SUPPLIED store path — the
     * production entry point. `storeDir` holds `assignment` and `lsh`
@@ -1196,11 +1187,11 @@ object Streams {
           // binding builds its store with the Dedup-family defaults,
           // so the restore names them rather than inheriting silently
           graft.operators.Dedup.embeddingLshStoreReadBack(
-            spark.read.parquet(lsh), nTables = 6, planesPerTable = 4,
+            StoredTable.read(spark, lsh), nTables = 6, planesPerTable = 4,
             dim = 64),
-          spark.read.parquet(asg))
+          StoredTable.read(spark, asg))
       case None => graft.operators.Dedup.semanticStore(
-        spark.read.parquet(s"$dir/embeddings.parquet").limit(0), tau)
+        Tables.embeddings(spark, dir).limit(0), tau)
     }
     val store = semanticMaintainFromStream(stream, store0, tau)
     // ONE atomic publish of both tables (r18: the r13 versioned-dir +
@@ -1210,7 +1201,7 @@ object Streams {
     // one-generation reader grace, flat/staging-leftover reclaim)
     val paths = graft.sources.VersionedStore.write(storeDir,
       Seq("assignment" -> store.assignment, "lsh" -> store.lsh.bucketed))
-    spark.read.parquet(paths.head)
+    StoredTable.read(spark, paths.head)
       .select(col("vec_id"), col("cluster_id"),
         (col("vec_id") =!= col("cluster_id")).cast("int").as("is_dup"))
   }
@@ -1253,7 +1244,7 @@ object Streams {
       "wave1 fires before b2's odd ids exist — its remainder must be even")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
     val rows = emb.as[(Long, Array[Float])].collect()
     val (b1, b2) = rows.partition(_._1 % 2 == 0)
@@ -1307,7 +1298,7 @@ object Streams {
       TempDirs.create("graft_st_semantic_retract"),
       Seq("assignment" -> store.get.assignment,
         "lsh" -> store.get.lsh.bucketed))
-    spark.read.parquet(paths.head)
+    StoredTable.read(spark, paths.head)
       .select(col("vec_id"), col("cluster_id"),
         (col("vec_id") =!= col("cluster_id")).cast("int").as("is_dup"))
   }

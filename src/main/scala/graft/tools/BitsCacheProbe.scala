@@ -40,7 +40,7 @@ object BitsCacheProbe {
     val spark = GraftSession.local("graft-bits-cache-probe")
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = java.nio.file.Files.createTempDirectory("graft_bcp").toString
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
+    val emb = graft.sources.Tables.embeddings(spark, src)
     val maxVec = emb.agg(max(col("vec_id"))).head().getLong(0) + 1L
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     mults.foreach { mult =>

@@ -55,7 +55,7 @@ object RetractProbe {
     val spark = GraftSession.local("graft-retract-probe")
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = java.nio.file.Files.createTempDirectory("graft_rp").toString
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
+    val emb = graft.sources.Tables.embeddings(spark, src)
     val maxVec = emb.agg(max(col("vec_id"))).head().getLong(0) + 1L
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     (0 until mult).map { i =>
@@ -277,7 +277,7 @@ object RetractProbe {
     // the exact family on the mult×-duplicated documents table: every
     // fp group is mult deep, so a takedown that hits keepers forces
     // the re-election path on every affected group
-    val docs0 = spark.read.parquet(s"$src/documents.parquet")
+    val docs0 = graft.sources.Tables.documents(spark, src)
     val maxId = docs0.agg(max(col("doc_id"))).head().getLong(0) + 1L
     (0 until mult).map(i =>
         docs0.withColumn("doc_id", col("doc_id") + lit(i.toLong * maxId)))

@@ -38,7 +38,7 @@ object SemBestDeltaProbe {
     val spark = GraftSession.local("graft-sembest-delta-probe")
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = java.nio.file.Files.createTempDirectory("graft_sbd").toString
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
+    val emb = graft.sources.Tables.embeddings(spark, src)
     val maxVec = emb.agg(max(col("vec_id"))).head().getLong(0) + 1L
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     (0 until mult).map { i =>

@@ -91,6 +91,27 @@ class ClustersSpec extends AnyFunSuite {
     }
   }
 
+  test("a string id that casts to null is ignored on both paths") {
+    // 'x' is not null until it is cast to long; filtering before the
+    // cast failed the call (a cast error under ANSI, else an NPE in the
+    // driver fast path's getLong)
+    val pairs = Seq(("1", "2"), ("2", "3"), ("x", "4"), ("5", "6"))
+      .toDF("id_a", "id_b")
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L)
+    val fast = Dedup.clusters(pairs).as[(Long, Long)].collect().toMap
+    val key = "graft.clusters.edge.cap"
+    val old = sys.props.get(key)
+    sys.props(key) = "0"
+    try {
+      val loop = Dedup.clusters(pairs).as[(Long, Long)].collect().toMap
+      assert(fast == loop)
+      assert(fast == expected)
+    } finally old match {
+      case Some(v) => sys.props(key) = v
+      case None => sys.props.remove(key)
+    }
+  }
+
   test("fast path past the local-relation cap returns identical labels (r21)") {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L))
       .toDF("id_a", "id_b")

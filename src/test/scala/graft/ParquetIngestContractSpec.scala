@@ -19,12 +19,15 @@ import graft.streaming.FileStreamSource
   * unix_micros()/withWatermark consumers threw at analysis time while
   * the suite stayed green on in-memory TimestampType fixtures).
   *
-  * Contract: whatever the writer encoded — TIMESTAMP_NTZ micros,
-  * epoch-nanos longs (how Spark reads parquet TIMESTAMP(NANOS) under
-  * legacy.parquet.nanosAsLong), or instant micros — `Tables.events`
-  * and `FileStreamSource` deliver a TimestampType column carrying the
-  * SAME micros DuckDB reads from the file, and one representative
-  * event-time consumer resolves.
+  * Contract: `Tables.events` reads with the declared schema, whose `ts`
+  * is TIMESTAMP_NTZ micros (the driver's encoding), and delivers a
+  * TimestampType column carrying the SAME micros DuckDB reads from the
+  * file. Instant micros read through the declared type unchanged under
+  * the UTC session zone; an epoch-nanos long fails the scan instead of
+  * reading wrong values. `FileStreamSource` normalizes every encoding —
+  * TIMESTAMP_NTZ micros, epoch-nanos longs (how Spark reads parquet
+  * TIMESTAMP(NANOS) under legacy.parquet.nanosAsLong) and instant
+  * micros. One representative event-time consumer resolves.
   */
 class ParquetIngestContractSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.get
@@ -68,7 +71,7 @@ class ParquetIngestContractSpec extends AnyFunSuite {
     assert(micros == expectMicros)
   }
 
-  test("epoch-nanos long ts (legacy TIMESTAMP(NANOS) reading) truncates to micros") {
+  test("epoch-nanos long ts fails the declared-schema Tables.events scan") {
     import spark.implicits._
     val dir = tmpDir()
     // nanosAsLong delivers TIMESTAMP(NANOS) as a plain long column;
@@ -76,9 +79,7 @@ class ParquetIngestContractSpec extends AnyFunSuite {
     writeEvents(Seq((1L, expectMicros * 1000L + 789L)).toDF("user_id", "ts"), dir)
     assert(spark.read.parquet(s"$dir/events.parquet")
       .schema("ts").dataType == LongType)
-    val (dt, micros) = readMicros(dir.toString)
-    assert(dt == TimestampType)
-    assert(micros == expectMicros) // sub-micro nanos truncated
+    intercept[org.apache.spark.SparkException](readMicros(dir.toString))
   }
 
   test("instant micros (TimestampType) pass through unchanged") {

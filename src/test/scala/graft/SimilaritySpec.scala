@@ -328,6 +328,34 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("pagerankFromEdges: a source outside ids sends rank but gets no row and no share of N") {
+    // 9 is a source but not an id: the documented edges.src ⊆ ids
+    // precondition is broken, and this pins what the iteration does then
+    val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (9L, 1L))
+    val ids = Seq(1L, 2L, 3L)
+    val (iters, d) = (3, 0.85)
+    val got = Similarity.pagerankFromEdges(edges.toDF("src", "dst"),
+      ids.toDF("vec_id"), iters, d).as[(Long, Double)].collect().toMap
+    // plain-Scala replay of the quantized update, with 9 ranked like any
+    // source that has no inflow
+    val outdeg = edges.groupBy(_._1).map { case (v, es) => v -> es.size }
+    def rankOf(inflow: Option[Double]) = (1.0 - d) + d * inflow.getOrElse(0.0)
+    var inflow = Option.empty[Map[Long, Double]]
+    for (_ <- 1 to iters) {
+      val contrib = edges.map { case (src, dst) =>
+        val r = inflow.fold(1.0)(m => rankOf(m.get(src)))
+        dst -> math.floor(r / outdeg(src) * 1000000.0).toLong
+      }
+      inflow = Some(contrib.groupBy(_._1).map { case (v, cs) =>
+        v -> cs.map(_._2).sum.toDouble / 1000000.0 })
+    }
+    val expected = ids.map(v => v -> rankOf(inflow.get.get(v)) / ids.size).toMap
+    assert(got.keySet == ids.toSet)
+    ids.foreach(v => assert(math.abs(got(v) - expected(v)) < 1e-12, s"vec $v"))
+    // 9's out-edge is what lifts 1 above 3 (both have one in-edge from 2)
+    assert(got(1L) > got(3L))
+  }
+
   test("outliers ranks the off-cluster vector first, ascending own-cell cosine") {
     // centroidMod=2: centroids are vecs 0, 2 and 4. Everything sits
     // near an axis except vec 5, which points away from EVERY

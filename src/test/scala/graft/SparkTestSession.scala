@@ -12,8 +12,8 @@ object SparkTestSession {
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); same handling as
-      // GraftSession (read as long, Tables.events converts to micros)
+      // same handling of TIMESTAMP(NANOS) as GraftSession (read as
+      // long, FileStreamSource converts to micros)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.maxFields", "250")
       .config("spark.ui.enabled", "false")
