@@ -419,10 +419,10 @@ object Bench {
     * highest-numbered BENCH_r*.json in the working directory. Accepts
     * either the driver's grading envelope ({"parsed":{"queries":…}})
     * or a bare compact metric line. Absent/unreadable → no block. */
-  private[graft] final case class PrevBench(src: String,
-                                            medians: Map[String, Double],
-                                            calib: Option[Double],
-                                            sched: Option[Double])
+  private final case class PrevBench(src: String,
+                                     medians: Map[String, Double],
+                                     calib: Option[Double],
+                                     sched: Option[Double])
 
   private def prevMedians(): Option[PrevBench] = {
     // numeric round sort: lexicographic would pick r9 over r10
@@ -433,7 +433,7 @@ object Bench {
           .lastOption.map(_.getPath)))
     path.flatMap { p =>
       val f = new java.io.File(p)
-      val parsed = try {
+      try {
         import org.json4s._
         val j = jackson.JsonMethods.parse(f)
         def num(v: JValue): Option[Double] = v match {
@@ -452,76 +452,8 @@ object Bench {
             num(v \ "calibration_sched")))
         build(j \ "parsed").orElse(build(j))
       } catch { case _: Throwable => None }
-      parsed.orElse(tailScrape(f))
     }
   }
-
-  /** Fallback prior-round reader (r15): since r14 the driver's graded
-    * envelope carries only a ~2000-char stdout TAIL of the compact
-    * line — head-truncated, so no parseable `queries` object exists
-    * in the file at all and vs_prev/box_ratio silently vanished from
-    * the graded output. The surviving tail still holds most per-query
-    * medians as `"name":1.2345` text plus the trailing
-    * calibration/watch/adjudication fields, so scrape them: keep only
-    * keys naming REGISTERED queries (the watch block's m/n/g keys and
-    * envelope fields can't collide), prefer the queries-map value
-    * where both it and a watch `{"m":…}` entry survive, and recover
-    * watch medians for rows whose map entry was truncated away. */
-  private[graft] def tailScrape(f: java.io.File): Option[PrevBench] =
-    try {
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      val raw = try src.mkString finally src.close()
-      // scope to the compact line when its head survived: the detail
-      // line's trend block carries sf0.01 medians under the SAME
-      // query names, and the only way detail text fits in the tail is
-      // when the whole compact line (and so its head marker) does too
-      // the tail rides INSIDE a JSON string field, so its quotes (and
-      // any nested escapes) arrive backslash-escaped — unescape before
-      // matching, then scope to the compact line when its head
-      // survived: the detail line's trend block carries sf0.01 medians
-      // under the SAME query names, and the only way detail text fits
-      // in the tail is when the whole compact line (and so its head
-      // marker) does too
-      // one-pass unescape of BOTH \" and \\ (r16, ADVICE r15): a
-      // naive replace of \" alone turns a failed query's embedded
-      // jsonEscape'd error text (\\\" sequences) into stray quotes
-      // that can shift the lastIndexOf scoping or surface fake
-      // "name":num fragments; processing left-to-right consumes each
-      // escape exactly once, the way a JSON string decode would
-      val unesc = {
-        val sb = new StringBuilder(raw.length)
-        var i = 0
-        while (i < raw.length) {
-          val c = raw.charAt(i)
-          if (c == '\\' && i + 1 < raw.length &&
-              (raw.charAt(i + 1) == '"' || raw.charAt(i + 1) == '\\')) {
-            sb.append(raw.charAt(i + 1)); i += 2
-          } else { sb.append(c); i += 1 }
-        }
-        sb.toString
-      }
-      val cut = unesc.lastIndexOf("\"metric\":\"total\"")
-      val txt = if (cut >= 0) unesc.substring(cut) else unesc
-      val num = """([0-9]+(?:\.[0-9]+)?)"""
-      val pair = ("\"([A-Za-z0-9_]+)\":" + num).r
-      val fromMap = pair.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble)
-        .filter { case (k, _) => SparkEntry.queries.contains(k) }
-        .foldLeft(Map.empty[String, Double]) { case (acc, (k, v)) =>
-          if (acc.contains(k)) acc else acc + (k -> v) }
-      val watch = ("\"([A-Za-z0-9_]+)\":\\{\"m\":" + num).r
-      val fromWatch = watch.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble)
-        .filter { case (k, _) => SparkEntry.queries.contains(k) }.toMap
-      val medians = fromWatch ++ fromMap // map entries win on overlap
-      def field(name: String): Option[Double] =
-        ("\"" + name + "\":" + num).r.findFirstMatchIn(txt)
-          .map(_.group(1).toDouble)
-      val calib = field("calibration")
-      if (medians.isEmpty && calib.isEmpty) None
-      else Some(PrevBench(f.getName + " (tail-scraped)", medians, calib,
-        field("calibration_sched")))
-    } catch { case _: Throwable => None }
 
   /** Per-query delta vs the prior round as a JSON fragment: raw pct
     * change per shared query, a `flagged` list of >25% movers, and —

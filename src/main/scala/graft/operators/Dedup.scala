@@ -567,23 +567,6 @@ object Dedup {
   def ngramJaccardCandidates(docs: DataFrame, n: Int, tau: Double): DataFrame =
     prefixCandidates(shingleRows(docs, n), tau)
 
-  /** Env-gated stage attribution (SPARK_GRAFT_STAGE_DEBUG=1): persist
-    * `df`, count it, and print (tag, rows, seconds, wall-clock) — so a
-    * graded bench row's cost decomposes into candidate generation vs
-    * verification instead of being one opaque number. The count is an
-    * extra Spark job, so it runs ONLY under the env var; unset, this
-    * is the identity and the plan is untouched. */
-  private def stageCount(tag: String, df: DataFrame): DataFrame =
-    if (!sys.env.contains("SPARK_GRAFT_STAGE_DEBUG")) df
-    else {
-      val p = CacheTracker.persistTracked(df)
-      val t0 = System.nanoTime()
-      val n = p.count()
-      println(f"[stage] $tag rows=$n sec=${(System.nanoTime() - t0) / 1e9}%.3f " +
-        f"at=${System.nanoTime() / 1e9}%.3f")
-      p
-    }
-
   private def prefixCandidates(ex: DataFrame, tau: Double): DataFrame = {
     val dfreq = ex.groupBy(col("s")).agg(count(lit(1)).as("df"))
     // persist the prefix: the a×b self-join below reads it twice, and
@@ -593,8 +576,7 @@ object Dedup {
     // ~7 s, most of it this window computed once per join side.
     // ~prefix-length rows per doc cached (a ~20% sliver of the
     // shingle rows already persisted upstream).
-    val prefix = stageCount("prefixCandidates.prefix",
-      CacheTracker.persistTracked(prefixOf(ex, dfreq, tau)))
+    val prefix = CacheTracker.persistTracked(prefixOf(ex, dfreq, tau))
     // Size-ratio prune min/max ≥ τ is lossless for J ≥ τ since J ≤ min/max.
     prefix.as("a").join(prefix.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
@@ -640,15 +622,14 @@ object Dedup {
     val rb = shingleRows(bDocs, n)
     val dfreq = ra.select(col("s")).union(rb.select(col("s")))
       .groupBy(col("s")).agg(count(lit(1)).as("df"))
-    val cand = stageCount("ngramJaccardCross.candidates",
-      prefixOf(ra, dfreq, tau).as("a")
+    val cand = prefixOf(ra, dfreq, tau).as("a")
       .join(prefixOf(rb, dfreq, tau).as("b"), col("a.s") === col("b.s"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
         col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
       .filter(least(col("sz_a"), col("sz_b")).cast("double")
         / greatest(col("sz_a"), col("sz_b")) >= tau)
-      .distinct())
-    stageCount("ngramJaccardCross.verified", cand
+      .distinct()
+    cand
       .join(ra.as("ra"), col("id_a") === col("ra.doc_id"))
       .join(rb.as("rb"),
         col("id_b") === col("rb.doc_id") && col("ra.s") === col("rb.s"))
@@ -657,7 +638,7 @@ object Dedup {
       .withColumn("jaccard", col("inter").cast("double")
         / (col("sz_a") + col("sz_b") - col("inter")))
       .filter(col("jaccard") >= tau)
-      .select(col("id_a"), col("id_b"), col("jaccard")))
+      .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
   /** Word n-gram exact-Jaccard near-dup pairs: prefix-filtered
@@ -767,8 +748,7 @@ object Dedup {
   /** Shared candidate + verify tail of the Jaccard family: `ex` is the
     * persisted (doc_id, sz, s) item-row frame. */
   private def jaccardOver(ex: DataFrame, tau: Double): DataFrame = {
-    val cand = stageCount("ngramJaccard.candidates", prefixCandidates(ex, tau))
-    stageCount("ngramJaccard.verified", cand
+    prefixCandidates(ex, tau)
       .join(ex.as("ra"), col("id_a") === col("ra.doc_id"))
       .join(ex.as("rb"),
         col("id_b") === col("rb.doc_id") && col("ra.s") === col("rb.s"))
@@ -777,7 +757,7 @@ object Dedup {
       .withColumn("jaccard", col("inter").cast("double")
         / (col("sz_a") + col("sz_b") - col("inter")))
       .filter(col("jaccard") >= tau)
-      .select(col("id_a"), col("id_b"), col("jaccard")))
+      .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
   /** Asymmetric CONTAINMENT near-dup pairs: C(A→B) = |A∩B| / |A| ≥ τ
@@ -1226,7 +1206,6 @@ object Dedup {
     * distributed shape is the 100 TB posture and §6 r19 priced it at
     * 1.2-1.7x the driver form, a constant factor, not a cliff. */
   def clusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val tEdges = System.nanoTime()
     // ONE direction checkpointed (r20): the driver fast path below
     // reads undirected pairs, and the loop path derives the doubled
     // edge frame from the cached blocks — the checkpoint materializes
@@ -1243,8 +1222,6 @@ object Dedup {
         col("id_b").try_cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .localCheckpoint(true)
-    if (sys.env.contains("SPARK_GRAFT_CLUSTERS_DEBUG"))
-      println(f"clusters edges_ckpt sec=${(System.nanoTime() - tEdges) / 1e9}%.3f at=${System.nanoTime() / 1e9}%.3f")
     // Driver fast path (r20, optimization round — [[quotientRemap]]'s
     // measured rationale applied to the batch closure: the distributed
     // loop pays a per-round planning + scheduling tax on tiny
@@ -1259,7 +1236,6 @@ object Dedup {
     // runs unchanged (the r19-priced distributed shape). The limit
     // scans the already-materialized checkpoint blocks, so the probe
     // never re-executes the pair stage.
-    val tProbe = System.nanoTime()
     // r21 (VERDICT r20 item #3): the probe is a bounded COUNT over the
     // checkpointed blocks — never a collect — so the over-cap path (the
     // 100 TB posture) materializes ZERO pair rows on the driver where
@@ -1276,11 +1252,8 @@ object Dedup {
       .mapPartitions(it => Iterator(it.take(cap + 1).size.toLong))
       .collect().sum <= cap
     if (underCap) {
-      val capped = p2.collect()
-      val labels = unionFindMinLabels(capped.iterator
+      val labels = unionFindMinLabels(p2.collect().iterator
         .map(r => (r.getLong(0), r.getLong(1))))
-      if (sys.env.contains("SPARK_GRAFT_CLUSTERS_DEBUG"))
-        println(f"clusters driver_uf edges=${capped.length} nodes=${labels.size} sec=${(System.nanoTime() - tProbe) / 1e9}%.3f at=${System.nanoTime() / 1e9}%.3f")
       val sp = pairs.sparkSession
       import sp.implicits._
       val seq = labels.toSeq
@@ -1296,8 +1269,6 @@ object Dedup {
             math.max(2, sp.sparkContext.defaultParallelism)))
           .toDF("doc_id", "cluster_id"))
     }
-    if (sys.env.contains("SPARK_GRAFT_CLUSTERS_DEBUG"))
-      println(f"clusters over_cap probe_sec=${(System.nanoTime() - tProbe) / 1e9}%.3f at=${System.nanoTime() / 1e9}%.3f")
     // NOT a second eager checkpoint (r21, ADVICE r20): the doubled
     // frame is a narrow union of two scans of p2's already-cached
     // blocks — each loop round reads E rows twice either way, and
@@ -1305,7 +1276,6 @@ object Dedup {
     // exactly on the path where E is corpus-scale.
     val edges = p2
       .union(p2.select(col("dst").as("src"), col("src").as("dst")))
-    val tInit = System.nanoTime()
     // seeded init = round 0's hook for free: every node starts at
     // min(own id, min neighbor id) — one aggregate over the cached
     // edges (edges carry both directions, so every node appears as
@@ -1316,8 +1286,6 @@ object Dedup {
       .select(col("src").as("id"),
         least(col("src"), col("nmin")).as("label"))
       .localCheckpoint(true)
-    if (sys.env.contains("SPARK_GRAFT_CLUSTERS_DEBUG"))
-      println(f"clusters labels_init sec=${(System.nanoTime() - tInit) / 1e9}%.3f at=${System.nanoTime() / 1e9}%.3f")
     var iter = 0
     var done = false
     while (iter < maxIter && !done) {
@@ -1355,15 +1323,9 @@ object Dedup {
       // next round is a deterministic function of unchanged inputs.
       // sum(changed) is NULL on an empty label frame (no pairs at
       // all) — converged.
-      val tCk = System.nanoTime()
       val next = doubled.localCheckpoint(false)
-      if (sys.env.contains("SPARK_GRAFT_CLUSTERS_DEBUG"))
-        println(f"clusters round=$iter ckpt_call sec=${(System.nanoTime() - tCk) / 1e9}%.3f")
-      val t0 = System.nanoTime()
       val changedRow = next.agg(sum(col("changed"))).head()
       done = changedRow.isNullAt(0) || changedRow.getLong(0) == 0L
-      if (sys.env.contains("SPARK_GRAFT_CLUSTERS_DEBUG"))
-        println(f"clusters round=$iter changed=${if (changedRow.isNullAt(0)) -1L else changedRow.getLong(0)} sec=${(System.nanoTime() - t0) / 1e9}%.3f at=${System.nanoTime() / 1e9}%.3f")
       labels = next.select(col("id"), col("label"))
       iter += 1
     }
@@ -1548,28 +1510,22 @@ object Dedup {
     * election read the `rnk <= k` slice, so compute is unchanged. */
   private[graft] def graphDepth(k: Int): Int = 2 * k
 
-  /** `cacheBits` picks how the two bucket families get their sign
-    * bits. `false` (DEFAULT since r16) recomputes each family's
-    * plane dots inline from the source — the r13 shape; `true`
-    * materializes ONE (vec_id, v, nrm, bits) frame and slices both
-    * families from it — the r14-r15 shape, kept as an opt-in for
-    * deployments where the source scan is remote IO. The default
-    * flipped on measurement (VERDICT r15 task #2, BitsCacheProbe §6
-    * r16): §6 r15 had kept the cache citing an at-scale
-    * one-scan-vs-four win, but the A/B reads inline ≤ cached at
-    * EVERY probed size on this box class — 2k vectors 7.5 vs 7.6 s
-    * (min), 20k 21.4 vs 22.1, 100k 234.0 vs 243.4 with a 370 s
-    * cached tail — because the codegen'd 24 plane dots are cheaper
-    * to recompute than the cache write + columnar reads, and the
-    * within-family self-join already reuses its exchange. Results
-    * are identical either way — bucketedFromBits(lshBits(e, T·P),
-    * T, P) ≡ the direct per-table construction (SimilaritySpec) —
-    * only the caching differs. */
+  /** Both bucket families recompute their plane dots inline from the
+    * source. `bits`, the shared sign word, is returned unmaterialized
+    * for the store build, which persists it so both families slice
+    * from one row per vector. Materializing it for the pass itself was
+    * measured slower at every probed size on this box class — 2k
+    * vectors 7.5 vs 7.6 s (min), 20k 21.4 vs 22.1, 100k 234.0 vs
+    * 243.4 with a 370 s cached tail — because the codegen'd 24 plane
+    * dots are cheaper to recompute than the cache write + columnar
+    * reads, and the within-family self-join already reuses its
+    * exchange. bucketedFromBits(lshBits(e, T·P), T, P) ≡ the direct
+    * per-table construction (SimilaritySpec), so the stored slices
+    * match the inline buckets. */
   private[graft] def semanticBestFrames(embeddings: DataFrame,
                                  tau: Double, k: Int,
                                  nTables: Int, planesPerTable: Int,
                                  dim: Int,
-                                 cacheBits: Boolean = false,
                                  depth: Int = 0): SemanticBestFrames = {
     // edge-list depth: k for the batch row (the edges die with the
     // pass), graphDepth(k) for the store build (the surplus buys
@@ -1587,13 +1543,8 @@ object Dedup {
     // read sign 0 for the missing planes, collapsing graph buckets)
     val nPlanes =
       math.max(nTables * planesPerTable, GraphTables * GraphPlanes)
-    val bits =
-      if (cacheBits)
-        CacheTracker.persistTracked(Similarity.lshBits(e, nPlanes, dim))
-      else Similarity.lshBits(e, nPlanes, dim)
-    val pb =
-      if (cacheBits) Similarity.bucketedFromBits(bits, nTables, planesPerTable)
-      else Similarity.lshBucketed(e, nTables, planesPerTable, dim)
+    val bits = Similarity.lshBits(e, nPlanes, dim)
+    val pb = Similarity.lshBucketed(e, nTables, planesPerTable, dim)
     val pairs = pb.as("a").join(pb.as("b"),
         col("a.table") === col("b.table") &&
           col("a.bucket") === col("b.bucket") &&
@@ -1604,12 +1555,9 @@ object Dedup {
       .distinct() // same pair from several tables: cosine is deterministic
       .filter(col("cos_sim") >= tau)
       .select(col("id_a"), col("id_b"))
-    // the graph family: same planes either way — a slice of the
-    // shared bits frame (cached) or its own inline dots (default);
+    // the graph family: its own inline dots over the same planes;
     // graph semantics unchanged from knnGraph's 4×6 construction
-    val gb =
-      if (cacheBits) Similarity.bucketedFromBits(bits, GraphTables, GraphPlanes)
-      else Similarity.lshBucketed(e, GraphTables, GraphPlanes, dim)
+    val gb = Similarity.lshBucketed(e, GraphTables, GraphPlanes, dim)
     val gScored = gb.as("a").join(gb.as("b"),
         col("a.table") === col("b.table") &&
           col("a.bucket") === col("b.bucket") &&
@@ -1879,10 +1827,6 @@ object Dedup {
       .distinct()
       .filter(col("cos_sim") >= tau)
       .select(col("id_a"), col("id_b"))
-      // stage attribution (SPARK_GRAFT_STAGE_DEBUG=1, identity
-      // otherwise): the §6 r15 anatomy of the delta pass — pair
-      // verification vs graph re-rank vs the global tail
-      .transform(stageCount("bestDelta.dPairs", _))
     // partition update: stored labels (the elected keeper is constant
     // within a component — any canonical label induces the same
     // grouping) + the delta-touching quotient
@@ -1906,7 +1850,7 @@ object Dedup {
     // kNN-graph maintenance (r15): EXACT merged top-k, delta-bounded
     // pair work. The r14 form re-ranked every vector sharing a 4×6
     // bucket with the delta over ALL its bucket mates — and the 50×
-    // anatomy (SPARK_GRAFT_STAGE_DEBUG, §6 r15) measured that at 90%
+    // anatomy (§6 r15) measured that at 90%
     // of the delta wall (953,790 re-ranked edges, 166-252 s),
     // because 2,000 delta vectors touch every bucket of every
     // 64-bucket table, making `affected` 95% of the corpus: the
@@ -1936,7 +1880,6 @@ object Dedup {
       .select(col("a.vec_id").as("probe_id"),
         col("b.vec_id").as("neighbor_id"), pairScore("a", "b"))
       // no pre-ranking distinct (r20): rankTopK's heap dedupes by id
-      .transform(stageCount("bestDelta.vsDelta", _))
     // the delta itself ranks fresh over all its bucket mates
     val deltaSide = d46.as("a").join(all46.as("b"),
         col("a.table") === col("b.table") &&
@@ -1945,7 +1888,6 @@ object Dedup {
       .select(col("a.vec_id").as("probe_id"),
         col("b.vec_id").as("neighbor_id"), pairScore("a", "b"))
       // no pre-ranking distinct (r20): rankTopK's heap dedupes by id
-      .transform(stageCount("bestDelta.deltaSide", _))
     // stored edges stay valid iff NEITHER endpoint changed; rows with
     // a delta endpoint re-form identically in the two scoring passes
     // above (same bytes → same cosine)
@@ -1990,7 +1932,6 @@ object Dedup {
         allBits.select(col("vec_id")), iters = 3, damping = 0.85)
       .select(col("vec_id"),
         floor(col("pagerank") * lit(1000000000.0)).cast("long").as("s9"))
-      .transform(stageCount("bestDelta.ranks", _))
     // partition update, assembled here from the helper thread's remap:
     // stored labels (the elected keeper is constant within a
     // component — any canonical label induces the same grouping) +
@@ -2133,7 +2074,6 @@ object Dedup {
     val tPairs = survPairs
       .join(touchedIds.select(col("vec_id").as("id_a")), Seq("id_a"))
       .select(col("id_a"), col("id_b"))
-      .transform(stageCount("bestRetract.tPairs", _))
     // §2.6 overlap (r21): the touched components' driver closure (an
     // eager collect over the filtered stored pair list) and the graph
     // section below (whose decay-union persist + pagerank checkpoint
@@ -2193,7 +2133,6 @@ object Dedup {
         Seq("probe_id"))
       .select(col("probe_id").as("src"), col("neighbor_id").as("dst"),
         col("cos_sim"), col("rnk"), col("cap1").as("cap"))
-      .transform(stageCount("bestRetract.decayed", _))
     val aBuckets = Similarity.bucketedFromBits(
       bits.join(affected, Seq("vec_id")), GraphTables, GraphPlanes)
     val allBuckets = Similarity.bucketedFromBits(bits,
@@ -2207,7 +2146,6 @@ object Dedup {
         (Vec.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")))
           .as("cos_sim"))
       // no pre-ranking distinct (r20): rankTopK's heap dedupes by id
-      .transform(stageCount("bestRetract.rescored", _))
     val shrunk = CacheTracker.persistTracked(
       untouched
         .union(keptDecayed)
@@ -2261,19 +2199,11 @@ object Dedup {
     * cluster_id would single-task the giant boilerplate cluster that
     * dedup exists to find). Null scores sort below every real score. */
   def keepBest(docs: DataFrame, pairs: DataFrame,
-               score: org.apache.spark.sql.Column): DataFrame =
-    keepBestOver(docs, clusters(pairs), score)
-
-  /** [[keepBest]] with a CALLER-SUPPLIED component map — factored
-    * (r21) so [[semanticBestFrames]] can close its cluster pairs on a
-    * helper thread (guide §2.6) while the kNN-graph branch
-    * materializes, and hand the finished map here. */
-  private def keepBestOver(docs: DataFrame, comp: DataFrame,
-                           score: org.apache.spark.sql.Column): DataFrame = {
+               score: org.apache.spark.sql.Column): DataFrame = {
     val assigned = CacheTracker.persistTracked(
       docs.select(col("doc_id"), score.cast("long").as("score"))
-        .join(comp.select(col("doc_id"), col("cluster_id")), Seq("doc_id"),
-          "left")
+        .join(clusters(pairs).select(col("doc_id"), col("cluster_id")),
+          Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("score"), lit(Long.MinValue)).as("score"),
           coalesce(col("cluster_id"), col("doc_id")).as("cluster_id")))
@@ -2283,9 +2213,9 @@ object Dedup {
   /** Run `body` on a helper thread and return a join handle — guide
     * §2.6 ("overlap independent jobs: actions are only sequential
     * because your driver code calls them sequentially"). Used where an
-    * operator has TWO independent eager branches (e.g. the cluster
-    * pairs' closure and the kNN graph's checkpoint in
-    * [[semanticBestFrames]]): each branch's jobs back-fill executor
+    * operator has TWO independent eager branches (e.g. the quotient's
+    * closure and the kNN graph's re-rank in
+    * [[semanticKeepersBestDelta]]): each branch's jobs back-fill executor
     * slots freed by the other's stragglers, and the per-branch driver
     * planning latency overlaps instead of adding. The body must not
     * call [[CacheTracker.persistTracked]] under a [[CacheTracker.scoped]]
@@ -2357,9 +2287,8 @@ object Dedup {
     * (doc_id, keep_id, is_dup) contract. */
   def keepBestDedup(docs: DataFrame, n: Int, tau: Double,
                     score: org.apache.spark.sql.Column): DataFrame = {
-    val ex = stageCount("keepBestDedup.exactAssignments",
-      CacheTracker.persistTracked(exact(docs)
-        .select(col("doc_id"), col("keep_id").as("ek"))))
+    val ex = CacheTracker.persistTracked(exact(docs)
+      .select(col("doc_id"), col("keep_id").as("ek")))
     val keeperDocs = docs.join(
       ex.filter(col("doc_id") === col("ek")).select(col("doc_id")), "doc_id")
     val electedBest = keepBest(keeperDocs, ngramJaccard(keeperDocs, n, tau),
@@ -3349,7 +3278,7 @@ object Dedup {
     * ids are dropped before the slice join); the takedown batch is
     * driver-small by the retraction-family contract.
     *
-    * Cost boundary (RetractProbe, §6): the pass is proportional to
+    * Cost boundary (§6): the pass is proportional to
     * affected-cluster MASS, not takedown size — the slice re-enters
     * the batch operator, whose exact-first order keeps pair work
     * value-bounded, but the slice scan/grouping is every member of

@@ -912,12 +912,11 @@ object Similarity {
     * one corpus scan and one set of plane dots instead of paying the
     * projection once per family. That sharing is load-bearing for
     * the PERSISTED store (one bits row per vector serves both
-    * families by shift/mask) and opt-in for the batch path: the r16
-    * BitsCacheProbe A/B measured inline recompute ≤ the materialized
-    * frame at every probed size (the codegen'd dots are cheaper than
-    * the cache round trip), so the batch default recomputes
-    * (Dedup.semanticBestFrames cacheBits). Output:
-    * (vec_id, v, nrm, bits). */
+    * families by shift/mask). The batch path recomputes each family
+    * inline instead: an A/B measured inline recompute ≤ the
+    * materialized frame at every probed size (the codegen'd dots are
+    * cheaper than the cache round trip; see
+    * Dedup.semanticBestFrames). Output: (vec_id, v, nrm, bits). */
   private[graft] def lshBits(e: DataFrame, nPlanes: Int,
                                  dim: Int): DataFrame = {
     // the sign word is ONE long: `1L << g` wraps mod 64, so a family

@@ -20,7 +20,7 @@ object Streams {
   /** The file streaming source requires a directory; the corpus ships
     * as single parquet files in a read-only tree. Stage a per-table
     * directory of symlinks under /tmp (cheap, no copy). A
-    * Spark-written parquet DIRECTORY (part files — e.g. a ScaleProbe
+    * Spark-written parquet DIRECTORY (part files — e.g. a Probe-scaled
     * corpus) is already a valid file-source dir and passes through:
     * symlinking a directory inside the staging dir reads as ZERO
     * files and the drain silently yields an empty result (r12 probe

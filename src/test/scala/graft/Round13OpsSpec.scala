@@ -257,4 +257,50 @@ class Round13OpsSpec extends AnyFunSuite {
       assert(asn(r.assignment) == full)
     } finally System.clearProperty("graft.quotient.edge.cap")
   }
+
+  // the best-delta and retract paths close their quotient on a helper
+  // thread (Dedup.onThread); the system property is JVM-wide, so the
+  // helper sees the forced cap too
+  private def best(df: DataFrame): Set[(Long, Long, Int)] =
+    df.select(col("vec_id"), col("keep_id"), col("is_dup"))
+      .as[(Long, Long, Int)].collect().toSet
+
+  private def underForcedQuotientFallback[T](body: => T): T = {
+    System.setProperty("graft.quotient.edge.cap", "-1")
+    try {
+      assert(Dedup.QuotientEdgeCap == -1)
+      body
+    } finally System.clearProperty("graft.quotient.edge.cap")
+  }
+
+  test("semanticKeepersBestDelta: distributed-closure fallback == driver union-find == rebuild") {
+    val emb = graft.sources.Tables.embeddings(spark, dir)
+    val k = 5
+    val old = emb.filter(col("vec_id") % 3 =!= 0)
+    val delta = emb.filter(col("vec_id") % 3 === 0)
+    val full = best(Dedup.semanticKeepersBest(emb, tau, k))
+    val store = Dedup.semanticBestStore(old, tau, k)
+    val atDefault = best(
+      Dedup.semanticKeepersBestDelta(store, delta, tau, k).assignment)
+    val forced = underForcedQuotientFallback(best(
+      Dedup.semanticKeepersBestDelta(store, delta, tau, k).assignment))
+    assert(atDefault == full)
+    assert(forced == full)
+    assert(full.exists(_._3 == 1)) // the fixture has real near-dups
+  }
+
+  test("semanticBestRetract: distributed-closure fallback == driver union-find == rebuild") {
+    val emb = graft.sources.Tables.embeddings(spark, dir)
+    val k = 5
+    val rIds = emb.filter(col("vec_id") % 20 === 7).select("vec_id")
+    val surv = best(Dedup.semanticKeepersBest(
+      emb.filter(col("vec_id") % 20 =!= 7), tau, k))
+    val store = Dedup.semanticBestStore(emb, tau, k)
+    val atDefault = best(Dedup.semanticBestRetract(store, rIds, tau, k).assignment)
+    val forced = underForcedQuotientFallback(best(
+      Dedup.semanticBestRetract(store, rIds, tau, k).assignment))
+    assert(atDefault == surv)
+    assert(forced == surv)
+    assert(surv.exists(_._3 == 1))
+  }
 }
