@@ -28,6 +28,16 @@ object Dedup {
     * source. */
   def cached[T](body: => T): T = CacheTracker.scoped(body)
 
+  /** Result of an incremental pair pass: every verified pair TOUCHING
+    * the delta, and the store with the delta merged in (input to the
+    * next ingest). */
+  final case class PairsDelta[S](pairs: DataFrame, updatedStore: S)
+
+  /** Result of an incremental keeper pass: the assignment (each
+    * operator's scaladoc says whether it covers the delta or the whole
+    * corpus), and the store for the next ingest. */
+  final case class AssignmentDelta[S](assignment: DataFrame, updatedStore: S)
+
   /** keeper-per-fingerprint via groupBy + join-back, NOT a window.
     * `Window.partitionBy(fp)` both hash-partitions AND sorts on fp, so
     * a duplicate-heavy fingerprint (millions of copies of one
@@ -202,12 +212,6 @@ object Dedup {
       col("para_idx"), md5(col("para")).as("fp")))
       .select(col("fp"), col("keep_doc"), col("keep_idx"))
 
-  /** Result of a paragraph delta pass: the delta occurrences'
-    * assignment and the keeper store with the delta's genuinely new
-    * paragraphs merged in (input to the NEXT ingest). */
-  final case class ParagraphDelta(assignment: DataFrame,
-                                  updatedStore: DataFrame)
-
   /** Incremental (delta) paragraph dedup — [[exactDelta]]'s contract
     * at sub-document granularity: dedup a new-docs frame's paragraphs
     * against the persisted keeper store WITHOUT rescanning the old
@@ -223,7 +227,7 @@ object Dedup {
     * split+hash of the DELTA (persisted slim), one fp-key shuffle of
     * delta-sized frames, one store equi-join. */
   def paragraphDelta(store: DataFrame, delta: DataFrame,
-                     spanTokens: Int = 16): ParagraphDelta = {
+                     spanTokens: Int = 16): AssignmentDelta[DataFrame] = {
     val fps = CacheTracker.persistTracked(spanRows(delta, spanTokens)
       .select(col("doc_id"), col("para_idx"), md5(col("para")).as("fp")))
     val dmin = paraKeepers(fps)
@@ -242,7 +246,7 @@ object Dedup {
     val newFps = dmin.join(store, Seq("fp"), "left_anti")
       .select(col("fp"), col("dmin_doc").as("keep_doc"),
         col("dmin_idx").as("keep_idx"))
-    ParagraphDelta(assignment, store.union(newFps))
+    AssignmentDelta(assignment, store.union(newFps))
   }
 
   /** The occurrence MEMBER store paragraph retraction needs beside
@@ -344,11 +348,6 @@ object Dedup {
     docs.select(col("doc_id"), storeFp.as("fp"))
       .groupBy(col("fp")).agg(min(col("doc_id")).as("keep_id"))
 
-  /** Result of a delta dedup pass: the delta's (doc_id, keep_id,
-    * is_dup) assignment, and the keeper store with the delta's new
-    * fingerprints merged in (input to the NEXT ingest). */
-  final case class DeltaDedup(assignment: DataFrame, updatedStore: DataFrame)
-
   /** Incremental (delta) exact dedup — the batch operator a growing
     * 100 TB corpus actually runs: dedup a new-docs frame against the
     * persisted keeper store WITHOUT rescanning the old corpus.
@@ -367,7 +366,7 @@ object Dedup {
     * and a store equi-join — never a scan of the old corpus. The
     * store union is column-aligned, so the updated store appends only
     * the genuinely new fingerprints. */
-  def exactDelta(store: DataFrame, delta: DataFrame): DeltaDedup =
+  def exactDelta(store: DataFrame, delta: DataFrame): AssignmentDelta[DataFrame] =
     exactDeltaKeyed(store, delta.select(col("doc_id"), storeFp.as("fp")))
 
   /** [[exactDelta]]'s fp-keyed core, shared with the multimodal
@@ -377,7 +376,7 @@ object Dedup {
     * (e.g. the sniffed media kind). Same sticky-keeper contract and
     * cost shape as [[exactDelta]] — the store is never rescanned. */
   private[operators] def exactDeltaKeyed(store: DataFrame, keyed0: DataFrame,
-                                         carry: Seq[String] = Nil): DeltaDedup = {
+      carry: Seq[String] = Nil): AssignmentDelta[DataFrame] = {
     val keyed = CacheTracker.persistTracked(keyed0)
     val dmin = keyed.groupBy(col("fp")).agg(min(col("doc_id")).as("dmin_id"))
     // per-fp keeper after this ingest: the store's (sticky) else the
@@ -396,7 +395,7 @@ object Dedup {
         (col("d.doc_id") =!= col("keep_id")).cast("int").as("is_dup"): _*)
     val newFps = merged.as("m2")
       .join(store.as("s2"), col("m2.fp") === col("s2.fp"), "left_anti")
-    DeltaDedup(assignment, store.union(newFps))
+    AssignmentDelta(assignment, store.union(newFps))
   }
 
   /** The MEMBER store retraction needs beside the slim keeper store:
@@ -577,15 +576,20 @@ object Dedup {
     // ~prefix-length rows per doc cached (a ~20% sliver of the
     // shingle rows already persisted upstream).
     val prefix = CacheTracker.persistTracked(prefixOf(ex, dfreq, tau))
-    // Size-ratio prune min/max ≥ τ is lossless for J ≥ τ since J ≤ min/max.
-    prefix.as("a").join(prefix.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
+    sizeRatioPruned(prefix.as("a").join(prefix.as("b"),
+      col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id")), tau)
+  }
+
+  /** Distinct (id_a, id_b, sz_a, sz_b) candidates of an "a" × "b"
+    * prefix join, pruned to size ratio min/max ≥ τ — lossless for
+    * J ≥ τ since J ≤ min/max. */
+  private def sizeRatioPruned(joined: DataFrame, tau: Double): DataFrame =
+    joined
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
         col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
       .filter(least(col("sz_a"), col("sz_b")).cast("double")
         / greatest(col("sz_a"), col("sz_b")) >= tau)
       .distinct()
-  }
 
   /** Each doc's first ⌈(1−τ)·sz⌉+1 shingles under the (df, s) total
     * order induced by the GIVEN df frame. Factored out of
@@ -593,13 +597,20 @@ object Dedup {
     * under ONE shared order — the losslessness argument is pairwise
     * and only needs the order to be common to both docs of a pair. */
   private def prefixOf(ex: DataFrame, dfreq: DataFrame,
-                       tau: Double): DataFrame = {
+                       tau: Double): DataFrame =
+    prefixRule(ex, dfreq, tau).select(col("doc_id"), col("sz"), col("s"))
+
+  /** The prefix rule itself, unprojected. Each caller projects right
+    * after it, so a persisted [[prefixOf]] is never a subtree of a
+    * [[blockingPrefix]]: one operator's cached prefix cannot change
+    * another's plan. */
+  private def prefixRule(ex: DataFrame, dfreq: DataFrame,
+                         tau: Double): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("df"), col("s"))
     ex.join(dfreq, "s")
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= ceil((lit(1.0) - lit(tau)) * col("sz")) + lit(1))
-      .select(col("doc_id"), col("sz"), col("s"))
   }
 
   /** TWO-TABLE exact-Jaccard pairs (A-side id, B-side id, J ≥ τ) —
@@ -622,23 +633,9 @@ object Dedup {
     val rb = shingleRows(bDocs, n)
     val dfreq = ra.select(col("s")).union(rb.select(col("s")))
       .groupBy(col("s")).agg(count(lit(1)).as("df"))
-    val cand = prefixOf(ra, dfreq, tau).as("a")
-      .join(prefixOf(rb, dfreq, tau).as("b"), col("a.s") === col("b.s"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
-      .filter(least(col("sz_a"), col("sz_b")).cast("double")
-        / greatest(col("sz_a"), col("sz_b")) >= tau)
-      .distinct()
-    cand
-      .join(ra.as("ra"), col("id_a") === col("ra.doc_id"))
-      .join(rb.as("rb"),
-        col("id_b") === col("rb.doc_id") && col("ra.s") === col("rb.s"))
-      .groupBy(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard", col("inter").cast("double")
-        / (col("sz_a") + col("sz_b") - col("inter")))
-      .filter(col("jaccard") >= tau)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    val cand = sizeRatioPruned(prefixOf(ra, dfreq, tau).as("a")
+      .join(prefixOf(rb, dfreq, tau).as("b"), col("a.s") === col("b.s")), tau)
+    verifyCandidates(cand, ra, rb, tau)
   }
 
   /** Word n-gram exact-Jaccard near-dup pairs: prefix-filtered
@@ -714,7 +711,7 @@ object Dedup {
         .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
         .distinct()
       val found = CacheTracker.persistTracked(
-        verifyCandidates(cand, rows, tau)
+        verifyCandidates(cand, rows, rows, tau)
           .select(col("id_a"), col("id_b")))
       recallCounts(truth, found)
         .select(lit(s"${b}x$r").as("config"), col("n_true"),
@@ -747,18 +744,8 @@ object Dedup {
 
   /** Shared candidate + verify tail of the Jaccard family: `ex` is the
     * persisted (doc_id, sz, s) item-row frame. */
-  private def jaccardOver(ex: DataFrame, tau: Double): DataFrame = {
-    prefixCandidates(ex, tau)
-      .join(ex.as("ra"), col("id_a") === col("ra.doc_id"))
-      .join(ex.as("rb"),
-        col("id_b") === col("rb.doc_id") && col("ra.s") === col("rb.s"))
-      .groupBy(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard", col("inter").cast("double")
-        / (col("sz_a") + col("sz_b") - col("inter")))
-      .filter(col("jaccard") >= tau)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
+  private def jaccardOver(ex: DataFrame, tau: Double): DataFrame =
+    verifyCandidates(prefixCandidates(ex, tau), ex, ex, tau)
 
   /** Asymmetric CONTAINMENT near-dup pairs: C(A→B) = |A∩B| / |A| ≥ τ
     * over word n-gram shingle sets — doc A living mostly INSIDE doc B
@@ -777,30 +764,26 @@ object Dedup {
     * shingle store, divided by the CONTAINED side's size. */
   def containment(docs: DataFrame, n: Int, tau: Double): DataFrame = {
     val ex = shingleRows(docs, n)
-    val prefix = containmentPrefix(ex, tau)
-    val cand = prefix.as("a").join(ex.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
+    val cand = containmentCandidates(blockingPrefix(ex, tau), ex).distinct()
     verifyContainment(cand, ex, tau)
   }
 
-  /** The ⌈(1−τ)·sz⌉+1 rarest-by-df prefix of each doc's shingles —
-    * lossless containment blocking for the CONTAINED side (any
-    * fixed-size subset works; rarest-first minimizes bucket heat).
-    * `df` ranks by document frequency over the GIVEN rows, so a
-    * full-corpus caller gets global df and a delta caller delta-local
-    * df — the ordering only shapes candidate volume, never the
-    * verified output. */
-  private def containmentPrefix(rows: DataFrame, tau: Double): DataFrame = {
-    val dfreq = rows.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("df"), col("s"))
-    rows.join(dfreq, "s")
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= ceil((lit(1.0) - lit(tau)) * col("sz")) + lit(1))
+  /** The (doc_id, s) blocking prefix: [[prefixRule]] under document
+    * frequency over the GIVEN rows, so a full-corpus caller gets global
+    * df and a delta caller delta-local df — the ordering only shapes
+    * candidate volume, never the verified output (any ⌈(1−τ)·sz⌉+1
+    * shingles witness C ≥ τ, and J ≥ τ implies C ≥ τ). */
+  private def blockingPrefix(rows: DataFrame, tau: Double): DataFrame =
+    prefixRule(rows, rows.groupBy(col("s")).agg(count(lit(1)).as("df")), tau)
       .select(col("doc_id"), col("s"))
-  }
+
+  /** Prefix rows `p` × item rows `r` sharing an item, self-pairs
+    * dropped, oriented (prefix side, row side) — containment's
+    * (contained, container) candidate. */
+  private def containmentCandidates(p: DataFrame, r: DataFrame): DataFrame =
+    p.as("a").join(r.as("b"),
+        col("a.s") === col("b.s") && col("a.doc_id") =!= col("b.doc_id"))
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
 
   /** Exact containment verification: intersection count over the
     * shingle store divided by the CONTAINED side's size. */
@@ -821,31 +804,96 @@ object Dedup {
         col("containment"))
   }
 
-  /** The persisted state for INCREMENTAL containment: the shingle-row
-    * store plus each doc's PREFIX (chosen at its own ingest — a stale
-    * df ordering is still a valid fixed-size subset, so losslessness
-    * never decays as the corpus grows). Both documented bucketed
-    * tables at scale: rows on `s` (the candidate/verify join key),
-    * prefix on `s`.
-    *
-    * `n` and `tau` record the BUILD parameters: losslessness is
-    * immune to df-order staleness but NOT to parameter drift — a
-    * prefix of ⌈(1−τ)·sz⌉+1 shingles is too short for any query
-    * threshold BELOW the τ it was sized for, and shingle width must
-    * match exactly. [[containmentDelta]] enforces both. */
-  final case class ContainmentStore(rows: DataFrame, prefix: DataFrame,
-                                    n: Int, tau: Double)
-
-  /** Build [[ContainmentStore]] state for an initial corpus. */
-  def containmentStore(docs: DataFrame, n: Int = 3,
-                       tau: Double = 0.8): ContainmentStore = {
-    val ex = shingleRows(docs, n)
-    ContainmentStore(ex, containmentPrefix(ex, tau), n, tau)
+  /** The layout of the prefix-filter stores: sized (doc_id, sz, s) item
+    * rows plus each doc's (doc_id, s) [[blockingPrefix]], chosen at its
+    * own ingest. A stale df ordering is still a valid fixed-size
+    * subset, so losslessness never decays as the corpus grows. At
+    * corpus scale both tables persist bucketed on `s` (the candidate
+    * and verify join key, [[graft.sources.Sinks.writeBucketed]];
+    * StoreRoundTripSpec). `tau` is the BUILD threshold: a prefix of
+    * ⌈(1−τ)·sz⌉+1 items is too short for any query threshold below the
+    * τ it was sized for, so every delta requires `tau >= store.tau`.
+    * [[prefixIngest]] and [[prefixStoreRetract]] are written once
+    * against this layout. */
+  sealed trait PrefixStore[S <: PrefixStore[S]] {
+    def rows: DataFrame
+    def prefix: DataFrame
+    def tau: Double
+    def withTables(rows: DataFrame, prefix: DataFrame, tau: Double): S
   }
 
-  /** Every containment pair touching the delta + the merged store. */
-  final case class ContainmentDelta(pairs: DataFrame,
-                                    updatedStore: ContainmentStore)
+  /** The word n-gram shingle store ([[shingleRows]] at width `n`): one
+    * build serves both [[containmentDelta]] and [[ngramJaccardDelta]],
+    * which shingle their deltas at the store's `n`. */
+  final case class ShingleStore(rows: DataFrame, prefix: DataFrame, n: Int,
+                                tau: Double) extends PrefixStore[ShingleStore] {
+    def withTables(rows: DataFrame, prefix: DataFrame,
+                   tau: Double): ShingleStore = ShingleStore(rows, prefix, n, tau)
+  }
+
+  /** Build [[ShingleStore]] state for an initial corpus. */
+  def shingleStore(docs: DataFrame, n: Int = 3,
+                   tau: Double = 0.8): ShingleStore = {
+    val ex = shingleRows(docs, n)
+    ShingleStore(ex, blockingPrefix(ex, tau), n, tau)
+  }
+
+  /** The prefix-filter store over ARBITRARY item sets
+    * ([[jaccardPairsOf]]'s relationship to [[ngramJaccard]], applied
+    * to the store): `rows` is the sized (doc_id, sz, s) item table.
+    * The media byte-frame store ([[Multimodal.PayloadNearDupStore]])
+    * wraps it. */
+  final case class ItemJaccardStore(rows: DataFrame, prefix: DataFrame,
+                                    tau: Double)
+      extends PrefixStore[ItemJaccardStore] {
+    def withTables(rows: DataFrame, prefix: DataFrame,
+                   tau: Double): ItemJaccardStore =
+      ItemJaccardStore(rows, prefix, tau)
+  }
+
+  /** Build [[ItemJaccardStore]] state from (doc_id, s) item rows. */
+  def itemJaccardStore(items: DataFrame, tau: Double): ItemJaccardStore = {
+    val ex = sizedItemRows(items)
+    ItemJaccardStore(ex, blockingPrefix(ex, tau), tau)
+  }
+
+  /** The parameter-drift guard every prefix-store delta runs: stored
+    * prefixes are sized for the store's build τ, and a LOOSER query
+    * threshold would silently drop old-contained-in-new pairs. */
+  private def requireBuildTau(op: String, tau: Double,
+                              store: PrefixStore[_]): Unit =
+    require(tau >= store.tau,
+      f"$op tau=$tau%.3f is below the store's build " +
+        f"tau=${store.tau}%.3f: stored prefixes are too short for a looser " +
+        "threshold (rebuild the store or query at tau >= the build tau)")
+
+  /** The ingest merge of every prefix-filter store: evict the delta's
+    * ids from `rows` and `prefix` (the delta REPLACES any stored rows
+    * under its ids, so re-ingest is idempotent), then append the
+    * delta's rows and prefixes. Returns the surviving stored prefix —
+    * the old side of the callers' both-direction blocking — and the
+    * merged store, whose tau is the query's (tau >= store.tau by
+    * [[requireBuildTau]], so every prefix in it supports queries at
+    * that threshold or above). */
+  private def prefixIngest[S <: PrefixStore[S]](store: S, dIds: DataFrame,
+      dRows: DataFrame, dPrefix: DataFrame, tau: Double): (DataFrame, S) = {
+    val oldRows = store.rows.join(dIds, Seq("doc_id"), "left_anti")
+    val oldPrefix = store.prefix.join(dIds, Seq("doc_id"), "left_anti")
+    (oldPrefix,
+      store.withTables(oldRows.union(dRows), oldPrefix.union(dPrefix), tau))
+  }
+
+  /** RETRACTION for every prefix-filter store: election-free, so
+    * erasure is two anti-joins — the retracted docs' rows and blocking
+    * prefixes leave, nothing re-elects, nothing is rescanned. Survivors
+    * keep their ingest-time prefixes VERBATIM and stay lossless (any
+    * fixed ⌈(1−τ)·sz⌉+1 subset works), so a delta against the shrunk
+    * store emits exactly the pairs a store built fresh over the
+    * survivors would. */
+  def prefixStoreRetract[S <: PrefixStore[S]](store: S,
+                                              retractIds: DataFrame): S =
+    store.withTables(dropRetracted(store.rows, retractIds, "doc_id"),
+      dropRetracted(store.prefix, retractIds, "doc_id"), store.tau)
 
   /** Incremental (delta) containment — both DIRECTIONS of the
     * asymmetric pair need their own blocking: a delta doc contained
@@ -853,91 +901,93 @@ object Dedup {
     * rows, and an OLD doc newly contained in a delta doc joins the
     * STORE's maintained prefixes against the delta's rows (old-old
     * pairs cannot re-form — every candidate touches the delta). Only
-    * the delta is tokenized and shingled; delta prefixes rank by
-    * delta-local df (see [[containmentPrefix]] — ordering never
-    * changes the verified output), store prefixes keep their
+    * the delta is tokenized and shingled (at the store's width);
+    * delta prefixes rank by delta-local df, store prefixes keep their
     * ingest-time ordering. Verification is exact over the merged
     * store, so the emitted pairs are EXACTLY the full run's restricted
-    * to delta-touching pairs (DeltaDedupSpec). Idempotent under
-    * re-ingest: delta ids are anti-joined out of both store sides
-    * first. */
-  def containmentDelta(store: ContainmentStore, delta: DataFrame,
-                       n: Int = 3, tau: Double = 0.8): ContainmentDelta = {
-    // parameter-drift guard: stored prefixes are sized ⌈(1−τ)·sz⌉+1
-    // for the store's build τ — a LOOSER query threshold needs longer
-    // prefixes than the store holds and would silently drop
-    // old-contained-in-new pairs; a different shingle width never
-    // matches at all.
-    require(n == store.n,
-      s"containmentDelta n=$n must equal the store's shingle width n=${store.n}")
-    require(tau >= store.tau,
-      f"containmentDelta tau=$tau%.3f is below the store's build " +
-        f"tau=${store.tau}%.3f: stored prefixes are too short for a looser " +
-        "threshold (rebuild the store or query at tau >= the build tau)")
-    val dRows = CacheTracker.persistTracked(shingleRows(delta, n))
-    val dPrefix = containmentPrefix(dRows, tau)
-    val dIds = delta.select(col("doc_id")).distinct()
-    def dropDelta(df: DataFrame): DataFrame =
-      df.join(dIds, Seq("doc_id"), "left_anti")
-    val oldRows = dropDelta(store.rows)
-    val oldPrefix = dropDelta(store.prefix)
-    val allRows = oldRows.union(dRows)
-    val candNew = dPrefix.as("a").join(allRows.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-    val candOld = oldPrefix.as("a").join(dRows.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") =!= col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-    val cand = candNew.union(candOld).distinct()
-    // the merged store's tau is the tightest build tau so far (tau >=
-    // store.tau by the guard): every prefix in it supports queries at
-    // that threshold or above
-    ContainmentDelta(verifyContainment(cand, allRows, tau),
-      ContainmentStore(allRows, oldPrefix.union(dPrefix), n, tau))
+    * to delta-touching pairs (DeltaDedupSpec). */
+  def containmentDelta(store: ShingleStore, delta: DataFrame,
+                       tau: Double = 0.8): PairsDelta[ShingleStore] = {
+    requireBuildTau("containmentDelta", tau, store)
+    val dRows = shingleRows(delta, store.n)
+    val dPrefix = blockingPrefix(dRows, tau)
+    val (oldPrefix, merged) = prefixIngest(store,
+      delta.select(col("doc_id")).distinct(), dRows, dPrefix, tau)
+    val cand = containmentCandidates(dPrefix, merged.rows)
+      .union(containmentCandidates(oldPrefix, dRows)).distinct()
+    PairsDelta(verifyContainment(cand, merged.rows, tau), merged)
   }
 
-  /** RETRACTION for the containment store (r17 — the serving/delta
-    * stores' takedown family): election-free, so erasure is two
-    * anti-joins — the retracted docs' shingle rows and blocking
-    * prefixes leave, nothing re-elects, no text is rescanned.
-    * Survivors keep their ingest-time prefixes VERBATIM and stay
-    * lossless: a prefix of ⌈(1−τ)·sz⌉+1 shingles witnesses C ≥ τ for
-    * ANY fixed subset of that size (the any-fixed-subset argument in
-    * [[containmentDelta]]'s scaladoc — df order only shapes candidate
-    * volume), so a delta against the shrunk store emits exactly the
-    * pairs a store built fresh over the survivors would. */
-  def containmentRetract(store: ContainmentStore,
-                         retractIds: DataFrame): ContainmentStore =
-    ContainmentStore(dropRetracted(store.rows, retractIds, "doc_id"),
-      dropRetracted(store.prefix, retractIds, "doc_id"), store.n, store.tau)
+  /** Incremental (delta) n-gram Jaccard — [[containmentDelta]]'s
+    * both-direction blocking with symmetric verification, over the
+    * same store: candidates are delta prefixes × all rows PLUS stored
+    * prefixes × delta rows, normalized to id_a < id_b, verified by the
+    * exact Jaccard over the merged shingle rows. */
+  def ngramJaccardDelta(store: ShingleStore, delta: DataFrame,
+                        tau: Double = 0.8): PairsDelta[ShingleStore] = {
+    requireBuildTau("ngramJaccardDelta", tau, store)
+    jaccardDelta(store, delta.select(col("doc_id")).distinct(),
+      shingleRows(delta, store.n), tau)
+  }
 
-  /** Exact-Jaccard verification of (id_a, id_b) candidate pairs
-    * against a shingle store ((doc_id, sz, s) rows, one row per
-    * DISTINCT shingle — [[shingleRows]]): |A∩B| by joining both pair
-    * sides to the store on shingle equality, J = inter/(szA+szB−inter),
-    * keep J ≥ tau. Pairs sharing no shingle drop out of the inner
-    * join — lossless for any tau > 0. Work is bounded by the candidate
-    * list and the pair docs' shingle counts, never all-pairs — the
-    * verify half of every near-dup pipeline, batch or per-micro-batch
-    * streaming. */
-  private[graft] def verifyCandidates(cand: DataFrame, rows: DataFrame,
-                                      tau: Double): DataFrame =
-    cand
-      .join(rows.as("ra"), col("id_a") === col("ra.doc_id"))
-      .join(rows.as("rb"),
+  /** Incremental (delta) Jaccard over arbitrary item rows — the
+    * generic form of [[ngramJaccardDelta]] (same blocking, same
+    * idempotent re-ingest). */
+  def itemJaccardDelta(store: ItemJaccardStore, dItems: DataFrame,
+                       tau: Double): PairsDelta[ItemJaccardStore] = {
+    requireBuildTau("itemJaccardDelta", tau, store)
+    jaccardDelta(store, dItems.select(col("doc_id")).distinct(),
+      CacheTracker.persistTracked(sizedItemRows(dItems)), tau)
+  }
+
+  /** The shared delta of the Jaccard stores over (doc_id, sz, s) item
+    * rows, so the media byte-frame form and the text shingle form
+    * cannot drift. The merged rows are persisted: the candidate join
+    * and both verify joins read them. */
+  private def jaccardDelta[S <: PrefixStore[S]](store: S, dIds: DataFrame,
+      dRows: DataFrame, tau: Double): PairsDelta[S] = {
+    val dPrefix = blockingPrefix(dRows, tau)
+    val (oldPrefix, merged) = prefixIngest(store, dIds, dRows, dPrefix, tau)
+    val allRows = CacheTracker.persistTracked(merged.rows)
+    def block(p: DataFrame, r: DataFrame) =
+      p.as("a").join(r.as("b"),
+          col("a.s") === col("b.s") && col("a.doc_id") =!= col("b.doc_id"))
+        .select(least(col("a.doc_id"), col("b.doc_id")).as("id_a"),
+          greatest(col("a.doc_id"), col("b.doc_id")).as("id_b"))
+    val cand = block(dPrefix, allRows).union(block(oldPrefix, dRows))
+      .distinct()
+    PairsDelta(verifyCandidates(cand, allRows, allRows, tau), merged)
+  }
+
+  /** Exact-Jaccard verification of (id_a, id_b) candidate pairs: |A∩B|
+    * by joining the pair's sides to their (doc_id, sz, s) item rows
+    * (`ra` for id_a, `rb` for id_b; one row per DISTINCT item —
+    * [[shingleRows]]) on item equality, J = inter/(szA+szB−inter),
+    * keep J ≥ tau. Pairs sharing no item drop out of the inner join —
+    * lossless for any tau > 0. Work is bounded by the candidate list
+    * and the pair docs' item counts, never all-pairs — the verify half
+    * of every Jaccard pipeline, batch, delta or per-micro-batch
+    * streaming. sz keys the groupBy — functionally determined by
+    * doc_id, so group cardinality is unchanged — read from the
+    * candidate when its size-ratio prune already carried (sz_a, sz_b),
+    * else from the verify joins. */
+  private[graft] def verifyCandidates(cand: DataFrame, ra: DataFrame,
+                                      rb: DataFrame, tau: Double): DataFrame = {
+    val joined = cand
+      .join(ra.as("ra"), col("id_a") === col("ra.doc_id"))
+      .join(rb.as("rb"),
         col("id_b") === col("rb.doc_id") && col("ra.s") === col("rb.s"))
-      // sz rides the verify joins and keys the groupBy — functionally
-      // determined by doc_id, so group cardinality is unchanged and
-      // the post-agg size-lookup joins ([[jaccardOver]]'s pattern)
-      // are not paid at all.
-      .select(col("id_a"), col("id_b"),
+    val sized =
+      if (cand.columns.contains("sz_a")) joined
+      else joined.select(col("id_a"), col("id_b"),
         col("ra.sz").as("sz_a"), col("rb.sz").as("sz_b"))
-      .groupBy(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
+    sized.groupBy(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
       .agg(count(lit(1)).as("inter"))
       .withColumn("jaccard", col("inter").cast("double")
         / (col("sz_a") + col("sz_b") - col("inter")))
       .filter(col("jaccard") >= tau)
       .select(col("id_a"), col("id_b"), col("jaccard"))
+  }
 
   /** MinHash + LSH near-dup detection (candidate pairs → exact-Jaccard
     * verification).
@@ -969,7 +1019,7 @@ object Dedup {
     // with no shared shingle can't reach any tau > 0, so the inner
     // join is lossless; sizes ride the rows frame from the persisted
     // shingle arrays (no extra aggregation, no post-agg lookup join).
-    verifyCandidates(cand, rows, tau)
+    verifyCandidates(cand, rows, rows, tau)
   }
 
   /** (doc_id, sh) shingle-array rows, empty sets dropped — the shared
@@ -1013,11 +1063,6 @@ object Dedup {
         explode(col("sh")).as("s")))
   }
 
-  /** Result of an incremental MinHash pass: every verified near-dup
-    * pair TOUCHING the delta, and the store with the delta's keys and
-    * shingles appended (input to the next ingest). */
-  final case class MinHashDelta(pairs: DataFrame, updatedStore: MinHashStore)
-
   /** Incremental (delta) MinHash near-dup detection — [[exactDelta]]'s
     * analog for the near-dup path: band-join the delta's signatures
     * against the persisted banded-signature store instead of re-running
@@ -1043,7 +1088,7 @@ object Dedup {
     * — delta-sized, broadcastable, not a store rescan. */
   def minhashLshDelta(store: MinHashStore, delta: DataFrame, n: Int = 3,
                       bands: Int = 16, rowsPerBand: Int = 8,
-                      tau: Double = 0.8): MinHashDelta = {
+                      tau: Double = 0.8): PairsDelta[MinHashStore] = {
     val base = CacheTracker.persistTracked(shingleArrays(delta, n))
     val dShingles = base.select(col("doc_id"), size(col("sh")).as("sz"),
       explode(col("sh")).as("s"))
@@ -1063,7 +1108,7 @@ object Dedup {
         greatest(col("a.doc_id"), col("b.doc_id")).as("id_b"))
       .distinct()
     val allShingles = dropDelta(store.shingles).union(dShingles)
-    MinHashDelta(verifyCandidates(cand, allShingles, tau),
+    PairsDelta(verifyCandidates(cand, allShingles, allShingles, tau),
       MinHashStore(allBanded, allShingles))
   }
 
@@ -1092,11 +1137,6 @@ object Dedup {
       .select(col("doc_id"),
         graft.plans.Exprs.simhash(col("toks")).as("simhash"))
 
-  /** Result of an incremental SimHash pass: every Hamming ≤ maxDist
-    * pair touching the delta, and the sketch store with the delta
-    * merged in (input to the next ingest). */
-  final case class SimHashDelta(pairs: DataFrame, updatedStore: DataFrame)
-
   /** Incremental (delta) SimHash near-dup detection — completes the
     * incremental quartet (exact / MinHash / embedding / SimHash): only
     * the DELTA is tokenized and sketched; candidates join the delta's
@@ -1113,7 +1153,7 @@ object Dedup {
     * scan+sketch, one band equi-join bounded by bucket occupancy —
     * never an old-corpus rescan. */
   def simhashDelta(store: DataFrame, delta: DataFrame,
-                   maxDist: Int = 3): SimHashDelta = {
+                   maxDist: Int = 3): PairsDelta[DataFrame] = {
     val dSketch = CacheTracker.persistTracked(simhashStore(delta))
     val dIds = delta.select(col("doc_id")).distinct()
     val allSketch = store.join(dIds, Seq("doc_id"), "left_anti").union(dSketch)
@@ -1135,7 +1175,7 @@ object Dedup {
         Hashing.hamming(col("a.simhash"), col("b.simhash")).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxDist)
-    SimHashDelta(pairs, allSketch)
+    PairsDelta(pairs, allSketch)
   }
 
   /** RETRACTION for the SimHash sketch store: one anti-join — the
@@ -1714,10 +1754,6 @@ object Dedup {
       nTables, planesPerTable)
   }
 
-  /** The full post-ingest assignment + the grown store. */
-  final case class SemanticBestDelta(assignment: DataFrame,
-                                     updatedStore: SemanticBestStore)
-
   /** INCREMENTAL centrality election — delta ≡ full EXACTLY, so
     * dd_semantic_best's oracle holds verbatim. What an ingest pays
     * vs the full rerun, stage by stage (the honest accounting — the
@@ -1762,7 +1798,7 @@ object Dedup {
   def semanticKeepersBestDelta(store: SemanticBestStore, delta: DataFrame,
                                tau: Double, k: Int,
                                nTables: Int = 6, planesPerTable: Int = 4,
-                               dim: Int = 64): SemanticBestDelta = {
+                               dim: Int = 64): AssignmentDelta[SemanticBestStore] = {
     require(tau == store.tau && k == store.k,
       f"semanticKeepersBestDelta(tau=$tau%.3f, k=$k) must match the " +
         f"store's build parameters (tau=${store.tau}%.3f, k=${store.k}): " +
@@ -1962,7 +1998,7 @@ object Dedup {
       .join(dIds.select(col("vec_id").as("id_b")), Seq("id_b"), "left_anti")
       .select(col("id_a"), col("id_b"))
       .union(dPairs)
-    SemanticBestDelta(assignment,
+    AssignmentDelta(assignment,
       SemanticBestStore(allBits, grown, assignment, grownPairs, tau, k,
         nTables, planesPerTable))
   }
@@ -2030,7 +2066,7 @@ object Dedup {
   def semanticBestRetract(store: SemanticBestStore, retractIds: DataFrame,
                           tau: Double, k: Int,
                           nTables: Int = 6, planesPerTable: Int = 4,
-                          dim: Int = 64): SemanticBestDelta = {
+                          dim: Int = 64): AssignmentDelta[SemanticBestStore] = {
     require(tau == store.tau && k == store.k,
       f"semanticBestRetract(tau=$tau%.3f, k=$k) must match the store's " +
         f"build parameters (tau=${store.tau}%.3f, k=${store.k})")
@@ -2176,7 +2212,7 @@ object Dedup {
           col("cluster_id")))
     val assignment = electMax(assigned)
       .select(col("doc_id").as("vec_id"), col("keep_id"), col("is_dup"))
-    SemanticBestDelta(assignment,
+    AssignmentDelta(assignment,
       SemanticBestStore(bits, shrunk, assignment, survPairs, tau, k,
         nTables, planesPerTable))
   }
@@ -2298,144 +2334,6 @@ object Dedup {
         (col("doc_id") =!= col("keep_id")).cast("int").as("is_dup"))
   }
 
-  /** Persisted state for INCREMENTAL n-gram Jaccard: the shingle rows
-    * and the df-rarest prefix table — [[ContainmentStore]]'s layout
-    * with Jaccard verification. The prefix length ⌈(1−τ)·sz⌉+1 is
-    * lossless for J ≥ τ by the same any-fixed-subset argument as
-    * containment (J ≥ τ ⇒ C(A→B) ≥ τ, so any that-many shingles of A
-    * include one shared with B) — df order only optimizes bucket
-    * occupancy, so stored prefixes stay valid as the corpus grows. */
-  final case class JaccardStore(rows: DataFrame, prefix: DataFrame,
-                                n: Int, tau: Double)
-
-  /** Build [[JaccardStore]] state for an initial corpus. */
-  def jaccardStore(docs: DataFrame, n: Int = 3,
-                   tau: Double = 0.8): JaccardStore = {
-    val ex = shingleRows(docs, n)
-    JaccardStore(ex, containmentPrefix(ex, tau), n, tau)
-  }
-
-  /** Every verified Jaccard pair touching the delta + the merged store. */
-  final case class JaccardDelta(pairs: DataFrame, updatedStore: JaccardStore)
-
-  /** Incremental (delta) n-gram Jaccard — [[containmentDelta]]'s
-    * both-direction blocking with symmetric verification: candidates
-    * are delta prefixes × all rows PLUS stored prefixes × delta rows
-    * (every candidate touches the delta by construction; old-old
-    * pairs were found by the initial run), normalized to id_a < id_b,
-    * verified by the exact Jaccard over the merged shingle rows.
-    * Same parameter-drift guards as the containment family. */
-  def ngramJaccardDelta(store: JaccardStore, delta: DataFrame,
-                        n: Int = 3, tau: Double = 0.8): JaccardDelta = {
-    require(n == store.n,
-      s"ngramJaccardDelta n=$n must equal the store's shingle width n=${store.n}")
-    require(tau >= store.tau,
-      f"ngramJaccardDelta tau=$tau%.3f is below the store's build " +
-        f"tau=${store.tau}%.3f: stored prefixes are too short for a looser " +
-        "threshold (rebuild the store or query at tau >= the build tau)")
-    val (verified, rows2, prefix2) = jaccardDeltaCore(store.rows,
-      store.prefix, delta.select(col("doc_id")).distinct(),
-      CacheTracker.persistTracked(shingleRows(delta, n)), tau)
-    JaccardDelta(verified, JaccardStore(rows2, prefix2, n, tau))
-  }
-
-  /** RETRACTION for the n-gram Jaccard store — [[containmentRetract]]
-    * verbatim (same layout, same any-fixed-subset losslessness for
-    * the surviving prefixes): two anti-joins, no re-election, no
-    * rescans. */
-  def jaccardStoreRetract(store: JaccardStore,
-                          retractIds: DataFrame): JaccardStore =
-    JaccardStore(dropRetracted(store.rows, retractIds, "doc_id"),
-      dropRetracted(store.prefix, retractIds, "doc_id"), store.n, store.tau)
-
-  /** The shared delta tail of the incremental Jaccard family —
-    * [[ngramJaccardDelta]]'s both-direction blocking + symmetric
-    * verify over ANY (doc_id, sz, s) item rows, so the media
-    * byte-frame form ([[Multimodal.payloadNearDupDelta]], r14) and
-    * the text shingle form cannot drift. Returns (verified pairs,
-    * merged rows, merged prefix). */
-  private def jaccardDeltaCore(storeRows: DataFrame, storePrefix: DataFrame,
-                               dIds: DataFrame, dRows: DataFrame,
-                               tau: Double): (DataFrame, DataFrame, DataFrame) = {
-    val dPrefix = containmentPrefix(dRows, tau)
-    // re-ingest idempotency (containmentDelta's rule): the delta
-    // REPLACES any stored rows under its ids, never duplicates them
-    val oldRows = storeRows.join(dIds, Seq("doc_id"), "left_anti")
-    val oldPrefix = storePrefix.join(dIds, Seq("doc_id"), "left_anti")
-    val allRows = CacheTracker.persistTracked(oldRows.union(dRows))
-    def block(p: DataFrame, r: DataFrame) =
-      p.as("a").join(r.as("b"),
-          col("a.s") === col("b.s") && col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("id_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("id_b"))
-    val cand = block(dPrefix, allRows).union(block(oldPrefix, dRows))
-      .distinct()
-    // sz carried THROUGH the verification groupBy (r20 — jaccardOver's
-    // full-run shape): sz is functionally determined by doc_id on the
-    // sized item rows, so grouping by it adds no cardinality, and the
-    // old sizes-lookup (a distinct + two id-keyed joins, ~4 exchanges
-    // per delta pass) is gone. Same pairs, same IEEE division.
-    val verified = cand
-      .join(allRows.as("ra"), col("id_a") === col("ra.doc_id"))
-      .join(allRows.as("rb"),
-        col("id_b") === col("rb.doc_id") && col("ra.s") === col("rb.s"))
-      .groupBy(col("id_a"), col("id_b"),
-        col("ra.sz").as("sz_a"), col("rb.sz").as("sz_b"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard", col("inter").cast("double")
-        / (col("sz_a") + col("sz_b") - col("inter")))
-      .filter(col("jaccard") >= tau)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    (verified, allRows, oldPrefix.union(dPrefix))
-  }
-
-  /** Persisted state for INCREMENTAL Jaccard over ARBITRARY item sets
-    * — [[JaccardStore]] with the item extraction decoupled from text
-    * ([[jaccardPairsOf]]'s relationship to [[ngramJaccard]], applied
-    * to the store): `rows` is the sized (doc_id, sz, s) item table,
-    * `prefix` the df-rarest blocking prefixes. At corpus scale both
-    * persist bucketed on `s` ([[graft.sources.Sinks.writeBucketed]])
-    * so the per-ingest candidate joins read them pre-partitioned on
-    * the join key (StoreRoundTripSpec). */
-  final case class ItemJaccardStore(rows: DataFrame, prefix: DataFrame,
-                                    tau: Double)
-
-  /** Build [[ItemJaccardStore]] state from (doc_id, s) item rows. */
-  def itemJaccardStore(items: DataFrame, tau: Double): ItemJaccardStore = {
-    val ex = sizedItemRows(items)
-    ItemJaccardStore(ex, containmentPrefix(ex, tau), tau)
-  }
-
-  /** Every verified pair touching the delta + the merged store. */
-  final case class ItemJaccardDelta(pairs: DataFrame,
-                                    updatedStore: ItemJaccardStore)
-
-  /** Incremental (delta) Jaccard over arbitrary item rows — the
-    * generic form of [[ngramJaccardDelta]] (same core, same
-    * both-direction lossless blocking, same idempotent re-ingest);
-    * stale stored prefix orderings stay lossless because ANY
-    * ⌈(1−τ)sz⌉+1 items witness J ≥ τ — df order only shapes candidate
-    * volume. */
-  def itemJaccardDelta(store: ItemJaccardStore, dItems: DataFrame,
-                       tau: Double): ItemJaccardDelta = {
-    require(tau >= store.tau,
-      f"itemJaccardDelta tau=$tau%.3f is below the store's build " +
-        f"tau=${store.tau}%.3f: stored prefixes are too short for a looser " +
-        "threshold (rebuild the store or query at tau >= the build tau)")
-    val (verified, rows2, prefix2) = jaccardDeltaCore(store.rows,
-      store.prefix, dItems.select(col("doc_id")).distinct(),
-      CacheTracker.persistTracked(sizedItemRows(dItems)), tau)
-    ItemJaccardDelta(verified, ItemJaccardStore(rows2, prefix2, tau))
-  }
-
-  /** RETRACTION for the generic item-Jaccard store (and through it
-    * the media byte-frame store, [[Multimodal.payloadNearDupRetract]])
-    * — [[containmentRetract]]'s two anti-joins on the item layout. */
-  def itemJaccardStoreRetract(store: ItemJaccardStore,
-                              retractIds: DataFrame): ItemJaccardStore =
-    ItemJaccardStore(dropRetracted(store.rows, retractIds, "doc_id"),
-      dropRetracted(store.prefix, retractIds, "doc_id"), store.tau)
-
   /** The persisted state for INCREMENTAL quality keeper election:
     * the verified near-dup pair table, the per-doc scores, and the
     * current assignment. At corpus scale: pairs bucketed on id_a,
@@ -2453,11 +2351,6 @@ object Dedup {
     val scores = docs.select(col("doc_id"), score.cast("long").as("score"))
     KeepBestStore(pairs, scores, keepBest(docs, pairs, score))
   }
-
-  /** Result of an incremental election pass: the merged assignment for
-    * the WHOLE corpus (sticky where untouched), and the updated store. */
-  final case class KeepBestDelta(assignment: DataFrame,
-                                 updatedStore: KeepBestStore)
 
   /** Incremental (delta) quality keeper election — [[keepBest]]
     * without re-clustering the whole corpus per ingest. Cluster
@@ -2482,7 +2375,8 @@ object Dedup {
     * the remaining members re-form from the surviving edges. */
   def keepBestDelta(store: KeepBestStore, delta: DataFrame,
                     deltaPairs0: DataFrame,
-                    score: org.apache.spark.sql.Column): KeepBestDelta = {
+                    score: org.apache.spark.sql.Column)
+      : AssignmentDelta[KeepBestStore] = {
     val deltaPairs = CacheTracker.persistTracked(
       deltaPairs0.select(col("id_a"), col("id_b")))
     val dScores = delta.select(col("doc_id"), score.cast("long").as("score"))
@@ -2538,7 +2432,7 @@ object Dedup {
     val untouched = oldAssignment
       .join(affectedClusters,
         col("keep_id") === col("affected_keep"), "left_anti")
-    KeepBestDelta(untouched.union(reElected),
+    AssignmentDelta(untouched.union(reElected),
       KeepBestStore(oldPairsKept.union(deltaPairs), allScores,
         untouched.union(reElected)))
   }
@@ -2567,7 +2461,7 @@ object Dedup {
     * Cost: takedown-broadcast anti-joins over the three stored
     * tables + [[keepBest]] over the affected subgraph only. */
   def keepBestRetract(store: KeepBestStore,
-                      retractIds: DataFrame): KeepBestDelta = {
+                      retractIds: DataFrame): AssignmentDelta[KeepBestStore] = {
     val r = CacheTracker.persistTracked(
       retractIds.select(col("doc_id")).distinct())
     val survScores = dropRetracted(store.scores, r, "doc_id")
@@ -2596,7 +2490,7 @@ object Dedup {
       .join(broadcast(affected),
         col("keep_id") === col("affected_keep"), "left_anti")
     val assignment = untouched.union(reElected)
-    KeepBestDelta(assignment,
+    AssignmentDelta(assignment,
       KeepBestStore(survPairs, survScores, assignment))
   }
 
@@ -2648,12 +2542,6 @@ object Dedup {
     EmbeddingLshStore(Similarity.lshBucketed(
       embeddings.select(col("vec_id"), col("embedding").as("v")),
       nTables, planesPerTable, dim), nTables, planesPerTable, dim)
-
-  /** Result of an incremental embedding near-dup pass: every verified
-    * cosine pair TOUCHING the delta, and the bucketed store with the
-    * delta's rows merged (input to the next ingest). */
-  final case class EmbeddingLshDelta(pairs: DataFrame,
-                                     updatedStore: EmbeddingLshStore)
 
   /** Incremental (delta) embedding near-dup detection — completes the
     * incremental trio (exact [[exactDelta]], MinHash
@@ -2714,7 +2602,7 @@ object Dedup {
   }
 
   def embeddingNearDupLshDelta(store: EmbeddingLshStore, delta: DataFrame,
-                               tau: Double): EmbeddingLshDelta = {
+                               tau: Double): PairsDelta[EmbeddingLshStore] = {
     val dBucketed = Similarity.lshBucketed(
       delta.select(col("vec_id"), col("embedding").as("v")),
       store.nTables, store.planesPerTable, store.dim)
@@ -2738,7 +2626,7 @@ object Dedup {
           .as("cos_sim"))
       .distinct()
       .filter(col("cos_sim") >= tau)
-    EmbeddingLshDelta(pairs, updated)
+    PairsDelta(pairs, updated)
   }
 
   /** Hyperplane-LSH recall QA (r13, [[minhashRecallReport]]'s
@@ -3039,12 +2927,6 @@ object Dedup {
         .select(col("vec_id"), col("cluster_id")))
   }
 
-  /** Result of an incremental semantic pass: the UPDATED full keeper
-    * assignment (≡ [[semanticKeepers]] over store ∪ delta — exact,
-    * not approximate) and the store for the next ingest. */
-  final case class SemanticDelta(assignment: DataFrame,
-                                 updatedStore: SemanticStore)
-
   /** Incremental SEMANTIC dedup — the keeper-assignment delta the
     * pair-level [[embeddingNearDupLshDelta]] stops short of. EXACT:
     * min-id component labels COMPOSE. The only new edges touch the
@@ -3081,7 +2963,7 @@ object Dedup {
     * mint a new id per content version (the content-addressed ingest
     * shape). */
   def semanticKeepersDelta(store: SemanticStore, delta: DataFrame,
-                           tau: Double): SemanticDelta = {
+                           tau: Double): AssignmentDelta[SemanticStore] = {
     val dIds = delta.select(col("vec_id")).distinct()
     // EAGER checkpoints, not lazy persists: the store tail and the
     // LSH pair join are each read more than once below (quotient
@@ -3232,7 +3114,7 @@ object Dedup {
     val assignment = storedNew.union(deltaNew)
       .withColumn("is_dup",
         (col("vec_id") =!= col("cluster_id")).cast("int"))
-    SemanticDelta(assignment,
+    AssignmentDelta(assignment,
       SemanticStore(ed.updatedStore,
         assignment.select(col("vec_id"), col("cluster_id"))))
   }
@@ -3295,7 +3177,8 @@ object Dedup {
     * pay. The two semantic families price that trade in both
     * directions on purpose. */
   def semanticRetract(store: SemanticStore, retractIds: DataFrame,
-                      embeddings: DataFrame, tau: Double): SemanticDelta = {
+                      embeddings: DataFrame,
+                      tau: Double): AssignmentDelta[SemanticStore] = {
     // geometry comes from the STORE, not parameters (r18, ADVICE r17):
     // the rebuilt slice's bucket rows union into keptLsh below, and
     // bucket ids from two geometries are incomparable — deriving the
@@ -3333,7 +3216,7 @@ object Dedup {
     val assignment = unaffected.union(rebuilt.assignment)
       .withColumn("is_dup",
         (col("vec_id") =!= col("cluster_id")).cast("int"))
-    SemanticDelta(assignment,
+    AssignmentDelta(assignment,
       SemanticStore(
         rebuilt.lsh.copy(bucketed = keptLsh.union(rebuilt.lsh.bucketed)),
         assignment.select(col("vec_id"), col("cluster_id"))))

@@ -134,7 +134,7 @@ object Multimodal {
     * exactly (spec-pinned, MultimodalSpec). The sniffed kind rides
     * the assignment like [[payloadDedup]]'s. */
   def payloadDedupDelta(store: DataFrame,
-                        deltaDocs: DataFrame): Dedup.DeltaDedup =
+                        deltaDocs: DataFrame): Dedup.AssignmentDelta[DataFrame] =
     Dedup.exactDeltaKeyed(store,
       withPayload(deltaDocs).select(col("doc_id"),
         sniffKind(col("payload")).as("kind"), payloadFp.as("fp")),
@@ -232,10 +232,6 @@ object Multimodal {
         frameItems(withPayload(docs), frameLen, stride), tau),
       frameLen, stride)
 
-  /** Every verified pair touching the delta + the merged store. */
-  final case class PayloadNearDupDelta(pairs: DataFrame,
-                                       updatedStore: PayloadNearDupStore)
-
   /** INCREMENTAL media near-dup — [[Dedup.itemJaccardDelta]]'s
     * both-direction lossless blocking over the persisted frame store:
     * only the delta's payloads are sliced and fingerprinted, delta
@@ -247,22 +243,22 @@ object Multimodal {
     * a 100 TB media lake admits a day's crawl without re-slicing
     * shipped shards. */
   def payloadNearDupDelta(store: PayloadNearDupStore, deltaDocs: DataFrame,
-                          tau: Double = 0.5): PayloadNearDupDelta = {
+      tau: Double = 0.5): Dedup.PairsDelta[PayloadNearDupStore] = {
     val d = Dedup.itemJaccardDelta(store.store,
       frameItems(withPayload(deltaDocs), store.frameLen, store.stride), tau)
-    PayloadNearDupDelta(d.pairs,
+    Dedup.PairsDelta(d.pairs,
       PayloadNearDupStore(d.updatedStore, store.frameLen, store.stride))
   }
 
   /** RETRACTION for the media frame store —
-    * [[Dedup.itemJaccardStoreRetract]]'s two anti-joins with the
+    * [[Dedup.prefixStoreRetract]]'s two anti-joins with the
     * frame geometry carried (election-free: frame rows and blocking
     * prefixes are per-payload projections, and surviving prefixes
     * stay lossless by the any-fixed-subset argument). */
   def payloadNearDupRetract(store: PayloadNearDupStore,
                             retractIds: DataFrame): PayloadNearDupStore =
     PayloadNearDupStore(
-      Dedup.itemJaccardStoreRetract(store.store, retractIds),
+      Dedup.prefixStoreRetract(store.store, retractIds),
       store.frameLen, store.stride)
 
   /** Image-magic probe for the batch decoder's routing (PNG / JPEG —

@@ -142,8 +142,8 @@ object DedupRegistry {
       val docs = Tables.documents(s, d)
       val c = org.apache.spark.sql.functions.col("doc_id")
       Dedup.containmentDelta(
-        Dedup.containmentStore(docs.filter(c % DeltaMod =!= 0), 3, ContainTau),
-        docs.filter(c % DeltaMod === 0), 3, ContainTau).pairs
+        Dedup.shingleStore(docs.filter(c % DeltaMod =!= 0), 3, ContainTau),
+        docs.filter(c % DeltaMod === 0), ContainTau).pairs
     }),
     // paragraph/span-granularity exact dedup: every occurrence of a
     // repeated sub-document block assigned to its first occurrence
@@ -240,7 +240,7 @@ object DedupRegistry {
       val old = docs.filter(c % DeltaMod =!= 0)
       val delta = docs.filter(c % DeltaMod === 0)
       val deltaPairs = Dedup.ngramJaccardDelta(
-        Dedup.jaccardStore(old, 3, JaccardTau), delta, 3, JaccardTau).pairs
+        Dedup.shingleStore(old, 3, JaccardTau), delta, JaccardTau).pairs
       Dedup.keepBestDelta(
         Dedup.keepBestStore(old, Dedup.ngramJaccard(old, 3, JaccardTau), score),
         delta, deltaPairs, score).assignment
@@ -400,16 +400,8 @@ object DedupRegistry {
     "dd_semantic_best_delta" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val c = org.apache.spark.sql.functions.col("vec_id")
-      val (paths, _) = ServingIndexes.once("sembest", d) {
-        val st = Dedup.semanticBestStore(emb.filter(c % DeltaMod =!= 0),
-          CosineTau, SimilarityRegistry.K)
-        (Seq(st.bits, st.graph, st.assignment, st.pairs), 0L)
-      }
       Dedup.semanticKeepersBestDelta(
-        Dedup.SemanticBestStore(StoredTable.read(s, paths.head),
-          StoredTable.read(s, paths(1)), StoredTable.read(s, paths(2)),
-          StoredTable.read(s, paths(3)),
-          CosineTau, SimilarityRegistry.K),
+        semanticBestMemo(s, d, "sembest", emb.filter(c % DeltaMod =!= 0)),
         emb.filter(c % DeltaMod === 0), CosineTau,
         SimilarityRegistry.K).assignment
     }),
@@ -465,20 +457,25 @@ object DedupRegistry {
     "dd_semantic_retract" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val c = org.apache.spark.sql.functions.col("vec_id")
-      val (paths, _) = ServingIndexes.once("sembestfull", d) {
-        val st = Dedup.semanticBestStore(emb, CosineTau,
-          SimilarityRegistry.K)
-        (Seq(st.bits, st.graph, st.assignment, st.pairs), 0L)
-      }
-      Dedup.semanticBestRetract(
-        Dedup.SemanticBestStore(StoredTable.read(s, paths.head),
-          StoredTable.read(s, paths(1)), StoredTable.read(s, paths(2)),
-          StoredTable.read(s, paths(3)),
-          CosineTau, SimilarityRegistry.K),
+      Dedup.semanticBestRetract(semanticBestMemo(s, d, "sembestfull", emb),
         emb.filter(c % RetractMod === RetractRem).select("vec_id"),
         CosineTau, SimilarityRegistry.K).assignment
     }),
   )
+
+  /** The semantic-best store built over `emb`, memoized per corpus dir
+    * under `kind` ([[ServingIndexes.once]]) and read back from its four
+    * tables in the store's field order. */
+  private def semanticBestMemo(s: SparkSession, d: String, kind: String,
+                               emb: => DataFrame): Dedup.SemanticBestStore = {
+    val (paths, _) = ServingIndexes.once(kind, d) {
+      val st = Dedup.semanticBestStore(emb, CosineTau, SimilarityRegistry.K)
+      (Seq(st.bits, st.graph, st.assignment, st.pairs), 0L)
+    }
+    val Seq(bits, graph, assignment, pairs) = paths.map(StoredTable.read(s, _))
+    Dedup.SemanticBestStore(bits, graph, assignment, pairs, CosineTau,
+      SimilarityRegistry.K)
+  }
 
   /** dd_semantic_best's full CTE chain — LSH pairs → closure →
     * nested pagerank replay → two-stage election — parameterized by

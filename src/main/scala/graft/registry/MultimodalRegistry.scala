@@ -75,10 +75,10 @@ object MultimodalRegistry {
           docs.filter(c % DedupRegistry.DeltaMod =!= 0), NearDupTau)
         (Seq(st.store.rows, st.store.prefix), 0L)
       }
-      // geometry from THE named constants (r15, ADVICE r14): the
-      // reconstructed store must slice the same frames the persisted
-      // rows/prefixes were built from — payloadNearDupStore's own
-      // defaults, referenced, never repeated as literals
+      // the read-back prefix-filter store (Dedup.ItemJaccardStore)
+      // takes its geometry from the named constants: the delta must
+      // slice the same frames the persisted rows/prefixes were built
+      // from — payloadNearDupStore's own defaults, never literals
       Multimodal.payloadNearDupDelta(
         Multimodal.PayloadNearDupStore(
           graft.operators.Dedup.ItemJaccardStore(

@@ -44,10 +44,9 @@ final case class FileStreamSource(file: String) extends StreamSource {
     // watermarks and unix_micros() reject) casts to TimestampType —
     // bit-identical micros under the UTC session zone — and a
     // LongType `ts` (how TIMESTAMP(NANOS) reads under
-    // legacy.parquet.nanosAsLong) truncates to micros. New streaming
+    // legacy.parquet.nanosAsLong) truncates to micros. Streaming
     // operators can rely on instants whatever the driver's writer
-    // encoded; the per-callsite LongType branches in older Streams
-    // operators remain as harmless no-ops behind this.
+    // encoded.
     schema.fields.foldLeft(raw) { (df, f) =>
       if (f.dataType == org.apache.spark.sql.types.TimestampNTZType)
         df.withColumn(f.name, col(f.name).cast("timestamp"))

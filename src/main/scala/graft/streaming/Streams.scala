@@ -98,13 +98,8 @@ object Streams {
   def eventsHourly(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.Num
     val stream = FileStreamSource(s"$dir/events.parquet").stream(spark)
-    val schema = stream.schema
-    val ts =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        timestamp_micros(expr("ts div 1000"))
-      else col("ts")
     val agg = stream
-      .select(ts.as("ts"), col("event_type"), col("value"))
+      .select(col("ts"), col("event_type"), col("value"))
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), Num.dsum(col("value")).as("total_value"))
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
@@ -346,15 +341,11 @@ object Streams {
              steps: Seq[String] = Seq("view", "click", "purchase")): DataFrame = {
     import spark.implicits._
     val stream = FileStreamSource(s"$dir/events.parquet").stream(spark)
-    val schema = stream.schema
-    val tsUs =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        expr("ts div 1000") // epoch-nanos long → micros
-      else unix_micros(col("ts"))
     val snapshots = funnelSnapshotsFromStream(
       stream
         .filter(col("event_type").isin(steps: _*))
-        .select(col("user_id"), tsUs.as("ts_us"), col("event_type"))
+        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+          col("event_type"))
         .as[FunnelEvent],
       steps)
     val sink = s"st_fun_${java.util.UUID.randomUUID().toString.replace("-", "")}"
@@ -455,13 +446,8 @@ object Streams {
                        gapMinutes: Int = 30,
                        lateness: String = "10 minutes"): DataFrame = {
     val stream = FileStreamSource(s"$dir/events.parquet").stream(spark)
-    val schema = stream.schema
-    val ts =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        timestamp_micros(expr("ts div 1000"))
-      else col("ts")
     val sessions = sessionizeClosedFromStream(
-      stream.select(col("user_id"), col("event_id"), ts.as("ts")),
+      stream.select(col("user_id"), col("event_id"), col("ts")),
       gapMinutes, lateness)
     val sink = s"st_sessc_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val q = sessions.toDF().writeStream
@@ -627,7 +613,7 @@ object Streams {
         // a pair can surface from several bands within the batch;
         // cross-batch repeats are deduped at read (the sink is a pair
         // SET, and jaccard is deterministic per pair)
-        graft.operators.Dedup.verifyCandidates(batch.distinct(), store, tau)
+        graft.operators.Dedup.verifyCandidates(batch.distinct(), store, store, tau)
           .write.mode("append").parquet(outDir)
       }
       .trigger(Trigger.AvailableNow())
@@ -1029,17 +1015,11 @@ object Streams {
     * matching pair, so the batch band self-join is a valid oracle. */
   def eventPairs(spark: SparkSession, dir: String, bandMinutes: Int = 5,
                  lateness: String = "10 minutes"): DataFrame = {
-    def side(alias: String): DataFrame = {
-      val stream = FileStreamSource(s"$dir/events.parquet").stream(spark)
-      val ts =
-        if (stream.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-          timestamp_micros(expr("ts div 1000"))
-        else col("ts")
-      stream
+    def side(alias: String): DataFrame =
+      FileStreamSource(s"$dir/events.parquet").stream(spark)
         .select(col("user_id").as(s"${alias}_user"),
-          col("event_id").as(s"${alias}_event"), ts.as(s"${alias}_ts"))
+          col("event_id").as(s"${alias}_event"), col("ts").as(s"${alias}_ts"))
         .withWatermark(s"${alias}_ts", lateness)
-    }
     val pairs = bandJoin(side("a"), side("b"), bandMinutes)
     val sink = s"st_pairs_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val q = pairs.writeStream
@@ -1058,13 +1038,8 @@ object Streams {
                  gapMinutes: Int = 30): DataFrame = {
     import spark.implicits._
     val stream = FileStreamSource(s"$dir/events.parquet").stream(spark)
-    val schema = stream.schema
-    val tsUs =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        expr("ts div 1000") // epoch-nanos long → micros
-      else unix_micros(col("ts"))
     val typed: Dataset[SessionEvent] = stream
-      .select(col("user_id"), col("event_id"), tsUs.as("ts_us"))
+      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"))
       .as[SessionEvent]
     val sessions = typed
       .groupByKey(_.user_id)

@@ -106,11 +106,11 @@ class DeltaDedupSpec extends AnyFunSuite {
     val old = docsDF(Seq(1L -> t1, 2L -> "one two three four five six"))
     val delta = docsDF(Seq(101L -> t1))
     val r1 = Dedup.minhashLshDelta(Dedup.minhashStore(old), delta)
-    def pairSet(r: Dedup.MinHashDelta) =
+    def pairSet(r: Dedup.PairsDelta[Dedup.MinHashStore]) =
       r.pairs.as[(Long, Long, Double)].collect().toSet
-    def bandedSet(r: Dedup.MinHashDelta) =
+    def bandedSet(r: Dedup.PairsDelta[Dedup.MinHashStore]) =
       r.updatedStore.banded.as[(Long, Int, Long)].collect().toSet
-    def shingleSet(r: Dedup.MinHashDelta) =
+    def shingleSet(r: Dedup.PairsDelta[Dedup.MinHashStore]) =
       r.updatedStore.shingles.as[(Long, Int, String)].collect().toSet
     assert(pairSet(r1).map(p => (p._1, p._2)) == Set((1L, 101L)))
     // a RETRIED ingest of the same delta against the updated store: the
@@ -181,7 +181,7 @@ class DeltaDedupSpec extends AnyFunSuite {
     def pairs(df: DataFrame) = df.as[(Long, Long, Double)].collect().toSet
     val fullPairs = pairs(Dedup.containment(full, 3, 0.8))
     val r = Dedup.containmentDelta(
-      Dedup.containmentStore(old, 3, 0.8), delta, 3, 0.8)
+      Dedup.shingleStore(old, 3, 0.8), delta, 0.8)
     assert(pairs(r.pairs) == fullPairs.filter(p => p._1 >= 100 || p._2 >= 100))
     // both asymmetric directions crossed the ingest boundary
     val dirs = pairs(r.pairs).map(p => (p._1, p._2))
@@ -191,27 +191,25 @@ class DeltaDedupSpec extends AnyFunSuite {
     assert(!dirs.contains((1L, 2L)), "old-old pair re-emitted")
 
     // two sequential ingests compose to the one-shot delta pass
-    val r1 = Dedup.containmentDelta(Dedup.containmentStore(old, 3, 0.8),
-      full.filter($"doc_id" >= 100 && $"doc_id" <= 102), 3, 0.8)
+    val r1 = Dedup.containmentDelta(Dedup.shingleStore(old, 3, 0.8),
+      full.filter($"doc_id" >= 100 && $"doc_id" <= 102), 0.8)
     val r2 = Dedup.containmentDelta(r1.updatedStore,
-      full.filter($"doc_id" >= 103), 3, 0.8)
+      full.filter($"doc_id" >= 103), 0.8)
     assert(pairs(r1.pairs) ++ pairs(r2.pairs) == pairs(r.pairs))
 
     // re-ingest idempotency: the delta replaces its stored rows
-    val r3 = Dedup.containmentDelta(r.updatedStore, delta, 3, 0.8)
+    val r3 = Dedup.containmentDelta(r.updatedStore, delta, 0.8)
     assert(pairs(r3.pairs) == pairs(r.pairs))
     assert(r3.updatedStore.rows.as[(Long, Long, String)].collect().toSet ==
       r.updatedStore.rows.as[(Long, Long, String)].collect().toSet)
 
-    // parameter-drift guards: a LOOSER tau (stored prefixes too short)
-    // and a different shingle width are contract errors, not silent
-    // pair loss; the SAME-or-tighter tau is accepted
-    val st = Dedup.containmentStore(old, 3, 0.8)
+    // parameter-drift guard: a LOOSER tau (stored prefixes too short)
+    // is a contract error, not silent pair loss; the SAME-or-tighter
+    // tau is accepted
+    val st = Dedup.shingleStore(old, 3, 0.8)
     intercept[IllegalArgumentException](
-      Dedup.containmentDelta(st, delta, 3, 0.7))
-    intercept[IllegalArgumentException](
-      Dedup.containmentDelta(st, delta, 4, 0.8))
-    assert(Dedup.containmentDelta(st, delta, 3, 0.9).pairs.count() >= 0)
+      Dedup.containmentDelta(st, delta, 0.7))
+    assert(Dedup.containmentDelta(st, delta, 0.9).pairs.count() >= 0)
   }
 
   test("ngramJaccardDelta emits exactly the full run's pairs touching the delta") {
@@ -229,19 +227,17 @@ class DeltaDedupSpec extends AnyFunSuite {
     def pairs(df: DataFrame) =
       df.select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     val fullPairs = pairs(Dedup.ngramJaccard(full, 3, 0.8))
-    val r = Dedup.ngramJaccardDelta(Dedup.jaccardStore(old, 3, 0.8),
-      delta, 3, 0.8)
+    val r = Dedup.ngramJaccardDelta(Dedup.shingleStore(old, 3, 0.8),
+      delta, 0.8)
     assert(pairs(r.pairs) == fullPairs.filter(p => p._1 >= 100 || p._2 >= 100))
     assert(pairs(r.pairs).contains((1L, 101L)), "old-new pair missing")
     assert(pairs(r.pairs).contains((103L, 104L)), "delta-internal pair missing")
     assert(!pairs(r.pairs).contains((1L, 2L)), "old-old pair re-emitted")
-    // re-ingest idempotency + drift guards (the containment contract)
-    val r2 = Dedup.ngramJaccardDelta(r.updatedStore, delta, 3, 0.8)
+    // re-ingest idempotency + drift guard (the containment contract)
+    val r2 = Dedup.ngramJaccardDelta(r.updatedStore, delta, 0.8)
     assert(pairs(r2.pairs) == pairs(r.pairs))
     intercept[IllegalArgumentException](
-      Dedup.ngramJaccardDelta(r.updatedStore, delta, 3, 0.7))
-    intercept[IllegalArgumentException](
-      Dedup.ngramJaccardDelta(r.updatedStore, delta, 4, 0.8))
+      Dedup.ngramJaccardDelta(r.updatedStore, delta, 0.7))
   }
 
   test("keepBestDelta == the full election, including a delta-bridged cluster merge") {

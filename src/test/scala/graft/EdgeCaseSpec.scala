@@ -217,10 +217,10 @@ class EdgeCaseSpec extends AnyFunSuite {
     val r = Dedup.keepBestDelta(store, emptyDelta, noPairs, col("score"))
     assert(r.assignment.as[(Long, Long, Int)].collect().toSet == kb)
     // ngramJaccardDelta with an empty delta: no pairs, store unchanged
-    val jSt = Dedup.jaccardStore(
+    val jSt = Dedup.shingleStore(
       Seq((1L, "a b c d e"), (2L, "x y z w v")).toDF("doc_id", "text"), 3, 0.8)
     val jd = Dedup.ngramJaccardDelta(jSt,
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), 3, 0.8)
+      Seq.empty[(Long, String)].toDF("doc_id", "text"), 0.8)
     assert(jd.pairs.count() == 0)
     assert(jd.updatedStore.rows.count() == jSt.rows.count())
     // ivfDelta / pqDelta with an empty delta: index unchanged

@@ -258,16 +258,16 @@ class RetractionSpec extends AnyFunSuite {
   }
 
   test("containmentRetract: stale survivor prefixes stay lossless through a delta") {
-    val ret = Dedup.containmentRetract(
-      Dedup.containmentStore(docs, 3, 0.5), rDocs)
-    val fresh = Dedup.containmentStore(survDocs, 3, 0.5)
+    val ret = Dedup.prefixStoreRetract(
+      Dedup.shingleStore(docs, 3, 0.5), rDocs)
+    val fresh = Dedup.shingleStore(survDocs, 3, 0.5)
     // shingle rows are per-doc projections: identical after takedown
     assert(rows(ret.rows) == rows(fresh.rows))
     // prefixes are NOT asserted equal — the fresh store ranks by
     // survivor-corpus df while the shrunk store keeps ingest-time
     // orderings; losslessness says the VERIFIED pairs agree anyway
-    val d1 = Dedup.containmentDelta(ret, dupDelta, 3, 0.5)
-    val d2 = Dedup.containmentDelta(fresh, dupDelta, 3, 0.5)
+    val d1 = Dedup.containmentDelta(ret, dupDelta, 0.5)
+    val d2 = Dedup.containmentDelta(fresh, dupDelta, 0.5)
     def cPairs(df: DataFrame): Set[(Long, Long)] =
       df.select(col("container_id"), col("contained_id"))
         .as[(Long, Long)].collect().toSet
@@ -276,11 +276,11 @@ class RetractionSpec extends AnyFunSuite {
   }
 
   test("jaccardStoreRetract: stale survivor prefixes stay lossless through a delta") {
-    val ret = Dedup.jaccardStoreRetract(Dedup.jaccardStore(docs, 3, 0.5), rDocs)
-    val fresh = Dedup.jaccardStore(survDocs, 3, 0.5)
+    val ret = Dedup.prefixStoreRetract(Dedup.shingleStore(docs, 3, 0.5), rDocs)
+    val fresh = Dedup.shingleStore(survDocs, 3, 0.5)
     assert(rows(ret.rows) == rows(fresh.rows))
-    val d1 = Dedup.ngramJaccardDelta(ret, dupDelta, 3, 0.5)
-    val d2 = Dedup.ngramJaccardDelta(fresh, dupDelta, 3, 0.5)
+    val d1 = Dedup.ngramJaccardDelta(ret, dupDelta, 0.5)
+    val d2 = Dedup.ngramJaccardDelta(fresh, dupDelta, 0.5)
     assert(pairSet(d1.pairs) == pairSet(d2.pairs))
     assert(pairSet(d1.pairs).nonEmpty)
   }

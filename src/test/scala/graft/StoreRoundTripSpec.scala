@@ -188,7 +188,7 @@ class StoreRoundTripSpec extends AnyFunSuite {
     val fromTable = Dedup.minhashLshDelta(
       Dedup.MinHashStore(spark.table("mh_banded_rt"),
         spark.table("mh_shingles_rt")), delta)
-    def pairs(r: Dedup.MinHashDelta) =
+    def pairs(r: Dedup.PairsDelta[Dedup.MinHashStore]) =
       r.pairs.as[(Long, Long, Double)].collect().toSet
     assert(pairs(fromTable) == pairs(inMem))
     assert(fromTable.updatedStore.banded.as[(Long, Int, Long)].collect().toSet ==
@@ -203,19 +203,19 @@ class StoreRoundTripSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, d)
     val old = docs.filter(col("doc_id") % 3 =!= 0)
     val delta = docs.filter(col("doc_id") % 3 === 0)
-    val st = Dedup.containmentStore(old, 3, 0.8)
-    val inMem = Dedup.containmentDelta(st, delta, 3, 0.8)
+    val st = Dedup.shingleStore(old, 3, 0.8)
+    val inMem = Dedup.containmentDelta(st, delta, 0.8)
     dropTable("ct_rows_rt")
     dropTable("ct_prefix_rt")
     // both sides bucketed on the shingle — the key of the candidate
-    // joins in both directions (the layout Dedup.ContainmentStore
+    // joins in both directions (the layout Dedup.ShingleStore
     // documents)
     Sinks.writeBucketed(st.rows, "ct_rows_rt", "s", 8)
     Sinks.writeBucketed(st.prefix, "ct_prefix_rt", "s", 8)
     val fromTable = Dedup.containmentDelta(
-      Dedup.ContainmentStore(spark.table("ct_rows_rt"),
-        spark.table("ct_prefix_rt"), 3, 0.8), delta, 3, 0.8)
-    def pairs(r: Dedup.ContainmentDelta) =
+      Dedup.ShingleStore(spark.table("ct_rows_rt"),
+        spark.table("ct_prefix_rt"), 3, 0.8), delta, 0.8)
+    def pairs(r: Dedup.PairsDelta[Dedup.ShingleStore]) =
       r.pairs.as[(Long, Long, Double)].collect().toSet
     assert(pairs(fromTable) == pairs(inMem) && pairs(inMem).nonEmpty)
     assert(fromTable.updatedStore.rows.as[(Long, Long, String)].collect().toSet ==
@@ -245,7 +245,7 @@ class StoreRoundTripSpec extends AnyFunSuite {
         graft.operators.Dedup.ItemJaccardStore(
           spark.table("mm_frows_rt"), spark.table("mm_fprefix_rt"), tau),
         64, 48), delta, tau)
-    def pairs(r: Multimodal.PayloadNearDupDelta) =
+    def pairs(r: Dedup.PairsDelta[Multimodal.PayloadNearDupStore]) =
       r.pairs.as[(Long, Long, Double)].collect().toSet
     assert(pairs(fromTable) == pairs(inMem) && pairs(inMem).nonEmpty)
     assert(fromTable.updatedStore.store.rows
@@ -302,10 +302,10 @@ class StoreRoundTripSpec extends AnyFunSuite {
     val old = docs.filter(col("doc_id") % 3 =!= 0)
     val delta = docs.filter(col("doc_id") % 3 === 0)
     val score = col("n_chars")
-    val jSt = Dedup.jaccardStore(old, 3, 0.8)
+    val jSt = Dedup.shingleStore(old, 3, 0.8)
     val kSt = Dedup.keepBestStore(old,
       Dedup.ngramJaccard(old, 3, 0.8), score)
-    val deltaPairs = Dedup.ngramJaccardDelta(jSt, delta, 3, 0.8).pairs
+    val deltaPairs = Dedup.ngramJaccardDelta(jSt, delta, 0.8).pairs
     val inMem = Dedup.keepBestDelta(kSt, delta, deltaPairs, score)
     Seq("kb_pairs_rt", "kb_scores_rt", "kb_asn_rt", "kb_jrows_rt",
       "kb_jprefix_rt").foreach(dropTable)
@@ -317,13 +317,13 @@ class StoreRoundTripSpec extends AnyFunSuite {
     Sinks.writeBucketed(jSt.rows, "kb_jrows_rt", "s", 8)
     Sinks.writeBucketed(jSt.prefix, "kb_jprefix_rt", "s", 8)
     val deltaPairsT = Dedup.ngramJaccardDelta(
-      Dedup.JaccardStore(spark.table("kb_jrows_rt"),
-        spark.table("kb_jprefix_rt"), 3, 0.8), delta, 3, 0.8).pairs
+      Dedup.ShingleStore(spark.table("kb_jrows_rt"),
+        spark.table("kb_jprefix_rt"), 3, 0.8), delta, 0.8).pairs
     val fromTable = Dedup.keepBestDelta(
       Dedup.KeepBestStore(spark.table("kb_pairs_rt"),
         spark.table("kb_scores_rt"), spark.table("kb_asn_rt")),
       delta, deltaPairsT, score)
-    def res(r: Dedup.KeepBestDelta) =
+    def res(r: Dedup.AssignmentDelta[Dedup.KeepBestStore]) =
       r.assignment.as[(Long, Long, Int)].collect().toSet
     assert(res(fromTable) == res(inMem) && res(inMem).nonEmpty)
     Seq("kb_pairs_rt", "kb_scores_rt", "kb_asn_rt", "kb_jrows_rt",
