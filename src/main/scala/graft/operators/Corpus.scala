@@ -741,15 +741,6 @@ object Corpus {
         explode(sequence(lit(0L), col("n_rep") - 1L)).as("epoch"))
   }
 
-  /** Per-source accounting for [[epochs]]: input docs, emitted rows,
-    * and the effective upsampling ratio — one aggregation. */
-  def epochsReport(docs: DataFrame, epochsPct: Seq[(String, Int)],
-                   defaultPct: Int): DataFrame =
-    epochs(docs, epochsPct, defaultPct)
-      .groupBy(col("source"))
-      .agg(countDistinct(col("doc_id")).as("n_docs"),
-        count(lit(1)).as("n_rows"))
-
   /** The end-to-end TRAINING-MIX MANIFEST — the composed pipeline a
     * data-mix owner actually ships: deterministic weighted sampling
     * ([[sampleWeighted]]) → per-source token budget

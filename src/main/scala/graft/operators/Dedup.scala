@@ -517,6 +517,51 @@ object Dedup {
     table.join(broadcast(retractIds.select(col(key)).distinct()),
       Seq(key), "left_anti")
 
+  /** The ingest merge of every projection store: evict `ids` from
+    * `table`, then append the delta's `rows`. The delta REPLACES any
+    * stored rows under its ids, so same-bytes re-ingest is idempotent.
+    * `ids` is taken as the caller builds it: an anti join is
+    * insensitive to duplicates on its build side. */
+  private[operators] def evictAppend(table: DataFrame, ids: DataFrame,
+                                     rows: DataFrame,
+                                     idCol: String): DataFrame =
+    table.join(ids, Seq(idCol), "left_anti").union(rows)
+
+  /** The bucket columns of the banded-LSH stores: (band, bkey) for
+    * MinHash and SimHash, [[Similarity.Buckets]] for hyperplane LSH. */
+  private val Bands = Seq("band", "bkey")
+
+  /** `a` and `b` agree on every `keys` column. */
+  private[operators] def sameBucket(keys: Seq[String]): Column =
+    keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
+
+  /** The batch candidate join of a banded-LSH store: every
+    * (id_a < id_b) pair of `rows` sharing a bucket on `keys`, plus the
+    * caller's `score` columns over the "a" and "b" sides, distinct (a
+    * pair sharing several buckets repeats with the same score). */
+  private[operators] def selfPairs(rows: DataFrame, keys: Seq[String],
+                                   id: String, score: Column*): DataFrame =
+    rows.as("a").join(rows.as("b"),
+        sameBucket(keys) && col(s"a.$id") < col(s"b.$id"))
+      .select(Seq(col(s"a.$id").as("id_a"), col(s"b.$id").as("id_b")) ++
+        score: _*)
+      .distinct()
+
+  /** The ingest candidate join: `delta` rows × `all` (the merged store,
+    * delta included) rows sharing a bucket, normalized to id_a < id_b
+    * and distinct, so a delta-delta pair found in both orientations
+    * counts once and the result is [[selfPairs]] over the merged store
+    * restricted to pairs touching the delta. Old-old pairs cannot
+    * re-form. `score` must be symmetric in "a" and "b". */
+  private[operators] def deltaPairs(delta: DataFrame, all: DataFrame,
+                                    keys: Seq[String], id: String,
+                                    score: Column*): DataFrame =
+    delta.as("a").join(all.as("b"),
+        sameBucket(keys) && col(s"a.$id") =!= col(s"b.$id"))
+      .select(Seq(least(col(s"a.$id"), col(s"b.$id")).as("id_a"),
+        greatest(col(s"a.$id"), col(s"b.$id")).as("id_b")) ++ score: _*)
+      .distinct()
+
   /** (doc_id, sz, s) shingle rows, persisted — candidate generation
     * and both sides of the verification join re-read them. Also the
     * SHINGLE STORE the streaming verify joins candidates against
@@ -699,19 +744,13 @@ object Dedup {
       s"minhashRecallSweep: every (bands, rowsPerBand) config must " +
         s"multiply to the 128-permutation signature budget; got $configs")
     val base = CacheTracker.persistTracked(shingleArrays(docs, n))
-    val rows = base.select(col("doc_id"), size(col("sh")).as("sz"),
-      explode(col("sh")).as("s"))
     val truth = CacheTracker.persistTracked(
       ngramJaccard(docs, n, tau).select(col("id_a"), col("id_b")))
     configs.map { case (b, r) =>
-      val banded = bandedKeys(base, b, r)
-      val cand = banded.as("a").join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .distinct()
+      val st = minhashStoreOf(base, n, b, r)
       val found = CacheTracker.persistTracked(
-        verifyCandidates(cand, rows, rows, tau)
+        verifyCandidates(selfPairs(st.banded, Bands, "doc_id"), st.shingles,
+          st.shingles, tau)
           .select(col("id_a"), col("id_b")))
       recallCounts(truth, found)
         .select(lit(s"${b}x$r").as("config"), col("n_true"),
@@ -867,21 +906,17 @@ object Dedup {
         f"tau=${store.tau}%.3f: stored prefixes are too short for a looser " +
         "threshold (rebuild the store or query at tau >= the build tau)")
 
-  /** The ingest merge of every prefix-filter store: evict the delta's
-    * ids from `rows` and `prefix` (the delta REPLACES any stored rows
-    * under its ids, so re-ingest is idempotent), then append the
-    * delta's rows and prefixes. Returns the surviving stored prefix —
-    * the old side of the callers' both-direction blocking — and the
-    * merged store, whose tau is the query's (tau >= store.tau by
-    * [[requireBuildTau]], so every prefix in it supports queries at
-    * that threshold or above). */
+  /** The ingest of every prefix-filter store: [[evictAppend]] on `rows`
+    * and `prefix`. Returns the surviving stored prefix — the old side
+    * of the callers' both-direction blocking — and the merged store,
+    * whose tau is the query's (tau >= store.tau by [[requireBuildTau]],
+    * so every prefix in it supports queries at that threshold or
+    * above). */
   private def prefixIngest[S <: PrefixStore[S]](store: S, dIds: DataFrame,
-      dRows: DataFrame, dPrefix: DataFrame, tau: Double): (DataFrame, S) = {
-    val oldRows = store.rows.join(dIds, Seq("doc_id"), "left_anti")
-    val oldPrefix = store.prefix.join(dIds, Seq("doc_id"), "left_anti")
-    (oldPrefix,
-      store.withTables(oldRows.union(dRows), oldPrefix.union(dPrefix), tau))
-  }
+      dRows: DataFrame, dPrefix: DataFrame, tau: Double): (DataFrame, S) =
+    (store.prefix.join(dIds, Seq("doc_id"), "left_anti"),
+      store.withTables(evictAppend(store.rows, dIds, dRows, "doc_id"),
+        evictAppend(store.prefix, dIds, dPrefix, "doc_id"), tau))
 
   /** RETRACTION for every prefix-filter store: election-free, so
     * erasure is two anti-joins — the retracted docs' rows and blocking
@@ -989,37 +1024,22 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** MinHash + LSH near-dup detection (candidate pairs → exact-Jaccard
-    * verification).
+  /** MinHash + LSH near-dup detection: [[minhashStore]]'s build, the
+    * [[selfPairs]] candidate join over its (band, bkey) keys, then the
+    * exact-Jaccard verify on its shingle rows.
     *
     * Signature: `bands*rowsPerBand` xxhash64 permutations over the
     * word n-gram shingle set. Banding: two docs are candidates iff
     * some band of their signatures hashes equal — the classic
-    * sub-quadratic trade: P(candidate) = 1-(1-J^r)^b. The shuffle key
-    * is the (band, bandHash) bucket; only intra-bucket pairs are ever
-    * formed, then verified with the true Jaccard on the (distinct)
-    * shingle sets. */
+    * sub-quadratic trade: P(candidate) = 1-(1-J^r)^b. Only
+    * intra-bucket pairs are ever formed. Pairs with no shared shingle
+    * cannot reach any tau > 0, so the verify's inner join is
+    * lossless. */
   def minhashLsh(docs: DataFrame, n: Int = 3, bands: Int = 16,
                  rowsPerBand: Int = 8, tau: Double = 0.8): DataFrame = {
-    // (doc_id, sh) shingle ARRAYS: the only evaluation of the
-    // tokenize→shingle pipeline, persisted because the signature
-    // projection and both sides of the verification join re-read it
-    // (the standard materialize-the-shingle-table step, kept in array
-    // form — smaller than exploded rows).
-    val base = CacheTracker.persistTracked(shingleArrays(docs, n))
-    val rows = base.select(col("doc_id"), size(col("sh")).as("sz"),
-      explode(col("sh")).as("s"))
-    val banded = bandedKeys(base, bands, rowsPerBand)
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    // Verify on the shingle rows ([[verifyCandidates]]): pairs
-    // with no shared shingle can't reach any tau > 0, so the inner
-    // join is lossless; sizes ride the rows frame from the persisted
-    // shingle arrays (no extra aggregation, no post-agg lookup join).
-    verifyCandidates(cand, rows, rows, tau)
+    val st = minhashStore(docs, n, bands, rowsPerBand)
+    verifyCandidates(selfPairs(st.banded, Bands, "doc_id"), st.shingles,
+      st.shingles, tau)
   }
 
   /** (doc_id, sh) shingle-array rows, empty sets dropped — the shared
@@ -1034,7 +1054,7 @@ object Dedup {
     * (graft.plans.MinHashKernels): the shingle string is hashed once,
     * each permutation re-mixes the fixed 8-byte hash. Signatures are a
     * scan-side PROJECTION — no signature-stage exchange; bit-identical
-    * to the r4 wide-aggregate shape (PlansSpec). */
+    * to the wide-aggregate shape (PlansSpec). */
   private def bandedKeys(shArrays: DataFrame, bands: Int,
                          rowsPerBand: Int): DataFrame =
     shArrays
@@ -1044,72 +1064,53 @@ object Dedup {
         posexplode(Hashing.bandKeys(col("sig"), bands, rowsPerBand))
           .as(Seq("band", "bkey")))
 
-  /** The persisted index state for INCREMENTAL MinHash dedup:
-    * `banded` = (doc_id, band, bkey) LSH keys, `shingles` =
-    * (doc_id, sz, s) shingle rows (the verify store, [[shingleRows]]
-    * schema). At corpus scale both are maintained tables, not per-run
-    * projections — write `banded` bucketed on bkey and `shingles`
-    * bucketed on doc_id ([[graft.sources.Sinks.writeBucketed]]) so the
-    * per-ingest candidate join and verify join read them
-    * pre-partitioned. */
-  final case class MinHashStore(banded: DataFrame, shingles: DataFrame)
+  /** The MinHash store: `banded` = (doc_id, band, bkey) LSH keys,
+    * `shingles` = (doc_id, sz, s) shingle rows (the verify store,
+    * [[shingleRows]] schema), and the build geometry — shingle width
+    * `n` and the (bands, rowsPerBand) split — which every ingest reads
+    * back, since keys from two geometries never match. At corpus scale
+    * write `banded` bucketed on bkey and `shingles` bucketed on doc_id
+    * ([[graft.sources.Sinks.writeBucketed]]) so the per-ingest
+    * candidate join and verify join read them pre-partitioned. */
+  final case class MinHashStore(banded: DataFrame, shingles: DataFrame,
+                                n: Int, bands: Int, rowsPerBand: Int)
 
-  /** Build [[MinHashStore]] state for an initial corpus. */
+  /** Build [[MinHashStore]] state for a corpus. The (doc_id, sh)
+    * shingle ARRAYS are the only evaluation of the tokenize→shingle
+    * pipeline, persisted because the signature projection and both
+    * sides of the verify join re-read them (array form is smaller
+    * than exploded rows). */
   def minhashStore(docs: DataFrame, n: Int = 3, bands: Int = 16,
-                   rowsPerBand: Int = 8): MinHashStore = {
-    val base = CacheTracker.persistTracked(shingleArrays(docs, n))
+                   rowsPerBand: Int = 8): MinHashStore =
+    minhashStoreOf(CacheTracker.persistTracked(shingleArrays(docs, n)), n,
+      bands, rowsPerBand)
+
+  /** [[MinHashStore]] over persisted [[shingleArrays]]. */
+  private def minhashStoreOf(base: DataFrame, n: Int, bands: Int,
+                             rowsPerBand: Int): MinHashStore =
     MinHashStore(bandedKeys(base, bands, rowsPerBand),
       base.select(col("doc_id"), size(col("sh")).as("sz"),
-        explode(col("sh")).as("s")))
-  }
+        explode(col("sh")).as("s")), n, bands, rowsPerBand)
 
-  /** Incremental (delta) MinHash near-dup detection — [[exactDelta]]'s
-    * analog for the near-dup path: band-join the delta's signatures
-    * against the persisted banded-signature store instead of re-running
-    * [[minhashLsh]] over the full corpus. Only the DELTA is tokenized,
-    * shingled, and signed; candidate generation joins the delta's
-    * (band, bkey) keys against store ∪ delta keys (old-old pairs were
-    * already emitted by earlier runs and cannot re-form — at least one
-    * side of every new candidate is a delta doc); verification runs
-    * against the combined shingle store. The emitted pair set is
-    * EXACTLY the full-corpus run's pairs restricted to pairs touching
-    * the delta (banding and exact-Jaccard verify are per-pair
-    * deterministic — spec-proven), so ingest-by-ingest union over time
-    * reproduces the full pair table. Per-ingest cost: delta-sized
-    * projections + one candidate equi-join bounded by bucket occupancy
-    * + the bounded verify — never a corpus rescan.
-    *
-    * Idempotent under RE-ingest (a retried batch, a doc_id already in
-    * the store): the delta's doc_ids are anti-joined out of the stored
-    * keys and shingle rows first, so a re-ingested doc REPLACES its
-    * stored copy instead of duplicating its shingle rows (which would
-    * double intersection counts in the verify and push jaccard past
-    * 1.0 on later ingests). The anti-join is keyed on the delta's ids
-    * — delta-sized, broadcastable, not a store rescan. */
-  def minhashLshDelta(store: MinHashStore, delta: DataFrame, n: Int = 3,
-                      bands: Int = 16, rowsPerBand: Int = 8,
+  /** Incremental (delta) MinHash near-dup detection: [[minhashStore]]
+    * over the delta alone under the store's geometry, [[evictAppend]]
+    * into both tables, then [[deltaPairs]] of the delta's keys against
+    * the merged keys and the exact-Jaccard verify over the merged
+    * shingle rows. The pairs are EXACTLY the full run's restricted to
+    * pairs touching the delta (banding and the verify are per-pair
+    * deterministic — DeltaDedupSpec), at delta-sized cost: no corpus
+    * rescan. The eviction keeps a re-ingested doc's shingle rows
+    * single; duplicated rows would double intersection counts and push
+    * jaccard past 1.0 on later ingests. */
+  def minhashLshDelta(store: MinHashStore, delta: DataFrame,
                       tau: Double = 0.8): PairsDelta[MinHashStore] = {
-    val base = CacheTracker.persistTracked(shingleArrays(delta, n))
-    val dShingles = base.select(col("doc_id"), size(col("sh")).as("sz"),
-      explode(col("sh")).as("s"))
-    val dBanded = bandedKeys(base, bands, rowsPerBand)
-    // evict any re-ingested ids from the stored state: delta wins.
+    val d = minhashStore(delta, store.n, store.bands, store.rowsPerBand)
     val dIds = delta.select(col("doc_id")).distinct()
-    def dropDelta(df: DataFrame): DataFrame =
-      df.join(dIds, Seq("doc_id"), "left_anti")
-    val allBanded = dropDelta(store.banded).union(dBanded)
-    // delta side × all sides: a delta-delta pair matches twice (once
-    // per orientation), so normalize to id_a < id_b and dedup — the
-    // full run's pair convention.
-    val cand = dBanded.as("a").join(allBanded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("id_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("id_b"))
-      .distinct()
-    val allShingles = dropDelta(store.shingles).union(dShingles)
+    val allBanded = evictAppend(store.banded, dIds, d.banded, "doc_id")
+    val cand = deltaPairs(d.banded, allBanded, Bands, "doc_id")
+    val allShingles = evictAppend(store.shingles, dIds, d.shingles, "doc_id")
     PairsDelta(verifyCandidates(cand, allShingles, allShingles, tau),
-      MinHashStore(allBanded, allShingles))
+      store.copy(banded = allBanded, shingles = allShingles))
   }
 
   /** RETRACTION for the MinHash store: election-free — the banded
@@ -1121,61 +1122,57 @@ object Dedup {
     * on either side of a candidate). */
   def minhashStoreRetract(store: MinHashStore,
                           retractIds: DataFrame): MinHashStore =
-    MinHashStore(dropRetracted(store.banded, retractIds, "doc_id"),
-      dropRetracted(store.shingles, retractIds, "doc_id"))
+    store.copy(banded = dropRetracted(store.banded, retractIds, "doc_id"),
+      shingles = dropRetracted(store.shingles, retractIds, "doc_id"))
 
-  /** The persisted sketch store for INCREMENTAL SimHash dedup: one
-    * (doc_id, simhash) row per non-empty doc. Unlike MinHash, the
-    * banding keys are a cheap scan-side PROJECTION of the 64-bit
-    * sketch (4 disjoint 16-bit bands), so the store persists only the
-    * sketch — 8 bytes a doc — and every ingest re-derives band keys
-    * with no shuffle and no stored index. At corpus scale this is a
-    * maintained table like [[keeperStore]]. */
+  /** SimHash blocking: 4 disjoint 16-bit bands of the 64-bit sketch. */
+  private val SimHashBands = 4
+
+  /** The Hamming bound of every SimHash pair: by pigeonhole a pair
+    * within bands − 1 bits agrees on a whole band, so band-equality
+    * candidates are exact up to this distance and lossy above it. */
+  val SimHashMaxDist: Int = SimHashBands - 1
+
+  /** The SimHash store: one (doc_id, simhash) row per non-empty doc.
+    * The band keys are a cheap scan-side projection of the sketch
+    * ([[simhashBanded]]), so the store persists only the sketch — 8
+    * bytes a doc — and every run re-derives them with no shuffle. All
+    * 64 bit votes run in one per-row codegen'd kernel
+    * (graft.plans.SimHashKernels), bit-identical to the tf-weighted
+    * vote aggregate (PlansSpec) with no sketch-stage shuffle. At
+    * corpus scale this is a maintained table like [[keeperStore]]. */
   def simhashStore(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), Text.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) > 0)
       .select(col("doc_id"),
         graft.plans.Exprs.simhash(col("toks")).as("simhash"))
 
-  /** Incremental (delta) SimHash near-dup detection — completes the
-    * incremental quartet (exact / MinHash / embedding / SimHash): only
-    * the DELTA is tokenized and sketched; candidates join the delta's
-    * band keys against store ∪ delta keys (old-old pairs cannot
-    * re-form — at least one side of every new candidate is a delta
-    * doc); the Hamming check is exact on the two stored sketches.
-    * Pigeonhole exactness carries over unchanged: any pair within
-    * Hamming ≤ 3 agrees on a whole 16-bit band, so the emitted set is
-    * EXACTLY [[simhash]]'s full-run pairs restricted to pairs touching
-    * the delta (spec-proven, DeltaDedupSpec). Idempotent under
-    * re-ingest: the delta's doc_ids are anti-joined out of the store
-    * first, so a retried batch replaces its rows instead of pairing a
-    * doc with its own stored copy. Per-ingest cost: one delta
-    * scan+sketch, one band equi-join bounded by bucket occupancy —
-    * never an old-corpus rescan. */
-  def simhashDelta(store: DataFrame, delta: DataFrame,
-                   maxDist: Int = 3): PairsDelta[DataFrame] = {
+  /** (doc_id, simhash, band, bkey): a sketch frame's band keys. */
+  private def simhashBanded(sketch: DataFrame): DataFrame = sketch
+    .select(col("doc_id"), col("simhash"),
+      explode(array((0 until SimHashBands).map(b => struct(lit(b).as("band"),
+        Hashing.simhashBand(col("simhash"), b).as("bkey"))): _*)).as("bk"))
+    .select(col("doc_id"), col("simhash"),
+      col("bk.band").as("band"), col("bk.bkey").as("bkey"))
+
+  /** The Hamming distance of a candidate's two sketches. */
+  private def pairHamming: Column =
+    Hashing.hamming(col("a.simhash"), col("b.simhash")).as("hamming")
+
+  /** Incremental (delta) SimHash near-dup detection: only the DELTA is
+    * tokenized and sketched, [[evictAppend]] merges it, and
+    * [[deltaPairs]] joins its band keys against the merged store's
+    * (Hamming is symmetric, so it is scored before the orientation
+    * swap). The pairs are EXACTLY [[simhash]]'s full-run pairs
+    * restricted to pairs touching the delta (DeltaDedupSpec). */
+  def simhashDelta(store: DataFrame,
+                   delta: DataFrame): PairsDelta[DataFrame] = {
     val dSketch = CacheTracker.persistTracked(simhashStore(delta))
-    val dIds = delta.select(col("doc_id")).distinct()
-    val allSketch = store.join(dIds, Seq("doc_id"), "left_anti").union(dSketch)
-    def banded(sk: DataFrame): DataFrame = sk
-      .select(col("doc_id"), col("simhash"),
-        explode(array((0 until 4).map(b => struct(lit(b).as("band"),
-          Hashing.simhashBand(col("simhash"), b).as("bkey"))): _*)).as("bk"))
-      .select(col("doc_id"), col("simhash"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    // delta side x all sides; a delta-delta pair matches in both
-    // orientations, so normalize to id_a < id_b and dedup (the full
-    // run's convention). Hamming is symmetric — safe to compute before
-    // the least/greatest swap.
-    val pairs = banded(dSketch).as("a").join(banded(allSketch).as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("id_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("id_b"),
-        Hashing.hamming(col("a.simhash"), col("b.simhash")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxDist)
-    PairsDelta(pairs, allSketch)
+    val allSketch = evictAppend(store, delta.select(col("doc_id")).distinct(),
+      dSketch, "doc_id")
+    PairsDelta(deltaPairs(simhashBanded(dSketch), simhashBanded(allSketch),
+        Bands, "doc_id", pairHamming).filter(col("hamming") <= SimHashMaxDist),
+      allSketch)
   }
 
   /** RETRACTION for the SimHash sketch store: one anti-join — the
@@ -1185,38 +1182,13 @@ object Dedup {
                           retractIds: DataFrame): DataFrame =
     dropRetracted(store, retractIds, "doc_id")
 
-  /** 64-bit SimHash near-dup pairs at Hamming distance ≤ `maxDist`.
-    *
-    * SimHash: per-word xxhash64 bit votes weighted by term frequency,
-    * summed per bit, sign → bit. Blocking: 4 disjoint 16-bit bands —
-    * pigeonhole guarantees any pair within Hamming ≤ 3 agrees on at
-    * least one whole band, so band-equality candidate generation is
-    * exact, not approximate, for maxDist ≤ 3. */
-  def simhash(docs: DataFrame, maxDist: Int = 3): DataFrame = {
-    // All 64 bit votes in one per-row codegen'd kernel
-    // (graft.plans.SimHashKernels): vote_j = Σ ±1 per occurrence by
-    // bit j of xxhash64(word) — identical to the r4 shape's tf-
-    // weighted ±cnt sums (PlansSpec-proven bit-for-bit), but as a
-    // scan-side projection: both sketch-stage shuffles (the
-    // (doc, word) tf aggregate and the 64-vote aggregate) are gone.
-    val sims = docs
-      .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
-      .select(col("doc_id"), graft.plans.Exprs.simhash(col("toks")).as("simhash"))
-    val banded = sims.select(col("doc_id"), col("simhash"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band"), Hashing.simhashBand(col("simhash"), b).as("bkey"))): _*))
-        .as("bk"))
-      .select(col("doc_id"), col("simhash"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        Hashing.hamming(col("a.simhash"), col("b.simhash")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxDist)
-  }
+  /** 64-bit SimHash near-dup pairs at Hamming distance ≤
+    * [[SimHashMaxDist]]: [[simhashStore]] plus the [[selfPairs]] join
+    * over its band keys. SimHash: per-word xxhash64 bit votes weighted
+    * by term frequency, summed per bit, sign → bit. */
+  def simhash(docs: DataFrame): DataFrame =
+    selfPairs(simhashBanded(simhashStore(docs)), Bands, "doc_id", pairHamming)
+      .filter(col("hamming") <= SimHashMaxDist)
 
   /** Near-dup pairs → canonical keeper: connected components by
     * iterative min-label propagation WITH pointer doubling (the last
@@ -1377,17 +1349,14 @@ object Dedup {
     * oracle-friendly). For a corpus with no class column, the blocked
     * scale path is [[embeddingNearDupLsh]]. */
   def embeddingNearDup(embeddings: DataFrame, tau: Double): DataFrame = {
-    // float arrays: DotExpr promotes per element. Norms hoisted to the
-    // per-row projection so the intra-label pair loop pays one dot per
-    // pair, not three (bit-identical to Vec.cosine — same expressions,
-    // evaluated per row).
+    // float arrays: DotExpr promotes per element; norms are hoisted to
+    // the per-row projection ([[Similarity.cosine]])
     val e = embeddings.select(col("vec_id"), col("label"),
       col("embedding").as("v"), Vec.norm(col("embedding")).as("nrm"))
     e.as("a").join(e.as("b"),
         col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        (Vec.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")))
-          .as("cos_sim"))
+        Similarity.pairCosine)
       .filter(col("cos_sim") >= tau)
   }
 
@@ -1574,39 +1543,21 @@ object Dedup {
     val edgeDepth = math.max(depth, k)
     val e = embeddings.select(col("vec_id"), col("embedding").as("v"))
     // the sign word must span BOTH families: the nTables×planesPerTable
-    // cluster family and the fixed 4×6 graph family. With default
-    // parameters both need 24 bits; with a NARROWER cluster family
-    // (e.g. 4×4) the word still carries the graph's full 24 planes —
-    // hyperplanes are prefix-stable, so widening the word never changes
-    // an existing slice (r15, ADVICE r14: the pre-fix code computed
-    // only nTables·planesPerTable bits and the graph slice silently
-    // read sign 0 for the missing planes, collapsing graph buckets)
+    // cluster family and the fixed 4×6 graph family, or a graph slice
+    // of a narrower cluster family (e.g. 4×4) reads sign 0 for the
+    // missing planes and collapses its buckets. Hyperplanes are
+    // prefix-stable, so widening the word never changes a slice.
     val nPlanes =
       math.max(nTables * planesPerTable, GraphTables * GraphPlanes)
     val bits = Similarity.lshBits(e, nPlanes, dim)
-    val pb = Similarity.lshBucketed(e, nTables, planesPerTable, dim)
-    val pairs = pb.as("a").join(pb.as("b"),
-        col("a.table") === col("b.table") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        (Vec.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")))
-          .as("cos_sim"))
-      .distinct() // same pair from several tables: cosine is deterministic
-      .filter(col("cos_sim") >= tau)
+    val pairs = cosinePairs(
+      Similarity.lshBucketed(e, nTables, planesPerTable, dim), tau)
       .select(col("id_a"), col("id_b"))
     // the graph family: its own inline dots over the same planes;
     // graph semantics unchanged from knnGraph's 4×6 construction
     val gb = Similarity.lshBucketed(e, GraphTables, GraphPlanes, dim)
-    val gScored = gb.as("a").join(gb.as("b"),
-        col("a.table") === col("b.table") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("probe_id"), col("b.vec_id").as("neighbor_id"),
-        (Vec.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")))
-          .as("cos_sim"))
-      // no pre-ranking distinct (r20): rankTopK's heap dedupes by id
-    // edges KEEP their cosine (r15) and their rank (r16): the
+    val gScored = Similarity.bucketMates(gb, gb)
+    // edges KEEP their cosine and their rank: the
     // incremental form's graph maintenance merges stored rows with
     // fresh delta-pair scores, which needs the stored score; the
     // rank makes the consumers' top-k slice a pure filter; `cap` is
@@ -1620,7 +1571,7 @@ object Dedup {
       Similarity.rankTopK(gScored, edgeDepth)
         .select(col("probe_id").as("src"), col("neighbor_id").as("dst"),
           col("cos_sim"), col("rnk"), lit(edgeDepth).as("cap")))
-    // §2.6 overlap measured and REJECTED here (r21): forking
+    // overlap measured and REJECTED here: forking
     // clusters(pairs) onto a helper thread while the graph branch
     // checkpoints overlaps two HEAVY 32-task self-join jobs that (a)
     // fight for the same cores — total CPU is the sum either way —
@@ -1772,14 +1723,14 @@ object Dedup {
     *    broadcast remap; min-id labels are not needed — any
     *    canonical label induces the same GROUPING, which is all the
     *    election reads).
-    *  - kNN graph: MERGED-top-k maintenance (r15) at SURPLUS depth
-    *    [[graphDepth]] (r16) — stored edges carry their scores, so a
+    *  - kNN graph: MERGED-top-k maintenance at SURPLUS depth
+    *    [[graphDepth]] — stored edges carry their scores, so a
     *    non-delta vector's fresh ranking to its stored cap is
     *    topK(its stored prefix ∪ its scores against DELTA bucket
     *    mates) and only delta-touching pairs are ever scored
-    *    (delta-proportional work; the r14 bucket-membership re-rank
-    *    degenerated to a ~full-graph rebuild whenever |delta| ≳
-    *    #buckets — §6 r15 anatomy); the grown edge list is
+    *    (delta-proportional work; a bucket-membership re-rank
+    *    degenerates to a ~full-graph rebuild whenever |delta| ≳
+    *    #buckets); the grown edge list is
     *    row-for-row the fresh build's (total heap order, immutable
     *    old-old scores).
     *  - pagerank + election: rerun globally — 3 edge-keyed joins
@@ -1804,12 +1755,11 @@ object Dedup {
         f"store's build parameters (tau=${store.tau}%.3f, k=${store.k}): " +
         "the graph and pair stages are parameter-determined — rebuild " +
         "the store to change them")
-    // geometry pin (r16, ADVICE r15 medium): the stored sign words are
-    // max(build cluster family, graph family) planes wide; slicing a
-    // WIDER cluster family out of them would read sign 0 for the
-    // planes the build never computed — silent bucket collapse, the
-    // class the r15 max() rule fixed on the build side. Same contract
-    // as (tau, k): different geometry = rebuild, not ingest.
+    // geometry pin: the stored sign words are max(build cluster
+    // family, graph family) planes wide; slicing a WIDER cluster family
+    // out of them would read sign 0 for the planes the build never
+    // computed — silent bucket collapse. Same contract as (tau, k):
+    // different geometry = rebuild, not ingest.
     require(nTables == store.nTables &&
         planesPerTable == store.planesPerTable,
       s"semanticKeepersBestDelta(nTables=$nTables, planesPerTable=" +
@@ -1817,10 +1767,9 @@ object Dedup {
         s"geometry (${store.nTables}x${store.planesPerTable}): stored " +
         "sign words only carry the build's planes — rebuild the store " +
         "to change the family")
-    // store-format gate (r16, ADVICE r15 low): the r15 merged-top-k
-    // maintenance needs SCORED stored edges; a pre-r15 (src, dst)-only
-    // graph would otherwise die deep in the merge with an opaque
-    // unresolved-column error
+    // store-format gate: merged-top-k maintenance needs SCORED, ranked
+    // stored edges; a (src, dst)-only graph would otherwise die deep in
+    // the merge with an opaque unresolved-column error
     require(store.graph.columns.contains("cos_sim"),
       "pre-r15 SemanticBestStore: the persisted kNN graph has no " +
         "cos_sim column, but merged-top-k maintenance needs scored " +
@@ -1834,11 +1783,9 @@ object Dedup {
         "with this version's semanticBestStore")
     // sign-word width: same rule as the build side (max of the two
     // families — hyperplanes are prefix-stable, so any cluster-family
-    // geometry is sound as long as BUILD and DELTA use the same
-    // parameters, which the geometry pin above makes the store's
-    // contract). r15, ADVICE r14: the pre-fix require demanded
-    // exactly 24 planes, refusing stores the build side legally
-    // produced at e.g. 8×4.
+    // geometry the build accepts, e.g. 8×4, is sound as long as BUILD
+    // and DELTA use the same parameters, which the geometry pin above
+    // makes the store's contract).
     val nPlanes =
       math.max(nTables * planesPerTable, GraphTables * GraphPlanes)
     val dIds = delta.select(col("vec_id")).distinct()
@@ -1848,20 +1795,11 @@ object Dedup {
     // same-bytes re-ingest contract: the delta REPLACES its stored
     // rows in every tier before re-entering
     val allBits = CacheTracker.persistTracked(
-      store.bits.join(dIds, Seq("vec_id"), "left_anti").union(dBits))
+      evictAppend(store.bits, dIds, dBits, "vec_id"))
     // cluster pairs: delta × all under the 6×4 family
-    val d64 = Similarity.bucketedFromBits(dBits, nTables, planesPerTable)
-    val all64 = Similarity.bucketedFromBits(allBits, nTables, planesPerTable)
-    val dPairs = d64.as("a").join(all64.as("b"),
-        col("a.table") === col("b.table") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(least(col("a.vec_id"), col("b.vec_id")).as("id_a"),
-        greatest(col("a.vec_id"), col("b.vec_id")).as("id_b"),
-        (Vec.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")))
-          .as("cos_sim"))
-      .distinct()
-      .filter(col("cos_sim") >= tau)
+    val dPairs = cosineDeltaPairs(
+      Similarity.bucketedFromBits(dBits, nTables, planesPerTable),
+      Similarity.bucketedFromBits(allBits, nTables, planesPerTable), tau)
       .select(col("id_a"), col("id_b"))
     // partition update: stored labels (the elected keeper is constant
     // within a component — any canonical label induces the same
@@ -1877,16 +1815,15 @@ object Dedup {
         coalesce(col("lb"), col("id_b")).as("id_b"))
       .filter(col("id_a") =!= col("id_b"))
       .distinct()
-    // §2.6 overlap (r21): the quotient's driver closure (an eager
+    // overlap: the quotient's driver closure (an eager
     // collect over the delta pair list) and the graph branch below
     // (whose persist + pagerank checkpoint is the other eager block)
     // are independent until the election — close the quotient on a
     // helper thread and join it where the partition is assembled.
     val remapF = onThread(quotientRemap(quotient, delta.sparkSession))
-    // kNN-graph maintenance (r15): EXACT merged top-k, delta-bounded
-    // pair work. The r14 form re-ranked every vector sharing a 4×6
-    // bucket with the delta over ALL its bucket mates — and the 50×
-    // anatomy (§6 r15) measured that at 90%
+    // kNN-graph maintenance: EXACT merged top-k, delta-bounded
+    // pair work. Re-ranking every vector sharing a 4×6 bucket with the
+    // delta over ALL its bucket mates was measured at 50× scale at 90%
     // of the delta wall (953,790 re-ranked edges, 166-252 s),
     // because 2,000 delta vectors touch every bucket of every
     // 64-bucket table, making `affected` 95% of the corpus: the
@@ -1905,25 +1842,12 @@ object Dedup {
     // instead of affected × occupancy.
     val d46 = Similarity.bucketedFromBits(dBits, GraphTables, GraphPlanes)
     val all46 = Similarity.bucketedFromBits(allBits, GraphTables, GraphPlanes)
-    def pairScore(a: String, b: String) =
-      (Vec.dot(col(s"$a.v"), col(s"$b.v")) /
-        (col(s"$a.nrm") * col(s"$b.nrm"))).as("cos_sim")
-    // non-delta vectors see exactly the DELTA as new candidates
-    val vsDelta = all46.join(dIds, Seq("vec_id"), "left_anti").as("a")
-      .join(d46.as("b"),
-        col("a.table") === col("b.table") &&
-          col("a.bucket") === col("b.bucket"))
-      .select(col("a.vec_id").as("probe_id"),
-        col("b.vec_id").as("neighbor_id"), pairScore("a", "b"))
-      // no pre-ranking distinct (r20): rankTopK's heap dedupes by id
+    // non-delta vectors see exactly the DELTA as new candidates (the
+    // sides are disjoint, so no self-row test)
+    val vsDelta = Similarity.bucketMates(
+      all46.join(dIds, Seq("vec_id"), "left_anti"), d46, selfFree = false)
     // the delta itself ranks fresh over all its bucket mates
-    val deltaSide = d46.as("a").join(all46.as("b"),
-        col("a.table") === col("b.table") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("probe_id"),
-        col("b.vec_id").as("neighbor_id"), pairScore("a", "b"))
-      // no pre-ranking distinct (r20): rankTopK's heap dedupes by id
+    val deltaSide = Similarity.bucketMates(d46, all46)
     // stored edges stay valid iff NEITHER endpoint changed; rows with
     // a delta endpoint re-form identically in the two scoring passes
     // above (same bytes → same cosine)
@@ -1932,7 +1856,7 @@ object Dedup {
       .join(dIds.select(col("vec_id").as("dst")), Seq("dst"), "left_anti")
       .select(col("src").as("probe_id"), col("dst").as("neighbor_id"),
         col("cos_sim"))
-    // surplus maintenance (r16): merge at graphDepth(k), then cut
+    // surplus maintenance: merge at graphDepth(k), then cut
     // each probe at the depth the merge is provably exact to. A
     // probe whose stored list was pool-EXHAUSTED (cnt0 < cap0 — the
     // stored rows were its entire old candidate pool) merges
@@ -1988,7 +1912,7 @@ object Dedup {
           col("cluster_id")))
     val assignment = electMax(assigned)
       .select(col("doc_id").as("vec_id"), col("keep_id"), col("is_dup"))
-    // pair-table maintenance (r16): old-old pairs are immutable
+    // pair-table maintenance: old-old pairs are immutable
     // (value-determined, neither endpoint changed), and every pair
     // with a delta endpoint — including a re-ingested one — re-forms
     // identically in dPairs, so anti-join + union keeps the table
@@ -2003,8 +1927,7 @@ object Dedup {
         nTables, planesPerTable))
   }
 
-  /** RETRACTION for the incremental centrality election (r16, the
-    * semantic half of the delta-store family's first removal path):
+  /** RETRACTION for the incremental centrality election:
     * take `retractIds` out of a [[SemanticBestStore]] — bits, graph,
     * partition, election — without rebuilding, and return the
     * post-takedown assignment over the SURVIVING corpus, exactly
@@ -2022,8 +1945,8 @@ object Dedup {
     *    the STORED pair list — pairs are value-determined, so the
     *    survivors' pair graph is exactly the stored edges minus
     *    those with a retracted endpoint: an edge-list FILTER, zero
-    *    cosine work (r16 probe anatomy: the first cut re-SCORED
-    *    touched survivors' bucket candidates and that one stage was
+    *    cosine work (re-SCORING touched survivors' bucket
+    *    candidates instead was measured as
     *    110 s of a 135 s takedown pass at 100k vectors — 8.5M
     *    re-scored candidates to re-derive edges the build had
     *    already verified) — then the same driver union-find +
@@ -2036,7 +1959,7 @@ object Dedup {
     *    direction only — an ingest can merge new candidates into a
     *    stored prefix, but a removal can PROMOTE a neighbor the
     *    stored list had displaced, and the store no longer knows
-    *    who was displaced. The SURPLUS (r16, [[graphDepth]] = 2k
+    *    who was displaced. The SURPLUS ([[graphDepth]] = 2k
     *    stored edges per probe where the pagerank reads k) absorbs
     *    almost all of that: a probe that lost t stored edges still
     *    holds the true top-(cap − t) over the survivors, so as long
@@ -2045,8 +1968,8 @@ object Dedup {
     *    FILTER plus a scoring-free rank re-densify. Only probes
     *    that lose more than their whole surplus — expected
     *    P[Binom(2k, |r|/N) > k] of probes, vs ≈ 1-(1-|r|/N)^k under
-    *    the pre-surplus any-lost-dst rule that the r16 probe
-    *    anatomy measured as the pass's cost center — re-rank fresh
+    *    an any-lost-dst rule, which was measured as the pass's
+    *    cost center — re-rank fresh
     *    over their surviving bucket mates. Edges with a retracted
     *    endpoint drop.
     *  - '''pagerank + election''': global by nature, rerun — 3
@@ -2110,7 +2033,7 @@ object Dedup {
     val tPairs = survPairs
       .join(touchedIds.select(col("vec_id").as("id_a")), Seq("id_a"))
       .select(col("id_a"), col("id_b"))
-    // §2.6 overlap (r21): the touched components' driver closure (an
+    // overlap: the touched components' driver closure (an
     // eager collect over the filtered stored pair list) and the graph
     // section below (whose decay-union persist + pagerank checkpoint
     // is the other eager block) are independent until the election —
@@ -2118,8 +2041,8 @@ object Dedup {
     // partition is assembled, after the graph branch has been kicked
     // off.
     val remapF = onThread(quotientRemap(tPairs, sp))
-    // ---- graph: drop retracted endpoints. The SURPLUS (r16 —
-    // [[graphDepth]] = 2k stored edges per probe) makes this
+    // ---- graph: drop retracted endpoints. The SURPLUS
+    // ([[graphDepth]] = 2k stored edges per probe) makes this
     // filter-only for almost every touched probe: a stored list is
     // exact to its cap, so losing t of its rows leaves the true
     // top-(cap − t) over the survivors — anything outside the list
@@ -2130,9 +2053,9 @@ object Dedup {
     // length) AND (b) cap − t < k (the surviving prefix can no
     // longer prove the rnk <= k slice the pagerank reads). At a
     // |r|/N takedown the re-score set is P[Binom(2k, |r|/N) > k] of
-    // probes — negligible where the pre-surplus rule (re-rank on ANY
-    // lost dst, ≈ 1-(1-|r|/N)^k of probes) was the measured cost
-    // center of the whole takedown pass (§6 r16 probe anatomy).
+    // probes — negligible where re-ranking on ANY lost dst
+    // (≈ 1-(1-|r|/N)^k of probes) was the measured cost center of the
+    // whole takedown pass.
     val gd = graphDepth(k)
     val lost = store.graph
       .join(rIds.select(col("vec_id").as("dst")), Seq("dst"))
@@ -2173,15 +2096,7 @@ object Dedup {
       bits.join(affected, Seq("vec_id")), GraphTables, GraphPlanes)
     val allBuckets = Similarity.bucketedFromBits(bits,
       GraphTables, GraphPlanes)
-    val rescored = aBuckets.as("a").join(allBuckets.as("b"),
-        col("a.table") === col("b.table") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("probe_id"),
-        col("b.vec_id").as("neighbor_id"),
-        (Vec.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")))
-          .as("cos_sim"))
-      // no pre-ranking distinct (r20): rankTopK's heap dedupes by id
+    val rescored = Similarity.bucketMates(aBuckets, allBuckets)
     val shrunk = CacheTracker.persistTracked(
       untouched
         .union(keptDecayed)
@@ -2494,48 +2409,24 @@ object Dedup {
       KeepBestStore(survPairs, survScores, assignment))
   }
 
-  /** The persisted index state for INCREMENTAL embedding near-dup
-    * detection: the LSH-bucketed vector rows (vec_id, v, nrm, table,
-    * bucket) — [[MinHashStore]]'s analog for the semantic path. At
-    * corpus scale a maintained table, written bucketed on `bucket`
-    * ([[graft.sources.Sinks.writeBucketed]]) so the per-ingest
-    * candidate join reads it pre-partitioned on its join key.
+  /** The embedding LSH store: the bucketed vector rows (vec_id, v, nrm,
+    * table, bucket) — [[MinHashStore]]'s analog for the semantic path
+    * and the serving index of [[Similarity.knnLshIndexed]] — plus the
+    * build geometry. At corpus scale a maintained table, written
+    * bucketed on `bucket` ([[graft.sources.Sinks.writeBucketed]]) so
+    * the per-ingest candidate join reads it pre-partitioned.
     *
-    * Carries its own BUILD-TIME GEOMETRY (r18, closing the ADVICE r17
-    * seam): bucket ids are only comparable under the (nTables,
-    * planesPerTable, dim) that hashed them, so every delta/retract
-    * pass DERIVES the geometry from the store instead of re-accepting
-    * it as parameters — two geometries can no longer be mixed into
-    * one bucket table silently. A store read back from parquet gets
-    * the library defaults (the persisted layout carries no geometry
-    * sidecar); callers persisting non-default geometry carry the
-    * three ints beside the path and restore them via
-    * [[embeddingLshStoreReadBack]], which REQUIRES all three — the
-    * bare constructor's defaults exist for the Dedup family's 6×4
-    * builds, and read-back through it silently stamps 6×4 onto a
-    * table hashed under any other family (e.g. the graph/serving
-    * family's 4×6), which is ADVICE r18's one-missing-named-argument
-    * footgun ([[graft.operators.Dedup.SemanticBestStore]] precedent
-    * for the carry-beside-the-path contract). */
-  final case class EmbeddingLshStore(bucketed: DataFrame,
-                                     nTables: Int = 6,
-                                     planesPerTable: Int = 4,
-                                     dim: Int = 64)
+    * Bucket ids are only comparable under the (nTables, planesPerTable,
+    * dim) that hashed them, so every ingest, retract and probe reads
+    * the geometry from the store, and there are no defaults: a store
+    * read back from parquet names the geometry it was built with (the
+    * persisted layout carries none), since a wrong one re-buckets the
+    * next delta under planes that never hashed the stored rows — no
+    * error, just non-pairs. */
+  final case class EmbeddingLshStore(bucketed: DataFrame, nTables: Int,
+                                     planesPerTable: Int, dim: Int)
 
-  /** Read-back constructor for a PERSISTED bucket table (ADVICE r18):
-    * all three geometry ints are REQUIRED, so restoring a store from
-    * parquet cannot silently default to the 6×4 Dedup family when the
-    * table was hashed under another plane family — a wrong geometry
-    * here re-buckets the next delta under planes that never hashed
-    * the stored rows (no error, just non-pairs). Callers that
-    * persisted a default-geometry store pass the defaults
-    * explicitly; the explicitness IS the guard. */
-  def embeddingLshStoreReadBack(bucketed: DataFrame, nTables: Int,
-                                planesPerTable: Int,
-                                dim: Int): EmbeddingLshStore =
-    EmbeddingLshStore(bucketed, nTables, planesPerTable, dim)
-
-  /** Build [[EmbeddingLshStore]] state for an initial corpus. */
+  /** Build [[EmbeddingLshStore]] state for a corpus. */
   def embeddingLshStore(embeddings: DataFrame, nTables: Int = 6,
                         planesPerTable: Int = 4,
                         dim: Int = 64): EmbeddingLshStore =
@@ -2543,44 +2434,32 @@ object Dedup {
       embeddings.select(col("vec_id"), col("embedding").as("v")),
       nTables, planesPerTable, dim), nTables, planesPerTable, dim)
 
-  /** Incremental (delta) embedding near-dup detection — completes the
-    * incremental trio (exact [[exactDelta]], MinHash
-    * [[minhashLshDelta]], semantic here): only the DELTA is
-    * plane-hashed; its bucket keys join store ∪ delta, so old-old
-    * pairs (already emitted by earlier runs) cannot re-form, and the
-    * emitted set is EXACTLY the full run's pairs restricted to pairs
-    * touching the delta (blocking and cosine are per-row/per-pair
-    * deterministic — the oracle replays precisely this restriction).
-    * Idempotent under re-ingest like [[minhashLshDelta]]: the delta's
-    * vec_ids are anti-joined out of the store first, so a retried
-    * batch replaces its stored rows. Downstream clustering stays a
-    * closure over the maintained PAIR table ([[clusters]] /
-    * [[semanticKeepers]]'s tail) — pair-graph-sized, never a corpus
-    * rescan; a new pair may legally merge two existing components,
-    * which is why keepers recompute from pairs, not incrementally. */
-  /** Incremental LSH-bucket STORE maintenance alone (no pair
-    * emission) — the E-family serving-index delta for the LSH path:
-    * the hyperplanes are data-independent constants, so a delta's
-    * bucket rows are a pure per-row projection appended to the store
-    * (re-ingest replaces via the anti join) and the grown store is
-    * definitionally identical to a fresh build over the union — which
-    * is why knn_lsh_delta shares knn_lsh's oracle verbatim, with no
-    * old-side predicate at all. */
+  /** The ingest of an [[EmbeddingLshStore]]: [[embeddingLshStore]] over
+    * the delta under the store's geometry, then [[evictAppend]].
+    * Returns the delta's build (the ingest join's delta side) and the
+    * merged store, which keeps the input's geometry. The hyperplanes
+    * are data-independent constants, so the merged store is
+    * definitionally a fresh build over the union — why knn_lsh_delta
+    * shares knn_lsh's oracle verbatim, with no old-side predicate. */
+  private def lshIngest(store: EmbeddingLshStore,
+                        delta: DataFrame): (EmbeddingLshStore, EmbeddingLshStore) = {
+    val d = embeddingLshStore(delta, store.nTables, store.planesPerTable,
+      store.dim)
+    (d, store.copy(bucketed = evictAppend(store.bucketed,
+      delta.select(col("vec_id")).distinct(), d.bucketed, "vec_id")))
+  }
+
+  /** Incremental LSH-bucket store maintenance alone (no pair emission):
+    * the serving-index delta for the LSH path ([[lshIngest]]). */
   def embeddingLshStoreDelta(store: EmbeddingLshStore,
                              delta: DataFrame): EmbeddingLshStore =
-    storeWithBucketedDelta(store, delta, Similarity.lshBucketed(
-      delta.select(col("vec_id"), col("embedding").as("v")),
-      store.nTables, store.planesPerTable, store.dim))
+    lshIngest(store, delta)._2
 
   /** RETRACTION for a PER-VECTOR LSH bucket store (the layout
-    * `knn_lsh_served` serves from): one anti-join. The hyperplanes are
-    * data-independent constants and each vector's bucket rows are a
-    * pure per-row projection, so the shrunk store is definitionally
-    * identical to a fresh build over the survivors — no quantizer
-    * caveat at all, the takedown analog of [[embeddingLshStoreDelta]]
-    * sharing its full-build oracle with no old-side predicate. A
-    * retracted vector can no longer appear as any probe's candidate,
-    * so every subsequent [[Similarity.knnLshIndexed]] answer equals a
+    * `knn_lsh_served` serves from): one anti-join. Each vector's bucket
+    * rows are a pure per-row projection, so the shrunk store is
+    * definitionally a fresh build over the survivors and every
+    * subsequent [[Similarity.knnLshIndexed]] answer equals a
     * rebuild's. NOTE: only for stores holding one entry per VECTOR;
     * [[SemanticStore]]'s reps-only lsh tier retracts through
     * [[semanticRetract]], which re-elects value reps. */
@@ -2588,46 +2467,34 @@ object Dedup {
                                retractIds: DataFrame): EmbeddingLshStore =
     store.copy(bucketed = dropRetracted(store.bucketed, retractIds, "vec_id"))
 
-  /** Shared store-append tail: ONE definition of "anti-join the
-    * delta's ids out, append its bucket rows", consumed by both the
-    * serving-index delta above and the pair-emitting near-dup delta
-    * below (which needs the bucketed delta for its candidate join, so
-    * the projection is built once and passed in). */
-  private def storeWithBucketedDelta(store: EmbeddingLshStore,
-                                     delta: DataFrame,
-                                     dBucketed: DataFrame): EmbeddingLshStore = {
-    val dIds = delta.select(col("vec_id")).distinct()
-    store.copy(bucketed =
-      store.bucketed.join(dIds, Seq("vec_id"), "left_anti").union(dBucketed))
-  }
-
+  /** Incremental (delta) embedding near-dup detection: [[lshIngest]],
+    * then [[cosineDeltaPairs]] of the delta's buckets against the
+    * merged store's. Only the DELTA is plane-hashed, and the pairs are
+    * EXACTLY the full run's restricted to pairs touching the delta
+    * (blocking and cosine are per-row/per-pair deterministic — the
+    * oracle replays precisely this restriction). Downstream clustering
+    * stays a closure over the maintained PAIR table ([[clusters]] /
+    * [[semanticKeepers]]'s tail): a new pair may legally merge two
+    * existing components, which is why keepers recompute from pairs,
+    * not incrementally. */
   def embeddingNearDupLshDelta(store: EmbeddingLshStore, delta: DataFrame,
                                tau: Double): PairsDelta[EmbeddingLshStore] = {
-    val dBucketed = Similarity.lshBucketed(
-      delta.select(col("vec_id"), col("embedding").as("v")),
-      store.nTables, store.planesPerTable, store.dim)
-    // the updated store is kept WHOLE (not just its bucketed frame) so
-    // the input's geometry propagates through the delta — rebuilding it
-    // via the bare constructor here once reset a non-default store to
-    // the (6,4,64) defaults, silently re-bucketing the NEXT pass under
-    // the wrong plane family (ADVICE r18, the exact mixed-geometry
-    // union the store-carried geometry exists to make unrepresentable)
-    val updated = storeWithBucketedDelta(store, delta, dBucketed)
-    val all = updated.bucketed
-    // delta side x all sides; cosine is symmetric, so normalizing the
-    // orientation to id_a < id_b keeps the full run's pair convention
-    // (a delta-delta pair matching twice dedups in the distinct).
-    val pairs = dBucketed.as("a").join(all.as("b"),
-        col("a.table") === col("b.table") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(least(col("a.vec_id"), col("b.vec_id")).as("id_a"),
-        greatest(col("a.vec_id"), col("b.vec_id")).as("id_b"),
-        (Vec.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")))
-          .as("cos_sim"))
-      .distinct()
-      .filter(col("cos_sim") >= tau)
-    PairsDelta(pairs, updated)
+    val (d, updated) = lshIngest(store, delta)
+    PairsDelta(cosineDeltaPairs(d.bucketed, updated.bucketed, tau), updated)
   }
+
+  /** (id_a, id_b, cos_sim ≥ tau) pairs of one bucketed frame:
+    * [[selfPairs]] over the (table, bucket) keys, scored by
+    * [[Similarity.pairCosine]]. */
+  private def cosinePairs(bucketed: DataFrame, tau: Double): DataFrame =
+    selfPairs(bucketed, Similarity.Buckets, "vec_id", Similarity.pairCosine)
+      .filter(col("cos_sim") >= tau)
+
+  /** [[cosinePairs]]' ingest form, over [[deltaPairs]]. */
+  private def cosineDeltaPairs(delta: DataFrame, all: DataFrame,
+                               tau: Double): DataFrame =
+    deltaPairs(delta, all, Similarity.Buckets, "vec_id", Similarity.pairCosine)
+      .filter(col("cos_sim") >= tau)
 
   /** Hyperplane-LSH recall QA (r13, [[minhashRecallReport]]'s
     * embedding-side sibling): recall of [[embeddingNearDupLsh]]'s
@@ -2687,8 +2554,8 @@ object Dedup {
         col("nrm").as("pnrm"))
     CacheTracker.persistTracked(
       broadcast(p).join(e, col("vec_id") =!= col("p_id"))
-        .filter(Vec.dot(col("pv"), col("v"))
-          / (col("pnrm") * col("nrm")) >= tau)
+        .filter(Similarity.cosine(col("pv"), col("pnrm"), col("v"),
+          col("nrm")) >= tau)
         .select(least(col("p_id"), col("vec_id")).as("id_a"),
           greatest(col("p_id"), col("vec_id")).as("id_b"))
         .distinct())
@@ -2729,17 +2596,7 @@ object Dedup {
                           nTables: Int = 6, planesPerTable: Int = 4,
                           dim: Int = 64): DataFrame = {
     val e = embeddings.select(col("vec_id"), col("embedding").as("v"))
-    // bucketed rows carry the hoisted per-vector norm: intra-bucket
-    // scoring pays one dot per pair (bit-identical to Vec.cosine)
-    val bucketed = Similarity.lshBucketed(e, nTables, planesPerTable, dim)
-    bucketed.as("a").join(bucketed.as("b"),
-        col("a.table") === col("b.table") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        (Vec.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")))
-          .as("cos_sim"))
-      .distinct() // same pair from several tables: cosine is deterministic
-      .filter(col("cos_sim") >= tau)
+    cosinePairs(Similarity.lshBucketed(e, nTables, planesPerTable, dim), tau)
   }
 
   /** Cluster-size CENSUS over any near-dup pair source — the "how

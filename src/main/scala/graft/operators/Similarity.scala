@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vec
@@ -84,14 +84,44 @@ object Similarity {
     * is corpus-scaled and the honest shape is the un-hinted join. */
   val DefaultMaxProbeShards: Int = 32
 
-  /** Score every (probe, vector) pair. Norms are HOISTED: both sides
-    * carry a per-row `pnrm`/`vnrm` column computed once at projection
-    * time, so the pair loop — THE hot loop of exact kNN, |probes| x
-    * |corpus| evaluations — pays one dot product instead of three
-    * (cosine recomputes both operand norms per pair). Bit-identical to
-    * [[Vec.cosine]]: the same expressions, evaluated once per row
-    * instead of once per pair (oracle parity untouched). This is the
-    * ONE canonical scoring projection — filtered search adds
+  /** The cosine of two vectors whose norms `na` and `nb` are HOISTED:
+    * each side carries a per-row norm computed once at projection
+    * time, so a pair loop — |probes| × |corpus| evaluations in exact
+    * kNN, bucket occupancy² in LSH — pays one dot product instead of
+    * three. Bit-identical to [[Vec.cosine]]: the same expressions,
+    * evaluated once per row instead of once per pair (oracle parity
+    * untouched). Every pair score of the family is this column. */
+  private[operators] def cosine(va: Column, na: Column, vb: Column,
+                                nb: Column): Column =
+    Vec.dot(va, vb) / (na * nb)
+
+  /** `cos_sim` of a bucket join's "a" and "b" sides ([[lshBucketed]]
+    * rows). */
+  private[operators] def pairCosine: Column =
+    cosine(col("a.v"), col("a.nrm"), col("b.v"), col("b.nrm")).as("cos_sim")
+
+  /** The bucket columns of [[lshBucketed]] rows. */
+  private[operators] val Buckets = Seq("table", "bucket")
+
+  /** Directed (probe_id, neighbor_id, cos_sim) bucket mates: every
+    * `probes` row × every `rows` row sharing a (table, bucket), both
+    * [[lshBucketed]] frames. A pair sharing several tables repeats
+    * with an identical cosine and is not deduplicated here: the
+    * [[rankTopK]] heap every caller feeds dedupes by id map-side,
+    * which is cheaper than a full-width distinct exchange. Self rows
+    * are dropped unless `selfFree` is false, which callers whose two
+    * sides are disjoint by construction pass. */
+  private[operators] def bucketMates(probes: DataFrame, rows: DataFrame,
+                                     selfFree: Boolean = true): DataFrame = {
+    val same = Dedup.sameBucket(Buckets)
+    probes.as("a").join(rows.as("b"),
+        if (selfFree) same && col("a.vec_id") =!= col("b.vec_id") else same)
+      .select(col("a.vec_id").as("probe_id"),
+        col("b.vec_id").as("neighbor_id"), pairCosine)
+  }
+
+  /** Score every (probe, vector) pair with [[cosine]] over the probe's
+    * `pv`/`pnrm` and the corpus' `v`/`vnrm`. Filtered search adds
     * `joinKeys` equalities (corpus `k` = probe `p_k`) to the join
     * condition rather than re-spelling the projection, so the hot
     * loop can never diverge between the filtered and unfiltered
@@ -102,8 +132,7 @@ object Similarity {
       .foldLeft(col("vec_id") =!= col("probe_id"))(_ && _)
     p.join(e, cond)
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        (Vec.dot(col("pv"), col("v")) / (col("pnrm") * col("vnrm")))
-          .as("cos_sim"))
+        cosine(col("pv"), col("pnrm"), col("v"), col("vnrm")).as("cos_sim"))
   }
 
   /** Exact top-k cosine neighbors for every probe vector. `probes` is
@@ -574,13 +603,10 @@ object Similarity {
     * equals a fresh encode of the union under the same seeds
     * (ApproxAndIvfSpec) and the full replay with the old-side seed
     * predicate is the oracle. */
-  def pqDelta(index: PqIndex, delta: DataFrame, m: Int = PqM): PqIndex = {
-    // no distinct — see ivfDelta
-    val dIds = delta.select(col("vec_id"))
-    val kept = index.codes.join(dIds, Seq("vec_id"), "left_anti")
-    val d = delta.select(col("vec_id"), col("embedding").as("v"))
-    PqIndex(kept.union(pqCodes(d, index.seeds, m)), index.seeds)
-  }
+  def pqDelta(index: PqIndex, delta: DataFrame, m: Int = PqM): PqIndex =
+    PqIndex(Dedup.evictAppend(index.codes, delta.select(col("vec_id")),
+      pqCodes(delta.select(col("vec_id"), col("embedding").as("v")),
+        index.seeds, m), "vec_id"), index.seeds)
 
   /** RETRACTION for the PQ index (r17 — the serving-store takedown
     * family, closing VERDICT r16's "a retracted doc's vectors still
@@ -676,20 +702,11 @@ object Similarity {
     * (Round11OpsSpec), and the full knn_ivfpq replay with old-side
     * predicates on BOTH quantizers is the oracle. */
   def ivfPqDelta(index: IvfPqIndex, delta: DataFrame,
-                 m: Int = PqM): IvfPqIndex = {
-    // no distinct: anti join is insensitive to build-side duplicates
-    // (see ivfDelta)
-    val dIds = delta.select(col("vec_id"))
-    val kept = index.indexed.join(dIds, Seq("vec_id"), "left_anti")
-    val d = delta.select(col("vec_id"), col("embedding").as("v"))
-      .crossJoin(broadcast(codebook(index.centroids)))
-      .crossJoin(broadcast(index.seeds))
-      .select(col("vec_id"),
-        get(Exprs.nearestCells(col("v"), col("cids"), col("units"), 1), lit(0))
-          .as("cell"),
-        Exprs.pqEncode(unitOf(col("v")), col("seeds"), m).as("codes"))
-    IvfPqIndex(kept.union(d), index.centroids, index.seeds)
-  }
+                 m: Int = PqM): IvfPqIndex =
+    index.copy(indexed = Dedup.evictAppend(index.indexed,
+      delta.select(col("vec_id")),
+      ivfPqIndexWith(delta, index.centroids, index.seeds, m).indexed,
+      "vec_id"))
 
   /** RETRACTION for the composed IVF+PQ index — [[pqRetract]] and
     * [[ivfRetract]] in one anti-join on the (vec_id, cell, codes)
@@ -788,17 +805,12 @@ object Similarity {
     * the store-side centroid predicate) replays the delta path
     * exactly. At scale `assigned` is the maintained bucketed-on-cell
     * table; the delta write is an append of delta-sized rows. */
-  def ivfDelta(index: IvfIndex, delta: DataFrame): IvfIndex = {
-    // no distinct: an anti join is insensitive to build-side
-    // duplicates, and the distinct's hash exchange would be the only
+  def ivfDelta(index: IvfIndex, delta: DataFrame): IvfIndex =
+    // no distinct on the ids: its hash exchange would be the only
     // shuffle in an otherwise projection-shaped delta (ScaleShapeSpec)
-    val dIds = delta.select(col("vec_id"))
-    val kept = index.assigned.join(dIds, Seq("vec_id"), "left_anti")
-    val d = delta.select(col("vec_id"), col("embedding").as("v"))
-    IvfIndex(kept.union(
-      assignCells(d, index.centroids).withColumn("vnrm", Vec.norm(col("v")))),
-      index.centroids)
-  }
+    index.copy(assigned = Dedup.evictAppend(index.assigned,
+      delta.select(col("vec_id")),
+      ivfIndexWith(delta, index.centroids).assigned, "vec_id"))
 
   /** RETRACTION for an IVF index (seed-coded, Lloyd's-trained, and
     * label-carrying alike — the assigned table's extra columns ride
@@ -882,8 +894,7 @@ object Similarity {
     val scored = pj
       .join(assigned, cond)
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        (Vec.dot(col("pv"), col("v")) / (col("pnrm") * col("vnrm")))
-          .as("cos_sim"))
+        cosine(col("pv"), col("pnrm"), col("v"), col("vnrm")).as("cos_sim"))
     rankTopK(scored, k)
   }
 
@@ -975,17 +986,7 @@ object Similarity {
                planesPerTable: Int = 6, dim: Int = 64): DataFrame = {
     val e = embeddings.select(col("vec_id"), col("embedding").as("v"))
     val b = lshBucketed(e, nTables, planesPerTable, dim)
-    val scored = b.as("a").join(b.as("b"),
-        col("a.table") === col("b.table") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("probe_id"), col("b.vec_id").as("neighbor_id"),
-        (Vec.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")))
-          .as("cos_sim"))
-      // no pre-ranking distinct (r20): a pair sharing several tables
-      // repeats with an identical deterministic cosine, and the topK
-      // heap dedupes by id map-side — the full-width dedup exchange
-      // the old .distinct() paid is gone
-    rankTopK(scored, k).withColumnRenamed("probe_id", "vec_id")
+    rankTopK(bucketMates(b, b), k).withColumnRenamed("probe_id", "vec_id")
   }
 
   /** RETRACTION for a PERSISTED kNN graph (the table
@@ -1012,7 +1013,7 @@ object Similarity {
     * with (`nTables`/`planesPerTable`/`dim`, [[knnGraph]]'s defaults)
     * — re-ranking affected probes against buckets hashed under a
     * different plane family would silently return wrong candidates,
-    * so the mismatch is rejected up front (r18, ADVICE r17). Result ≡
+    * so the mismatch is rejected up front. Result ≡
     * [[knnGraph]] over corpus-minus-retracted (spec-pinned), because
     * the recomputed probes see exactly the rebuild's candidate sets
     * and the untouched rows are unchanged by the argument above. */
@@ -1036,17 +1037,8 @@ object Similarity {
     val untouched = graph
       .join(broadcast(r), Seq("vec_id"), "left_anti")
       .join(affected, Seq("vec_id"), "left_anti")
-    val p = survBucketed.join(affected, Seq("vec_id"), "left_semi")
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-        col("nrm").as("pnrm"),
-        col("table").as("ptable"), col("bucket").as("pbucket"))
-    val scored = p.join(survBucketed,
-        col("table") === col("ptable") && col("bucket") === col("pbucket") &&
-          col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        (Vec.dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")))
-          .as("cos_sim"))
-      // no pre-ranking distinct (r20): the topK heap dedupes by id
+    val scored = bucketMates(
+      survBucketed.join(affected, Seq("vec_id"), "left_semi"), survBucketed)
     untouched.union(rankTopK(scored, k).withColumnRenamed("probe_id", "vec_id"))
   }
 
@@ -1178,48 +1170,32 @@ object Similarity {
   def knnLsh(embeddings: DataFrame, probes: DataFrame, k: Int,
              nTables: Int = 4, planesPerTable: Int = 6,
              dim: Int = 64,
-             maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame = {
-    val e = embeddings.select(col("vec_id"), col("embedding").as("v"))
-    knnLshIndexed(lshBucketed(e, nTables, planesPerTable, dim), probes, k,
-      nTables, planesPerTable, dim, maxBroadcastProbes)
-  }
+             maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame =
+    knnLshIndexed(
+      Dedup.embeddingLshStore(embeddings, nTables, planesPerTable, dim),
+      probes, k, maxBroadcastProbes)
 
   /** [[knnLsh]] over a PREBUILT index — the serving shape. [[knnLsh]]
     * re-buckets the whole corpus on every call (nTables×planesPerTable
     * plane dots per corpus row), which at low probe counts costs as
     * much as the brute-force scan it is meant to avoid; a deployment
-    * builds the bucketed index once ([[Dedup.embeddingLshStore]],
-    * persisted bucketed on `bucket` via Sinks.writeBucketed) and
-    * serves every query batch from it — per-batch work is then probe
-    * bucketing + the bucket-key join only. `nTables`/`planesPerTable`/
-    * `dim` MUST match the index build (the probe side recomputes the
-    * same planes). */
-  def knnLshIndexed(bucketed: DataFrame, probes: DataFrame, k: Int,
-                    nTables: Int = 4, planesPerTable: Int = 6,
-                    dim: Int = 64,
+    * builds the store once ([[Dedup.embeddingLshStore]], persisted
+    * bucketed on `bucket` via Sinks.writeBucketed) and serves every
+    * query batch from it — per-batch work is then probe bucketing under
+    * the store's geometry + the bucket-key join only. */
+  def knnLshIndexed(store: Dedup.EmbeddingLshStore, probes: DataFrame,
+                    k: Int,
                     maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame = {
     // bucketing is per-row deterministic, so bucketing the probe frame
     // directly equals filtering the bucketed corpus
     val p = probes.select(col("vec_id"), col("embedding").as("v"))
-    val pBucketed = lshBucketed(p, nTables, planesPerTable, dim)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-        col("nrm").as("pnrm"),
-        col("table").as("ptable"), col("bucket").as("pbucket"))
+    val pBucketed = lshBucketed(p, store.nTables, store.planesPerTable,
+      store.dim)
     // guard on the raw probe frame (cheap count; the bucketed frame is
     // nTables rows per probe and would re-evaluate the plane dots).
     // Over the cap the (table, bucket) key carries a shuffle equi-join.
     val pj = if (fitsBroadcast(p, maxBroadcastProbes)) broadcast(pBucketed)
              else pBucketed
-    val scored = pj
-      .join(bucketed,
-        col("table") === col("ptable") && col("bucket") === col("pbucket") &&
-          col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        (Vec.dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")))
-          .as("cos_sim"))
-      // no pre-ranking distinct (r20): the candidate-set union across
-      // tables repeats pairs with identical deterministic cosines, and
-      // the topK heap dedupes by id map-side
-    rankTopK(scored, k)
+    rankTopK(bucketMates(pj, store.bucketed), k)
   }
 }

@@ -374,10 +374,9 @@ object DedupRegistry {
       }
       Dedup.semanticKeepersDelta(
         Dedup.SemanticStore(
-          // read-back restores the build's geometry EXPLICITLY
-          // (ADVICE r18): the store above was built with the Dedup
-          // family's 6×4×64 defaults
-          Dedup.embeddingLshStoreReadBack(StoredTable.read(s, paths.head),
+          // read-back names the build's geometry: the store above was
+          // built with the Dedup family's 6×4×64 defaults
+          Dedup.EmbeddingLshStore(StoredTable.read(s, paths.head),
             nTables = 6, planesPerTable = 4, dim = 64),
           StoredTable.read(s, paths(1))),
         emb.filter(c % DeltaMod === 0), CosineTau).assignment
@@ -1160,11 +1159,8 @@ object DedupRegistry {
         |           FROM documents)
         |         WHERE doc_id = k) kk ON kk.doc_id = d.doc_id) src""".stripMargin,
       JaccardTau),
-    "dd_simhash" -> XxSql.simhashPairs("documents", SimHashMaxDist),
-    "dd_simhash_delta" -> XxSql.simhashPairs("documents", SimHashMaxDist,
+    "dd_simhash" -> XxSql.simhashPairs("documents", Dedup.SimHashMaxDist),
+    "dd_simhash_delta" -> XxSql.simhashPairs("documents", Dedup.SimHashMaxDist,
       s"AND (id_a % $DeltaMod = 0 OR id_b % $DeltaMod = 0)"),
   )
-
-  /** dd_simhash blocking bound (4-band pigeonhole ⇒ exact ≤ 3). */
-  val SimHashMaxDist = 3
 }

@@ -162,14 +162,15 @@ object SimilarityRegistry {
         graft.operators.Dedup.embeddingLshStore(
           emb.filter(c % DeltaMod =!= 0), nTables = 4, planesPerTable = 6),
         emb.filter(c % DeltaMod === 0))
-      Similarity.knnLshIndexed(grown.bucketed, probes(s, d), K)
+      Similarity.knnLshIndexed(grown, probes(s, d), K)
     }),
     "knn_lsh_served" -> ((s, d) => {
       val (paths, _) = ServingIndexes.once("lsh", d) {
         (Seq(graft.operators.Dedup.embeddingLshStore(Tables.embeddings(s, d),
           nTables = 4, planesPerTable = 6).bucketed), 0L)
       }
-      Similarity.knnLshIndexed(StoredTable.read(s, paths.head), probes(s, d), K)
+      Similarity.knnLshIndexed(graft.operators.Dedup.EmbeddingLshStore(
+        StoredTable.read(s, paths.head), 4, 6, 64), probes(s, d), K)
     }),
     "knn_ivf_served" -> ((s, d) => {
       val (paths, _) = ServingIndexes.once("ivf", d) {

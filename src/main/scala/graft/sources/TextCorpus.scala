@@ -55,18 +55,6 @@ object TextCorpus {
         input_file_name().as("source"),
         length(col("value")).cast("long").as("n_chars"))
 
-  /** One row per line (for corpora where a line is a record); doc_id
-    * is the stable (file, line) hash. */
-  def perLine(spark: SparkSession, dir: String): DataFrame =
-    reader(spark)
-      .text(dir)
-      .select(
-        xxhash64(input_file_name(), col("value")).as("doc_id"),
-        col("value").as("text"),
-        lit("").as("lang"),
-        input_file_name().as("source"),
-        length(col("value")).cast("long").as("n_chars"))
-
   /** The fields [[jsonl]] parses. The schema is EXPLICIT on purpose:
     * schema inference reads the whole input once before the real scan
     * — a full extra pass at 100 TB — and lets one malformed shard
@@ -89,7 +77,7 @@ object TextCorpus {
     * rest of the pipeline untouched — the per-record analog of the
     * per-file warn-and-skip above, so one bad line in shard 40231 of a
     * 100 TB drop cannot kill the job. A record missing `doc_id` falls
-    * back to the stable (file, line) hash [[perLine]] uses; `n_chars`
+    * back to the stable hash of (file, line text); `n_chars`
     * is derived like every other reader. */
   def jsonl(spark: SparkSession, dir: String): DataFrame = {
     val corrupt = "_graft_corrupt"

@@ -1158,10 +1158,9 @@ object Streams {
     val store0 = semanticStorePaths(storeDir) match {
       case Some((asg, lsh)) =>
         graft.operators.Dedup.SemanticStore(
-          // explicit read-back geometry (ADVICE r18): this serve
-          // binding builds its store with the Dedup-family defaults,
-          // so the restore names them rather than inheriting silently
-          graft.operators.Dedup.embeddingLshStoreReadBack(
+          // read-back names the geometry: this serve binding builds
+          // its store with the Dedup-family defaults
+          graft.operators.Dedup.EmbeddingLshStore(
             StoredTable.read(spark, lsh), nTables = 6, planesPerTable = 4,
             dim = 64),
           StoredTable.read(spark, asg))

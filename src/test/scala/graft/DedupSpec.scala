@@ -96,7 +96,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("simhash: identical docs at hamming 0, near-dups within 3, unrelated out") {
-    val pairs = Dedup.simhash(docs, maxDist = 3)
+    val pairs = Dedup.simhash(docs)
       .as[(Long, Long, Int)].collect()
     val m = pairs.map(p => (p._1, p._2) -> p._3).toMap
     assert(m((1L, 2L)) == 0) // same token multiset → same sketch

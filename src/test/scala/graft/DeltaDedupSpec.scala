@@ -398,9 +398,9 @@ class DeltaDedupSpec extends AnyFunSuite {
     val oneShot = Dedup.embeddingNearDupLshDelta(store46, delta, tau)
     assert(pairs(r1.pairs) ++ pairs(r2.pairs) == pairs(oneShot.pairs))
     assert(pairs(oneShot.pairs).nonEmpty)
-    // the explicit read-back constructor restores what it is told —
-    // no silent defaulting path left for a persisted 4×6 table
-    val back = Dedup.embeddingLshStoreReadBack(store46.bucketed,
+    // the constructor restores what it is told — no silent
+    // defaulting path left for a persisted 4×6 table
+    val back = Dedup.EmbeddingLshStore(store46.bucketed,
       nTables = 4, planesPerTable = 6, dim = 64)
     assert((back.nTables, back.planesPerTable, back.dim) == ((4, 6, 64)))
   }

@@ -163,10 +163,11 @@ class SimilaritySpec extends AnyFunSuite {
     val loc = new java.io.File("spark-warehouse/lsh_index_rt")
     if (loc.exists()) scala.reflect.io.Directory(loc).deleteRecursively()
     graft.sources.Sinks.writeBucketed(store.bucketed, "lsh_index_rt", "bucket", 8)
-    val served = Similarity.knnLshIndexed(spark.table("lsh_index_rt"),
+    val served = Similarity.knnLshIndexed(graft.operators.Dedup
+      .EmbeddingLshStore(spark.table("lsh_index_rt"), 4, 6, 64),
       probes, 10).collect().map(_.toSeq).toSet
     assert(served == fresh && fresh.nonEmpty)
-    assert(Similarity.knnLshIndexed(store.bucketed, probes, 10)
+    assert(Similarity.knnLshIndexed(store, probes, 10)
       .filter(col("rnk") === 1).count() > 0)
     spark.sql("DROP TABLE IF EXISTS lsh_index_rt")
   }

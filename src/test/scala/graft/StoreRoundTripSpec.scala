@@ -187,7 +187,7 @@ class StoreRoundTripSpec extends AnyFunSuite {
     Sinks.writeBucketed(st.shingles, "mh_shingles_rt", "doc_id", 8)
     val fromTable = Dedup.minhashLshDelta(
       Dedup.MinHashStore(spark.table("mh_banded_rt"),
-        spark.table("mh_shingles_rt")), delta)
+        spark.table("mh_shingles_rt"), st.n, st.bands, st.rowsPerBand), delta)
     def pairs(r: Dedup.PairsDelta[Dedup.MinHashStore]) =
       r.pairs.as[(Long, Long, Double)].collect().toSet
     assert(pairs(fromTable) == pairs(inMem))

@@ -424,7 +424,8 @@ class StreamsSpec extends AnyFunSuite {
     // writes through, and the resolver serves the survivors
     val (asgPath4, lshPath4) = Streams.semanticStorePaths(storeDir).get
     val live = graft.operators.Dedup.SemanticStore(
-      graft.operators.Dedup.EmbeddingLshStore(spark.read.parquet(lshPath4)),
+      graft.operators.Dedup.EmbeddingLshStore(spark.read.parquet(lshPath4),
+        6, 4, 64),
       spark.read.parquet(asgPath4))
     val rIds = emb.filter(col("vec_id") % 5 === 0).select("vec_id")
     val shrunk = graft.operators.Dedup.semanticRetract(live, rIds, emb, tau)
