@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Hashing, Text, Vec}
@@ -1745,7 +1746,9 @@ object Dedup {
     * spec);
     * a changed-bytes re-ingest under a reused id is OUT of contract,
     * as everywhere in the delta family (stale neighbor edges whose
-    * dst's value changed are not retracted). */
+    * dst's value changed are not retracted). Intermediates are eager
+    * checkpoints ([[CacheTracker]]'s rule), so a store cycle leaves no
+    * cache entry behind. */
   def semanticKeepersBestDelta(store: SemanticBestStore, delta: DataFrame,
                                tau: Double, k: Int,
                                nTables: Int = 6, planesPerTable: Int = 4,
@@ -1755,11 +1758,7 @@ object Dedup {
         f"store's build parameters (tau=${store.tau}%.3f, k=${store.k}): " +
         "the graph and pair stages are parameter-determined — rebuild " +
         "the store to change them")
-    // geometry pin: the stored sign words are max(build cluster
-    // family, graph family) planes wide; slicing a WIDER cluster family
-    // out of them would read sign 0 for the planes the build never
-    // computed — silent bucket collapse. Same contract as (tau, k):
-    // different geometry = rebuild, not ingest.
+    // the stored sign words carry only the build's planes
     require(nTables == store.nTables &&
         planesPerTable == store.planesPerTable,
       s"semanticKeepersBestDelta(nTables=$nTables, planesPerTable=" +
@@ -1767,9 +1766,7 @@ object Dedup {
         s"geometry (${store.nTables}x${store.planesPerTable}): stored " +
         "sign words only carry the build's planes — rebuild the store " +
         "to change the family")
-    // store-format gate: merged-top-k maintenance needs SCORED, ranked
-    // stored edges; a (src, dst)-only graph would otherwise die deep in
-    // the merge with an opaque unresolved-column error
+    // merged-top-k maintenance needs scored, ranked stored edges
     require(store.graph.columns.contains("cos_sim"),
       "pre-r15 SemanticBestStore: the persisted kNN graph has no " +
         "cos_sim column, but merged-top-k maintenance needs scored " +
@@ -1781,32 +1778,29 @@ object Dedup {
         "(rnk, cap) columns — surplus-depth maintenance needs the " +
         "stored ranking and its per-probe cap; rebuild the store " +
         "with this version's semanticBestStore")
-    // sign-word width: same rule as the build side (max of the two
-    // families — hyperplanes are prefix-stable, so any cluster-family
-    // geometry the build accepts, e.g. 8×4, is sound as long as BUILD
-    // and DELTA use the same parameters, which the geometry pin above
-    // makes the store's contract).
+    // sign-word width: max of the two families, as on the build side
     val nPlanes =
       math.max(nTables * planesPerTable, GraphTables * GraphPlanes)
-    val dIds = delta.select(col("vec_id")).distinct()
-    val dBits = CacheTracker.persistTracked(Similarity.lshBits(
-      delta.select(col("vec_id"), col("embedding").as("v")),
-      nPlanes, dim))
-    // same-bytes re-ingest contract: the delta REPLACES its stored
-    // rows in every tier before re-entering
-    val allBits = CacheTracker.persistTracked(
-      evictAppend(store.bits, dIds, dBits, "vec_id"))
-    // cluster pairs: delta × all under the 6×4 family
+    val dIds = delta.select(col("vec_id")).distinct().localCheckpoint(true)
+    def isDelta(name: String) = dIds.select(col("vec_id").as(name))
+    val dBits = Similarity.lshBits(
+      delta.select(col("vec_id"), col("embedding").as("v")), nPlanes, dim)
+      .localCheckpoint(true)
+    // same-bytes re-ingest: the delta replaces its stored rows in every tier
+    val allBits = evictAppend(store.bits, isDelta("vec_id"), dBits, "vec_id")
+      .localCheckpoint(true)
+    // cluster pairs: delta × all under the cluster family, scored once for
+    // the quotient and the pair table
     val dPairs = cosineDeltaPairs(
       Similarity.bucketedFromBits(dBits, nTables, planesPerTable),
       Similarity.bucketedFromBits(allBits, nTables, planesPerTable), tau)
       .select(col("id_a"), col("id_b"))
-    // partition update: stored labels (the elected keeper is constant
-    // within a component — any canonical label induces the same
-    // grouping) + the delta-touching quotient
-    val storedAsg = CacheTracker.persistTracked(
-      store.assignment.select(col("vec_id"), col("keep_id"))
-        .join(dIds, Seq("vec_id"), "left_anti"))
+      .localCheckpoint(true)
+    // stored labels: the elected keeper is constant within a component,
+    // so any canonical label induces the same grouping
+    val storedAsg = store.assignment.select(col("vec_id"), col("keep_id"))
+      .join(isDelta("vec_id"), Seq("vec_id"), "left_anti")
+      .localCheckpoint(true)
     val la = storedAsg.select(col("vec_id").as("id_a"), col("keep_id").as("la"))
     val lb = storedAsg.select(col("vec_id").as("id_b"), col("keep_id").as("lb"))
     val quotient = dPairs
@@ -1815,87 +1809,50 @@ object Dedup {
         coalesce(col("lb"), col("id_b")).as("id_b"))
       .filter(col("id_a") =!= col("id_b"))
       .distinct()
-    // overlap: the quotient's driver closure (an eager
-    // collect over the delta pair list) and the graph branch below
-    // (whose persist + pagerank checkpoint is the other eager block)
-    // are independent until the election — close the quotient on a
-    // helper thread and join it where the partition is assembled.
+    // the quotient's driver closure overlaps the graph branch below
     val remapF = onThread(quotientRemap(quotient, delta.sparkSession))
-    // kNN-graph maintenance: EXACT merged top-k, delta-bounded
-    // pair work. Re-ranking every vector sharing a 4×6 bucket with the
-    // delta over ALL its bucket mates was measured at 50× scale at 90%
-    // of the delta wall (953,790 re-ranked edges, 166-252 s),
-    // because 2,000 delta vectors touch every bucket of every
-    // 64-bucket table, making `affected` 95% of the corpus: the
-    // "bucket-bounded" set degenerates to N whenever |delta| ≳
-    // #buckets. The exact fix: stored edges carry their SCORES, so a
-    // non-delta vector's fresh ranking to its stored depth is
-    //   topK(stored prefix ∪ its scores against DELTA bucket mates)
-    // — top-k of a union is contained in the union of top-k's, the
-    // heap order is total (score desc, id asc — TopKHeap), old-old
-    // scores are immutable under the same-bytes contract, and the
-    // three merged inputs are disjoint by construction (kept: src and
-    // dst both non-delta; vsDelta: non-delta src × delta dst;
-    // deltaSide: delta src), so the merge is row-for-row the fresh
-    // build's ranking. Pair work: (bucket-occupancy × delta-in-
-    // bucket) + (delta × bucket-occupancy) — delta-proportional —
-    // instead of affected × occupancy.
+    // kNN graph, exact merged top-k: a non-delta probe's fresh ranking is
+    // topK(its stored prefix ∪ its scores against delta bucket mates).
+    // The three merged inputs are disjoint (kept: neither endpoint in the
+    // delta; vsDelta: non-delta src × delta dst; deltaSide: delta src)
+    // and the heap order is total, so the merge is the fresh build's.
+    // Re-ranking every bucket-sharing vector instead measured 90% of the
+    // delta wall at 50× scale (953,790 re-ranked edges, 166-252 s): 2,000
+    // delta vectors touch every bucket of every 64-bucket table.
     val d46 = Similarity.bucketedFromBits(dBits, GraphTables, GraphPlanes)
     val all46 = Similarity.bucketedFromBits(allBits, GraphTables, GraphPlanes)
-    // non-delta vectors see exactly the DELTA as new candidates (the
-    // sides are disjoint, so no self-row test)
     val vsDelta = Similarity.bucketMates(
-      all46.join(dIds, Seq("vec_id"), "left_anti"), d46, selfFree = false)
-    // the delta itself ranks fresh over all its bucket mates
+      all46.join(isDelta("vec_id"), Seq("vec_id"), "left_anti"), d46,
+      selfFree = false)
     val deltaSide = Similarity.bucketMates(d46, all46)
-    // stored edges stay valid iff NEITHER endpoint changed; rows with
-    // a delta endpoint re-form identically in the two scoring passes
-    // above (same bytes → same cosine)
     val kept = store.graph
-      .join(dIds.select(col("vec_id").as("src")), Seq("src"), "left_anti")
-      .join(dIds.select(col("vec_id").as("dst")), Seq("dst"), "left_anti")
+      .join(isDelta("src"), Seq("src"), "left_anti")
+      .join(isDelta("dst"), Seq("dst"), "left_anti")
       .select(col("src").as("probe_id"), col("dst").as("neighbor_id"),
         col("cos_sim"))
-    // surplus maintenance: merge at graphDepth(k), then cut
-    // each probe at the depth the merge is provably exact to. A
-    // probe whose stored list was pool-EXHAUSTED (cnt0 < cap0 — the
-    // stored rows were its entire old candidate pool) merges
-    // COMPLETE candidate sets and cuts at full depth; otherwise the
-    // stored list is exact only to its own cap (a retraction may
-    // have decayed it below graphDepth), and an old candidate just
-    // past it — absent from the merge — could legally occupy any
-    // deeper position, so the cut is cap0 (every fresh position
-    // 1..cap0 is present: old ones are inside the stored prefix,
-    // delta ones are all scored; anything missing is beaten by the
-    // cap0 stored betters). Fresh probes (delta src, or no stored
-    // rows at all — an empty old pool) ranked over their whole pool
-    // cut at full depth. The emitted `cap` IS the cut depth, which
-    // re-establishes the store invariant list = top-min(cap, pool).
+    // each probe is cut where the merge is provably exact: full depth for
+    // a pool-exhausted list (cnt0 < cap0) or a fresh probe, its stored
+    // cap0 otherwise; the emitted cap is the cut, which keeps the store
+    // invariant list = top-min(cap, pool)
     val gd = graphDepth(k)
     val caps = store.graph.groupBy(col("src"))
       .agg(max(col("cap")).as("cap0"), count(lit(1)).as("cnt0"))
-      .join(dIds.select(col("vec_id").as("src")), Seq("src"), "left_anti")
+      .join(isDelta("src"), Seq("src"), "left_anti")
       .select(col("src").as("probe_id"),
         when(col("cnt0") < col("cap0"), lit(gd))
           .otherwise(least(col("cap0"), lit(gd))).cast("int").as("cut"))
-    val grown = CacheTracker.persistTracked(
-      Similarity.rankTopK(kept.union(vsDelta).union(deltaSide), gd)
-        .join(caps, Seq("probe_id"), "left")
-        .filter(col("rnk") <= coalesce(col("cut"), lit(gd)))
-        .select(col("probe_id").as("src"), col("neighbor_id").as("dst"),
-          col("cos_sim"), col("rnk"),
-          coalesce(col("cut"), lit(gd)).as("cap")))
-    // pagerank + election: global by nature, linear by construction —
-    // over the rnk <= k slice, which the prefix invariant makes
-    // exactly the fresh build's top-k graph
+    val grown = Similarity.rankTopK(kept.union(vsDelta).union(deltaSide), gd)
+      .join(caps, Seq("probe_id"), "left")
+      .filter(col("rnk") <= coalesce(col("cut"), lit(gd)))
+      .select(col("probe_id").as("src"), col("neighbor_id").as("dst"),
+        col("cos_sim"), col("rnk"), coalesce(col("cut"), lit(gd)).as("cap"))
+      .localCheckpoint(true)
+    // pagerank + election: global, over the rnk <= k slice the prefix
+    // invariant makes exactly the fresh build's top-k graph
     val ranks = Similarity.pagerankFromEdges(grown.filter(col("rnk") <= k),
         allBits.select(col("vec_id")), iters = 3, damping = 0.85)
       .select(col("vec_id"),
         floor(col("pagerank") * lit(1000000000.0)).cast("long").as("s9"))
-    // partition update, assembled here from the helper thread's remap:
-    // stored labels (the elected keeper is constant within a
-    // component — any canonical label induces the same grouping) +
-    // the delta-touching quotient
     val remap = remapF()
     val storedPart = storedAsg
       .join(remap, storedAsg("keep_id") === remap("node"), "left")
@@ -1905,21 +1862,17 @@ object Dedup {
       .join(remap, dIds("vec_id") === remap("node"), "left")
       .select(dIds("vec_id"),
         coalesce(col("merged"), dIds("vec_id")).as("cluster_id"))
-    val partition = storedPart.union(deltaPart)
-    val assigned = CacheTracker.persistTracked(
-      partition.join(ranks, Seq("vec_id"))
-        .select(col("vec_id").as("doc_id"), col("s9").as("score"),
-          col("cluster_id")))
+    val assigned = storedPart.union(deltaPart).join(ranks, Seq("vec_id"))
+      .select(col("vec_id").as("doc_id"), col("s9").as("score"),
+        col("cluster_id"))
+      .localCheckpoint(true)
     val assignment = electMax(assigned)
       .select(col("doc_id").as("vec_id"), col("keep_id"), col("is_dup"))
-    // pair-table maintenance: old-old pairs are immutable
-    // (value-determined, neither endpoint changed), and every pair
-    // with a delta endpoint — including a re-ingested one — re-forms
-    // identically in dPairs, so anti-join + union keeps the table
-    // row-for-row the fresh build's (same argument as `kept` above)
+    // pair table: old-old pairs are immutable and every delta-touching
+    // pair re-forms in dPairs
     val grownPairs = store.pairs
-      .join(dIds.select(col("vec_id").as("id_a")), Seq("id_a"), "left_anti")
-      .join(dIds.select(col("vec_id").as("id_b")), Seq("id_b"), "left_anti")
+      .join(isDelta("id_a"), Seq("id_a"), "left_anti")
+      .join(isDelta("id_b"), Seq("id_b"), "left_anti")
       .select(col("id_a"), col("id_b"))
       .union(dPairs)
     AssignmentDelta(assignment,
@@ -1955,23 +1908,13 @@ object Dedup {
     *    is a valid label — the election only reads the GROUPING,
     *    and memberships are disjoint so labels cannot collide
     *    across touched/untouched).
-    *  - '''kNN graph''': the merged-top-k argument runs one
-    *    direction only — an ingest can merge new candidates into a
-    *    stored prefix, but a removal can PROMOTE a neighbor the
-    *    stored list had displaced, and the store no longer knows
-    *    who was displaced. The SURPLUS ([[graphDepth]] = 2k
-    *    stored edges per probe where the pagerank reads k) absorbs
-    *    almost all of that: a probe that lost t stored edges still
-    *    holds the true top-(cap − t) over the survivors, so as long
-    *    as cap − t ≥ k (or its list was pool-exhausted — then the
-    *    survivors ARE its whole fresh pool) the takedown is an edge
-    *    FILTER plus a scoring-free rank re-densify. Only probes
-    *    that lose more than their whole surplus — expected
-    *    P[Binom(2k, |r|/N) > k] of probes, vs ≈ 1-(1-|r|/N)^k under
-    *    an any-lost-dst rule, which was measured as the pass's
-    *    cost center — re-rank fresh
-    *    over their surviving bucket mates. Edges with a retracted
-    *    endpoint drop.
+    *  - '''kNN graph''': a removal can PROMOTE a neighbor the
+    *    stored list had displaced, which the store cannot know. The
+    *    SURPLUS ([[graphDepth]] = 2k stored edges per probe where the
+    *    pagerank reads k) absorbs almost all of it: one read of the
+    *    stored graph ([[retractedGraph]]) filters and re-densifies
+    *    every probe but those that lose more than their surplus,
+    *    which re-rank over their surviving bucket mates.
     *  - '''pagerank + election''': global by nature, rerun — 3
     *    edge-keyed joins over the k·N' graph plus two cluster-keyed
     *    aggregates, corpus-linear, same honest floor as the ingest
@@ -1985,7 +1928,8 @@ object Dedup {
     * and an empty affected set). Same contract bound as
     * [[exactRetract]]: the takedown batch is driver-small (its
     * touched cluster keys ride a broadcast hint); a batch of store
-    * scale is a rebuild over the survivors. */
+    * scale is a rebuild over the survivors. Intermediates are eager
+    * checkpoints, as in the ingest. */
   def semanticBestRetract(store: SemanticBestStore, retractIds: DataFrame,
                           tau: Double, k: Int,
                           nTables: Int = 6, planesPerTable: Int = 4,
@@ -2009,109 +1953,54 @@ object Dedup {
         "stored ranking and its per-probe cap; rebuild the store " +
         "with this version's semanticBestStore")
     val sp = retractIds.sparkSession
-    val rIds = CacheTracker.persistTracked(
-      retractIds.select(col("vec_id")).distinct())
-    val bits = CacheTracker.persistTracked(
-      store.bits.join(rIds, Seq("vec_id"), "left_anti"))
-    // ---- partition: re-close ONLY the components that lost a member
-    val touchedKeys = store.assignment.join(rIds, Seq("vec_id"))
+    val rIds = retractIds.select(col("vec_id")).distinct().localCheckpoint(true)
+    def isRetracted(name: String) = rIds.select(col("vec_id").as(name))
+    val bits = store.bits.join(isRetracted("vec_id"), Seq("vec_id"), "left_anti")
+      .localCheckpoint(true)
+    // ---- partition: re-close only the components that lost a member,
+    // from the stored pair list minus retracted endpoints (pairs are
+    // value-determined; re-scoring bucket candidates instead measured
+    // 110 s of a 135 s takedown pass at 100k vectors)
+    val touchedKeys = store.assignment.join(isRetracted("vec_id"), Seq("vec_id"))
       .select(col("keep_id")).distinct()
     val survAsg = store.assignment
       .select(col("vec_id"), col("keep_id"))
-      .join(rIds, Seq("vec_id"), "left_anti")
+      .join(isRetracted("vec_id"), Seq("vec_id"), "left_anti")
     val touchedIds = survAsg.join(broadcast(touchedKeys), Seq("keep_id"))
       .select(col("vec_id"))
-    // survivors' pair graph = the STORED verified pair list minus
-    // edges with a retracted endpoint (pairs are value-determined —
-    // nothing to re-score); a stored pair's endpoints share a
-    // component, so id_a touched ⇔ id_b touched and one membership
-    // join scopes the closure to the touched components
     val survPairs = store.pairs
-      .join(rIds.select(col("vec_id").as("id_a")), Seq("id_a"), "left_anti")
-      .join(rIds.select(col("vec_id").as("id_b")), Seq("id_b"), "left_anti")
+      .join(isRetracted("id_a"), Seq("id_a"), "left_anti")
+      .join(isRetracted("id_b"), Seq("id_b"), "left_anti")
       .select(col("id_a"), col("id_b"))
+    // a stored pair's endpoints share a component, so one membership
+    // join scopes the closure to the touched components
     val tPairs = survPairs
       .join(touchedIds.select(col("vec_id").as("id_a")), Seq("id_a"))
       .select(col("id_a"), col("id_b"))
-    // overlap: the touched components' driver closure (an
-    // eager collect over the filtered stored pair list) and the graph
-    // section below (whose decay-union persist + pagerank checkpoint
-    // is the other eager block) are independent until the election —
-    // close the quotient on a helper thread and join it where the
-    // partition is assembled, after the graph branch has been kicked
-    // off.
+    // the touched components' driver closure overlaps the graph branch
     val remapF = onThread(quotientRemap(tPairs, sp))
-    // ---- graph: drop retracted endpoints. The SURPLUS
-    // ([[graphDepth]] = 2k stored edges per probe) makes this
-    // filter-only for almost every touched probe: a stored list is
-    // exact to its cap, so losing t of its rows leaves the true
-    // top-(cap − t) over the survivors — anything outside the list
-    // was displaced by cap betters, of which ≥ cap − t remain. A
-    // probe re-scores over its bucket mates ONLY when (a) its list
-    // was NOT pool-exhausted (an exhausted list minus retracted rows
-    // IS the whole surviving pool — fresh by definition at any
-    // length) AND (b) cap − t < k (the surviving prefix can no
-    // longer prove the rnk <= k slice the pagerank reads). At a
-    // |r|/N takedown the re-score set is P[Binom(2k, |r|/N) > k] of
-    // probes — negligible where re-ranking on ANY lost dst
-    // (≈ 1-(1-|r|/N)^k of probes) was the measured cost center of the
-    // whole takedown pass.
+    // ---- graph: filter and re-densify every probe but the few that
+    // lost more than their surplus, which re-rank over bucket mates
+    val g = retractedGraph(store.graph, rIds, k)
+    val kept = g.filter(!col("lost") && !col("rescore"))
+      .select(col("src"), col("dst"), col("cos_sim"), col("rnk"), col("cap"))
     val gd = graphDepth(k)
-    val lost = store.graph
-      .join(rIds.select(col("vec_id").as("dst")), Seq("dst"))
-      .groupBy(col("src")).agg(count(lit(1)).as("t"))
-      .join(rIds.select(col("vec_id").as("src")), Seq("src"), "left_anti")
-    val stats = store.graph.groupBy(col("src"))
-      .agg(max(col("cap")).as("cap0"), count(lit(1)).as("cnt0"))
-      .join(lost, Seq("src"))
-    val affected = CacheTracker.persistTracked(stats
-      .filter(col("cnt0") === col("cap0") && col("cap0") - col("t") < k)
-      .select(col("src").as("vec_id")))
-    // lost-but-sufficient probes: surviving rows keep their order —
-    // rnk re-densifies over the gaps the retracted rows left (a
-    // scoring-free heap pass over their own stored rows), and cap
-    // drops by t for non-exhausted lists (exhausted lists stay
-    // whole-pool at their old cap)
-    val decayed = stats
-      .join(affected.select(col("vec_id").as("src")), Seq("src"), "left_anti")
-      .select(col("src"),
-        when(col("cnt0") < col("cap0"), col("cap0"))
-          .otherwise(col("cap0") - col("t")).cast("int").as("cap1"))
-    val survGraph = store.graph
-      .join(rIds.select(col("vec_id").as("src")), Seq("src"), "left_anti")
-      .join(rIds.select(col("vec_id").as("dst")), Seq("dst"), "left_anti")
-    val untouched = survGraph
-      .join(lost.select(col("src")), Seq("src"), "left_anti")
-      .select(col("src"), col("dst"), col("cos_sim"), col("rnk"),
-        col("cap"))
-    val keptDecayed = Similarity.rankTopK(
-        survGraph.join(decayed.select(col("src")), Seq("src"))
-          .select(col("src").as("probe_id"), col("dst").as("neighbor_id"),
-            col("cos_sim")), gd)
-      .join(decayed.select(col("src").as("probe_id"), col("cap1")),
-        Seq("probe_id"))
+    val rescored = Similarity.rankTopK(Similarity.bucketMates(
+        Similarity.bucketedFromBits(
+          bits.join(g.filter(col("rescore")).select(col("src").as("vec_id")),
+            Seq("vec_id"), "left_semi"), GraphTables, GraphPlanes),
+        Similarity.bucketedFromBits(bits, GraphTables, GraphPlanes)), gd)
       .select(col("probe_id").as("src"), col("neighbor_id").as("dst"),
-        col("cos_sim"), col("rnk"), col("cap1").as("cap"))
-    val aBuckets = Similarity.bucketedFromBits(
-      bits.join(affected, Seq("vec_id")), GraphTables, GraphPlanes)
-    val allBuckets = Similarity.bucketedFromBits(bits,
-      GraphTables, GraphPlanes)
-    val rescored = Similarity.bucketMates(aBuckets, allBuckets)
-    val shrunk = CacheTracker.persistTracked(
-      untouched
-        .union(keptDecayed)
-        .union(Similarity.rankTopK(rescored, gd)
-          .select(col("probe_id").as("src"), col("neighbor_id").as("dst"),
-            col("cos_sim"), col("rnk"), lit(gd).as("cap"))))
-    // ---- pagerank + election: global, linear — same as the ingest,
-    // over the rnk <= k slice the prefix invariant proves exact
+        col("cos_sim"), col("rnk"), lit(gd).as("cap"))
+    val shrunk = kept.union(rescored).localCheckpoint(true)
+    // ---- pagerank + election: global, as in the ingest
     val ranks = Similarity.pagerankFromEdges(
         shrunk.filter(col("rnk") <= k),
         bits.select(col("vec_id")), iters = 3, damping = 0.85)
       .select(col("vec_id"),
         floor(col("pagerank") * lit(1000000000.0)).cast("long").as("s9"))
-    // partition, assembled from the helper thread's remap: untouched
-    // components keep their stored grouping, touched ones re-closed
+    // untouched components keep their stored grouping, touched ones
+    // take the helper thread's re-closure
     val remap = remapF()
     val touchedPart = touchedIds
       .join(remap, touchedIds("vec_id") === remap("node"), "left")
@@ -2120,16 +2009,56 @@ object Dedup {
     val untouchedPart = survAsg
       .join(broadcast(touchedKeys), Seq("keep_id"), "left_anti")
       .select(col("vec_id"), col("keep_id").as("cluster_id"))
-    val partition = untouchedPart.union(touchedPart)
-    val assigned = CacheTracker.persistTracked(
-      partition.join(ranks, Seq("vec_id"))
-        .select(col("vec_id").as("doc_id"), col("s9").as("score"),
-          col("cluster_id")))
+    val assigned = untouchedPart.union(touchedPart).join(ranks, Seq("vec_id"))
+      .select(col("vec_id").as("doc_id"), col("s9").as("score"),
+        col("cluster_id"))
+      .localCheckpoint(true)
     val assignment = electMax(assigned)
       .select(col("doc_id").as("vec_id"), col("keep_id"), col("is_dup"))
     AssignmentDelta(assignment,
       SemanticBestStore(bits, shrunk, assignment, survPairs, tau, k,
         nTables, planesPerTable))
+  }
+
+  /** [[semanticBestRetract]]'s one read of the stored graph, checkpointed:
+    * the rows of every probe that is not itself retracted, as (src, dst,
+    * cos_sim, rnk, cap, lost, rescore, t). `lost` marks a row whose dst
+    * is retracted and `t` counts them per probe. A stored list is exact
+    * to its cap, so losing t rows leaves the true top-(cap0 − t) over
+    * the survivors, and a pool-exhausted list (cnt0 < cap0) minus its
+    * lost rows is the whole surviving pool. `rescore` is therefore set
+    * only for a non-exhausted probe with cap0 − t < k. That is
+    * P[Binom(2k, |r|/N) > k] of probes; re-ranking on any lost dst
+    * (≈ 1 − (1 − |r|/N)^k of probes) was the measured cost center of the
+    * takedown pass. Every other probe keeps its surviving rows in
+    * stored order: `rnk` re-densifies over the gaps, and a non-exhausted
+    * list's `cap` drops by t. */
+  private[graft] def retractedGraph(graph: DataFrame, rIds: DataFrame,
+                                    k: Int): DataFrame = {
+    val byRank = Window.partitionBy(col("src")).orderBy(col("rnk"))
+    val probe = byRank.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
+    graph
+      .join(rIds.select(col("vec_id").as("src")), Seq("src"), "left_anti")
+      .join(rIds.select(col("vec_id").as("gone")), col("dst") === col("gone"),
+        "left")
+      .select(col("src"), col("dst"), col("cos_sim"), col("rnk"), col("cap"),
+        col("gone").isNotNull.as("lost"))
+      .select(col("src"), col("dst"), col("cos_sim"), col("lost"),
+        max(col("cap")).over(probe).as("cap0"),
+        count(lit(1)).over(probe).as("cnt0"),
+        sum(col("lost").cast("int")).over(probe).as("t"),
+        sum((!col("lost")).cast("int")).over(byRank.rowsBetween(
+          Window.unboundedPreceding, Window.currentRow)).as("rnk1"))
+      .select(col("src"), col("dst"), col("cos_sim"),
+        col("rnk1").cast("int").as("rnk"),
+        when(col("cnt0") < col("cap0"), col("cap0"))
+          .otherwise(col("cap0") - col("t")).cast("int").as("cap"),
+        col("lost"),
+        (col("t") > 0 && col("cnt0") === col("cap0") &&
+          col("cap0") - col("t") < k).as("rescore"),
+        col("t"))
+      .localCheckpoint(true)
   }
 
   /** Keeper election by QUALITY, not by id — the policy a production

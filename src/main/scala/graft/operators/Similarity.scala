@@ -1008,29 +1008,16 @@ object Similarity {
     * blocking is a per-row deterministic projection, so stored rows ≡
     * a fresh [[lshBucketed]] over the survivors after the anti-join);
     * callers shrink it alongside via
-    * [[graft.operators.Dedup.embeddingLshStoreRetract]]. The store's
-    * carried geometry must MATCH the geometry the graph was built
-    * with (`nTables`/`planesPerTable`/`dim`, [[knnGraph]]'s defaults)
-    * — re-ranking affected probes against buckets hashed under a
-    * different plane family would silently return wrong candidates,
-    * so the mismatch is rejected up front. Result ≡
+    * [[graft.operators.Dedup.embeddingLshStoreRetract]]. Result ≡
     * [[knnGraph]] over corpus-minus-retracted (spec-pinned), because
     * the recomputed probes see exactly the rebuild's candidate sets
     * and the untouched rows are unchanged by the argument above. */
   def knnGraphRetract(graph: DataFrame, store: Dedup.EmbeddingLshStore,
-                      retractIds: DataFrame, k: Int, nTables: Int = 4,
-                      planesPerTable: Int = 6, dim: Int = 64): DataFrame = {
-    require(store.nTables == nTables && store.planesPerTable == planesPerTable
-        && store.dim == dim,
-      s"knnGraphRetract: the bucket store's geometry (${store.nTables}x" +
-        s"${store.planesPerTable}, dim ${store.dim}) must match the graph's " +
-        s"build geometry (${nTables}x$planesPerTable, dim $dim) — bucket ids " +
-        "from two plane families are incomparable")
-    val r = graft.operators.CacheTracker.persistTracked(
-      retractIds.select(col("vec_id")).distinct())
+                      retractIds: DataFrame, k: Int): DataFrame = {
+    val r = retractIds.select(col("vec_id")).distinct().localCheckpoint(true)
     val survBucketed = Dedup.dropRetracted(store.bucketed, r, "vec_id")
     val affected = graph
-      .join(broadcast(r.withColumnRenamed("vec_id", "neighbor_id")),
+      .join(broadcast(r.select(col("vec_id").as("neighbor_id"))),
         Seq("neighbor_id"))
       .select(col("vec_id")).distinct()
       .join(broadcast(r), Seq("vec_id"), "left_anti")
@@ -1081,8 +1068,8 @@ object Similarity {
     * [[graft.operators.Dedup.semanticKeepersBest]] can run the
     * identical arithmetic over a graph built from its own shared
     * bucketed projection instead of paying [[knnGraph]]'s second
-    * corpus plane-hash. `edges` should already be persisted by the
-    * caller (it is read every iteration). Same quantized, N-scaled,
+    * corpus plane-hash. `edges` is read by one checkpoint job (the
+    * rows and their outdeg aggregate). Same quantized, N-scaled,
     * bit-replayable update as [[knnPagerank]] — see that scaladoc.
     *
     * Precondition: `edges.src ⊆ ids`. It is not checked. A source
@@ -1092,36 +1079,14 @@ object Similarity {
   private[graft] def pagerankFromEdges(edges: DataFrame, ids: DataFrame,
                                            iters: Int,
                                            damping: Double): DataFrame = {
-    // both reused every iteration: persist the slim id frame and the
-    // 1-row count so the unrolled plan reads a cached scan instead of
-    // re-counting the corpus iters+1 times
-    val nodes = CacheTracker.persistTracked(ids.select(col("vec_id")))
-    val nTotal = CacheTracker.persistTracked(
-      nodes.agg(count(lit(1)).as("N")))
-    // outdeg attached to the edge list ONCE (r20; was a second
-    // src-keyed join INSIDE the loop — one aggregate + one join
-    // + their exchanges repaid every iteration for a frame that never
-    // changes across iterations). Eager localCheckpoint, not persist
-    // (r20 optimization round): a persisted frame keeps its FULL
-    // logical subtree, and the unrolled iterations re-embed ew's tree
-    // 3x (the callers' edge frames are themselves LSH-scored kNN
-    // builds or retraction decay unions, so the duplicated subtree is
-    // the largest in the query) — event-log profiling of
-    // dd_semantic_retract showed ~2.5 s of its pass as pure driver
-    // gaps, Catalyst re-optimizing that duplication. The checkpoint
-    // truncates ew to a LogicalRDD: same blocks, same arithmetic
-    // (order-independence is pinned by the quantized-floor sums), one
-    // materialization job either way, and the downstream plan the
-    // optimizer sees is iterations x a flat scan.
-    // Cluster caveat (r21, ADVICE r20): localCheckpoint blocks are
-    // unreplicated and lineage-free, so on a real cluster an executor
-    // loss inside the bounded 3-iteration window fails the query
-    // instead of recomputing — the guide's accepted trade for plan
-    // truncation on a bounded loop. A deployment that cannot retry
-    // the query should set a checkpoint dir and use reliable
-    // checkpoint() here; the streaming callers additionally rely on
-    // the ContextCleaner to GC each micro-batch's blocks (the frame's
-    // lifetime is one batch — matching the cache-bracket discipline).
+    // N is counted once on the driver; `nodes` is read twice (the count
+    // and the final join), both cheap column reads at every caller
+    val nodes = ids.select(col("vec_id"))
+    val n = nodes.count()
+    // outdeg is attached to the edge list once, and the eager checkpoint
+    // truncates ew to a LogicalRDD: the 3 unrolled iterations re-embed
+    // ew's tree, and Catalyst re-optimizing the duplicated edge subtree
+    // measured ~2.5 s of driver gaps in a dd_semantic_retract pass
     val ew = edges.join(edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg")),
           "src")
       .select(col("src"), col("dst"), col("outdeg"))
@@ -1155,10 +1120,8 @@ object Similarity {
       inflow = Some(contrib.groupBy(col("vec_id"))
         .agg((sum(col("c")).cast("double") / lit(1000000.0)).as("inflow")))
     }
-    val r = nodes.join(inflow.get, Seq("vec_id"), "left")
-      .select(col("vec_id"), rankOf(col("inflow")).as("r"))
-    r.crossJoin(broadcast(nTotal))
-      .select(col("vec_id"), (col("r") / col("N")).as("pagerank"))
+    nodes.join(inflow.get, Seq("vec_id"), "left")
+      .select(col("vec_id"), (rankOf(col("inflow")) / lit(n)).as("pagerank"))
   }
 
   /** ANN via multi-table random-hyperplane LSH: `nTables` independent

@@ -35,6 +35,8 @@ object Probe {
         else scale(spark, src, mult,
           Files.createTempDirectory("graft_probe").toString)
       names.foreach { q =>
+        // a frame an earlier row cached would carry that row's AQE plan
+        spark.catalog.clearCache()
         if (mode == "plan") {
           println(s"==== $q ====")
           SparkEntry.queries(q)(spark, dir).explain("formatted")

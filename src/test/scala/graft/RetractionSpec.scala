@@ -185,20 +185,6 @@ class RetractionSpec extends AnyFunSuite {
     assert(rows(ret) == rows(Similarity.knnGraph(survEmb, 10)))
   }
 
-  test("knnGraphRetract rejects a bucket store with mismatched geometry") {
-    // r18 (ADVICE r17): re-ranking affected probes against buckets
-    // hashed under a different plane family would silently return
-    // wrong candidates — the carried store geometry makes that a
-    // loud contract violation instead
-    val wrongGeom = Dedup.embeddingLshStore(emb, nTables = 6,
-      planesPerTable = 4)
-    val graph = Similarity.knnGraph(emb, 10)
-    val e = intercept[IllegalArgumentException] {
-      Similarity.knnGraphRetract(graph, wrongGeom, rVecs, 10)
-    }
-    assert(e.getMessage.contains("geometry"))
-  }
-
   test("knnGraphRetract: a HUB takedown refills every survivor's top-k") {
     // the worst case for the affected-probe bound: vec 0 is the pure
     // cluster direction, every other vector a slightly larger
