@@ -8,8 +8,9 @@
 # `graft.tools.Probe plan 1 <rows>` over <sf-dir> on both trees (offline sbt),
 # and prints two diffs, parent first:
 #   - norm:  the plans with run-local ids masked (expression ids, plan_id=,
-#            RDD ids and call sites, temp index and store dirs, AQE
-#            query-stage ids);
+#            RDD ids and call sites, lambda variable numbers, temp dirs
+#            (graft_<name><digits>), memory-sink names (st_<name>_<uuid>),
+#            AQE query-stage ids);
 #   - nodes: per row, the count of Exchange, *Join, HashAggregate, Window and
 #            InMemoryTableScan nodes, for when the norm diff is not empty.
 # Exits 0 when both diffs are empty, 1 when either is not, 2 on a failed run.
@@ -37,7 +38,7 @@ export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.co
 norm() {
   sed -n '/^====/,$p' "$1" |
     grep -v '^\[\(info\|success\|warn\|error\)\]' |
-    sed -E 's/#[0-9]+/#N/g; s/plan_id=[0-9]+/plan_id=N/g; s/RDD\[[0-9]+\] at ([A-Za-z]+) at [A-Za-z]+\.scala:[0-9]+/RDD[N] at \1/g; s/(graft_idx_[a-z_]+_)[0-9]+/\1N/g; s/(graft_exact_rstore)[0-9]+/\1N/g' |
+    sed -E 's/#[0-9]+/#N/g; s/plan_id=[0-9]+/plan_id=N/g; s/RDD\[[0-9]+\] at ([A-Za-z]+) at [A-Za-z]+\.scala:[0-9]+/RDD[N] at \1/g; s/(graft_[a-z_]+)[0-9]+/\1N/g; s/(st_[a-z_]+_)[0-9a-f]{32}/\1UUID/g; s/lambda ([A-Za-z]+)_[0-9]+/lambda \1_N/g' |
     awk '/QueryStage$/ {q = 1} q && /^Arguments: [0-9]+$/ {$0 = "Arguments: N"; q = 0} {print}'
 }
 

@@ -265,9 +265,10 @@ object Corpus {
     * bucketed table on `s` (the pair-join key); `sizes` and `pairs`
     * are source-count-bounded (tiny). Invariant: `sizes`/`pairs` are
     * exactly the aggregate/pair-count of `rows` — [[overlapCensus]]
-    * derives the report from the small tables alone. */
+    * derives the report from the small tables alone. `n` is the build's
+    * shingle width, which every ingest shingles with. */
   final case class SourceOverlapStore(rows: DataFrame, sizes: DataFrame,
-                                      pairs: DataFrame)
+                                      pairs: DataFrame, n: Int)
 
   /** Build [[SourceOverlapStore]] state for an initial corpus. */
   def sourceOverlapStore(docs: DataFrame, n: Int): SourceOverlapStore = {
@@ -281,7 +282,7 @@ object Corpus {
       .select(col("a.source").as("src_a"), col("b.source").as("src_b"))
       .groupBy(col("src_a"), col("src_b"))
       .agg(count(lit(1)).as("n_shared"))
-    SourceOverlapStore(ss, sizes, pairs)
+    SourceOverlapStore(ss, sizes, pairs, n)
   }
 
   /** The overlap report from store state alone: pair counts joined to
@@ -316,10 +317,10 @@ object Corpus {
     * grown corpus (spec-proven), which is why the oracle replays the
     * full-corpus SQL. */
   def sourceOverlapDelta(store: SourceOverlapStore,
-                         delta: DataFrame, n: Int): SourceOverlapDelta = {
+                         delta: DataFrame): SourceOverlapDelta = {
     val dss = delta
       .select(col("source"),
-        explode(Text.shingles(Text.tokens(col("text")), n)).as("s"))
+        explode(Text.shingles(Text.tokens(col("text")), store.n)).as("s"))
       .distinct()
     val newRows = CacheTracker.persistTracked(
       dss.join(store.rows, Seq("source", "s"), "left_anti"))
@@ -342,7 +343,8 @@ object Corpus {
         Seq("source"), "full_outer")
       .select(col("source"),
         (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"))
-    val updated = SourceOverlapStore(store.rows.union(newRows), sizes2, pairs2)
+    val updated = store.copy(rows = store.rows.union(newRows), sizes = sizes2,
+      pairs = pairs2)
     SourceOverlapDelta(overlapCensus(updated), updated)
   }
 

@@ -204,14 +204,26 @@ object Dedup {
             x => x.getField("para"))).as("text_kept"))
   }
 
-  /** The keeper STORE for incremental paragraph dedup: one (fp,
-    * keep_doc, keep_idx) row per DISTINCT paragraph — the slim table a
-    * growing corpus persists between ingests ([[keeperStore]] one
-    * granularity down; written bucketed on fp at scale). */
-  def paragraphStore(docs: DataFrame, spanTokens: Int = 16): DataFrame =
-    paraKeepers(spanRows(docs, spanTokens).select(col("doc_id"),
-      col("para_idx"), md5(col("para")).as("fp")))
-      .select(col("fp"), col("keep_doc"), col("keep_idx"))
+  /** The maintained PARAGRAPH store — [[ExactStore]] one granularity
+    * down: `keepers` holds one (fp, keep_doc, keep_idx) row per
+    * DISTINCT paragraph (the slim table each ingest dedups against),
+    * `members` one (doc_id, para_idx, fp) row per live occurrence (the
+    * keeper table alone cannot re-elect after a takedown), and
+    * `spanTokens` is the build's window width, which every ingest must
+    * split with. Both tables are bucketed on fp at scale. */
+  final case class ParagraphStore(keepers: DataFrame, members: DataFrame,
+                                  spanTokens: Int)
+
+  def paragraphStore(docs: DataFrame, spanTokens: Int = 16): ParagraphStore = {
+    val members = spanFps(docs, spanTokens)
+    ParagraphStore(paraKeepers(members)
+      .select(col("fp"), col("keep_doc"), col("keep_idx")), members, spanTokens)
+  }
+
+  /** (doc_id, para_idx, fp) occurrence rows of the span form. */
+  private def spanFps(docs: DataFrame, spanTokens: Int): DataFrame =
+    spanRows(docs, spanTokens).select(col("doc_id"), col("para_idx"),
+      md5(col("para")).as("fp"))
 
   /** Incremental (delta) paragraph dedup — [[exactDelta]]'s contract
     * at sub-document granularity: dedup a new-docs frame's paragraphs
@@ -221,20 +233,20 @@ object Dedup {
     * retroactively flip published rows); a NEW paragraph's keeper is
     * the delta's lexicographic-min occurrence, exactly
     * [[paragraphExact]]'s rule, so an append-only ingest equals the
-    * full rescan restricted to delta rows (DeltaDedupSpec). Re-ingest
-    * is idempotent: the store is per-FINGERPRINT, so a replayed
+    * full rescan restricted to delta rows (DeltaDedupSpec). The members
+    * table evicts the delta's ids and appends its occurrences. Re-ingest
+    * is idempotent: the keepers are per-FINGERPRINT, so a replayed
     * delta's paragraphs resolve to their own stored keepers and the
     * anti-joined store union adds nothing. Cost per ingest: one
     * split+hash of the DELTA (persisted slim), one fp-key shuffle of
     * delta-sized frames, one store equi-join. */
-  def paragraphDelta(store: DataFrame, delta: DataFrame,
-                     spanTokens: Int = 16): AssignmentDelta[DataFrame] = {
-    val fps = CacheTracker.persistTracked(spanRows(delta, spanTokens)
-      .select(col("doc_id"), col("para_idx"), md5(col("para")).as("fp")))
+  def paragraphDelta(store: ParagraphStore,
+                     delta: DataFrame): AssignmentDelta[ParagraphStore] = {
+    val fps = CacheTracker.persistTracked(spanFps(delta, store.spanTokens))
     val dmin = paraKeepers(fps)
       .select(col("fp"), col("keep_doc").as("dmin_doc"),
         col("keep_idx").as("dmin_idx"))
-    val s = store.select(col("fp"), col("keep_doc").as("s_doc"),
+    val s = store.keepers.select(col("fp"), col("keep_doc").as("s_doc"),
       col("keep_idx").as("s_idx"))
     val assignment = fps
       .join(dmin, "fp")
@@ -244,32 +256,18 @@ object Dedup {
         coalesce(col("s_idx"), col("dmin_idx")).as("keep_idx"))
       .withColumn("is_dup", (col("doc_id") =!= col("keep_doc") ||
         col("para_idx") =!= col("keep_idx")).cast("int"))
-    val newFps = dmin.join(store, Seq("fp"), "left_anti")
+    val newFps = dmin.join(store.keepers, Seq("fp"), "left_anti")
       .select(col("fp"), col("dmin_doc").as("keep_doc"),
         col("dmin_idx").as("keep_idx"))
-    AssignmentDelta(assignment, store.union(newFps))
+    AssignmentDelta(assignment, store.copy(
+      keepers = store.keepers.union(newFps),
+      members = evictAppend(store.members, delta.select(col("doc_id")), fps,
+        "doc_id")))
   }
-
-  /** The occurrence MEMBER store paragraph retraction needs beside
-    * the slim keeper store — one (doc_id, para_idx, fp) row per live
-    * paragraph occurrence ([[memberStore]] one granularity down, same
-    * rationale: the (fp, keep_doc, keep_idx) keeper table cannot
-    * re-elect after a takedown because it no longer knows who the
-    * surviving occurrences are). Bucketed on fp at scale like the
-    * keeper table; an ingest appends its delta's occurrence rows, a
-    * retraction anti-joins the retracted docs out. */
-  def paragraphMemberStore(docs: DataFrame, spanTokens: Int = 16): DataFrame =
-    spanRows(docs, spanTokens).select(col("doc_id"), col("para_idx"),
-      md5(col("para")).as("fp"))
-
-  /** Both shrunk paragraph-store tables after a takedown (inputs to
-    * the next [[paragraphDelta]] or retraction). */
-  final case class ParagraphRetract(updatedStore: DataFrame,
-                                    updatedMembers: DataFrame)
 
   /** RETRACTION for incremental paragraph dedup — [[exactRetract]]'s
     * contract one granularity down: remove every paragraph occurrence
-    * of the retracted docs from the keeper store WITHOUT re-splitting
+    * of the retracted docs from the store WITHOUT re-splitting
     * the surviving corpus. The election is the lexicographic-min
     * (doc_id, para_idx) occurrence, so the exactness argument carries
     * verbatim: a group that only lost NON-keeper occurrences keeps its
@@ -282,13 +280,13 @@ object Dedup {
     * whenever the stored keepers are min-elected (sticky non-minima
     * from earlier delta ingests stay sticky — [[paragraphDelta]]'s
     * first-writer-wins contract, spec-pinned). Zero text rescans: the
-    * member store carries fingerprints. */
-  def paragraphRetract(store: DataFrame, members: DataFrame,
-                       retractIds: DataFrame): ParagraphRetract = {
+    * member table carries fingerprints. */
+  def paragraphRetract(store: ParagraphStore,
+                       retractIds: DataFrame): ParagraphStore = {
     val r = CacheTracker.persistTracked(
       retractIds.select(col("doc_id")).distinct())
-    val surv = members.join(broadcast(r), Seq("doc_id"), "left_anti")
-    val affected = store
+    val surv = store.members.join(broadcast(r), Seq("doc_id"), "left_anti")
+    val affected = store.keepers
       .join(broadcast(r.withColumnRenamed("doc_id", "keep_doc")),
         Seq("keep_doc"))
       .select(col("fp"))
@@ -297,10 +295,10 @@ object Dedup {
       .agg(min(struct(col("doc_id"), col("para_idx"))).as("k"))
       .select(col("fp"), col("k.doc_id").as("keep_doc"),
         col("k.para_idx").as("keep_idx"))
-    val updatedStore = store.join(broadcast(affected), Seq("fp"), "left_anti")
+    val keepers = store.keepers.join(broadcast(affected), Seq("fp"), "left_anti")
       .select(col("fp"), col("keep_doc"), col("keep_idx"))
       .union(reelected)
-    ParagraphRetract(updatedStore, surv)
+    store.copy(keepers = keepers, members = surv)
   }
 
   /** Keeper election shared by assignment and rewrite: lexicographic
@@ -336,48 +334,64 @@ object Dedup {
     * null-text docs share the sentinel group. */
   private def storeFp = coalesce(md5(col("text")), lit("<null-text>"))
 
-  /** The keeper STORE for incremental exact dedup: one (fp, keep_id)
-    * row per distinct fingerprint — the slim table a growing corpus
-    * persists between ingests so each new batch dedups against
-    * fingerprints, never against the old corpus bytes. Map-side-
-    * combined min per fp (a null text forms its own sentinel group,
-    * same null-bucket semantics as [[exact]]). Written bucketed on fp
-    * ([[graft.sources.Sinks.writeBucketed]]) the store side of every
-    * future delta join is pre-partitioned — no store shuffle per
-    * ingest (spec-asserted in StoreRoundTripSpec). */
-  def keeperStore(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), storeFp.as("fp"))
-      .groupBy(col("fp")).agg(min(col("doc_id")).as("keep_id"))
+  /** The maintained EXACT-dedup store, for text ([[exactStore]]) and
+    * media payloads ([[Multimodal.payloadStore]]):
+    *  - `keepers`: one (fp, keep_id) row per distinct fingerprint — the
+    *    slim table each new batch dedups against, never the old corpus
+    *    bytes. Map-side-combined min per fp (a null text forms its own
+    *    sentinel group, same null-bucket semantics as [[exact]]);
+    *  - `members`: one (doc_id, carry…, fp) row per live document. The
+    *    keeper table alone cannot re-elect after a takedown — when a
+    *    keeper is removed, the min SURVIVING id of its fp group must be
+    *    found. The honest cost of retraction is one 24-ish-byte row per
+    *    corpus document;
+    *  - `carry`: member columns that ride every assignment (the sniffed
+    *    media kind for payloads, none for text).
+    * Both tables are written bucketed on fp
+    * ([[graft.sources.Sinks.writeBucketed]]), so the store side of every
+    * delta or retraction join is pre-partitioned — no store shuffle
+    * (spec-asserted in StoreRoundTripSpec). */
+  final case class ExactStore(keepers: DataFrame, members: DataFrame,
+                              carry: Seq[String])
+
+  def exactStore(docs: DataFrame): ExactStore =
+    exactStoreOf(docs.select(col("doc_id"), storeFp.as("fp")), Nil)
+
+  /** [[ExactStore]] over (doc_id, carry…, fp) rows with a TOTAL fp. */
+  private[operators] def exactStoreOf(keyed: DataFrame,
+                                      carry: Seq[String]): ExactStore =
+    ExactStore(keyed.groupBy(col("fp")).agg(min(col("doc_id")).as("keep_id")),
+      keyed, carry)
 
   /** Incremental (delta) exact dedup — the batch operator a growing
     * 100 TB corpus actually runs: dedup a new-docs frame against the
-    * persisted keeper store WITHOUT rescanning the old corpus.
+    * persisted keeper table WITHOUT rescanning the old corpus.
     * Keepers are sticky: a fingerprint already in the store keeps its
     * existing keep_id (first writer wins — re-electing a smaller
     * keeper would retroactively flip already-published rows); a new
     * fingerprint's keeper is the delta's min doc_id, exactly
     * [[exact]]'s rule. When every delta id exceeds every stored id
     * (the normal append-only ingest), the result is IDENTICAL to a
-    * full rescan (spec-proven).
+    * full rescan (spec-proven). The members table evicts the delta's
+    * ids and appends its keyed rows, so a same-bytes re-ingest changes
+    * no table.
     *
     * Cost per ingest: one scan+hash of the DELTA (persisted slim, the
     * [[exact]] trick — the min aggregate and the join-back both read
     * it; the cache entry lives for the session, same contract as
     * exact/exactNormalized), one fp-key shuffle of delta-sized frames,
     * and a store equi-join — never a scan of the old corpus. The
-    * store union is column-aligned, so the updated store appends only
+    * store union is column-aligned, so the updated keepers append only
     * the genuinely new fingerprints. */
-  def exactDelta(store: DataFrame, delta: DataFrame): AssignmentDelta[DataFrame] =
+  def exactDelta(store: ExactStore, delta: DataFrame): AssignmentDelta[ExactStore] =
     exactDeltaKeyed(store, delta.select(col("doc_id"), storeFp.as("fp")))
 
   /** [[exactDelta]]'s fp-keyed core, shared with the multimodal
     * payload delta ([[Multimodal.payloadDedupDelta]]): `keyed0` is
-    * (doc_id, fp[, carry…]) with a TOTAL fp (null sentinel applied by
-    * the caller), `carry` names extra columns to ride the assignment
-    * (e.g. the sniffed media kind). Same sticky-keeper contract and
-    * cost shape as [[exactDelta]] — the store is never rescanned. */
-  private[operators] def exactDeltaKeyed(store: DataFrame, keyed0: DataFrame,
-      carry: Seq[String] = Nil): AssignmentDelta[DataFrame] = {
+    * (doc_id, carry…, fp) with a TOTAL fp (null sentinel applied by
+    * the caller), the store's `carry` columns riding the assignment. */
+  private[operators] def exactDeltaKeyed(store: ExactStore,
+      keyed0: DataFrame): AssignmentDelta[ExactStore] = {
     val keyed = CacheTracker.persistTracked(keyed0)
     val dmin = keyed.groupBy(col("fp")).agg(min(col("doc_id")).as("dmin_id"))
     // per-fp keeper after this ingest: the store's (sticky) else the
@@ -386,45 +400,26 @@ object Dedup {
     // shuffle-free against a [[graft.sources.Sinks.writeBucketed]]
     // store table, null-text groups intact via the sentinel.
     val merged = dmin.as("m")
-      .join(store.as("s"), col("m.fp") === col("s.fp"), "left")
+      .join(store.keepers.as("s"), col("m.fp") === col("s.fp"), "left")
       .select(col("m.fp").as("fp"),
         coalesce(col("s.keep_id"), col("m.dmin_id")).as("keep_id"))
     val assignment = keyed.as("d")
       .join(merged.as("k"), col("d.fp") === col("k.fp"))
       .select(col("d.doc_id").as("doc_id") +:
-        carry.map(c => col(s"d.$c").as(c)) :+ col("keep_id") :+
+        store.carry.map(c => col(s"d.$c").as(c)) :+ col("keep_id") :+
         (col("d.doc_id") =!= col("keep_id")).cast("int").as("is_dup"): _*)
     val newFps = merged.as("m2")
-      .join(store.as("s2"), col("m2.fp") === col("s2.fp"), "left_anti")
-    AssignmentDelta(assignment, store.union(newFps))
+      .join(store.keepers.as("s2"), col("m2.fp") === col("s2.fp"), "left_anti")
+    AssignmentDelta(assignment, store.copy(
+      keepers = store.keepers.union(newFps),
+      members = evictAppend(store.members, keyed.select(col("doc_id")),
+        keyed.select(("doc_id" +: store.carry :+ "fp").map(col): _*),
+        "doc_id")))
   }
 
-  /** The MEMBER store retraction needs beside the slim keeper store:
-    * one (doc_id, fp) row per live document. [[keeperStore]] alone
-    * cannot re-elect after a takedown — when a keeper is removed, the
-    * min SURVIVING id of its fp group must be found, and the slim
-    * (fp, keep_id) table no longer knows who the survivors are. The
-    * honest cost of supporting retraction is therefore one 24-ish-
-    * byte row per corpus document, bucketed on fp like the keeper
-    * table (the retraction re-election joins both on fp, shuffle-free
-    * against bucketed tables). Maintained alongside: an ingest
-    * appends its delta's keyed rows, a retraction anti-joins the
-    * retracted ids out ([[exactRetract]] returns the shrunk table). */
-  def memberStore(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), storeFp.as("fp"))
-
-  /** Result of a retraction pass: the full post-takedown assignment
-    * over the SURVIVING corpus, plus both shrunk store tables (inputs
-    * to the next ingest or retraction). */
-  final case class ExactRetract(assignment: DataFrame,
-                                updatedKeepers: DataFrame,
-                                updatedMembers: DataFrame)
-
-  /** RETRACTION for incremental exact dedup (r16 — the delta-store
-    * family's first removal path; until now every maintained store
-    * was append/re-ingest only and a takedown meant a full rebuild):
-    * remove `retractIds` (licensing, PII, right-to-erasure) from the
-    * exact-dedup state WITHOUT rescanning the surviving corpus bytes.
+  /** RETRACTION for incremental exact dedup: remove `retractIds`
+    * (licensing, PII, right-to-erasure) from the exact-dedup state
+    * WITHOUT rescanning the surviving corpus bytes.
     *
     * Election consequences are delta-proportional and sticky
     * everywhere else:
@@ -443,36 +438,30 @@ object Dedup {
     * sticky non-minima from earlier delta ingests stays sticky — same
     * first-writer-wins contract as [[exactDelta]], spec-pinned).
     *
-    * Cost shape: zero scans of document TEXT (the member store
+    * Cost shape: zero scans of document TEXT (the member table
     * carries fingerprints), one broadcast of the takedown batch, one
     * fp-keyed aggregate over affected groups, and anti-joins that are
     * map-side against bucketed store tables. The full `assignment`
     * output is one members⨝keepers equi-join (both bucketed on fp —
     * co-partitioned, no shuffle); callers that only want the store
-    * update read the two store frames and skip it.
+    * update read the updated store and skip it.
     *
     * Contract bound: the takedown batch is assumed DRIVER-SMALL
     * (thousands-to-millions of ids — it rides two broadcast hints,
     * like every takedown a legal/PII queue actually emits). A "batch"
     * of store scale is a rebuild over the survivors, not a
-    * retraction.
-    *
-    * `carry` names extra member-store columns to ride the assignment
-    * output (r17 — [[Multimodal.payloadRetract]] carries the sniffed
-    * media kind through the shared seam, the same knob
-    * [[exactDeltaKeyed]] gives the ingest side). */
-  def exactRetract(keepers: DataFrame, members: DataFrame,
-                   retractIds: DataFrame,
-                   carry: Seq[String] = Nil): ExactRetract = {
+    * retraction. */
+  def exactRetract(store: ExactStore,
+                   retractIds: DataFrame): AssignmentDelta[ExactStore] = {
     val r = CacheTracker.persistTracked(
       retractIds.select(col("doc_id")).distinct())
     // broadcast-hinted like every takedown-sized frame here: without
     // the hint a stats-blind planner could sort-merge this anti-join
     // on doc_id and re-shuffle the fp-bucketed member table
-    val surv = members.join(broadcast(r), Seq("doc_id"), "left_anti")
+    val surv = store.members.join(broadcast(r), Seq("doc_id"), "left_anti")
     // groups whose keeper was taken down — the only ones whose
     // election can change; bounded by the takedown batch
-    val affected = keepers
+    val affected = store.keepers
       .join(broadcast(r.withColumnRenamed("doc_id", "keep_id")),
         Seq("keep_id"))
       .select(col("fp"))
@@ -481,25 +470,26 @@ object Dedup {
     val reelected = CacheTracker.persistTracked(
       surv.join(broadcast(affected), Seq("fp"))
         .groupBy(col("fp")).agg(min(col("doc_id")).as("keep_id")))
-    val updatedKeepers =
-      keepers.join(broadcast(affected), Seq("fp"), "left_anti")
+    val keepers =
+      store.keepers.join(broadcast(affected), Seq("fp"), "left_anti")
         .select(col("fp"), col("keep_id"))
         .union(reelected.select(col("fp"), col("keep_id")))
     // the survivor assignment joins the two BUCKETED store tables
     // directly (co-partitioned on fp — zero corpus-scale shuffle,
     // StoreRoundTripSpec) and overrides the affected groups' stale
     // keeper through a broadcast coalesce, rather than joining the
-    // updatedKeepers union, whose re-elected rows would cost the
+    // updated keepers union, whose re-elected rows would cost the
     // whole keeper table its bucketing and force a corpus-sized
     // re-shuffle on the join's right side
-    val assignment = surv.join(keepers, Seq("fp"))
+    val assignment = surv.join(store.keepers, Seq("fp"))
       .join(broadcast(reelected.withColumnRenamed("keep_id", "new_keep")),
         Seq("fp"), "left")
-      .select(col("doc_id") +: carry.map(col) :+
+      .select(col("doc_id") +: store.carry.map(col) :+
         coalesce(col("new_keep"), col("keep_id")).as("keep_id") :+
         (col("doc_id") =!= coalesce(col("new_keep"), col("keep_id")))
           .cast("int").as("is_dup"): _*)
-    ExactRetract(assignment, updatedKeepers, surv)
+    AssignmentDelta(assignment,
+      store.copy(keepers = keepers, members = surv))
   }
 
   /** Shared takedown anti-join: `table` minus the retracted ids on
@@ -1141,7 +1131,7 @@ object Dedup {
     * 64 bit votes run in one per-row codegen'd kernel
     * (graft.plans.SimHashKernels), bit-identical to the tf-weighted
     * vote aggregate (PlansSpec) with no sketch-stage shuffle. At
-    * corpus scale this is a maintained table like [[keeperStore]]. */
+    * corpus scale this is a maintained table like [[ExactStore]]. */
   def simhashStore(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), Text.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) > 0)
@@ -1675,16 +1665,13 @@ object Dedup {
     * the re-scoring form at 110 s of a 135 s takedown pass at 100k
     * vectors; the table is the near-dup pair set the build
     * materializes anyway, bounded by verified-pair density), and
-    * the maintained assignment. (tau, k) AND the cluster-family
-    * geometry (nTables, planesPerTable) are pinned — a delta at
-    * different parameters is a rebuild, not an ingest. The geometry
-    * pin matters because the sign word is only as wide as
-    * max(cluster, graph) planes: a build at 6×4 persists 24-bit
-    * words, and a delta that then sliced an 8×4 family out of them
-    * would read sign 0 for the 8 missing planes — the exact
-    * bucket-collapse class the r15 max() rule fixed on the build
-    * side, silently reintroduced through the store seam (r16,
-    * ADVICE r15 medium). At corpus scale: bits/assignment bucketed
+    * the maintained assignment. (tau, k), the cluster-family
+    * geometry (nTables, planesPerTable) and `dim` are the build's, and
+    * the delta and retract read them from the store: the sign word is
+    * only as wide as max(cluster, graph) planes, so a build at 6×4
+    * persists 24-bit words, and a delta that sliced an 8×4 family out
+    * of them would read sign 0 for the 8 missing planes. At corpus
+    * scale: bits/assignment bucketed
     * on vec_id, graph on src, pairs on id_a
     * ([[graft.sources.Sinks.writeBucketed]]). */
   final case class SemanticBestStore(bits: DataFrame, graph: DataFrame,
@@ -1692,7 +1679,8 @@ object Dedup {
                                      pairs: DataFrame,
                                      tau: Double, k: Int,
                                      nTables: Int = 6,
-                                     planesPerTable: Int = 4)
+                                     planesPerTable: Int = 4,
+                                     dim: Int = 64)
 
   /** Build [[SemanticBestStore]] state for an initial corpus — the
     * same [[semanticBestFrames]] pipeline the batch row runs, so the
@@ -1703,7 +1691,30 @@ object Dedup {
     val f = semanticBestFrames(embeddings, tau, k, nTables, planesPerTable,
       dim, depth = graphDepth(k))
     SemanticBestStore(f.bits, f.edges, f.assignment, f.pairs, tau, k,
-      nTables, planesPerTable)
+      nTables, planesPerTable, dim)
+  }
+
+  /** The two format checks on a stored graph, which may be read from
+    * disk: merged-top-k maintenance needs scored edges (`cos_sim`), and
+    * surplus-depth maintenance needs each probe's ranking and cap. The
+    * caller's `tau, k` must be the store's build parameters. */
+  private def requireMaintainable(op: String, store: SemanticBestStore,
+                                  tau: Double, k: Int): Unit = {
+    require(tau == store.tau && k == store.k,
+      f"$op(tau=$tau%.3f, k=$k) must match the store's build parameters " +
+        f"(tau=${store.tau}%.3f, k=${store.k}): the graph and pair stages " +
+        "are parameter-determined — rebuild the store to change them")
+    require(store.graph.columns.contains("cos_sim"),
+      "pre-r15 SemanticBestStore: the persisted kNN graph has no " +
+        "cos_sim column, but merged-top-k maintenance needs scored " +
+        "edges — rebuild the store with this version's " +
+        "semanticBestStore")
+    require(store.graph.columns.contains("rnk") &&
+        store.graph.columns.contains("cap"),
+      "pre-r16 SemanticBestStore: the persisted kNN graph has no " +
+        "(rnk, cap) columns — surplus-depth maintenance needs the " +
+        "stored ranking and its per-probe cap; rebuild the store " +
+        "with this version's semanticBestStore")
   }
 
   /** INCREMENTAL centrality election — delta ≡ full EXACTLY, so
@@ -1750,41 +1761,18 @@ object Dedup {
     * checkpoints ([[CacheTracker]]'s rule), so a store cycle leaves no
     * cache entry behind. */
   def semanticKeepersBestDelta(store: SemanticBestStore, delta: DataFrame,
-                               tau: Double, k: Int,
-                               nTables: Int = 6, planesPerTable: Int = 4,
-                               dim: Int = 64): AssignmentDelta[SemanticBestStore] = {
-    require(tau == store.tau && k == store.k,
-      f"semanticKeepersBestDelta(tau=$tau%.3f, k=$k) must match the " +
-        f"store's build parameters (tau=${store.tau}%.3f, k=${store.k}): " +
-        "the graph and pair stages are parameter-determined — rebuild " +
-        "the store to change them")
-    // the stored sign words carry only the build's planes
-    require(nTables == store.nTables &&
-        planesPerTable == store.planesPerTable,
-      s"semanticKeepersBestDelta(nTables=$nTables, planesPerTable=" +
-        s"$planesPerTable) must match the store's cluster-family " +
-        s"geometry (${store.nTables}x${store.planesPerTable}): stored " +
-        "sign words only carry the build's planes — rebuild the store " +
-        "to change the family")
-    // merged-top-k maintenance needs scored, ranked stored edges
-    require(store.graph.columns.contains("cos_sim"),
-      "pre-r15 SemanticBestStore: the persisted kNN graph has no " +
-        "cos_sim column, but merged-top-k maintenance needs scored " +
-        "edges — rebuild the store with this version's " +
-        "semanticBestStore")
-    require(store.graph.columns.contains("rnk") &&
-        store.graph.columns.contains("cap"),
-      "pre-r16 SemanticBestStore: the persisted kNN graph has no " +
-        "(rnk, cap) columns — surplus-depth maintenance needs the " +
-        "stored ranking and its per-probe cap; rebuild the store " +
-        "with this version's semanticBestStore")
+                               tau: Double,
+                               k: Int): AssignmentDelta[SemanticBestStore] = {
+    requireMaintainable("semanticKeepersBestDelta", store, tau, k)
+    val (nTables, planesPerTable) = (store.nTables, store.planesPerTable)
     // sign-word width: max of the two families, as on the build side
     val nPlanes =
       math.max(nTables * planesPerTable, GraphTables * GraphPlanes)
     val dIds = delta.select(col("vec_id")).distinct().localCheckpoint(true)
     def isDelta(name: String) = dIds.select(col("vec_id").as(name))
     val dBits = Similarity.lshBits(
-      delta.select(col("vec_id"), col("embedding").as("v")), nPlanes, dim)
+      delta.select(col("vec_id"), col("embedding").as("v")), nPlanes,
+      store.dim)
       .localCheckpoint(true)
     // same-bytes re-ingest: the delta replaces its stored rows in every tier
     val allBits = evictAppend(store.bits, isDelta("vec_id"), dBits, "vec_id")
@@ -1875,9 +1863,8 @@ object Dedup {
       .join(isDelta("id_b"), Seq("id_b"), "left_anti")
       .select(col("id_a"), col("id_b"))
       .union(dPairs)
-    AssignmentDelta(assignment,
-      SemanticBestStore(allBits, grown, assignment, grownPairs, tau, k,
-        nTables, planesPerTable))
+    AssignmentDelta(assignment, store.copy(bits = allBits, graph = grown,
+      assignment = assignment, pairs = grownPairs))
   }
 
   /** RETRACTION for the incremental centrality election:
@@ -1931,27 +1918,9 @@ object Dedup {
     * scale is a rebuild over the survivors. Intermediates are eager
     * checkpoints, as in the ingest. */
   def semanticBestRetract(store: SemanticBestStore, retractIds: DataFrame,
-                          tau: Double, k: Int,
-                          nTables: Int = 6, planesPerTable: Int = 4,
-                          dim: Int = 64): AssignmentDelta[SemanticBestStore] = {
-    require(tau == store.tau && k == store.k,
-      f"semanticBestRetract(tau=$tau%.3f, k=$k) must match the store's " +
-        f"build parameters (tau=${store.tau}%.3f, k=${store.k})")
-    require(nTables == store.nTables &&
-        planesPerTable == store.planesPerTable,
-      s"semanticBestRetract(nTables=$nTables, planesPerTable=" +
-        s"$planesPerTable) must match the store's cluster-family " +
-        s"geometry (${store.nTables}x${store.planesPerTable})")
-    require(store.graph.columns.contains("cos_sim"),
-      "pre-r15 SemanticBestStore: the persisted kNN graph has no " +
-        "cos_sim column — retraction's kept-edge path needs scored " +
-        "edges; rebuild the store")
-    require(store.graph.columns.contains("rnk") &&
-        store.graph.columns.contains("cap"),
-      "pre-r16 SemanticBestStore: the persisted kNN graph has no " +
-        "(rnk, cap) columns — surplus-depth retraction needs the " +
-        "stored ranking and its per-probe cap; rebuild the store " +
-        "with this version's semanticBestStore")
+                          tau: Double,
+                          k: Int): AssignmentDelta[SemanticBestStore] = {
+    requireMaintainable("semanticBestRetract", store, tau, k)
     val sp = retractIds.sparkSession
     val rIds = retractIds.select(col("vec_id")).distinct().localCheckpoint(true)
     def isRetracted(name: String) = rIds.select(col("vec_id").as(name))
@@ -2015,9 +1984,8 @@ object Dedup {
       .localCheckpoint(true)
     val assignment = electMax(assigned)
       .select(col("doc_id").as("vec_id"), col("keep_id"), col("is_dup"))
-    AssignmentDelta(assignment,
-      SemanticBestStore(bits, shrunk, assignment, survPairs, tau, k,
-        nTables, planesPerTable))
+    AssignmentDelta(assignment, store.copy(bits = bits, graph = shrunk,
+      assignment = assignment, pairs = survPairs))
   }
 
   /** [[semanticBestRetract]]'s one read of the stored graph, checkpointed:
@@ -2180,20 +2148,21 @@ object Dedup {
 
   /** The persisted state for INCREMENTAL quality keeper election:
     * the verified near-dup pair table, the per-doc scores, and the
-    * current assignment. At corpus scale: pairs bucketed on id_a,
-    * scores/assignment on doc_id ([[graft.sources.Sinks.writeBucketed]]),
-    * so the delta's subgraph-selection joins read them
-    * pre-partitioned. */
+    * current assignment, plus the build's `score` expression, which
+    * every ingest scores its delta with. At corpus scale: pairs bucketed
+    * on id_a, scores/assignment on doc_id
+    * ([[graft.sources.Sinks.writeBucketed]]), so the delta's
+    * subgraph-selection joins read them pre-partitioned. */
   final case class KeepBestStore(pairs: DataFrame, scores: DataFrame,
-                                 assignment: DataFrame)
+                                 assignment: DataFrame, score: Column)
 
   /** Build [[KeepBestStore]] state for an initial corpus. */
   def keepBestStore(docs: DataFrame, pairs0: DataFrame,
-                    score: org.apache.spark.sql.Column): KeepBestStore = {
+                    score: Column): KeepBestStore = {
     val pairs = CacheTracker.persistTracked(
       pairs0.select(col("id_a"), col("id_b")))
     val scores = docs.select(col("doc_id"), score.cast("long").as("score"))
-    KeepBestStore(pairs, scores, keepBest(docs, pairs, score))
+    KeepBestStore(pairs, scores, keepBest(docs, pairs, score), score)
   }
 
   /** Incremental (delta) quality keeper election — [[keepBest]]
@@ -2218,12 +2187,11 @@ object Dedup {
     * always re-elected — changed content may have DROPPED pairs, so
     * the remaining members re-form from the surviving edges. */
   def keepBestDelta(store: KeepBestStore, delta: DataFrame,
-                    deltaPairs0: DataFrame,
-                    score: org.apache.spark.sql.Column)
-      : AssignmentDelta[KeepBestStore] = {
+                    deltaPairs0: DataFrame): AssignmentDelta[KeepBestStore] = {
     val deltaPairs = CacheTracker.persistTracked(
       deltaPairs0.select(col("id_a"), col("id_b")))
-    val dScores = delta.select(col("doc_id"), score.cast("long").as("score"))
+    val dScores = delta.select(col("doc_id"),
+      store.score.cast("long").as("score"))
     // re-ingest idempotency (containmentDelta's rule): the delta
     // REPLACES its ids everywhere — scores, prior assignment rows,
     // and stored pairs touching a delta id (ngramJaccardDelta re-emits
@@ -2277,8 +2245,8 @@ object Dedup {
       .join(affectedClusters,
         col("keep_id") === col("affected_keep"), "left_anti")
     AssignmentDelta(untouched.union(reElected),
-      KeepBestStore(oldPairsKept.union(deltaPairs), allScores,
-        untouched.union(reElected)))
+      store.copy(pairs = oldPairsKept.union(deltaPairs), scores = allScores,
+        assignment = untouched.union(reElected)))
   }
 
   /** RETRACTION for the quality-election store (r17): remove the
@@ -2334,8 +2302,8 @@ object Dedup {
       .join(broadcast(affected),
         col("keep_id") === col("affected_keep"), "left_anti")
     val assignment = untouched.union(reElected)
-    AssignmentDelta(assignment,
-      KeepBestStore(survPairs, survScores, assignment))
+    AssignmentDelta(assignment, store.copy(pairs = survPairs,
+      scores = survScores, assignment = assignment))
   }
 
   /** The embedding LSH store: the bucketed vector rows (vec_id, v, nrm,
@@ -2672,11 +2640,13 @@ object Dedup {
   /** Persisted state for INCREMENTAL semantic dedup: the LSH bucket
     * store (pair generation) plus the corpus's full (vec_id,
     * cluster_id) keeper ASSIGNMENT — the table downstream filtering
-    * reads anyway, so maintaining it IS the product, not extra state.
+    * reads anyway, so maintaining it IS the product, not extra state —
+    * and the build's cosine threshold `tau`, which every ingest and
+    * retraction must pair with for delta ≡ rebuild to hold.
     * Bucketed/persisted on disk between ingests like every other
     * `*Store` (StoreRoundTripSpec's layout contract). */
   final case class SemanticStore(lsh: EmbeddingLshStore,
-                                 assignment: DataFrame)
+                                 assignment: DataFrame, tau: Double)
 
   /** Build [[SemanticStore]] state for an initial corpus.
     *
@@ -2710,7 +2680,7 @@ object Dedup {
     SemanticStore(
       embeddingLshStore(reps, nTables, planesPerTable, dim),
       semanticKeepersDedup(embeddings, tau, nTables, planesPerTable, dim)
-        .select(col("vec_id"), col("cluster_id")))
+        .select(col("vec_id"), col("cluster_id")), tau)
   }
 
   /** Incremental SEMANTIC dedup — the keeper-assignment delta the
@@ -2748,8 +2718,8 @@ object Dedup {
     * clusters with the batch pass, or treat ids as immutable and
     * mint a new id per content version (the content-addressed ingest
     * shape). */
-  def semanticKeepersDelta(store: SemanticStore, delta: DataFrame,
-                           tau: Double): AssignmentDelta[SemanticStore] = {
+  def semanticKeepersDelta(store: SemanticStore,
+                           delta: DataFrame): AssignmentDelta[SemanticStore] = {
     val dIds = delta.select(col("vec_id")).distinct()
     // EAGER checkpoints, not lazy persists: the store tail and the
     // LSH pair join are each read more than once below (quotient
@@ -2827,7 +2797,7 @@ object Dedup {
     val cleanLsh = store.lsh.copy(bucketed =
       store.lsh.bucketed.join(dIds, Seq("vec_id"), "left_anti"))
     val ed = embeddingNearDupLshDelta(cleanLsh,
-      newReps.union(srepReIngested), tau)
+      newReps.union(srepReIngested), store.tau)
     // EAGER checkpoint kept (re-measured r21): swapping it for a lazy
     // persist — "fold the materialization into the quotient collect's
     // job" — read 0.3-0.4 s WORSE on dd_semantic_delta in interleaved
@@ -2900,9 +2870,8 @@ object Dedup {
     val assignment = storedNew.union(deltaNew)
       .withColumn("is_dup",
         (col("vec_id") =!= col("cluster_id")).cast("int"))
-    AssignmentDelta(assignment,
-      SemanticStore(ed.updatedStore,
-        assignment.select(col("vec_id"), col("cluster_id"))))
+    AssignmentDelta(assignment, store.copy(lsh = ed.updatedStore,
+      assignment = assignment.select(col("vec_id"), col("cluster_id"))))
   }
 
   /** RETRACTION for the min-id semantic store (r17, VERDICT r16 item
@@ -2963,12 +2932,10 @@ object Dedup {
     * pay. The two semantic families price that trade in both
     * directions on purpose. */
   def semanticRetract(store: SemanticStore, retractIds: DataFrame,
-                      embeddings: DataFrame,
-                      tau: Double): AssignmentDelta[SemanticStore] = {
-    // geometry comes from the STORE, not parameters (r18, ADVICE r17):
-    // the rebuilt slice's bucket rows union into keptLsh below, and
-    // bucket ids from two geometries are incomparable — deriving the
-    // three ints from the store makes that mix unrepresentable
+                      embeddings: DataFrame): AssignmentDelta[SemanticStore] = {
+    // tau and geometry come from the STORE: the rebuilt slice's bucket
+    // rows union into keptLsh below, and bucket ids from two geometries
+    // are incomparable
     val (nTables, planesPerTable, dim) =
       (store.lsh.nTables, store.lsh.planesPerTable, store.lsh.dim)
     val r = CacheTracker.persistTracked(
@@ -2989,7 +2956,7 @@ object Dedup {
     val slice = embeddings
       .join(affectedMembers, Seq("vec_id"), "left_semi")
       .select(col("vec_id"), col("embedding"))
-    val rebuilt = semanticStore(slice, tau, nTables, planesPerTable, dim)
+    val rebuilt = semanticStore(slice, store.tau, nTables, planesPerTable, dim)
     // reps tier: every rep row belonging to an affected cluster (reps
     // are members, so the assignment locates them) or to the takedown
     // leaves; the rebuilt slice's rep rows replace them
@@ -3002,9 +2969,8 @@ object Dedup {
     val assignment = unaffected.union(rebuilt.assignment)
       .withColumn("is_dup",
         (col("vec_id") =!= col("cluster_id")).cast("int"))
-    AssignmentDelta(assignment,
-      SemanticStore(
-        rebuilt.lsh.copy(bucketed = keptLsh.union(rebuilt.lsh.bucketed)),
-        assignment.select(col("vec_id"), col("cluster_id"))))
+    AssignmentDelta(assignment, store.copy(
+      lsh = rebuilt.lsh.copy(bucketed = keptLsh.union(rebuilt.lsh.bucketed)),
+      assignment = assignment.select(col("vec_id"), col("cluster_id"))))
   }
 }

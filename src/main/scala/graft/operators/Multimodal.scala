@@ -112,57 +112,47 @@ object Multimodal {
     payloadDedupOf(withPayload(docs))
 
   /** TOTAL payload fingerprint — md5 of the bytes with a null
-    * sentinel, [[Dedup.keeperStore]]'s discipline on the binary
+    * sentinel, [[Dedup.exactStore]]'s discipline on the binary
     * column (every store join stays a plain equi-join). */
   private def payloadFp = coalesce(md5(col("payload")), lit("<null-payload>"))
 
-  /** The slim (fp → keep_id) keeper store for media payloads — one
-    * row per distinct payload digest, the table a growing media
-    * corpus persists between ingests ([[Dedup.keeperStore]] keyed on
-    * bytes instead of text). */
-  def payloadKeeperStore(docs: DataFrame): DataFrame =
-    withPayload(docs).select(col("doc_id"), payloadFp.as("fp"))
-      .groupBy(col("fp")).agg(min(col("doc_id")).as("keep_id"))
+  /** (doc_id, kind, fp) rows: the payload digest with the sniffed kind
+    * carried, so re-elected assignments keep per-modality accounting. */
+  private def payloadKeyed(docs: DataFrame): DataFrame =
+    withPayload(docs).select(col("doc_id"),
+      sniffKind(col("payload")).as("kind"), payloadFp.as("fp"))
+
+  /** The maintained exact MEDIA store — [[Dedup.ExactStore]] keyed on
+    * the payload digest instead of the text, carrying `kind`: the table
+    * pair a growing media corpus persists between ingests. */
+  def payloadStore(docs: DataFrame): Dedup.ExactStore =
+    Dedup.exactStoreOf(payloadKeyed(docs), Seq("kind"))
 
   /** INCREMENTAL exact media dedup — [[Dedup.exactDelta]]'s sticky-
     * keeper contract on the payload digest: a new media batch assigns
-    * against the persisted [[payloadKeeperStore]] without rescanning
+    * against the persisted [[payloadStore]] without rescanning
     * old bytes (a 100 TB media lake never re-reads shipped shards to
     * admit a day's crawl). Keepers sticky (a digest already stored
     * keeps its keep_id), new digests elect the delta's min id —
     * append-only ingests reproduce the full [[payloadDedup]] rescan
     * exactly (spec-pinned, MultimodalSpec). The sniffed kind rides
     * the assignment like [[payloadDedup]]'s. */
-  def payloadDedupDelta(store: DataFrame,
-                        deltaDocs: DataFrame): Dedup.AssignmentDelta[DataFrame] =
-    Dedup.exactDeltaKeyed(store,
-      withPayload(deltaDocs).select(col("doc_id"),
-        sniffKind(col("payload")).as("kind"), payloadFp.as("fp")),
-      carry = Seq("kind"))
-
-  /** The MEMBER store beside [[payloadKeeperStore]] (r17, VERDICT r16
-    * item #5) — one (doc_id, kind, fp) row per live media doc, the
-    * [[Dedup.memberStore]] discipline keyed on the payload digest
-    * with the sniffed kind carried so a takedown's re-elected
-    * assignment keeps per-modality accounting. Maintained alongside
-    * the keeper table: ingests append their delta's keyed rows,
-    * retractions anti-join the retracted ids out. */
-  def payloadMemberStore(docs: DataFrame): DataFrame =
-    withPayload(docs).select(col("doc_id"),
-      sniffKind(col("payload")).as("kind"), payloadFp.as("fp"))
+  def payloadDedupDelta(store: Dedup.ExactStore,
+                        deltaDocs: DataFrame): Dedup.AssignmentDelta[Dedup.ExactStore] =
+    Dedup.exactDeltaKeyed(store, payloadKeyed(deltaDocs))
 
   /** RETRACTION for incremental media dedup — [[Dedup.exactRetract]]
-    * wired through the shared fp-keyed seam (the same core
-    * [[payloadDedupDelta]] rides, so takedown semantics cannot drift
-    * between the text and media families): affected digest groups
-    * re-elect their min surviving doc, groups that only lost
-    * non-keepers keep their keeper, emptied digests drop from the
-    * store, and the surviving assignment equals [[payloadDedup]] over
-    * corpus-minus-retracted for min-elected stores (MultimodalSpec).
-    * Zero payload-byte rescans — the member store carries digests. */
-  def payloadRetract(keepers: DataFrame, members: DataFrame,
-                     retractIds: DataFrame): Dedup.ExactRetract =
-    Dedup.exactRetract(keepers, members, retractIds, carry = Seq("kind"))
+    * on the payload store, the same core [[payloadDedupDelta]] rides,
+    * so takedown semantics cannot drift between the text and media
+    * families: affected digest groups re-elect their min surviving
+    * doc, groups that only lost non-keepers keep their keeper, emptied
+    * digests drop from the store, and the surviving assignment equals
+    * [[payloadDedup]] over corpus-minus-retracted for min-elected
+    * stores (MultimodalSpec). Zero payload-byte rescans — the member
+    * table carries digests. */
+  def payloadRetract(store: Dedup.ExactStore, retractIds: DataFrame)
+      : Dedup.AssignmentDelta[Dedup.ExactStore] =
+    Dedup.exactRetract(store, retractIds)
 
   def payloadDedupOf(payloads: DataFrame): DataFrame =
     // delegate to the shared election (persist + map-side min + null-

@@ -506,7 +506,8 @@ object Similarity {
       joinKeys = Seq("label"))
   }
 
-  /** PQ defaults: 8 subspaces over the 64-dim embeddings × 16
+  /** PQ geometry: [[PqM]] = 8 subspaces over the 64-dim embeddings
+    * (a constant, so an index and its queries cannot disagree) × 16
     * centroids each → 8 4-bit codes (4 BYTES per vector, vs 256 bytes
     * of floats) — the memory-compact code representation that keeps a
     * 100 TB embedding corpus' index RAM-resident. Seeds are the
@@ -557,10 +558,10 @@ object Similarity {
   /** PQ-encode the corpus: scan → broadcast 1-row seeds → per-row
     * first-argmin codes projection. No Exchange between the scan and
     * the encode (same shape as IVF cell assignment, ScaleShapeSpec). */
-  private[graft] def pqCodes(e: DataFrame, seeds: DataFrame, m: Int): DataFrame =
+  private[graft] def pqCodes(e: DataFrame, seeds: DataFrame): DataFrame =
     e.crossJoin(broadcast(seeds))
       .select(col("vec_id"),
-        Exprs.pqEncode(unitOf(col("v")), col("seeds"), m).as("codes"))
+        Exprs.pqEncode(unitOf(col("v")), col("seeds"), PqM).as("codes"))
 
   /** ANN via product quantization with asymmetric distance
     * computation: the corpus is stored as M centroid codes per vector
@@ -573,11 +574,11 @@ object Similarity {
     * neighbor representation; AnnRecallSpec pins the recall floor.
     * Deterministic quantizer → the oracle replays the whole pipeline. */
   def knnPq(embeddings: DataFrame, probes: DataFrame, k: Int,
-            m: Int = PqM, kSub: Int = PqKSub, seedMod: Int = PqSeedMod,
+            kSub: Int = PqKSub, seedMod: Int = PqSeedMod,
             maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame = {
     val e = embeddings.select(col("vec_id"), col("embedding").as("v"))
     val seeds = pqSeeds(e, kSub, seedMod)
-    knnPqWith(pqCodes(e, seeds, m), seeds, probes, k, m, maxBroadcastProbes)
+    knnPqWith(pqCodes(e, seeds), seeds, probes, k, maxBroadcastProbes)
   }
 
   /** The persisted PQ index: the 4-byte/vector code table plus the
@@ -588,11 +589,11 @@ object Similarity {
 
   /** Build [[PqIndex]] state for a corpus: ONE scan (the encode is a
     * projection under the broadcast seed frame). */
-  def pqIndex(embeddings: DataFrame, m: Int = PqM, kSub: Int = PqKSub,
+  def pqIndex(embeddings: DataFrame, kSub: Int = PqKSub,
               seedMod: Int = PqSeedMod): PqIndex = {
     val e = embeddings.select(col("vec_id"), col("embedding").as("v"))
     val seeds = pqSeeds(e, kSub, seedMod)
-    PqIndex(pqCodes(e, seeds, m), seeds)
+    PqIndex(pqCodes(e, seeds), seeds)
   }
 
   /** Incremental (delta) PQ index maintenance — [[ivfDelta]]'s
@@ -603,10 +604,10 @@ object Similarity {
     * equals a fresh encode of the union under the same seeds
     * (ApproxAndIvfSpec) and the full replay with the old-side seed
     * predicate is the oracle. */
-  def pqDelta(index: PqIndex, delta: DataFrame, m: Int = PqM): PqIndex =
+  def pqDelta(index: PqIndex, delta: DataFrame): PqIndex =
     PqIndex(Dedup.evictAppend(index.codes, delta.select(col("vec_id")),
       pqCodes(delta.select(col("vec_id"), col("embedding").as("v")),
-        index.seeds, m), "vec_id"), index.seeds)
+        index.seeds), "vec_id"), index.seeds)
 
   /** RETRACTION for the PQ index (r17 — the serving-store takedown
     * family, closing VERDICT r16's "a retracted doc's vectors still
@@ -626,21 +627,20 @@ object Similarity {
   /** [[knnPq]] over a PREBUILT [[PqIndex]] — the serving shape (mirror
     * of [[knnLshIndexed]] / [[knnIvfIndexed]]): per query batch only
     * the probe LUTs are computed; the corpus-side encode is the
-    * persisted code table. `m` MUST match the index build. */
-  def knnPqIndexed(index: PqIndex, probes: DataFrame, k: Int, m: Int = PqM,
+    * persisted code table. */
+  def knnPqIndexed(index: PqIndex, probes: DataFrame, k: Int,
                    maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame =
-    knnPqWith(index.codes, index.seeds, probes, k, m, maxBroadcastProbes)
+    knnPqWith(index.codes, index.seeds, probes, k, maxBroadcastProbes)
 
   /** Shared probe-side tail of both PQ paths: LUT projection under the
     * broadcast seeds, ADC scoring against the code table, bounded
     * top-k. */
   private def knnPqWith(codes: DataFrame, seeds: DataFrame, probes: DataFrame,
-                        k: Int, m: Int,
-                        maxBroadcastProbes: Long): DataFrame = {
+                        k: Int, maxBroadcastProbes: Long): DataFrame = {
     val p0 = probes.select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
     val pl = p0.crossJoin(broadcast(seeds))
       .select(col("probe_id"),
-        Exprs.pqLut(unitOf(col("pv")), col("seeds"), m).as("lut"))
+        Exprs.pqLut(unitOf(col("pv")), col("seeds"), PqM).as("lut"))
     val pj = if (fitsBroadcast(p0, maxBroadcastProbes)) broadcast(pl) else pl
     val scored = pj.join(codes, col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
@@ -660,14 +660,14 @@ object Similarity {
     * pipeline. */
   def knnIvfPq(embeddings: DataFrame, probes: DataFrame, k: Int,
                centroidMod: Int = 37, nProbe: Int = 2,
-               m: Int = PqM, kSub: Int = PqKSub, seedMod: Int = PqSeedMod,
+               kSub: Int = PqKSub, seedMod: Int = PqSeedMod,
                maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame =
     // the one-shot path IS build + serve composed: the same indexed
     // projection ([[ivfPqIndexWith]]) and the same probe LUT/cell +
     // ADC tail ([[knnIvfPqIndexed]]) — one definition each, so the
     // build, served, and delta paths cannot de-synchronize
-    knnIvfPqIndexed(ivfPqIndex(embeddings, centroidMod, m, kSub, seedMod),
-      probes, k, nProbe, m, maxBroadcastProbes)
+    knnIvfPqIndexed(ivfPqIndex(embeddings, centroidMod, kSub, seedMod),
+      probes, k, nProbe, maxBroadcastProbes)
 
   /** The persisted composed IVF+PQ index: `indexed` = (vec_id, cell,
     * codes) rows — 4 bytes of PQ codes plus a cell id per vector, the
@@ -684,11 +684,10 @@ object Similarity {
     * per-row projections of the same scan (the [[knnIvfPq]] build
     * stage, persisted). */
   def ivfPqIndex(embeddings: DataFrame, centroidMod: Int = 37,
-                 m: Int = PqM, kSub: Int = PqKSub,
-                 seedMod: Int = PqSeedMod): IvfPqIndex = {
+                 kSub: Int = PqKSub, seedMod: Int = PqSeedMod): IvfPqIndex = {
     val e = embeddings.select(col("vec_id"), col("embedding").as("v"))
     ivfPqIndexWith(embeddings, seedCentroids(e, centroidMod),
-      pqSeeds(e, kSub, seedMod), m)
+      pqSeeds(e, kSub, seedMod))
   }
 
   /** Incremental (delta) maintenance for the COMPOSED index —
@@ -701,11 +700,10 @@ object Similarity {
     * [[ivfPqIndex]] build over the union with the same quantizers
     * (Round11OpsSpec), and the full knn_ivfpq replay with old-side
     * predicates on BOTH quantizers is the oracle. */
-  def ivfPqDelta(index: IvfPqIndex, delta: DataFrame,
-                 m: Int = PqM): IvfPqIndex =
+  def ivfPqDelta(index: IvfPqIndex, delta: DataFrame): IvfPqIndex =
     index.copy(indexed = Dedup.evictAppend(index.indexed,
       delta.select(col("vec_id")),
-      ivfPqIndexWith(delta, index.centroids, index.seeds, m).indexed,
+      ivfPqIndexWith(delta, index.centroids, index.seeds).indexed,
       "vec_id"))
 
   /** RETRACTION for the composed IVF+PQ index — [[pqRetract]] and
@@ -720,7 +718,7 @@ object Similarity {
     * form a grown index must equal (assignment and encoding under
     * fixed quantizers are pure per-row functions). */
   def ivfPqIndexWith(embeddings: DataFrame, centroids: DataFrame,
-                     seeds: DataFrame, m: Int = PqM): IvfPqIndex = {
+                     seeds: DataFrame): IvfPqIndex = {
     val e = embeddings.select(col("vec_id"), col("embedding").as("v"))
     val indexed = e
       .crossJoin(broadcast(codebook(centroids)))
@@ -728,7 +726,7 @@ object Similarity {
       .select(col("vec_id"),
         get(Exprs.nearestCells(col("v"), col("cids"), col("units"), 1), lit(0))
           .as("cell"),
-        Exprs.pqEncode(unitOf(col("v")), col("seeds"), m).as("codes"))
+        Exprs.pqEncode(unitOf(col("v")), col("seeds"), PqM).as("codes"))
     IvfPqIndex(indexed, centroids, seeds)
   }
 
@@ -736,16 +734,16 @@ object Similarity {
     * (mirror of [[knnIvfIndexed]]/[[knnPqIndexed]]): per query batch
     * only the probe LUTs + probe cells are computed against the two
     * broadcast quantizer frames; the corpus-side (cell, codes) table
-    * is the persisted index. `m` MUST match the index build. */
+    * is the persisted index. */
   def knnIvfPqIndexed(index: IvfPqIndex, probes: DataFrame, k: Int,
-                      nProbe: Int = 2, m: Int = PqM,
+                      nProbe: Int = 2,
                       maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame = {
     val p0 = probes.select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
     val probeCells = p0
       .crossJoin(broadcast(codebook(index.centroids)))
       .crossJoin(broadcast(index.seeds))
       .select(col("probe_id"),
-        Exprs.pqLut(unitOf(col("pv")), col("seeds"), m).as("lut"),
+        Exprs.pqLut(unitOf(col("pv")), col("seeds"), PqM).as("lut"),
         explode(Exprs.nearestCells(col("pv"), col("cids"), col("units"), nProbe))
           .as("pcell"))
     val pj = if (fitsBroadcast(p0, maxBroadcastProbes)) broadcast(probeCells)
@@ -983,10 +981,19 @@ object Similarity {
     * vector per partition map-side — never an all-pairs
     * materialization. Output: (vec_id, neighbor_id, cos_sim, rnk). */
   def knnGraph(embeddings: DataFrame, k: Int, nTables: Int = 4,
-               planesPerTable: Int = 6, dim: Int = 64): DataFrame = {
-    val e = embeddings.select(col("vec_id"), col("embedding").as("v"))
-    val b = lshBucketed(e, nTables, planesPerTable, dim)
-    rankTopK(bucketMates(b, b), k).withColumnRenamed("probe_id", "vec_id")
+               planesPerTable: Int = 6, dim: Int = 64): DataFrame =
+    knnGraphStore(embeddings, k, nTables, planesPerTable, dim).edges
+
+  /** A persisted kNN graph as a maintained store: [[knnGraph]]'s
+    * `edges`, the LSH bucket store they were ranked over, and `k`. */
+  final case class KnnGraphStore(edges: DataFrame,
+                                 lsh: Dedup.EmbeddingLshStore, k: Int)
+
+  def knnGraphStore(embeddings: DataFrame, k: Int, nTables: Int = 4,
+                    planesPerTable: Int = 6, dim: Int = 64): KnnGraphStore = {
+    val lsh = Dedup.embeddingLshStore(embeddings, nTables, planesPerTable, dim)
+    KnnGraphStore(rankTopK(bucketMates(lsh.bucketed, lsh.bucketed), k)
+      .withColumnRenamed("probe_id", "vec_id"), lsh, k)
   }
 
   /** RETRACTION for a PERSISTED kNN graph (the table
@@ -1003,30 +1010,29 @@ object Similarity {
     *    ≤ |batch|·max-indegree rows) re-rank against the surviving
     *    LSH bucket store, with BOTH join sides taken from stored
     *    bucket rows — zero re-bucketing, zero corpus scans.
-    * `store` is the maintained [[graft.operators.Dedup.EmbeddingLshStore]]
-    * the graph was built from (same geometry — [[knnGraph]]'s
-    * blocking is a per-row deterministic projection, so stored rows ≡
-    * a fresh [[lshBucketed]] over the survivors after the anti-join);
-    * callers shrink it alongside via
-    * [[graft.operators.Dedup.embeddingLshStoreRetract]]. Result ≡
-    * [[knnGraph]] over corpus-minus-retracted (spec-pinned), because
-    * the recomputed probes see exactly the rebuild's candidate sets
-    * and the untouched rows are unchanged by the argument above. */
-  def knnGraphRetract(graph: DataFrame, store: Dedup.EmbeddingLshStore,
-                      retractIds: DataFrame, k: Int): DataFrame = {
+    * The bucket store shrinks alongside ([[knnGraph]]'s blocking is a
+    * per-row deterministic projection, so stored rows ≡ a fresh
+    * [[lshBucketed]] over the survivors after the anti-join). Result ≡
+    * [[knnGraphStore]] over corpus-minus-retracted (spec-pinned),
+    * because the recomputed probes see exactly the rebuild's candidate
+    * sets and the untouched rows are unchanged by the argument above. */
+  def knnGraphRetract(store: KnnGraphStore,
+                      retractIds: DataFrame): KnnGraphStore = {
     val r = retractIds.select(col("vec_id")).distinct().localCheckpoint(true)
-    val survBucketed = Dedup.dropRetracted(store.bucketed, r, "vec_id")
-    val affected = graph
+    val survBucketed = Dedup.dropRetracted(store.lsh.bucketed, r, "vec_id")
+    val affected = store.edges
       .join(broadcast(r.select(col("vec_id").as("neighbor_id"))),
         Seq("neighbor_id"))
       .select(col("vec_id")).distinct()
       .join(broadcast(r), Seq("vec_id"), "left_anti")
-    val untouched = graph
+    val untouched = store.edges
       .join(broadcast(r), Seq("vec_id"), "left_anti")
       .join(affected, Seq("vec_id"), "left_anti")
     val scored = bucketMates(
       survBucketed.join(affected, Seq("vec_id"), "left_semi"), survBucketed)
-    untouched.union(rankTopK(scored, k).withColumnRenamed("probe_id", "vec_id"))
+    store.copy(edges = untouched.union(rankTopK(scored, store.k)
+        .withColumnRenamed("probe_id", "vec_id")),
+      lsh = store.lsh.copy(bucketed = survBucketed))
   }
 
   /** PageRank over the kNN GRAPH — graph centrality as a data-curation

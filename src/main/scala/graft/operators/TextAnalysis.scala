@@ -576,7 +576,7 @@ object TextAnalysis {
     * tier. The id tier is the honest price of exact erasure — the
     * serving N (document count) cannot be decremented from postings
     * alone because token-less docs have no postings rows, so the
-    * store carries one 8-byte row per live doc (the [[graft.operators.Dedup.memberStore]]
+    * store carries one 8-byte row per live doc (the [[graft.operators.Dedup.ExactStore]] members
     * discipline). At scale: postings bucketed on `w` (the query join
     * key), docIds on doc_id. A deployment CACHES the serving N (the
     * id tier's count) beside the store and refreshes it on

@@ -161,7 +161,7 @@ object CorpusRegistry {
       val store = Corpus.sourceOverlapStore(
         docs.filter(col("doc_id") % 3 =!= 0), OverlapN)
       Corpus.sourceOverlapDelta(store,
-        docs.filter(col("doc_id") % 3 === 0), OverlapN).census
+        docs.filter(col("doc_id") % 3 === 0)).census
     }),
     "cp_pii_scrub" -> ((s, d) =>
       Corpus.piiScrub(Tables.documents(s, d))),

@@ -161,7 +161,7 @@ object DedupRegistry {
       val c = org.apache.spark.sql.functions.col("doc_id")
       Dedup.paragraphDelta(
         Dedup.paragraphStore(docs.filter(c % DeltaMod =!= 0), SpanTokens),
-        docs.filter(c % DeltaMod === 0), SpanTokens).assignment
+        docs.filter(c % DeltaMod === 0)).assignment
     }),
     // boilerplate mining: the top most-repeated spans with occurrence
     // and distinct-doc counts — the "what to strip" report
@@ -243,7 +243,7 @@ object DedupRegistry {
         Dedup.shingleStore(old, 3, JaccardTau), delta, JaccardTau).pairs
       Dedup.keepBestDelta(
         Dedup.keepBestStore(old, Dedup.ngramJaccard(old, 3, JaccardTau), score),
-        delta, deltaPairs, score).assignment
+        delta, deltaPairs).assignment
     }),
     // the COMPOSED production order for the election: exact dedup
     // first (pair output is quadratic in byte-copy multiplicity),
@@ -312,7 +312,7 @@ object DedupRegistry {
       val docs = Tables.documents(s, d)
       val c = org.apache.spark.sql.functions.col("doc_id")
       Dedup.exactDelta(
-        Dedup.keeperStore(docs.filter(c % DeltaMod =!= 0)),
+        Dedup.exactStore(docs.filter(c % DeltaMod =!= 0)),
         docs.filter(c % DeltaMod === 0)).assignment
     }),
     // Incremental MinHash: every verified pair touching the delta,
@@ -374,12 +374,12 @@ object DedupRegistry {
       }
       Dedup.semanticKeepersDelta(
         Dedup.SemanticStore(
-          // read-back names the build's geometry: the store above was
-          // built with the Dedup family's 6×4×64 defaults
+          // read-back names the build's parameters: the store above was
+          // built with the Dedup family's 6×4×64 defaults at CosineTau
           Dedup.EmbeddingLshStore(StoredTable.read(s, paths.head),
             nTables = 6, planesPerTable = 4, dim = 64),
-          StoredTable.read(s, paths(1))),
-        emb.filter(c % DeltaMod === 0), CosineTau).assignment
+          StoredTable.read(s, paths(1)), CosineTau),
+        emb.filter(c % DeltaMod === 0)).assignment
     }),
     "dd_minhash_dedup" -> ((s, d) => {
       val docs = Tables.documents(s, d)
@@ -423,15 +423,17 @@ object DedupRegistry {
       val docs = Tables.documents(s, d)
       val c = org.apache.spark.sql.functions.col("doc_id")
       val (paths, _) = ServingIndexes.once("exactstore", d) {
-        (Seq(Dedup.keeperStore(docs), Dedup.memberStore(docs)), 0L)
+        val st = Dedup.exactStore(docs)
+        (Seq(st.keepers, st.members), 0L)
       }
-      val r = Dedup.exactRetract(
-        StoredTable.read(s, paths.head), StoredTable.read(s, paths(1)),
+      val r = Dedup.exactRetract(Dedup.ExactStore(
+          StoredTable.read(s, paths.head), StoredTable.read(s, paths(1)), Nil),
         docs.filter(c % RetractMod === RetractRem).select("doc_id"))
       val pub = graft.sources.VersionedStore.write(
         exactRetractStoreDir.getOrElseUpdate(d,
           graft.sources.Sinks.TempDirs.create("graft_exact_rstore")),
-        Seq("keepers" -> r.updatedKeepers, "members" -> r.updatedMembers))
+        Seq("keepers" -> r.updatedStore.keepers,
+          "members" -> r.updatedStore.members))
       val k1 = StoredTable.read(s, pub.head)
       val m1 = StoredTable.read(s, pub(1))
       m1.join(k1, Seq("fp"))

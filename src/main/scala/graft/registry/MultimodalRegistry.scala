@@ -48,7 +48,7 @@ object MultimodalRegistry {
       val docs = Tables.documents(s, d)
       val c = col("doc_id")
       Multimodal.payloadDedupDelta(
-        Multimodal.payloadKeeperStore(
+        Multimodal.payloadStore(
           docs.filter(c % DedupRegistry.DeltaMod =!= 0)),
         docs.filter(c % DedupRegistry.DeltaMod === 0)).assignment
     }),

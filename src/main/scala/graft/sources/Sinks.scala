@@ -118,7 +118,7 @@ object Sinks {
     * (see ScaleShapeSpec): the managed-table form of pre-partitioning
     * a fact table on its join key. Also the persistence layout for the
     * incremental-dedup stores: the exact-dedup keeper store
-    * ([[graft.operators.Dedup.keeperStore]]) bucketed on fp, and
+    * ([[graft.operators.Dedup.ExactStore]] keepers) bucketed on fp, and
     * [[graft.operators.Dedup.MinHashStore]]'s banded keys on bkey /
     * shingle rows on doc_id — each ingest's delta joins then read the
     * store pre-partitioned on its join key. */

@@ -1079,13 +1079,14 @@ object Streams {
     * — sticky-store semantics; mint a new id per content version or
     * rebuild). */
   private[streaming] def semanticMaintainFromStream(stream: DataFrame,
-      store0: graft.operators.Dedup.SemanticStore,
-      tau: Double): graft.operators.Dedup.SemanticStore = {
+      store0: graft.operators.Dedup.SemanticStore)
+      : graft.operators.Dedup.SemanticStore = {
     var store = store0
     val q = stream.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        store = semanticBatchStep(store, batch.toDF(), tau)
-        ()
+        graft.operators.CacheTracker.scoped {
+          store = semanticBatchStep(store, batch.toDF())
+        }
       }
       .trigger(Trigger.AvailableNow())
       .start()
@@ -1095,18 +1096,29 @@ object Streams {
 
   /** One micro-batch of semantic-store maintenance: the exact
     * incremental pass, result frames eagerly checkpointed so the
-    * cross-batch state's lineage stays flat. Factored out so the
-    * multi-batch spec drives the REAL step across genuine
-    * processAllAvailable micro-batches. */
+    * cross-batch state's lineage stays flat (and outlives the caller's
+    * cache bracket). Factored out so the multi-batch spec drives the
+    * REAL step across genuine processAllAvailable micro-batches. */
   private[graft] def semanticBatchStep(
-      store: graft.operators.Dedup.SemanticStore, batch: DataFrame,
-      tau: Double): graft.operators.Dedup.SemanticStore = {
-    val u = graft.operators.Dedup.semanticKeepersDelta(store,
-      batch.select(col("vec_id"), col("embedding")), tau).updatedStore
-    graft.operators.Dedup.SemanticStore(
-      u.lsh.copy(bucketed = u.lsh.bucketed.localCheckpoint(true)),
-      u.assignment.localCheckpoint(true))
-  }
+      store: graft.operators.Dedup.SemanticStore,
+      batch: DataFrame): graft.operators.Dedup.SemanticStore =
+    checkpointed(graft.operators.Dedup.semanticKeepersDelta(store,
+      batch.select(col("vec_id"), col("embedding"))).updatedStore)
+
+  /** A zero-row semantic store with the pipeline's schemas, built under
+    * a cache bracket and checkpointed, so the bootstrap leaves no cache
+    * entry behind. */
+  private def emptySemanticStore(emb: DataFrame, tau: Double)
+      : graft.operators.Dedup.SemanticStore =
+    graft.operators.CacheTracker.scoped(checkpointed(
+      graft.operators.Dedup.semanticStore(emb.limit(0), tau)))
+
+  /** `store` with both tables eagerly checkpointed. */
+  private def checkpointed(store: graft.operators.Dedup.SemanticStore)
+      : graft.operators.Dedup.SemanticStore =
+    store.copy(
+      lsh = store.lsh.copy(bucketed = store.lsh.bucketed.localCheckpoint(true)),
+      assignment = store.assignment.localCheckpoint(true))
 
   /** Streaming SEMANTIC-dedup maintenance + serving ≡ batch
     * [[graft.operators.Dedup.semanticKeepers]] — the D-family's live
@@ -1163,11 +1175,10 @@ object Streams {
           graft.operators.Dedup.EmbeddingLshStore(
             StoredTable.read(spark, lsh), nTables = 6, planesPerTable = 4,
             dim = 64),
-          StoredTable.read(spark, asg))
-      case None => graft.operators.Dedup.semanticStore(
-        Tables.embeddings(spark, dir).limit(0), tau)
+          StoredTable.read(spark, asg), tau)
+      case None => emptySemanticStore(Tables.embeddings(spark, dir), tau)
     }
-    val store = semanticMaintainFromStream(stream, store0, tau)
+    val store = semanticMaintainFromStream(stream, store0)
     // ONE atomic publish of both tables (r18: the r13 versioned-dir +
     // pointer-promote contract now lives in the shared
     // graft.sources.VersionedStore seam — identical semantics: fresh
@@ -1230,7 +1241,7 @@ object Streams {
     // atomics make the ingest→takedown handoff's happens-before
     // explicit and guaranteed.
     val store = new java.util.concurrent.atomic.AtomicReference(
-      graft.operators.Dedup.semanticStore(emb.limit(0), tau))
+      emptySemanticStore(emb, tau))
     // the corpus table a deployment maintains beside the store
     // (semanticRetract's contract accepts pre- or post-takedown rows,
     // so appending ingests without pruning takedowns is legal)
@@ -1241,21 +1252,18 @@ object Streams {
       .MemoryStream[Long]
     val qI = ingest.toDF().toDF("vec_id", "embedding").writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        corpus.set(corpus.get.union(batch.toDF()).localCheckpoint(true))
-        store.set(semanticBatchStep(store.get, batch.toDF(), tau))
-        ()
+        graft.operators.CacheTracker.scoped {
+          corpus.set(corpus.get.union(batch.toDF()).localCheckpoint(true))
+          store.set(semanticBatchStep(store.get, batch.toDF()))
+        }
       }
       .start()
     val qT = takedown.toDF().toDF("vec_id").writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val r = graft.operators.Dedup.semanticRetract(store.get,
-          batch.toDF(), corpus.get, tau)
-        store.set(graft.operators.Dedup.SemanticStore(
-          r.updatedStore.lsh.copy(
-            bucketed = r.updatedStore.lsh.bucketed.localCheckpoint(true)),
-          r.updatedStore.assignment.select("vec_id", "cluster_id")
-            .localCheckpoint(true)))
-        ()
+        graft.operators.CacheTracker.scoped {
+          store.set(checkpointed(graft.operators.Dedup.semanticRetract(
+            store.get, batch.toDF(), corpus.get).updatedStore))
+        }
       }
       .start()
     try {

@@ -166,8 +166,8 @@ class ApproxAndIvfSpec extends AnyFunSuite {
       // union encode under the SAME (old-side) seeds
       val fresh = Similarity.PqIndex(
         Similarity.pqCodes(
-          emb.select(col("vec_id"), col("embedding").as("v")), idx.seeds,
-          Similarity.PqM), idx.seeds)
+          emb.select(col("vec_id"), col("embedding").as("v")), idx.seeds),
+        idx.seeds)
       assert(codes(grown) == codes(fresh) && codes(grown).nonEmpty)
       assert(codes(Similarity.pqDelta(grown, delta)) == codes(grown))
       val probes = Similarity.probeEvery(emb, 50)

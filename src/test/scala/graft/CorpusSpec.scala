@@ -351,10 +351,10 @@ class CorpusSpec extends AnyFunSuite {
       df.as[(String, String, Long, Long, Long, Double)].collect().toSet
     val full = rows(Corpus.sourceOverlap(docs, 3))
     val store = Corpus.sourceOverlapStore(old, 3)
-    val d1 = Corpus.sourceOverlapDelta(store, delta, 3)
+    val d1 = Corpus.sourceOverlapDelta(store, delta)
     assert(rows(d1.census) == full)
     // idempotent: replaying the same delta changes nothing
-    val d2 = Corpus.sourceOverlapDelta(d1.updatedStore, delta, 3)
+    val d2 = Corpus.sourceOverlapDelta(d1.updatedStore, delta)
     assert(rows(d2.census) == full)
     assert(d2.updatedStore.rows.count() == d1.updatedStore.rows.count())
   }

@@ -67,12 +67,13 @@ class DeclaredSchemaSpec extends AnyFunSuite {
     val best = operators.Dedup.semanticBestStore(emb, registry.DedupRegistry.CosineTau,
       registry.SimilarityRegistry.K)
     val sem = operators.Dedup.semanticStore(emb, registry.DedupRegistry.CosineTau)
+    val exact = operators.Dedup.exactStore(docs)
     val dir = Files.createTempDirectory("graft_recorded").toString
     val paths = VersionedStore.write(dir, Seq(
       "bits" -> best.bits, "graph" -> best.graph, "assignment" -> best.assignment,
       "pairs" -> best.pairs, "sem_assignment" -> sem.assignment,
-      "lsh" -> sem.lsh.bucketed, "keepers" -> operators.Dedup.keeperStore(docs),
-      "members" -> operators.Dedup.memberStore(docs)))
+      "lsh" -> sem.lsh.bucketed, "keepers" -> exact.keepers,
+      "members" -> exact.members))
     for (p <- paths)
       assert(StoredTable.schema(spark, p) == spark.read.parquet(p).schema, p)
   }

@@ -41,33 +41,33 @@ class DeltaDedupSpec extends AnyFunSuite {
     val full = docsDF(corpus)
     val old = full.filter($"doc_id" < 100)
     val delta = full.filter($"doc_id" >= 100)
-    val r = Dedup.exactDelta(Dedup.keeperStore(old), delta)
+    val r = Dedup.exactDelta(Dedup.exactStore(old), delta)
     assert(asn(r.assignment) == asn(Dedup.exact(full).filter($"doc_id" >= 100)))
-    assert(stor(r.updatedStore) == stor(Dedup.keeperStore(full)))
+    assert(stor(r.updatedStore.keepers) == stor(Dedup.exactStore(full).keepers))
   }
 
   test("two sequential ingests compose to the full rescan") {
     val full = docsDF(corpus)
     val old = full.filter($"doc_id" < 100)
-    val r1 = Dedup.exactDelta(Dedup.keeperStore(old),
+    val r1 = Dedup.exactDelta(Dedup.exactStore(old),
       full.filter($"doc_id" >= 100 && $"doc_id" <= 103))
     val r2 = Dedup.exactDelta(r1.updatedStore, full.filter($"doc_id" >= 104))
     assert(asn(r1.assignment) ++ asn(r2.assignment) ==
       asn(Dedup.exact(full).filter($"doc_id" >= 100)))
-    assert(stor(r2.updatedStore) == stor(Dedup.keeperStore(full)))
+    assert(stor(r2.updatedStore.keepers) == stor(Dedup.exactStore(full).keepers))
   }
 
   test("sticky keepers: a smaller delta id does not re-elect a stored keeper") {
     val r = Dedup.exactDelta(
-      Dedup.keeperStore(docsDF(Seq(10L -> "shared text"))),
+      Dedup.exactStore(docsDF(Seq(10L -> "shared text"))),
       docsDF(Seq(5L -> "shared text", 7L -> "brand new")))
     assert(asn(r.assignment) == Set((5L, 10L, 1), (7L, 7L, 0)))
-    assert(stor(r.updatedStore).map(_._2) == Set(10L, 7L))
+    assert(stor(r.updatedStore.keepers).map(_._2) == Set(10L, 7L))
   }
 
   test("null text dedups against the stored null fingerprint") {
     val r = Dedup.exactDelta(
-      Dedup.keeperStore(docsDF(Seq(1L -> (null: String), 2L -> "x"))),
+      Dedup.exactStore(docsDF(Seq(1L -> (null: String), 2L -> "x"))),
       docsDF(Seq(101L -> (null: String))))
     assert(asn(r.assignment) == Set((101L, 1L, 1)))
   }
@@ -260,7 +260,7 @@ class DeltaDedupSpec extends AnyFunSuite {
       oldPairs.union(deltaPairs), col("score"))
       .as[(Long, Long, Int)].collect().toSet
     val store = Dedup.keepBestStore(old, oldPairs, col("score"))
-    val r = Dedup.keepBestDelta(store, delta, deltaPairs, col("score"))
+    val r = Dedup.keepBestDelta(store, delta, deltaPairs)
     assert(asn(r.assignment) == fullRes)
     // the merged cluster {1,2,3,4,101} elected the delta doc
     val m = fullRes.map(t => t._1 -> t._2).toMap
@@ -274,13 +274,11 @@ class DeltaDedupSpec extends AnyFunSuite {
     val full2 = Dedup.keepBest(docs.union(delta2),
       oldPairs.union(deltaPairs).union(delta2Pairs), col("score"))
       .as[(Long, Long, Int)].collect().toSet
-    val r2 = Dedup.keepBestDelta(r.updatedStore, delta2, delta2Pairs,
-      col("score"))
+    val r2 = Dedup.keepBestDelta(r.updatedStore, delta2, delta2Pairs)
     assert(asn(r2.assignment) == full2)
     // re-ingesting the SAME delta replaces, never duplicates: same
     // assignment, same store row counts
-    val r3 = Dedup.keepBestDelta(r.updatedStore, delta, deltaPairs,
-      col("score"))
+    val r3 = Dedup.keepBestDelta(r.updatedStore, delta, deltaPairs)
     assert(asn(r3.assignment) == fullRes)
     assert(r3.updatedStore.scores.count() == r.updatedStore.scores.count())
     assert(r3.updatedStore.pairs.count() == r.updatedStore.pairs.count())
@@ -292,8 +290,7 @@ class DeltaDedupSpec extends AnyFunSuite {
     val fullChanged = Dedup.keepBest(docs,
       oldPairs.union(changedPairs), col("score"))
       .as[(Long, Long, Int)].collect().toSet
-    val r4 = Dedup.keepBestDelta(r.updatedStore, delta, changedPairs,
-      col("score"))
+    val r4 = Dedup.keepBestDelta(r.updatedStore, delta, changedPairs)
     assert(asn(r4.assignment) == fullChanged)
     val m4 = fullChanged.map(t => t._1 -> t._2).toMap
     assert(m4(1L) == 2L && m4(2L) == 2L && m4(3L) == 3L && m4(4L) == 3L,
@@ -318,7 +315,7 @@ class DeltaDedupSpec extends AnyFunSuite {
     val old = docs.filter($"doc_id" >= 5L && $"doc_id" < 100L)
     val delta = docs.filter($"doc_id" < 5L || $"doc_id" >= 100L)
     val store = Dedup.paragraphStore(old, span)
-    val r = Dedup.paragraphDelta(store, delta, span)
+    val r = Dedup.paragraphDelta(store, delta)
     val asn = r.assignment.as[(Long, Long, Long, Long, Int)].collect()
       .map(x => (x._1, x._2) -> ((x._3, x._4), x._5)).toMap
     // sticky: both lic occurrences point at the STORED keeper (5, 0),
@@ -329,17 +326,18 @@ class DeltaDedupSpec extends AnyFunSuite {
     assert(asn((102L, 0L)) == (((102L, 0L), 0)))
     assert(asn((103L, 0L)) == (((102L, 0L), 1)))
     // the updated store carries exactly one row per distinct paragraph
-    val st = r.updatedStore.as[(String, Long, Long)].collect()
+    val st = r.updatedStore.keepers.as[(String, Long, Long)].collect()
     assert(st.map(_._1).distinct.length == st.length && st.length == 3)
     // re-ingest idempotency: same assignment, store unchanged
-    val r2 = Dedup.paragraphDelta(r.updatedStore, delta, span)
+    val r2 = Dedup.paragraphDelta(r.updatedStore, delta)
     assert(r2.assignment.as[(Long, Long, Long, Long, Int)].collect()
       .map(x => (x._1, x._2) -> ((x._3, x._4), x._5)).toMap == asn)
-    assert(r2.updatedStore.as[(String, Long, Long)].collect().toSet == st.toSet)
+    assert(r2.updatedStore.keepers.as[(String, Long, Long)].collect().toSet ==
+      st.toSet)
     // two sequential ingests compose to the one-shot pass
-    val rA = Dedup.paragraphDelta(store, delta.filter($"doc_id" <= 101L), span)
+    val rA = Dedup.paragraphDelta(store, delta.filter($"doc_id" <= 101L))
     val rB = Dedup.paragraphDelta(rA.updatedStore,
-      delta.filter($"doc_id" > 101L), span)
+      delta.filter($"doc_id" > 101L))
     val seq = (rA.assignment.as[(Long, Long, Long, Long, Int)].collect() ++
       rB.assignment.as[(Long, Long, Long, Long, Int)].collect())
       .map(x => (x._1, x._2) -> ((x._3, x._4), x._5)).toMap
@@ -412,19 +410,19 @@ class DeltaDedupSpec extends AnyFunSuite {
     val old = emb.filter(col("vec_id") % 3 =!= 0)
     val delta = emb.filter(col("vec_id") % 3 === 0)
     val full = asn(Dedup.semanticKeepers(emb, tau))
-    val r = Dedup.semanticKeepersDelta(Dedup.semanticStore(old, tau), delta, tau)
+    val r = Dedup.semanticKeepersDelta(Dedup.semanticStore(old, tau), delta)
     assert(asn(r.assignment) == full)
     assert(full.exists(_._3 == 1)) // the fixture has real dups
 
     // two sequential ingests land on the same final assignment
     val d1 = delta.filter(col("vec_id") % 2 === 0)
     val d2 = delta.filter(col("vec_id") % 2 =!= 0)
-    val r1 = Dedup.semanticKeepersDelta(Dedup.semanticStore(old, tau), d1, tau)
-    val r2 = Dedup.semanticKeepersDelta(r1.updatedStore, d2, tau)
+    val r1 = Dedup.semanticKeepersDelta(Dedup.semanticStore(old, tau), d1)
+    val r2 = Dedup.semanticKeepersDelta(r1.updatedStore, d2)
     assert(asn(r2.assignment) == full)
 
     // re-ingest idempotence: replaying the same delta changes nothing
-    val r3 = Dedup.semanticKeepersDelta(r.updatedStore, delta, tau)
+    val r3 = Dedup.semanticKeepersDelta(r.updatedStore, delta)
     assert(asn(r3.assignment) == full)
   }
 
@@ -449,7 +447,7 @@ class DeltaDedupSpec extends AnyFunSuite {
     // before the bridge: two separate stored clusters
     assert(stor2(store.assignment) ==
       Set(10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L))
-    val r = Dedup.semanticKeepersDelta(store, delta, tau)
+    val r = Dedup.semanticKeepersDelta(store, delta)
     assert(asn(r.assignment) == full)
   }
 
@@ -530,7 +528,7 @@ class DeltaDedupSpec extends AnyFunSuite {
       nTables = 8, planesPerTable = 4))
     val r = Dedup.semanticKeepersBestDelta(
       Dedup.semanticBestStore(old, tau, k, nTables = 8, planesPerTable = 4),
-      delta, tau, k, nTables = 8, planesPerTable = 4)
+      delta, tau, k)
     assert(asn(r.assignment) == full)
   }
 
@@ -552,7 +550,7 @@ class DeltaDedupSpec extends AnyFunSuite {
     val store1 = Dedup.semanticStore(Seq((10L, vOld)).toDF("vec_id", "embedding"), tau)
     // batch 2: id 10 re-ingested with vNew (a value UPDATE)
     val r2 = Dedup.semanticKeepersDelta(store1,
-      Seq((10L, vNew)).toDF("vec_id", "embedding"), tau)
+      Seq((10L, vNew)).toDF("vec_id", "embedding"))
     // the store's LSH tier must carry id 10 under vNew only — no
     // surviving vOld row (the stale route the advice names)
     val storedVals = r2.updatedStore.lsh.bucketed
@@ -563,7 +561,7 @@ class DeltaDedupSpec extends AnyFunSuite {
     // batch 3: a NEW id carries vOld; it must NOT inherit id 10's
     // cluster (their contents are orthogonal) — it forms its own
     val r3 = Dedup.semanticKeepersDelta(r2.updatedStore,
-      Seq((20L, vOld)).toDF("vec_id", "embedding"), tau)
+      Seq((20L, vOld)).toDF("vec_id", "embedding"))
     assert(asn(r3.assignment) == Set((10L, 10L, 0), (20L, 20L, 0)))
   }
 
@@ -574,7 +572,7 @@ class DeltaDedupSpec extends AnyFunSuite {
     val old = Seq((10L, a), (11L, a)).toDF("vec_id", "embedding")
     val store = Dedup.semanticStore(old, 0.35)
     val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
-    val r = Dedup.semanticKeepersDelta(store, empty, 0.35)
+    val r = Dedup.semanticKeepersDelta(store, empty)
     assert(asn(r.assignment) == Set((10L, 10L, 0), (11L, 10L, 1)))
     assert(stor2(r.updatedStore.assignment) == Set(10L -> 10L, 11L -> 10L))
   }
@@ -592,15 +590,14 @@ class DeltaDedupSpec extends AnyFunSuite {
       2L -> "group b", 4L -> "group b",
       6L -> "group c",
       7L -> "group d"))
-    val r = Dedup.exactRetract(
-      Dedup.keeperStore(full), Dedup.memberStore(full),
+    val r = Dedup.exactRetract(Dedup.exactStore(full),
       Seq(1L, 4L, 6L).toDF("doc_id"))
     assert(asn(r.assignment) == Set(
       (3L, 3L, 0), (5L, 3L, 1), (2L, 2L, 0), (7L, 7L, 0)))
     // updated stores equal the fresh build over the survivors
     val surv = full.filter(!$"doc_id".isin(1L, 4L, 6L))
-    assert(stor(r.updatedKeepers) == stor(Dedup.keeperStore(surv)))
-    assert(r.updatedMembers.select("doc_id").as[Long].collect().toSet ==
+    assert(stor(r.updatedStore.keepers) == stor(Dedup.exactStore(surv).keepers))
+    assert(r.updatedStore.members.select("doc_id").as[Long].collect().toSet ==
       Set(2L, 3L, 5L, 7L))
     // and the assignment IS the full recompute over survivors
     assert(asn(r.assignment) == asn(Dedup.exact(surv)))
@@ -612,15 +609,13 @@ class DeltaDedupSpec extends AnyFunSuite {
     val delta = full.filter($"doc_id" >= 100)
     val retract = Seq(1L, 102L).toDF("doc_id") // an old keeper + a delta dup
     // ingest THEN retract
-    val ing = Dedup.exactDelta(Dedup.keeperStore(old), delta)
-    val members = Dedup.memberStore(full) // old members ∪ delta's keyed rows
-    val r1 = Dedup.exactRetract(ing.updatedStore, members, retract)
+    val ing = Dedup.exactDelta(Dedup.exactStore(old), delta)
+    val r1 = Dedup.exactRetract(ing.updatedStore, retract)
     val survAll = full.filter(!$"doc_id".isin(1L, 102L))
     assert(asn(r1.assignment) == asn(Dedup.exact(survAll)))
     // retract THEN ingest: the shrunk stores feed the next ingest
-    val r2 = Dedup.exactRetract(Dedup.keeperStore(old),
-      Dedup.memberStore(old), Seq(1L).toDF("doc_id"))
-    val ing2 = Dedup.exactDelta(r2.updatedKeepers, delta)
+    val r2 = Dedup.exactRetract(Dedup.exactStore(old), Seq(1L).toDF("doc_id"))
+    val ing2 = Dedup.exactDelta(r2.updatedStore, delta)
     val expect = Dedup.exact(full.filter($"doc_id" =!= 1L))
     assert(asn(ing2.assignment) == asn(expect.filter($"doc_id" >= 100)))
     assert(asn(r2.assignment) == asn(expect.filter($"doc_id" < 100)))
@@ -632,14 +627,12 @@ class DeltaDedupSpec extends AnyFunSuite {
     // an unrelated doc must not re-elect 5, same contract as the
     // ingest side
     val st = Dedup.exactDelta(
-      Dedup.keeperStore(docsDF(Seq(10L -> "shared text", 9L -> "other"))),
+      Dedup.exactStore(docsDF(Seq(10L -> "shared text", 9L -> "other"))),
       docsDF(Seq(5L -> "shared text"))).updatedStore
-    val members = Dedup.memberStore(docsDF(Seq(
-      10L -> "shared text", 9L -> "other", 5L -> "shared text")))
-    val r = Dedup.exactRetract(st, members, Seq(9L).toDF("doc_id"))
+    val r = Dedup.exactRetract(st, Seq(9L).toDF("doc_id"))
     assert(asn(r.assignment) == Set((10L, 10L, 0), (5L, 10L, 1)))
     // …and retracting the sticky keeper re-elects the true survivor min
-    val r2 = Dedup.exactRetract(st, members, Seq(10L).toDF("doc_id"))
+    val r2 = Dedup.exactRetract(st, Seq(10L).toDF("doc_id"))
     assert(asn(r2.assignment) == Set((9L, 9L, 0), (5L, 5L, 0)))
   }
 
@@ -688,22 +681,15 @@ class DeltaDedupSpec extends AnyFunSuite {
     val noop = Dedup.semanticBestRetract(store,
       Seq(999999L).toDF("vec_id"), tau, k)
     assert(asn(noop.assignment) == asn(Dedup.semanticKeepersBest(emb, tau, k)))
-    // parameter / geometry / format drift is a contract error
+    // parameter / format drift is a contract error
     assert(intercept[IllegalArgumentException] {
       Dedup.semanticBestRetract(store, rIds, tau = 0.5, k)
     }.getMessage.contains("build parameters"))
-    assert(intercept[IllegalArgumentException] {
-      Dedup.semanticBestRetract(store, rIds, tau, k, nTables = 8)
-    }.getMessage.contains("geometry"))
     assert(intercept[IllegalArgumentException] {
       Dedup.semanticBestRetract(
         store.copy(graph = store.graph.select("src", "dst")), rIds, tau, k)
     }.getMessage.contains("cos_sim"))
     // …and the ingest side now refuses them too (ADVICE r15 medium)
-    assert(intercept[IllegalArgumentException] {
-      Dedup.semanticKeepersBestDelta(store, emb.limit(1), tau, k,
-        nTables = 8)
-    }.getMessage.contains("geometry"))
     assert(intercept[IllegalArgumentException] {
       Dedup.semanticKeepersBestDelta(
         store.copy(graph = store.graph.select("src", "dst")),
@@ -878,7 +864,7 @@ class DeltaDedupSpec extends AnyFunSuite {
     val tau = 0.35
     val rIds = emb.filter(col("vec_id") % 5 === 0).select("vec_id")
     val surv = emb.filter(col("vec_id") % 5 =!= 0)
-    val r = Dedup.semanticRetract(Dedup.semanticStore(emb, tau), rIds, emb, tau)
+    val r = Dedup.semanticRetract(Dedup.semanticStore(emb, tau), rIds, emb)
     val fresh = Dedup.semanticStore(surv, tau)
     assert(stor2(r.updatedStore.assignment) == stor2(fresh.assignment))
     assert(asn(r.assignment) ==
@@ -905,7 +891,7 @@ class DeltaDedupSpec extends AnyFunSuite {
     // one merged component labeled by the bridge (the min id)
     assert(stor2(store.assignment) == Set(5L -> 5L, 10L -> 5L, 11L -> 5L,
       20L -> 5L, 21L -> 5L))
-    val r = Dedup.semanticRetract(store, Seq(5L).toDF("vec_id"), all, tau)
+    val r = Dedup.semanticRetract(store, Seq(5L).toDF("vec_id"), all)
     // the takedown splits the component back into A and B
     assert(asn(r.assignment) == Set((10L, 10L, 0), (11L, 10L, 1),
       (20L, 20L, 0), (21L, 20L, 1)))
@@ -922,9 +908,8 @@ class DeltaDedupSpec extends AnyFunSuite {
     // against the re-elected reps, not the retracted ones
     val reAdmit = emb.filter(col("vec_id") % 5 === 0)
       .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
-    val r1 = Dedup.semanticRetract(Dedup.semanticStore(emb, tau), rIds,
-      emb, tau)
-    val g1 = Dedup.semanticKeepersDelta(r1.updatedStore, reAdmit, tau)
+    val r1 = Dedup.semanticRetract(Dedup.semanticStore(emb, tau), rIds, emb)
+    val g1 = Dedup.semanticKeepersDelta(r1.updatedStore, reAdmit)
     assert(stor2(g1.updatedStore.assignment) ==
       stor2(Dedup.semanticStore(
         surv.select(col("vec_id"), col("embedding")).union(reAdmit),
@@ -932,8 +917,8 @@ class DeltaDedupSpec extends AnyFunSuite {
     // ingest → retract: a store grown by a delta takes the takedown
     val old = emb.filter(col("vec_id") % 3 =!= 0)
     val grown = Dedup.semanticKeepersDelta(Dedup.semanticStore(old, tau),
-      emb.filter(col("vec_id") % 3 === 0), tau).updatedStore
-    val r2 = Dedup.semanticRetract(grown, rIds, emb, tau)
+      emb.filter(col("vec_id") % 3 === 0)).updatedStore
+    val r2 = Dedup.semanticRetract(grown, rIds, emb)
     assert(stor2(r2.updatedStore.assignment) ==
       stor2(Dedup.semanticStore(surv, tau).assignment))
   }
@@ -962,7 +947,7 @@ class DeltaDedupSpec extends AnyFunSuite {
       assert(Dedup.exact(docsDF(mine)).count() == mine.size)
       assert(Dedup.minhashLsh(docsDF(mine)).count() >= 1)
       val r = Dedup.exactDelta(
-        Dedup.keeperStore(docsDF(mine.filter(_._1 < 100))),
+        Dedup.exactStore(docsDF(mine.filter(_._1 < 100))),
         docsDF(mine.filter(_._1 >= 100)))
       assert(r.assignment.count() == 2)
       // persists were live inside

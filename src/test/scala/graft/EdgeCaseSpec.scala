@@ -83,9 +83,10 @@ class EdgeCaseSpec extends AnyFunSuite {
   test("delta dedup over an empty delta: no assignments, stores unchanged") {
     val someDocs = Seq((1L, "delta edge text one", "s"),
       (2L, "delta edge text one", "s")).toDF("doc_id", "text", "source")
-    val r = Dedup.exactDelta(Dedup.keeperStore(someDocs), empty)
+    val r = Dedup.exactDelta(Dedup.exactStore(someDocs), empty)
     assert(r.assignment.count() == 0)
-    assert(r.updatedStore.count() == Dedup.keeperStore(someDocs).count())
+    assert(r.updatedStore.keepers.count() ==
+      Dedup.exactStore(someDocs).keepers.count())
     val mh = Dedup.minhashLshDelta(Dedup.minhashStore(someDocs), empty)
     assert(mh.pairs.count() == 0)
     assert(mh.updatedStore.banded.count() == 32) // both docs' 16 band keys survive
@@ -214,7 +215,7 @@ class EdgeCaseSpec extends AnyFunSuite {
     // assignment sticky, stores unchanged
     val store = Dedup.keepBestStore(docs, noPairs, col("score"))
     val emptyDelta = Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val r = Dedup.keepBestDelta(store, emptyDelta, noPairs, col("score"))
+    val r = Dedup.keepBestDelta(store, emptyDelta, noPairs)
     assert(r.assignment.as[(Long, Long, Int)].collect().toSet == kb)
     // ngramJaccardDelta with an empty delta: no pairs, store unchanged
     val jSt = Dedup.shingleStore(
@@ -246,7 +247,7 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(graft.operators.Corpus.sourceOverlap(someDocs, 4).count() == 0)
     // overlap delta FROM an empty store == the full census of the delta
     val boot = graft.operators.Corpus.sourceOverlapDelta(
-      graft.operators.Corpus.sourceOverlapStore(noDocs, 4), someDocs, 4)
+      graft.operators.Corpus.sourceOverlapStore(noDocs, 4), someDocs)
     assert(boot.census.count() == 0 &&
       boot.updatedStore.rows.count() == 2) // ABGD, BGDE under srcA… one source
     // fuzzy decontamination: empty train or empty eval → no matches

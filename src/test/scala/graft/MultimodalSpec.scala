@@ -117,7 +117,7 @@ class MultimodalSpec extends AnyFunSuite {
     val delta = Seq(
       (4L, "short", "s"), (5L, "%PDF-1.4 brand new", "s"),
       (6L, "%PDF-1.4 brand new", "s")).toDF("doc_id", "text", "source")
-    val store = Multimodal.payloadKeeperStore(docs)
+    val store = Multimodal.payloadStore(docs)
     val r = Multimodal.payloadDedupDelta(store, delta)
     val asg = r.assignment.as[(Long, String, Long, Int)].collect()
       .map(x => x._1 -> x).toMap
@@ -133,12 +133,12 @@ class MultimodalSpec extends AnyFunSuite {
     assert(asg == full)
     // the updated store has exactly one row per distinct digest and
     // feeds the next ingest: a re-ingest of doc 6 is a no-op dup
-    assert(r.updatedStore.count() == 4) // 3 store digests + 1 new
+    assert(r.updatedStore.keepers.count() == 4) // 3 store digests + 1 new
     val again = Multimodal.payloadDedupDelta(r.updatedStore,
       Seq((6L, "%PDF-1.4 brand new", "s")).toDF("doc_id", "text", "source"))
     assert(again.assignment.as[(Long, String, Long, Int)].collect()
       .toSeq == Seq((6L, "application/pdf", 5L, 1)))
-    assert(again.updatedStore.count() == 4)
+    assert(again.updatedStore.keepers.count() == 4)
   }
 
   test("payload near-dup delta == full run restricted to delta-touching pairs, idempotent") {
@@ -192,9 +192,7 @@ class MultimodalSpec extends AnyFunSuite {
     val dupDocs = docs.union(Seq((4L, "short", "s"))
       .toDF("doc_id", "text", "source"))
     val rIds = Seq(2L).toDF("doc_id") // the (2,4) digest group's keeper
-    val r = Multimodal.payloadRetract(
-      Multimodal.payloadKeeperStore(dupDocs),
-      Multimodal.payloadMemberStore(dupDocs), rIds)
+    val r = Multimodal.payloadRetract(Multimodal.payloadStore(dupDocs), rIds)
     val surv = dupDocs.filter($"doc_id" =!= 2L)
     def asg(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id", "kind", "keep_id", "is_dup")
@@ -202,12 +200,12 @@ class MultimodalSpec extends AnyFunSuite {
     assert(asg(r.assignment) == asg(Multimodal.payloadDedup(surv)))
     // doc 4 re-elected itself as the digest's keeper
     assert(asg(r.assignment).contains((4L, "text/plain", 4L, 0)))
-    val keeperRows = r.updatedKeepers.as[(String, Long)].collect().toSet
-    assert(keeperRows == Multimodal.payloadKeeperStore(surv)
+    val keeperRows = r.updatedStore.keepers.as[(String, Long)].collect().toSet
+    assert(keeperRows == Multimodal.payloadStore(surv).keepers
       .as[(String, Long)].collect().toSet)
     // the shrunk stores feed the next ingest: re-admitting doc 2's
     // bytes under a fresh id inherits the RE-ELECTED keeper
-    val again = Multimodal.payloadDedupDelta(r.updatedKeepers,
+    val again = Multimodal.payloadDedupDelta(r.updatedStore,
       Seq((9L, "short", "s")).toDF("doc_id", "text", "source"))
     assert(again.assignment.as[(Long, String, Long, Int)].collect()
       .toSeq == Seq((9L, "text/plain", 4L, 1)))

@@ -113,8 +113,7 @@ class ProjectionStorePropertySpec extends AnyFunSuite {
     Family[Similarity.PqIndex, Seq[Float]]("pq", "vec_id", vectors,
       embeddings, Similarity.pqIndex(_, seedMod = 3),
       (s, all) => Similarity.PqIndex(Similarity.pqCodes(
-        all.select(col("vec_id"), col("embedding").as("v")), s.seeds,
-        Similarity.PqM), s.seeds),
+        all.select(col("vec_id"), col("embedding").as("v")), s.seeds), s.seeds),
       Similarity.pqDelta(_, _), Similarity.pqRetract,
       s => Seq(s.codes, s.seeds), None),
     Family[Similarity.IvfPqIndex, Seq[Float]]("ivf-pq", "vec_id",

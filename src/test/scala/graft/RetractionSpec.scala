@@ -161,8 +161,7 @@ class RetractionSpec extends AnyFunSuite {
     val idx = Similarity.pqIndex(emb)
     val ret = Similarity.pqRetract(idx, rVecs)
     val freshCodes = Similarity.pqCodes(
-      survEmb.select(col("vec_id"), col("embedding").as("v")),
-      idx.seeds, Similarity.PqM)
+      survEmb.select(col("vec_id"), col("embedding").as("v")), idx.seeds)
     assert(rows(ret.codes) == rows(freshCodes))
     assert(rows(Similarity.knnPqIndexed(ret, probes, 10)) ==
       rows(Similarity.knnPqIndexed(
@@ -179,10 +178,8 @@ class RetractionSpec extends AnyFunSuite {
   }
 
   test("knnGraphRetract equals knnGraph over the survivors") {
-    val store = Dedup.embeddingLshStore(emb, nTables = 4, planesPerTable = 6)
-    val graph = Similarity.knnGraph(emb, 10)
-    val ret = Similarity.knnGraphRetract(graph, store, rVecs, 10)
-    assert(rows(ret) == rows(Similarity.knnGraph(survEmb, 10)))
+    val ret = Similarity.knnGraphRetract(Similarity.knnGraphStore(emb, 10), rVecs)
+    assert(rows(ret.edges) == rows(Similarity.knnGraph(survEmb, 10)))
   }
 
   test("knnGraphRetract: a HUB takedown refills every survivor's top-k") {
@@ -205,10 +202,9 @@ class RetractionSpec extends AnyFunSuite {
       .select("vec_id").as[Long].collect().toSet
     assert(withHub == (1L until 12L).toSet,
       s"fixture must make 0 a universal neighbor, got $withHub")
-    val store = Dedup.embeddingLshStore(all, nTables = 4, planesPerTable = 6)
-    val ret = Similarity.knnGraphRetract(graph, store,
-      Seq(0L).toDF("vec_id"), k)
-    assert(rows(ret) ==
+    val ret = Similarity.knnGraphRetract(Similarity.knnGraphStore(all, k),
+      Seq(0L).toDF("vec_id"))
+    assert(rows(ret.edges) ==
       rows(Similarity.knnGraph(all.filter(col("vec_id") =!= 0L), k)))
   }
 
@@ -285,19 +281,16 @@ class RetractionSpec extends AnyFunSuite {
       15L -> "p q r s x y z w",
       20L -> "only here alone now").toDF("doc_id", "text")
     val store = Dedup.paragraphStore(corpus, 4)
-    val members = Dedup.paragraphMemberStore(corpus, 4)
     // takedown: S1's keeper (5) goes → re-elect (10, 0); S2 keeps
     // (11, 0) untouched; doc 20's singleton group empties and drops
-    val ret = Dedup.paragraphRetract(store, members,
-      Seq(5L, 20L).toDF("doc_id"))
+    val ret = Dedup.paragraphRetract(store, Seq(5L, 20L).toDF("doc_id"))
     val surv = corpus.filter(col("doc_id") =!= 5 && col("doc_id") =!= 20)
-    assert(rows(ret.updatedStore) == rows(Dedup.paragraphStore(surv, 4)))
-    assert(rows(ret.updatedMembers) ==
-      rows(Dedup.paragraphMemberStore(surv, 4)))
+    val fresh = Dedup.paragraphStore(surv, 4)
+    assert(rows(ret.keepers) == rows(fresh.keepers))
+    assert(rows(ret.members) == rows(fresh.members))
     // and on the real corpus: mod-5 takedown ≡ fresh survivor store
-    val ret2 = Dedup.paragraphRetract(Dedup.paragraphStore(docs),
-      Dedup.paragraphMemberStore(docs), rDocs)
-    assert(rows(ret2.updatedStore) == rows(Dedup.paragraphStore(survDocs)))
+    val ret2 = Dedup.paragraphRetract(Dedup.paragraphStore(docs), rDocs)
+    assert(rows(ret2.keepers) == rows(Dedup.paragraphStore(survDocs).keepers))
   }
 
   // ---------------------------------------------------------------

@@ -238,7 +238,7 @@ class Round13OpsSpec extends AnyFunSuite {
     val delta = (0 until 20).map(i => (500L + i, a)).toDF("vec_id", "embedding")
     val all = old.union(delta)
     val full = asn(Dedup.semanticKeepers(all, tau))
-    val r = Dedup.semanticKeepersDelta(Dedup.semanticStore(old, tau), delta, tau)
+    val r = Dedup.semanticKeepersDelta(Dedup.semanticStore(old, tau), delta)
     assert(asn(r.assignment) == full)
   }
 
@@ -252,8 +252,7 @@ class Round13OpsSpec extends AnyFunSuite {
     System.setProperty("graft.quotient.edge.cap", "-1")
     try {
       assert(Dedup.QuotientEdgeCap == -1)
-      val r = Dedup.semanticKeepersDelta(Dedup.semanticStore(old, tau),
-        delta, tau)
+      val r = Dedup.semanticKeepersDelta(Dedup.semanticStore(old, tau), delta)
       assert(asn(r.assignment) == full)
     } finally System.clearProperty("graft.quotient.edge.cap")
   }

@@ -73,13 +73,13 @@ class SimilaritySpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val n = 60
     val dim = 64
-    val m = 8
+    val m = Similarity.PqM
     val sub = dim / m
     val data = (0L until n.toLong).map(i =>
       (i, Array.fill(dim)(rnd.nextFloat() * 2f - 1f)))
     val df = data.toDF("vec_id", "embedding")
     val out = Similarity.knnPq(df, Similarity.probeEvery(df, 10), 5,
-      m = m, kSub = 4, seedMod = 3)
+      kSub = 4, seedMod = 3)
     // the compact-index shape: no corpus-key exchange anywhere before
     // the per-probe top-k aggregate
     val plan = out.queryExecution.executedPlan.toString

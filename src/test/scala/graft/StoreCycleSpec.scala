@@ -15,6 +15,7 @@ import graft.sources.VersionedStore
   * stay within a recorded Spark job budget. */
 class StoreCycleSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.get
+  val d = "/root/testdata/sf0.001"
 
   /** Jobs per cycle on this fixture: measured 96 in each of 3 cycles on
     * 4 cores (141 with the session persists this spec rules out). Raise
@@ -23,7 +24,7 @@ class StoreCycleSpec extends AnyFunSuite {
 
   test("a semantic-best store cycle leaves nothing cached, within a job budget") {
     val (tau, k) = (0.35, 5)
-    val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val emb = graft.sources.Tables.embeddings(spark, d)
     val delta = emb.filter(col("vec_id") % 3 === 0)
     val dir = java.nio.file.Files.createTempDirectory("graft_cycle").toString
     val tables = Seq("bits", "graph", "assignment", "pairs")
@@ -49,5 +50,15 @@ class StoreCycleSpec extends AnyFunSuite {
       assert(added == 0, s"cycle $cycle: $added new cache entries")
       assert(jobs.size <= JobBudget, s"cycle $cycle: ${jobs.size} jobs")
     }
+  }
+
+  test("st_semantic_retract's ingest and takedown micro-batches leave nothing cached") {
+    // the batches run on the streams' threads, outside any bracket the
+    // caller holds
+    val bind = graft.registry.StreamsRegistry.queries("st_semantic_retract")
+    val before = CacheEntries(spark)
+    for (_ <- 1 to 2) bind(spark, d).collect()
+    val added = CacheEntries(spark) - before
+    assert(added == 0, s"$added new cache entries")
   }
 }

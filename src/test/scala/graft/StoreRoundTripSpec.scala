@@ -43,17 +43,19 @@ class StoreRoundTripSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, d)
     val old = docs.filter(col("doc_id") % 3 =!= 0)
     val delta = docs.filter(col("doc_id") % 3 === 0)
-    val inMem = Dedup.exactDelta(Dedup.keeperStore(old), delta)
+    val store = Dedup.exactStore(old)
+    val inMem = Dedup.exactDelta(store, delta)
     dropTable("keeper_store_rt")
-    Sinks.writeBucketed(Dedup.keeperStore(old), "keeper_store_rt", "fp", 8)
+    Sinks.writeBucketed(store.keepers, "keeper_store_rt", "fp", 8)
+    def readBack = store.copy(keepers = spark.table("keeper_store_rt"))
 
     // (a) next ingest over the read-back table == the in-memory chain
-    val fromTable = Dedup.exactDelta(spark.table("keeper_store_rt"), delta)
+    val fromTable = Dedup.exactDelta(readBack, delta)
     def asn(df: DataFrame) = df.as[(Long, Long, Int)].collect().toSet
     assert(asn(fromTable.assignment) == asn(inMem.assignment))
     assert(fromTable.assignment.count() > 0)
-    assert(fromTable.updatedStore.as[(String, Long)].collect().toSet ==
-      inMem.updatedStore.as[(String, Long)].collect().toSet)
+    assert(fromTable.updatedStore.keepers.as[(String, Long)].collect().toSet ==
+      inMem.updatedStore.keepers.as[(String, Long)].collect().toSet)
 
     // (b) the store side of the delta join has NO Exchange: the
     // bucketed layout pre-partitions it on fp. Broadcast disabled so
@@ -61,7 +63,7 @@ class StoreRoundTripSpec extends AnyFunSuite {
     // AQE off so the plan tree is directly walkable.
     withConf("spark.sql.adaptive.enabled" -> "false",
              "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val plan = Dedup.exactDelta(spark.table("keeper_store_rt"), delta)
+      val plan = Dedup.exactDelta(readBack, delta)
         .assignment.queryExecution.executedPlan
       // innermost join sides that read the store table directly (the
       // outer assignment join's "merged" side nests this one and
@@ -89,7 +91,8 @@ class StoreRoundTripSpec extends AnyFunSuite {
     val d1 = docs.filter(col("doc_id") % 6 === 0)
     val d2 = docs.filter(col("doc_id") % 6 === 3)
     // the in-memory reference chain: two sequential ingests
-    val ref1 = Dedup.exactDelta(Dedup.keeperStore(old), d1)
+    val store = Dedup.exactStore(old)
+    val ref1 = Dedup.exactDelta(store, d1)
     val ref2 = Dedup.exactDelta(ref1.updatedStore, d2)
     def asn(df: DataFrame) = df.as[(Long, Long, Int)].collect().toSet
     val t = "keeper_store_cp"
@@ -97,10 +100,11 @@ class StoreRoundTripSpec extends AnyFunSuite {
     // ingest history with append debt: base store, then the first
     // delta's genuinely NEW fingerprints appended (what a real ingest
     // materializes — the updated store minus what was already there)
-    Sinks.writeBucketed(Dedup.keeperStore(old), t, "fp", 8)
-    val r1 = Dedup.exactDelta(spark.table(t), d1)
+    Sinks.writeBucketed(store.keepers, t, "fp", 8)
+    def readBack = store.copy(keepers = spark.table(t))
+    val r1 = Dedup.exactDelta(readBack, d1)
     assert(asn(r1.assignment) == asn(ref1.assignment))
-    r1.updatedStore.join(spark.table(t), Seq("fp"), "left_anti")
+    r1.updatedStore.keepers.join(spark.table(t), Seq("fp"), "left_anti")
       .write.bucketBy(8, "fp").sortBy("fp").mode("append").saveAsTable(t)
     def files() = new java.io.File(s"spark-warehouse/$t")
       .listFiles().count(_.getName.startsWith("part-"))
@@ -113,11 +117,11 @@ class StoreRoundTripSpec extends AnyFunSuite {
       s"compaction left ${files()} files (was $filesBefore)")
     // the NEXT ingest over the compacted table: same assignment, and
     // the store side still enters the join without an Exchange
-    val r2 = Dedup.exactDelta(spark.table(t), d2)
+    val r2 = Dedup.exactDelta(readBack, d2)
     assert(asn(r2.assignment) == asn(ref2.assignment) && asn(r2.assignment).nonEmpty)
     withConf("spark.sql.adaptive.enabled" -> "false",
              "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val plan = Dedup.exactDelta(spark.table(t), d2)
+      val plan = Dedup.exactDelta(readBack, d2)
         .assignment.queryExecution.executedPlan
       val storeSides = plan.collect { case j: SortMergeJoinExec => j }
         .flatMap(j => Seq(j.left, j.right))
@@ -139,22 +143,24 @@ class StoreRoundTripSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, d)
     val old = docs.filter(col("doc_id") % 3 =!= 0)
     val delta = docs.filter(col("doc_id") % 3 === 0)
-    val inMem = Dedup.paragraphDelta(Dedup.paragraphStore(old, 16), delta, 16)
+    val store = Dedup.paragraphStore(old, 16)
+    val inMem = Dedup.paragraphDelta(store, delta)
     dropTable("para_store_rt")
     // paragraph fingerprints are md5 of non-null paragraphs — never
     // null, so the store join is a plain equi-join a table bucketed
     // on fp satisfies without an Exchange (the exactDelta property at
     // sub-document granularity, no sentinel needed)
-    Sinks.writeBucketed(Dedup.paragraphStore(old, 16), "para_store_rt", "fp", 8)
-    val fromTable = Dedup.paragraphDelta(spark.table("para_store_rt"), delta, 16)
+    Sinks.writeBucketed(store.keepers, "para_store_rt", "fp", 8)
+    def readBack = store.copy(keepers = spark.table("para_store_rt"))
+    val fromTable = Dedup.paragraphDelta(readBack, delta)
     def asn(df: DataFrame) = df.as[(Long, Long, Long, Long, Int)].collect().toSet
     assert(asn(fromTable.assignment) == asn(inMem.assignment)
       && asn(inMem.assignment).nonEmpty)
-    assert(fromTable.updatedStore.as[(String, Long, Long)].collect().toSet ==
-      inMem.updatedStore.as[(String, Long, Long)].collect().toSet)
+    assert(fromTable.updatedStore.keepers.as[(String, Long, Long)].collect().toSet ==
+      inMem.updatedStore.keepers.as[(String, Long, Long)].collect().toSet)
     withConf("spark.sql.adaptive.enabled" -> "false",
              "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val plan = Dedup.paragraphDelta(spark.table("para_store_rt"), delta, 16)
+      val plan = Dedup.paragraphDelta(readBack, delta)
         .assignment.queryExecution.executedPlan
       val storeSides = plan.collect { case j: SortMergeJoinExec => j }
         .flatMap(j => Seq(j.left, j.right))
@@ -306,7 +312,7 @@ class StoreRoundTripSpec extends AnyFunSuite {
     val kSt = Dedup.keepBestStore(old,
       Dedup.ngramJaccard(old, 3, 0.8), score)
     val deltaPairs = Dedup.ngramJaccardDelta(jSt, delta, 0.8).pairs
-    val inMem = Dedup.keepBestDelta(kSt, delta, deltaPairs, score)
+    val inMem = Dedup.keepBestDelta(kSt, delta, deltaPairs)
     Seq("kb_pairs_rt", "kb_scores_rt", "kb_asn_rt", "kb_jrows_rt",
       "kb_jprefix_rt").foreach(dropTable)
     // pairs on id_a (the subgraph-selection join key), scores and
@@ -321,8 +327,8 @@ class StoreRoundTripSpec extends AnyFunSuite {
         spark.table("kb_jprefix_rt"), 3, 0.8), delta, 0.8).pairs
     val fromTable = Dedup.keepBestDelta(
       Dedup.KeepBestStore(spark.table("kb_pairs_rt"),
-        spark.table("kb_scores_rt"), spark.table("kb_asn_rt")),
-      delta, deltaPairsT, score)
+        spark.table("kb_scores_rt"), spark.table("kb_asn_rt"), score),
+      delta, deltaPairsT)
     def res(r: Dedup.AssignmentDelta[Dedup.KeepBestStore]) =
       r.assignment.as[(Long, Long, Int)].collect().toSet
     assert(res(fromTable) == res(inMem) && res(inMem).nonEmpty)
@@ -334,18 +340,19 @@ class StoreRoundTripSpec extends AnyFunSuite {
       "assignment join co-partitioned shuffle-free on BOTH sides") {
     val docs = Tables.documents(spark, d)
     val retract = docs.filter(col("doc_id") % 20 === 7).select("doc_id")
-    val inMem = Dedup.exactRetract(Dedup.keeperStore(docs),
-      Dedup.memberStore(docs), retract)
+    val store = Dedup.exactStore(docs)
+    val inMem = Dedup.exactRetract(store, retract)
     Seq("rt_keepers", "rt_members").foreach(dropTable)
-    Sinks.writeBucketed(Dedup.keeperStore(docs), "rt_keepers", "fp", 8)
-    Sinks.writeBucketed(Dedup.memberStore(docs), "rt_members", "fp", 8)
-    val fromTable = Dedup.exactRetract(spark.table("rt_keepers"),
-      spark.table("rt_members"), retract)
+    Sinks.writeBucketed(store.keepers, "rt_keepers", "fp", 8)
+    Sinks.writeBucketed(store.members, "rt_members", "fp", 8)
+    def readBack = Dedup.ExactStore(spark.table("rt_keepers"),
+      spark.table("rt_members"), Nil)
+    val fromTable = Dedup.exactRetract(readBack, retract)
     def asn(df: DataFrame) = df.as[(Long, Long, Int)].collect().toSet
     def kp(df: DataFrame) = df.as[(String, Long)].collect().toSet
     assert(asn(fromTable.assignment) == asn(inMem.assignment))
     assert(asn(inMem.assignment).nonEmpty)
-    assert(kp(fromTable.updatedKeepers) == kp(inMem.updatedKeepers))
+    assert(kp(fromTable.updatedStore.keepers) == kp(inMem.updatedStore.keepers))
     // the survivor-assignment join reads the two fp-bucketed tables
     // DIRECTLY (the affected groups' keeper override rides a
     // broadcast coalesce, not a union that would cost the keeper
@@ -354,8 +361,7 @@ class StoreRoundTripSpec extends AnyFunSuite {
     // — co-partitioned storage is the whole point of the layout
     withConf("spark.sql.adaptive.enabled" -> "false",
              "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val plan = Dedup.exactRetract(spark.table("rt_keepers"),
-          spark.table("rt_members"), retract)
+      val plan = Dedup.exactRetract(readBack, retract)
         .assignment.queryExecution.executedPlan
       val smjs = plan.collect { case j: SortMergeJoinExec => j }
       assert(smjs.nonEmpty,

@@ -244,7 +244,7 @@ class StreamsSpec extends AnyFunSuite {
     val input = MemoryStream[(Long, Array[Float])]
     val q = input.toDF().toDF("vec_id", "embedding").writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        store = Streams.semanticBatchStep(store, batch.toDF(), tau)
+        store = Streams.semanticBatchStep(store, batch.toDF())
         ()
       }
       .start()
@@ -265,7 +265,7 @@ class StreamsSpec extends AnyFunSuite {
     // tables — and the result equals a fresh build over the survivors
     val rIds = emb.filter(col("vec_id") % 5 === 0).select("vec_id")
     val surv = emb.filter(col("vec_id") % 5 =!= 0)
-    val ret = graft.operators.Dedup.semanticRetract(store, rIds, emb, tau)
+    val ret = graft.operators.Dedup.semanticRetract(store, rIds, emb)
     assert(asn(ret.assignment) ==
       asn(graft.operators.Dedup.semanticKeepers(surv, tau)))
   }
@@ -300,18 +300,18 @@ class StreamsSpec extends AnyFunSuite {
     val qI = ingest.toDF().toDF("vec_id", "embedding").writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         corpus = corpus.union(batch.toDF()).localCheckpoint(true)
-        store = Streams.semanticBatchStep(store, batch.toDF(), tau)
+        store = Streams.semanticBatchStep(store, batch.toDF())
         ()
       }
       .start()
     val qT = takedown.toDF().toDF("vec_id").writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val r = graft.operators.Dedup.semanticRetract(store, batch.toDF(),
-          corpus, tau)
-        store = graft.operators.Dedup.SemanticStore(
-          r.updatedStore.lsh.copy(
+          corpus)
+        store = r.updatedStore.copy(
+          lsh = r.updatedStore.lsh.copy(
             bucketed = r.updatedStore.lsh.bucketed.localCheckpoint(true)),
-          r.updatedStore.assignment.select("vec_id", "cluster_id")
+          assignment = r.updatedStore.assignment.select("vec_id", "cluster_id")
             .localCheckpoint(true))
         ()
       }
@@ -426,9 +426,9 @@ class StreamsSpec extends AnyFunSuite {
     val live = graft.operators.Dedup.SemanticStore(
       graft.operators.Dedup.EmbeddingLshStore(spark.read.parquet(lshPath4),
         6, 4, 64),
-      spark.read.parquet(asgPath4))
+      spark.read.parquet(asgPath4), tau)
     val rIds = emb.filter(col("vec_id") % 5 === 0).select("vec_id")
-    val shrunk = graft.operators.Dedup.semanticRetract(live, rIds, emb, tau)
+    val shrunk = graft.operators.Dedup.semanticRetract(live, rIds, emb)
       .updatedStore
     graft.sources.VersionedStore.write(storeDir, Seq(
       "assignment" -> shrunk.assignment, "lsh" -> shrunk.lsh.bucketed))
@@ -552,16 +552,15 @@ class StreamsSpec extends AnyFunSuite {
       (1L, "group a"), (3L, "group a"), (5L, "group a"),
       (2L, "group b"), (4L, "group b"),
       (6L, "group c"), (7L, "group d")).toDF("doc_id", "text")
-    var keepers = graft.operators.Dedup.keeperStore(docs)
-    var members = graft.operators.Dedup.memberStore(docs)
+    var store = graft.operators.Dedup.exactStore(docs)
     val input = MemoryStream[Long]
     val q = input.toDF().toDF("doc_id").writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val r = graft.operators.Dedup.exactRetract(keepers, members,
-          batch.toDF())
+        val r = graft.operators.Dedup.exactRetract(store, batch.toDF())
+          .updatedStore
         // flat lineage per queue batch, the semanticBatchStep rule
-        keepers = r.updatedKeepers.localCheckpoint(true)
-        members = r.updatedMembers.localCheckpoint(true)
+        store = r.copy(keepers = r.keepers.localCheckpoint(true),
+          members = r.members.localCheckpoint(true))
         ()
       }
       .start()
@@ -574,8 +573,9 @@ class StreamsSpec extends AnyFunSuite {
     val surv = docs.filter(!col("doc_id").isin(1L, 4L, 6L))
     def stor(df: org.apache.spark.sql.DataFrame): Set[(String, Long)] =
       df.as[(String, Long)].collect().toSet
-    assert(stor(keepers) == stor(graft.operators.Dedup.keeperStore(surv)))
-    assert(members.select("doc_id").as[Long].collect().toSet ==
+    assert(stor(store.keepers) ==
+      stor(graft.operators.Dedup.exactStore(surv).keepers))
+    assert(store.members.select("doc_id").as[Long].collect().toSet ==
       Set(2L, 3L, 5L, 7L))
   }
 

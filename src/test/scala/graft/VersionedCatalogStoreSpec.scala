@@ -197,26 +197,28 @@ class VersionedCatalogStoreSpec extends AnyFunSuite {
     // the exact-dedup two-table store, BOTH bucketed on fp (the
     // members⋈keepers join key — the StoreRoundTripSpec co-location),
     // published atomically as one version
+    val st = Dedup.exactStore(docs)
     VersionedCatalogStore.write(spark, p, Seq(
-      TableSpec("keepers", Dedup.keeperStore(docs), "fp", 8),
-      TableSpec("members", Dedup.memberStore(docs), "fp", 8)))
+      TableSpec("keepers", st.keepers, "fp", 8),
+      TableSpec("members", st.members, "fp", 8)))
     val Seq(k0, m0) =
       VersionedCatalogStore.read(spark, p, Seq("keepers", "members")).get
     // the takedown batch retracts against the LIVE read-back version
     // and the shrunk store publishes as the next version
     val rDocs = docs.filter(col("doc_id") % 5 === 0).select("doc_id")
-    val r = Dedup.exactRetract(k0, m0, rDocs)
+    val r = Dedup.exactRetract(Dedup.ExactStore(k0, m0, Nil), rDocs).updatedStore
     VersionedCatalogStore.write(spark, p, Seq(
-      TableSpec("keepers", r.updatedKeepers, "fp", 8),
-      TableSpec("members", r.updatedMembers, "fp", 8)))
+      TableSpec("keepers", r.keepers, "fp", 8),
+      TableSpec("members", r.members, "fp", 8)))
     // the published store serves exactly the survivor rebuild
     val Seq(k1, m1) =
       VersionedCatalogStore.read(spark, p, Seq("keepers", "members")).get
     val surv = docs.filter(col("doc_id") % 5 =!= 0)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
-    assert(rows(k1) == rows(Dedup.keeperStore(surv)))
-    assert(rows(m1) == rows(Dedup.memberStore(surv)))
+    val rebuilt = Dedup.exactStore(surv)
+    assert(rows(k1) == rows(rebuilt.keepers))
+    assert(rows(m1) == rows(rebuilt.members))
   }
 
   test("a mixed-case or scheme-like prefix is rejected loudly") {

@@ -346,24 +346,25 @@ class VersionedStoreSpec extends AnyFunSuite {
     val dir = tmp()
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     // build + publish the two-table exact-dedup store atomically
+    val st = Dedup.exactStore(docs)
     VersionedStore.write(dir, Seq(
-      "keepers" -> Dedup.keeperStore(docs),
-      "members" -> Dedup.memberStore(docs)))
+      "keepers" -> st.keepers, "members" -> st.members))
     val Seq(k0, m0) =
       VersionedStore.read(spark, dir, Seq("keepers", "members")).get
     // the takedown batch: retract against the LIVE version, publish
     // the shrunk store as the next version with one pointer move
     val rDocs = docs.filter(col("doc_id") % 5 === 0).select("doc_id")
-    val r = Dedup.exactRetract(k0, m0, rDocs)
+    val r = Dedup.exactRetract(Dedup.ExactStore(k0, m0, Nil), rDocs).updatedStore
     VersionedStore.write(dir, Seq(
-      "keepers" -> r.updatedKeepers, "members" -> r.updatedMembers))
+      "keepers" -> r.keepers, "members" -> r.members))
     // the published store serves exactly the survivor rebuild
     val Seq(k1, m1) =
       VersionedStore.read(spark, dir, Seq("keepers", "members")).get
     val surv = docs.filter(col("doc_id") % 5 =!= 0)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
-    assert(rows(k1) == rows(Dedup.keeperStore(surv)))
-    assert(rows(m1) == rows(Dedup.memberStore(surv)))
+    val fresh = Dedup.exactStore(surv)
+    assert(rows(k1) == rows(fresh.keepers))
+    assert(rows(m1) == rows(fresh.members))
   }
 }
