@@ -14,6 +14,8 @@
 #   - nodes: per row, the count of Exchange, *Join, HashAggregate, Window and
 #            InMemoryTableScan nodes, for when the norm diff is not empty.
 # Exits 0 when both diffs are empty, 1 when either is not, 2 on a failed run.
+# The temp dir (parent tree, plan dumps, stderr logs) is removed on exit 0
+# and kept, with its path printed, otherwise.
 #
 # Lines that may differ even between two runs of one commit: `[codegen id : N]`
 # inside a cached frame's final AQE plan (isFinalPlan=true), which follows
@@ -29,7 +31,10 @@ sf=$(cd "$2" && pwd)
 rows=$3
 repo=$(cd "$(dirname "$0")/.." && pwd)
 work=$(mktemp -d)
-echo "plan_diff: work dir $work" >&2
+cleanup() {
+  if [ "$?" -eq 0 ]; then rm -rf "$work"; else echo "plan_diff: work dir kept: $work" >&2; fi
+}
+trap cleanup EXIT
 
 export COURSIER_MODE=offline
 export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"

@@ -43,11 +43,14 @@ object GraftSession {
       // Sketch aggregates are wide (MinHash: 128 min-columns); the
       // default 100-field limit would kick them out of codegen.
       .config("spark.sql.codegen.maxFields", "250")
-      // Generated classes are cached JVM-wide, LRU, 100 by default. One
-      // semantic-best ingest + retract compiles more than 1000, so the
-      // next row recompiled all of its own: perfbench dedup_churn's
-      // knn_ivf_served after a store cycle read 0.75-0.83 s at 100,
-      // 0.65 s at 1000 and 0.49 s at 4000 (seed 603, 4 cores).
+      // Generated classes are cached JVM-wide, LRU, 100 by default.
+      // Counted with CodegenMetrics per perfbench dedup_churn op (seed 7,
+      // 4 cores, 7 passes): set-up compiles 95 classes, the first
+      // semantic-best ingest 81 and retract 70, the next three passes 30
+      // more, later passes none but knn_ivf_served's 2 per call. That
+      // working set is over 100, so at the default each row recompiled
+      // its own: knn_ivf_served after a store cycle read 0.75-0.83 s at
+      // 100 and 0.49 s at 4000 (seed 603).
       .config("spark.sql.codegen.cache.maxEntries", "4000")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       // Historical events.parquet layouts carried TIMESTAMP(NANOS),

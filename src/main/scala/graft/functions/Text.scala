@@ -3,11 +3,10 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Column-level text primitives. All pure `functions._` compositions —
-  * no UDFs, no SerDe round-trip (higher-order functions like
-  * filter/transform evaluate interpreted in Spark, but stay inside the
-  * JVM row pipeline) — and written so the identical semantics are
-  * expressible in ANSI SQL (the DuckDB oracle).
+/** Column-level text primitives: `functions._` compositions and
+  * codegen'd kernels ([[graft.plans]]) — no UDFs, no SerDe round-trip —
+  * written so the identical semantics are expressible in ANSI SQL (the
+  * DuckDB oracle).
   *
   * Tokenization matches the reference word counter
   * (reference main.go:141-151): split on runs of non-letter runes
@@ -25,7 +24,9 @@ object Text {
     * (reference main.go:141-151 order), empties removed. Backed by a
     * codegen'd Catalyst expression ([[graft.plans.TokenizeExpr]]);
     * identical semantics to
-    * `filter(transform(split(c, SepPattern), lower), _ =!= "")`. */
+    * `filter(transform(split(c, SepPattern), lower), _ =!= "")`. The
+    * rows that take the kernel's String path are listed on
+    * [[graft.plans.TextKernels.tokens]]. */
   def tokens(c: Column): Column = graft.plans.Exprs.tokens(c)
 
   /** CJK-AWARE tokens: non-CJK letter runs tokenize exactly as
@@ -59,27 +60,14 @@ object Text {
   def bpeTokens(c: Column): Column = regexp_count(c, lit(BpePattern))
 
   /** Word w-shingles (space-joined runs of `n` consecutive tokens),
-    * distinct. Empty when fewer than `n` tokens.
-    *
-    * `toks` is bound ONCE as a lambda variable (`transform(array(toks),
-    * ts => …)`): higher-order functions evaluate interpreted, so a
-    * direct `get(toks, i+k)` would re-run the whole tokenize pipeline
-    * for every element access (~n×positions re-tokenizations per doc,
-    * two orders of magnitude slower); a lambda variable is a
-    * materialized value and each access is O(1). */
+    * distinct. Empty when fewer than `n` tokens. */
   def shingles(toks: Column, n: Int): Column =
     array_distinct(ngrams(toks, n))
 
   /** Word n-grams WITH multiplicity (space-joined runs of `n`
     * consecutive tokens) — the non-distinct form repetition analysis
-    * needs; [[shingles]] is its distinct set. Same lambda-variable
-    * binding discipline (see scaladoc above). */
-  def ngrams(toks: Column, n: Int): Column =
-    flatten(transform(array(toks), ts => {
-      // sequence(a,b) is descending when b<a, so guard short docs.
-      val idx = when(size(ts) >= n, sequence(lit(0), size(ts) - n))
-        .otherwise(array().cast("array<int>"))
-      transform(idx, i =>
-        concat_ws(" ", (0 until n).map(k => get(ts, i + k)): _*))
-    }))
+    * needs; [[shingles]] is its distinct set. Empty when fewer than `n`
+    * tokens or `toks` is null. Backed by a codegen'd Catalyst
+    * expression ([[graft.plans.NgramsExpr]]). */
+  def ngrams(toks: Column, n: Int): Column = graft.plans.Exprs.ngrams(toks, n)
 }

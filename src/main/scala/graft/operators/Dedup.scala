@@ -584,8 +584,8 @@ object Dedup {
     CacheTracker.persistTracked(docs
       .select(col("doc_id"), Text.shingles(tokenizer(col("text")), n).as("sh"))
       .filter(size(col("sh")) > 0)
-      .select(col("doc_id"), size(col("sh")).as("sz"),
-        explode(transform(col("sh"), x => xxhash64(x))).as("s")))
+      .select(col("doc_id"), size(col("sh")).as("sz"), explode(col("sh")).as("s"))
+      .withColumn("s", xxhash64(col("s"))))
 
   /** Prefix-filtered candidate pairs (SSJoin/PPJoin prefix filtering):
     * order each doc's shingles by global document frequency ascending

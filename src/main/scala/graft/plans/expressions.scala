@@ -3,7 +3,8 @@ package graft.plans
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -16,7 +17,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * loops that interpretation dominates the query (measured ~10x on the
   * word-count path, ~40x on cosine). These expressions participate in
   * whole-stage codegen via `doGenCode` — the generated stage calls one
-  * static kernel per row.
+  * static kernel per row. The text kernels work on UTF-8 bytes:
+  * [[TokenizeExpr]] decodes each row once (its String fallback rules are
+  * on [[TextKernels.tokens]]) and [[NgramsExpr]] copies each n-gram's
+  * bytes once, both returning views into one per-row buffer.
   */
 
 /** `tokens(text)`: letter-run tokens, lowercased after the split. */
@@ -35,6 +39,39 @@ case class TokenizeExpr(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.plans.TextKernels.tokens($c)")
 
   override protected def withNewChildInternal(newChild: Expression): TokenizeExpr =
+    copy(child = newChild)
+}
+
+/** `ngrams(tokens, n)`: word n-grams with multiplicity, each run of `n`
+  * consecutive tokens joined by one space. A null array or one shorter
+  * than `n` gives `[]`, so the result is never null. See
+  * [[TextKernels.ngrams]]. */
+case class NgramsExpr(child: Expression, n: Int) extends UnaryExpression {
+  require(n >= 1, s"ngrams needs n >= 1, got $n")
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullable: Boolean = false
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"ngrams() needs array<string>, got ${t.catalogString}")
+  }
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    TextKernels.ngrams(
+      child.eval(input).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        graft.plans.TextKernels.ngrams(${c.isNull} ? null : ${c.value}, $n);""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): NgramsExpr =
     copy(child = newChild)
 }
 
@@ -377,6 +414,10 @@ object Exprs {
   /** Column wrapper for [[TokenizeExpr]]. */
   def tokens(c: Column): Column =
     ColumnBridge.column(TokenizeExpr(ColumnBridge.expression(c)))
+
+  /** Column wrapper for [[NgramsExpr]]. */
+  def ngrams(tokens: Column, n: Int): Column =
+    ColumnBridge.column(NgramsExpr(ColumnBridge.expression(tokens), n))
 
   /** Column wrapper for [[CjkTokenizeExpr]]. */
   def tokensCjk(c: Column): Column =

@@ -1,6 +1,9 @@
 package graft.plans
 
+import java.util.Locale
+
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Row kernels invoked from generated code (static forwarders make
@@ -13,39 +16,130 @@ object TextKernels {
   /** Letter-run tokens, lowercased after the split — identical to
     * `filter(transform(split(c, "[^\p{L}]+"), lower), _ != "")`
     * (reference main.go:141-151 order) but one virtual call per row
-    * instead of an interpreted lambda per token. Pure-ASCII rows (the
-    * overwhelming case in web corpora) take a byte-level path with no
-    * String round-trip; any byte ≥ 0x80 falls back to the code-point
-    * path with identical semantics. */
-  def tokens(s: UTF8String): ArrayData = {
-    val n = s.numBytes()
-    var i = 0
-    while (i < n && (s.getByte(i) & 0x80) == 0) i += 1
-    if (i == n) tokensAscii(s) else tokensUnicode(s)
+    * instead of an interpreted lambda per token.
+    *
+    * One pass over the row's UTF-8 bytes: each code point is decoded,
+    * tested with `Character.isLetter` (a range check for ASCII),
+    * lowercased with `Character.toLowerCase` (`| 0x20` for ASCII) and
+    * encoded into one per-row buffer; each token is a view into it.
+    * Per-code-point lowercasing equals `UTF8String.toLowerCase` (that
+    * is `String.toLowerCase()` in the default locale) except in three
+    * cases, where the whole row takes the String path instead:
+    *  - malformed UTF-8 (Java's decoder would insert U+FFFD);
+    *  - U+0130 or U+03A3, which `String.toLowerCase` maps with its
+    *    multi-char and final-sigma rules;
+    *  - a tr/az/lt default locale, whose casing rules are contextual. */
+  def tokens(s: UTF8String): ArrayData = tokens(s, Locale.getDefault)
+
+  /** [[tokens]] as it runs under default locale `locale`, so specs can
+    * take the tr/az/lt fallback without changing the JVM-wide default. */
+  private[graft] def tokens(s: UTF8String, locale: Locale): ArrayData = {
+    val lang = locale.getLanguage
+    val out = if (lang == "tr" || lang == "az" || lang == "lt") null else tokensUtf8(s)
+    if (out != null) out else tokensUnicode(s, locale)
   }
 
-  private def tokensAscii(s: UTF8String): ArrayData = {
+  /** The byte pass of [[tokens]]; null where the row needs the String
+    * path. */
+  private def tokensUtf8(s: UTF8String): ArrayData = {
     val n = s.numBytes()
-    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    // lowercasing can lengthen a code point's encoding (U+023A → U+2C65)
+    var buf = new Array[Byte](n)
+    var len = 0
+    var ends = new Array[Int](16)
+    var nTok = 0
+    var inTok = false
     var i = 0
-    var buf = new Array[Byte](16)
     while (i < n) {
-      var b = s.getByte(i)
-      while (i < n && !(((b | 0x20) >= 'a') && ((b | 0x20) <= 'z'))) {
-        i += 1; if (i < n) b = s.getByte(i)
+      val b0 = s.getByte(i)
+      var lc = -1 // the lowercased letter, or -1 at a separator
+      if (b0 >= 0) {
+        val l = b0 | 0x20
+        if (l >= 'a' && l <= 'z') lc = l
+        i += 1
+      } else {
+        val b = b0 & 0xFF
+        var cp = 0
+        if (b < 0xC2 || b > 0xF4) return null // stray continuation, overlong lead, > U+10FFFF
+        else if (b < 0xE0) {
+          val c1 = cont(s, i + 1, n, 0x80, 0xBF)
+          if (c1 < 0) return null
+          cp = ((b & 0x1F) << 6) | c1
+          i += 2
+        } else if (b < 0xF0) {
+          // E0 excludes overlongs, ED excludes encoded surrogates
+          val c1 = cont(s, i + 1, n, if (b == 0xE0) 0xA0 else 0x80, if (b == 0xED) 0x9F else 0xBF)
+          val c2 = cont(s, i + 2, n, 0x80, 0xBF)
+          if (c1 < 0 || c2 < 0) return null
+          cp = ((b & 0x0F) << 12) | (c1 << 6) | c2
+          i += 3
+        } else {
+          // F0 excludes overlongs, F4 caps at U+10FFFF
+          val c1 = cont(s, i + 1, n, if (b == 0xF0) 0x90 else 0x80, if (b == 0xF4) 0x8F else 0xBF)
+          val c2 = cont(s, i + 2, n, 0x80, 0xBF)
+          val c3 = cont(s, i + 3, n, 0x80, 0xBF)
+          if (c1 < 0 || c2 < 0 || c3 < 0) return null
+          cp = ((b & 0x07) << 18) | (c1 << 12) | (c2 << 6) | c3
+          i += 4
+        }
+        if (cp == 0x0130 || cp == 0x03A3) return null
+        if (Character.isLetter(cp)) lc = Character.toLowerCase(cp)
       }
-      var len = 0
-      while (i < n && ((b | 0x20) >= 'a') && ((b | 0x20) <= 'z')) {
-        if (len == buf.length) buf = java.util.Arrays.copyOf(buf, len * 2)
-        buf(len) = (b | 0x20).toByte // ASCII lowercase
-        len += 1; i += 1; if (i < n) b = s.getByte(i)
+      if (lc >= 0) {
+        inTok = true
+        if (len + 4 > buf.length) buf = java.util.Arrays.copyOf(buf, math.max(2 * buf.length, len + 4))
+        len = encode(lc, buf, len)
       }
-      if (len > 0) out += UTF8String.fromBytes(java.util.Arrays.copyOf(buf, len))
+      if (inTok && (lc < 0 || i == n)) {
+        if (nTok == ends.length) ends = java.util.Arrays.copyOf(ends, 2 * nTok)
+        ends(nTok) = len; nTok += 1
+        inTok = false
+      }
     }
-    new GenericArrayData(out.toArray)
+    val out = new Array[Any](nTok)
+    var t = 0
+    var start = 0
+    while (t < nTok) {
+      out(t) = UTF8String.fromBytes(buf, start, ends(t) - start)
+      start = ends(t)
+      t += 1
+    }
+    new GenericArrayData(out)
   }
 
-  private def tokensUnicode(s: UTF8String): ArrayData = {
+  /** The continuation byte at `j` as its 6 payload bits, or -1 when it
+    * is past the end or outside [lo, hi]. */
+  @inline private def cont(s: UTF8String, j: Int, n: Int, lo: Int, hi: Int): Int =
+    if (j >= n) -1
+    else {
+      val c = s.getByte(j) & 0xFF
+      if (c < lo || c > hi) -1 else c & 0x3F
+    }
+
+  /** UTF-8 encodes `cp` at `buf(at)`; returns the end offset. */
+  @inline private def encode(cp: Int, buf: Array[Byte], at: Int): Int =
+    if (cp < 0x80) { buf(at) = cp.toByte; at + 1 }
+    else if (cp < 0x800) {
+      buf(at) = (0xC0 | (cp >> 6)).toByte
+      buf(at + 1) = (0x80 | (cp & 0x3F)).toByte
+      at + 2
+    } else if (cp < 0x10000) {
+      buf(at) = (0xE0 | (cp >> 12)).toByte
+      buf(at + 1) = (0x80 | ((cp >> 6) & 0x3F)).toByte
+      buf(at + 2) = (0x80 | (cp & 0x3F)).toByte
+      at + 3
+    } else {
+      buf(at) = (0xF0 | (cp >> 18)).toByte
+      buf(at + 1) = (0x80 | ((cp >> 12) & 0x3F)).toByte
+      buf(at + 2) = (0x80 | ((cp >> 6) & 0x3F)).toByte
+      buf(at + 3) = (0x80 | (cp & 0x3F)).toByte
+      at + 4
+    }
+
+  /** The String path of [[tokens]]: each letter run lowercased as
+    * `UTF8String.toLowerCase` does under default locale `locale` (an
+    * all-ASCII run by ASCII rules, any other by `String.toLowerCase`). */
+  private def tokensUnicode(s: UTF8String, locale: Locale): ArrayData = {
     val str = s.toString
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
     val n = str.length
@@ -55,10 +149,66 @@ object TextKernels {
       while (i < n && !Character.isLetter(str.codePointAt(i))) i += Character.charCount(str.codePointAt(i))
       val start = i
       while (i < n && Character.isLetter(str.codePointAt(i))) i += Character.charCount(str.codePointAt(i))
-      if (i > start)
-        out += UTF8String.fromString(str.substring(start, i)).toLowerCase
+      if (i > start) {
+        val tok = str.substring(start, i)
+        out += UTF8String.fromString(
+          if (tok.forall(_ < 0x80)) tok.toLowerCase(Locale.ROOT) else tok.toLowerCase(locale))
+      }
     }
     new GenericArrayData(out.toArray)
+  }
+
+  /** Word n-grams with multiplicity: each run of `n` consecutive
+    * elements joined by one space — identical to
+    * `flatten(transform(array(toks), ts => transform(sequence(0,
+    * size(ts) - n), i => concat_ws(" ", ts[i], …, ts[i+n-1]))))`,
+    * including `concat_ws`'s skipping of null elements. A null array or
+    * one shorter than `n` gives `[]`. Every n-gram's bytes are copied
+    * once into one per-row buffer; the n-grams are views into it. */
+  def ngrams(toks: ArrayData, n: Int): ArrayData = {
+    val cnt = if (toks == null) 0 else toks.numElements()
+    val m = cnt - n + 1
+    if (m <= 0) return new GenericArrayData(Array.empty[Any])
+    val ts = new Array[UTF8String](cnt)
+    var j = 0
+    while (j < cnt) {
+      if (!toks.isNullAt(j)) ts(j) = toks.getUTF8String(j)
+      j += 1
+    }
+    // the buffer holds every n-gram: its non-null elements' bytes plus
+    // one space between each pair, summed by a sliding window
+    var winBytes = 0L
+    var winElems = 0
+    var total = 0L
+    j = 0
+    while (j < cnt) {
+      if (ts(j) != null) { winBytes += ts(j).numBytes; winElems += 1 }
+      if (j >= n && ts(j - n) != null) { winBytes -= ts(j - n).numBytes; winElems -= 1 }
+      if (j >= n - 1) total += winBytes + math.max(winElems - 1, 0)
+      j += 1
+    }
+    val buf = new Array[Byte](Math.toIntExact(total))
+    val out = new Array[Any](m)
+    var pos = 0
+    var g = 0
+    while (g < m) {
+      val start = pos
+      var first = true
+      var k = 0
+      while (k < n) {
+        val t = ts(g + k)
+        if (t != null) {
+          if (!first) { buf(pos) = ' '; pos += 1 }
+          first = false
+          t.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + pos)
+          pos += t.numBytes
+        }
+        k += 1
+      }
+      out(g) = UTF8String.fromBytes(buf, start, pos - start)
+      g += 1
+    }
+    new GenericArrayData(out)
   }
 
   /** Unsegmented scripts (Han/Hiragana/Katakana/Hangul) have no
