@@ -98,6 +98,14 @@ def main():
                 c.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
         return c
     oracle = json.load(open(f"{OUT}/oracle_sql.json"))
+    # Verify's per-query status: the first error line of a query that
+    # wrote no output
+    sp = f"{OUT}/verify_status.json"
+    status = json.load(open(sp)) if os.path.exists(sp) else {}
+
+    def why(name):
+        err = status.get(name, {}).get("error")
+        return f" ({err})" if err else ""
     declared = sorted(d for d in os.listdir(OUT)
                       if os.path.isdir(os.path.join(OUT, d)))
     fails = 0
@@ -106,7 +114,7 @@ def main():
             continue
         files = glob.glob(f"{OUT}/{name}/*.parquet")
         if not files:
-            print(f"FAIL {name}: no spark output"); fails += 1; continue
+            print(f"FAIL {name}: no spark output{why(name)}"); fails += 1; continue
         sdf = pd.read_parquet(files[0] if len(files) == 1 else f"{OUT}/{name}")
         if name not in oracle:
             print(f"rows {name}: {len(sdf)} rows (no oracle — spec-checked)")
@@ -129,7 +137,7 @@ def main():
             print(f"PASS {name}: {len(sdf)} rows")
     missing = [q for q in oracle if q not in declared]
     for q in missing:
-        print(f"FAIL {q}: oracle declared but no spark output"); fails += 1
+        print(f"FAIL {q}: oracle declared but no spark output{why(q)}"); fails += 1
     print(f"PREFLIGHT: {'OK' if fails == 0 else f'{fails} FAILURES'}")
     sys.exit(1 if fails else 0)
 

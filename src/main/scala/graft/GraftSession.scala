@@ -16,24 +16,21 @@ object GraftSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
   /** The RocksDB state store provider class (shipped with Spark; the
-    * rocksdbjni native lib is on the unmanaged classpath). Selectable
-    * per session because streaming state lives off-heap/on-disk under
-    * RocksDB — at 100 TB the G-family's keyed state (open sessions,
-    * distinct fingerprints) outgrows the default in-memory HDFS-backed
-    * store long before the data outgrows the executors. */
+    * rocksdbjni native lib is on the unmanaged classpath). Setting it
+    * as `spark.sql.streaming.stateStore.providerClass` moves every
+    * streaming query's state off-heap/on-disk; results are
+    * provider-independent (RocksDbStateSpec). At 100 TB the G-family's
+    * keyed state (open sessions, distinct fingerprints) outgrows the
+    * default in-memory HDFS-backed store long before the data
+    * outgrows the executors. */
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** `enableUi` powers WordCountCli's `-profile`: the Spark UI (and
     * its per-stage CPU/memory/spill views) is the engine-native
-    * equivalent of the reference's pprof flag. `rocksDbState` (or env
-    * SPARK_GRAFT_ROCKSDB=1) switches every streaming query's state
-    * store to RocksDB; results are provider-independent (spec'd in
-    * RocksDbStateSpec), only the state's residence changes. */
-  def local(appName: String = "graft", enableUi: Boolean = false,
-            rocksDbState: Boolean =
-              sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1")): SparkSession = {
-    val builder = SparkSession.builder()
+    * equivalent of the reference's pprof flag. */
+  def local(appName: String = "graft", enableUi: Boolean = false): SparkSession = {
+    val spark = SparkSession.builder()
       .withExtensions(new GraftExtensions)
       .appName(appName)
       .master(s"local[$cpus]")
@@ -59,10 +56,7 @@ object GraftSession {
       // tz-less timestamp[us] → TIMESTAMP_NTZ, the type Tables declares.)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", enableUi.toString)
-    val spark = (if (rocksDbState)
-      builder.config("spark.sql.streaming.stateStore.providerClass",
-        RocksDbProvider)
-    else builder).getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -269,6 +269,10 @@ object Corpus {
     * shingle width, which every ingest shingles with. */
   final case class SourceOverlapStore(rows: DataFrame, sizes: DataFrame,
                                       pairs: DataFrame, n: Int)
+      extends graft.sources.Stored[SourceOverlapStore] {
+    def tables = Seq("rows" -> rows, "sizes" -> sizes, "pairs" -> pairs)
+    def withTables(fs: Seq[DataFrame]) = copy(rows = fs(0), sizes = fs(1), pairs = fs(2))
+  }
 
   /** Build [[SourceOverlapStore]] state for an initial corpus. */
   def sourceOverlapStore(docs: DataFrame, n: Int): SourceOverlapStore = {

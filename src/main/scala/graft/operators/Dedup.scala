@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Hashing, Text, Vec}
+import graft.sources.Stored
 
 /** D-family: deduplication for a training-data corpus.
   *
@@ -19,8 +20,8 @@ object Dedup {
 
   /** Bounded cache bracket for one-shot dedup runs: every slim frame
     * the operators persist inside `body` (keyed fingerprints, shingle
-    * arrays/rows, delta stores) is released when the bracket exits —
-    * the dedup analog of [[Similarity.knnBruteForceCached]]. Plain
+    * arrays/rows, delta stores) is released when the bracket exits
+    * ([[Similarity.cached]] is the same bracket). Plain
     * calls keep the session-lifetime contract (right for repeated
     * queries over one corpus); a batch job sweeping many corpora or
     * ingests wraps each unit of work in `cached` so cache entries
@@ -212,7 +213,10 @@ object Dedup {
     * `spanTokens` is the build's window width, which every ingest must
     * split with. Both tables are bucketed on fp at scale. */
   final case class ParagraphStore(keepers: DataFrame, members: DataFrame,
-                                  spanTokens: Int)
+                                  spanTokens: Int) extends Stored[ParagraphStore] {
+    def tables = Seq("keepers" -> keepers, "members" -> members)
+    def withTables(fs: Seq[DataFrame]) = copy(keepers = fs(0), members = fs(1))
+  }
 
   def paragraphStore(docs: DataFrame, spanTokens: Int = 16): ParagraphStore = {
     val members = spanFps(docs, spanTokens)
@@ -352,7 +356,10 @@ object Dedup {
     * delta or retraction join is pre-partitioned — no store shuffle
     * (spec-asserted in StoreRoundTripSpec). */
   final case class ExactStore(keepers: DataFrame, members: DataFrame,
-                              carry: Seq[String])
+                              carry: Seq[String]) extends Stored[ExactStore] {
+    def tables = Seq("keepers" -> keepers, "members" -> members)
+    def withTables(fs: Seq[DataFrame]) = copy(keepers = fs(0), members = fs(1))
+  }
 
   def exactStore(docs: DataFrame): ExactStore =
     exactStoreOf(docs.select(col("doc_id"), storeFp.as("fp")), Nil)
@@ -845,11 +852,13 @@ object Dedup {
     * τ it was sized for, so every delta requires `tau >= store.tau`.
     * [[prefixIngest]] and [[prefixStoreRetract]] are written once
     * against this layout. */
-  sealed trait PrefixStore[S <: PrefixStore[S]] {
+  sealed trait PrefixStore[S <: PrefixStore[S]] extends Stored[S] {
     def rows: DataFrame
     def prefix: DataFrame
     def tau: Double
-    def withTables(rows: DataFrame, prefix: DataFrame, tau: Double): S
+    def tables = Seq("rows" -> rows, "prefix" -> prefix)
+    /** This store with its build threshold raised to `tau`. */
+    def withTau(tau: Double): S
   }
 
   /** The word n-gram shingle store ([[shingleRows]] at width `n`): one
@@ -857,8 +866,8 @@ object Dedup {
     * which shingle their deltas at the store's `n`. */
   final case class ShingleStore(rows: DataFrame, prefix: DataFrame, n: Int,
                                 tau: Double) extends PrefixStore[ShingleStore] {
-    def withTables(rows: DataFrame, prefix: DataFrame,
-                   tau: Double): ShingleStore = ShingleStore(rows, prefix, n, tau)
+    def withTables(fs: Seq[DataFrame]) = copy(rows = fs(0), prefix = fs(1))
+    def withTau(tau: Double) = copy(tau = tau)
   }
 
   /** Build [[ShingleStore]] state for an initial corpus. */
@@ -876,9 +885,8 @@ object Dedup {
   final case class ItemJaccardStore(rows: DataFrame, prefix: DataFrame,
                                     tau: Double)
       extends PrefixStore[ItemJaccardStore] {
-    def withTables(rows: DataFrame, prefix: DataFrame,
-                   tau: Double): ItemJaccardStore =
-      ItemJaccardStore(rows, prefix, tau)
+    def withTables(fs: Seq[DataFrame]) = copy(rows = fs(0), prefix = fs(1))
+    def withTau(tau: Double) = copy(tau = tau)
   }
 
   /** Build [[ItemJaccardStore]] state from (doc_id, s) item rows. */
@@ -906,8 +914,8 @@ object Dedup {
   private def prefixIngest[S <: PrefixStore[S]](store: S, dIds: DataFrame,
       dRows: DataFrame, dPrefix: DataFrame, tau: Double): (DataFrame, S) =
     (store.prefix.join(dIds, Seq("doc_id"), "left_anti"),
-      store.withTables(evictAppend(store.rows, dIds, dRows, "doc_id"),
-        evictAppend(store.prefix, dIds, dPrefix, "doc_id"), tau))
+      store.withTables(Seq(evictAppend(store.rows, dIds, dRows, "doc_id"),
+        evictAppend(store.prefix, dIds, dPrefix, "doc_id"))).withTau(tau))
 
   /** RETRACTION for every prefix-filter store: election-free, so
     * erasure is two anti-joins — the retracted docs' rows and blocking
@@ -918,8 +926,8 @@ object Dedup {
     * survivors would. */
   def prefixStoreRetract[S <: PrefixStore[S]](store: S,
                                               retractIds: DataFrame): S =
-    store.withTables(dropRetracted(store.rows, retractIds, "doc_id"),
-      dropRetracted(store.prefix, retractIds, "doc_id"), store.tau)
+    store.withTables(Seq(dropRetracted(store.rows, retractIds, "doc_id"),
+      dropRetracted(store.prefix, retractIds, "doc_id")))
 
   /** Incremental (delta) containment — both DIRECTIONS of the
     * asymmetric pair need their own blocking: a delta doc contained
@@ -1065,6 +1073,10 @@ object Dedup {
     * candidate join and verify join read them pre-partitioned. */
   final case class MinHashStore(banded: DataFrame, shingles: DataFrame,
                                 n: Int, bands: Int, rowsPerBand: Int)
+      extends Stored[MinHashStore] {
+    def tables = Seq("banded" -> banded, "shingles" -> shingles)
+    def withTables(fs: Seq[DataFrame]) = copy(banded = fs(0), shingles = fs(1))
+  }
 
   /** Build [[MinHashStore]] state for a corpus. The (doc_id, sh)
     * shingle ARRAYS are the only evaluation of the tokenize→shingle
@@ -1681,6 +1693,12 @@ object Dedup {
                                      nTables: Int = 6,
                                      planesPerTable: Int = 4,
                                      dim: Int = 64)
+      extends Stored[SemanticBestStore] {
+    def tables = Seq("bits" -> bits, "graph" -> graph, "assignment" -> assignment,
+      "pairs" -> pairs)
+    def withTables(fs: Seq[DataFrame]) =
+      copy(bits = fs(0), graph = fs(1), assignment = fs(2), pairs = fs(3))
+  }
 
   /** Build [[SemanticBestStore]] state for an initial corpus — the
     * same [[semanticBestFrames]] pipeline the batch row runs, so the
@@ -2155,6 +2173,11 @@ object Dedup {
     * subgraph-selection joins read them pre-partitioned. */
   final case class KeepBestStore(pairs: DataFrame, scores: DataFrame,
                                  assignment: DataFrame, score: Column)
+      extends Stored[KeepBestStore] {
+    def tables = Seq("pairs" -> pairs, "scores" -> scores, "assignment" -> assignment)
+    def withTables(fs: Seq[DataFrame]) =
+      copy(pairs = fs(0), scores = fs(1), assignment = fs(2))
+  }
 
   /** Build [[KeepBestStore]] state for an initial corpus. */
   def keepBestStore(docs: DataFrame, pairs0: DataFrame,
@@ -2322,6 +2345,10 @@ object Dedup {
     * error, just non-pairs. */
   final case class EmbeddingLshStore(bucketed: DataFrame, nTables: Int,
                                      planesPerTable: Int, dim: Int)
+      extends Stored[EmbeddingLshStore] {
+    def tables = Seq("bucketed" -> bucketed)
+    def withTables(fs: Seq[DataFrame]) = copy(bucketed = fs.head)
+  }
 
   /** Build [[EmbeddingLshStore]] state for a corpus. */
   def embeddingLshStore(embeddings: DataFrame, nTables: Int = 6,
@@ -2647,6 +2674,11 @@ object Dedup {
     * `*Store` (StoreRoundTripSpec's layout contract). */
   final case class SemanticStore(lsh: EmbeddingLshStore,
                                  assignment: DataFrame, tau: Double)
+      extends Stored[SemanticStore] {
+    def tables = Seq("assignment" -> assignment, "lsh" -> lsh.bucketed)
+    def withTables(fs: Seq[DataFrame]) =
+      copy(lsh = lsh.withTables(fs.drop(1)), assignment = fs(0))
+  }
 
   /** Build [[SemanticStore]] state for an initial corpus.
     *
@@ -2682,6 +2714,12 @@ object Dedup {
       semanticKeepersDedup(embeddings, tau, nTables, planesPerTable, dim)
         .select(col("vec_id"), col("cluster_id")), tau)
   }
+
+  /** [[semanticStore]]'s tables and parameters at its default
+    * geometry, with no frames: the shape a stream bootstrap reads a
+    * published semantic store back at. */
+  def semanticStoreShape(tau: Double): SemanticStore =
+    SemanticStore(EmbeddingLshStore(null, 6, 4, 64), null, tau)
 
   /** Incremental SEMANTIC dedup — the keeper-assignment delta the
     * pair-level [[embeddingNearDupLshDelta]] stops short of. EXACT:

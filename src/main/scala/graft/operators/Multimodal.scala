@@ -202,14 +202,14 @@ object Multimodal {
     * silently slice different frames than the store holds. */
   final case class PayloadNearDupStore(store: Dedup.ItemJaccardStore,
                                        frameLen: Int, stride: Int)
+      extends graft.sources.Stored[PayloadNearDupStore] {
+    def tables = store.tables
+    def withTables(fs: Seq[DataFrame]) = copy(store = store.withTables(fs))
+  }
 
-  /** THE default frame geometry — one definition consumed by every
-    * frame-slicing default below AND by registry bindings that
-    * reconstruct a [[PayloadNearDupStore]] from persisted tables
-    * (r15, ADVICE r14: the mm_payload_neardup_delta binding
-    * hard-coded (64, 48) beside these defaults; changing either side
-    * would have silently desynced the persisted rows/prefixes from
-    * the geometry the delta slices with). */
+  /** THE default frame geometry, consumed by every frame-slicing
+    * default here; a read-back [[PayloadNearDupStore]] keeps its
+    * build's geometry through the [[graft.sources.Stored]] contract. */
   val DefaultFrameLen: Int = 64
   val DefaultStride: Int = 48
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Vec
 import graft.plans.Exprs
+import graft.sources.Stored
 
 /** E-family: nearest-neighbor search over an embedding column.
   *
@@ -155,9 +156,39 @@ object Similarity {
     * score set. */
   def knnBruteForce(embeddings: DataFrame, probes: DataFrame, k: Int,
                     maxBroadcastProbes: Long = DefaultMaxBroadcastProbes,
-                    maxProbeShards: Int = DefaultMaxProbeShards): DataFrame =
-    knnBruteForceImpl(embeddings, probes, k, maxBroadcastProbes,
-      maxProbeShards)._1
+                    maxProbeShards: Int = DefaultMaxProbeShards): DataFrame = {
+    val e = embeddings.select(col("vec_id"), col("embedding").as("v"),
+      Vec.norm(col("embedding")).as("vnrm"))
+    val p = probes.select(col("vec_id").as("probe_id"), col("embedding").as("pv"),
+      Vec.norm(col("embedding")).as("pnrm"))
+    if (fitsBroadcast(p, maxBroadcastProbes))
+      rankTopK(scoreAgainst(broadcast(p), e), k)
+    else {
+      // over the cap: persist the probe frame once — the exact count
+      // below and every shard's broadcast build re-read it (without
+      // this, an N-shard fan-out recomputes the probe lineage N+1
+      // times). CacheManager dedupes by plan, so repeat queries over
+      // the same probe frame share the one entry; a caller's
+      // CacheTracker bracket releases it with every other operator
+      // persist.
+      val pc = CacheTracker.persistTracked(p)
+      val total = pc.count()
+      // shards target ~90% of the cap so hash variance stays under it
+      val target = math.max(1L, maxBroadcastProbes * 9L / 10L)
+      val shards = ((total + target - 1L) / target).toInt
+      if (shards <= maxProbeShards) {
+        // pmod(xxhash64): total over [0, shards) for ANY id value —
+        // a plain `id % p * a % m % shards` is negative for negative
+        // ids (those probes would match no shard and vanish from the
+        // output) and collapses ids sharing a residue mod p into one
+        // over-sized shard.
+        val shardOf = pmod(xxhash64(col("probe_id")), lit(shards.toLong))
+        (0 until shards)
+          .map(s => rankTopK(scoreAgainst(broadcast(pc.filter(shardOf === s)), e), k))
+          .reduce(_ union _)
+      } else rankTopK(scoreAgainst(pc, e), k)
+    }
+  }
 
   /** FILTERED exact kNN — the filtered-search shape every production
     * vector store needs ("nearest neighbors WHERE <attribute
@@ -184,62 +215,6 @@ object Similarity {
       col("vec_id").as("probe_id"),
       col("embedding").as("pv"), Vec.norm(col("embedding")).as("pnrm"))
     rankTopK(scoreAgainst(p, e, joinKeys = Seq("label")), k)
-  }
-
-  /** [[knnBruteForce]] with a BOUNDED cache contract: runs `consume`
-    * on the result frame and unpersists the probe cache the over-cap
-    * sharded path pinned before returning. Long-lived sessions issuing
-    * many DISTINCT over-cap probe frames should use this bracket —
-    * plain [[knnBruteForce]] leaves the (plan-deduped) probe cache
-    * entry alive for the session, which is right for repeated queries
-    * over the same probe frame and an accumulating leak across many
-    * different ones. The result must be fully consumed inside
-    * `consume`: after the bracket returns, the frame's probe lineage
-    * recomputes from source. */
-  def knnBruteForceCached[T](embeddings: DataFrame, probes: DataFrame, k: Int,
-                             maxBroadcastProbes: Long = DefaultMaxBroadcastProbes,
-                             maxProbeShards: Int = DefaultMaxProbeShards)
-                            (consume: DataFrame => T): T = {
-    val (res, cached) = knnBruteForceImpl(embeddings, probes, k,
-      maxBroadcastProbes, maxProbeShards)
-    try consume(res) finally cached.foreach(_.unpersist())
-  }
-
-  private def knnBruteForceImpl(embeddings: DataFrame, probes: DataFrame,
-                                k: Int, maxBroadcastProbes: Long,
-                                maxProbeShards: Int): (DataFrame, Option[DataFrame]) = {
-    val e = embeddings.select(col("vec_id"), col("embedding").as("v"),
-      Vec.norm(col("embedding")).as("vnrm"))
-    val p = probes.select(col("vec_id").as("probe_id"), col("embedding").as("pv"),
-      Vec.norm(col("embedding")).as("pnrm"))
-    if (fitsBroadcast(p, maxBroadcastProbes))
-      (rankTopK(scoreAgainst(broadcast(p), e), k), None)
-    else {
-      // over the cap: persist the probe frame once — the exact count
-      // below and every shard's broadcast build re-read it (without
-      // this, an N-shard fan-out recomputes the probe lineage N+1
-      // times). CacheManager dedupes by plan, so repeat queries over
-      // the same probe frame share the one entry; the Cached bracket
-      // above releases it for one-shot probe frames.
-      val pc = p.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val total = pc.count()
-      // shards target ~90% of the cap so hash variance stays under it
-      val target = math.max(1L, maxBroadcastProbes * 9L / 10L)
-      val shards = ((total + target - 1L) / target).toInt
-      val res =
-        if (shards <= maxProbeShards) {
-          // pmod(xxhash64): total over [0, shards) for ANY id value —
-          // a plain `id % p * a % m % shards` is negative for negative
-          // ids (those probes would match no shard and vanish from the
-          // output) and collapses ids sharing a residue mod p into one
-          // over-sized shard.
-          val shardOf = pmod(xxhash64(col("probe_id")), lit(shards.toLong))
-          (0 until shards)
-            .map(s => rankTopK(scoreAgainst(broadcast(pc.filter(shardOf === s)), e), k))
-            .reduce(_ union _)
-        } else rankTopK(scoreAgainst(pc, e), k)
-      (res, Some(pc))
-    }
   }
 
   /** recall@k of an approximate ANN result against the exact
@@ -528,8 +503,8 @@ object Similarity {
 
   /** Release-on-exit bracket for the operators' internal persists
     * (the PQ seed frame) — the similarity-family analog of
-    * [[Dedup.cached]]; [[knnBruteForceCached]] remains the dedicated
-    * bracket for over-cap probe caches. */
+    * [[Dedup.cached]]; it releases [[knnBruteForce]]'s over-cap probe
+    * cache too. */
   def cached[T](body: => T): T = CacheTracker.scoped(body)
 
   /** One-row (seeds: array<array<double>>) sub-quantizer frame: the
@@ -586,6 +561,10 @@ object Similarity {
     * needs. At corpus scale both are maintained tables; the code table
     * is the RAM-resident representation PQ exists for. */
   final case class PqIndex(codes: DataFrame, seeds: DataFrame)
+      extends Stored[PqIndex] {
+    def tables = Seq("codes" -> codes, "seeds" -> seeds)
+    def withTables(fs: Seq[DataFrame]) = PqIndex(fs(0), fs(1))
+  }
 
   /** Build [[PqIndex]] state for a corpus: ONE scan (the encode is a
     * projection under the broadcast seed frame). */
@@ -678,7 +657,10 @@ object Similarity {
     * query batch from it — [[knnIvfPq]] re-assigns and re-encodes the
     * whole corpus per call. */
   final case class IvfPqIndex(indexed: DataFrame, centroids: DataFrame,
-                              seeds: DataFrame)
+                              seeds: DataFrame) extends Stored[IvfPqIndex] {
+    def tables = Seq("indexed" -> indexed, "centroids" -> centroids, "seeds" -> seeds)
+    def withTables(fs: Seq[DataFrame]) = IvfPqIndex(fs(0), fs(1), fs(2))
+  }
 
   /** Build [[IvfPqIndex]] state: cell argmax + code argmin as sibling
     * per-row projections of the same scan (the [[knnIvfPq]] build
@@ -762,6 +744,10 @@ object Similarity {
     * codebook frame. Build once, serve every query batch from it —
     * [[knnIvf]] re-assigns the whole corpus per call. */
   final case class IvfIndex(assigned: DataFrame, centroids: DataFrame)
+      extends Stored[IvfIndex] {
+    def tables = Seq("assigned" -> assigned, "centroids" -> centroids)
+    def withTables(fs: Seq[DataFrame]) = IvfIndex(fs(0), fs(1))
+  }
 
   /** Build [[IvfIndex]] state (seed or Lloyd's-trained codebook).
     * `carry` columns ride the assigned table beside (vec_id, v, cell)
@@ -988,6 +974,11 @@ object Similarity {
     * `edges`, the LSH bucket store they were ranked over, and `k`. */
   final case class KnnGraphStore(edges: DataFrame,
                                  lsh: Dedup.EmbeddingLshStore, k: Int)
+      extends Stored[KnnGraphStore] {
+    def tables = Seq("edges" -> edges, "lsh" -> lsh.bucketed)
+    def withTables(fs: Seq[DataFrame]) =
+      copy(edges = fs(0), lsh = lsh.withTables(fs.drop(1)))
+  }
 
   def knnGraphStore(embeddings: DataFrame, k: Int, nTables: Int = 4,
                     planesPerTable: Int = 6, dim: Int = 64): KnnGraphStore = {

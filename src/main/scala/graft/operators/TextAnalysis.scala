@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
+import graft.sources.Stored
 
 /** C-family: text analysis for a training-data pipeline — token
   * accounting, quality scoring, language ID, fingerprinting, corpus
@@ -415,6 +416,10 @@ object TextAnalysis {
     * bucketed on `bigram`, the ledger on `doc_id`; the ledger grows
     * with total takedowns, not the corpus. */
   final case class LmCountsStore(counts: DataFrame, retracted: DataFrame)
+      extends Stored[LmCountsStore] {
+    def tables = Seq("counts" -> counts, "retracted" -> retracted)
+    def withTables(fs: Seq[DataFrame]) = LmCountsStore(fs(0), fs(1))
+  }
 
   /** Build [[LmCountsStore]] state for a corpus (empty ledger). */
   def lmCountsStore(docs: DataFrame): LmCountsStore =
@@ -585,6 +590,10 @@ object TextAnalysis {
     * should not pay a count job per request (the bench bindings
     * memoize it at build time for the same reason). */
   final case class PostingsStore(postings: DataFrame, docIds: DataFrame)
+      extends Stored[PostingsStore] {
+    def tables = Seq("postings" -> postings, "doc_ids" -> docIds)
+    def withTables(fs: Seq[DataFrame]) = PostingsStore(fs(0), fs(1))
+  }
 
   /** Build [[PostingsStore]] state for a corpus (ONE tokenization
     * scan for the postings + a column projection for the id tier). */

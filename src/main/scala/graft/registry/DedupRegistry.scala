@@ -3,7 +3,7 @@ package graft.registry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.Dedup
-import graft.sources.{StoredTable, Tables}
+import graft.sources.Tables
 
 /** D-family bindings. Since r12 the hash-sketch family (dd_minhash,
   * dd_simhash and their delta/composed forms) is ORACLE-checked too:
@@ -368,17 +368,9 @@ object DedupRegistry {
     "dd_semantic_delta" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val c = org.apache.spark.sql.functions.col("vec_id")
-      val (paths, _) = ServingIndexes.once("semstore", d) {
-        val st = Dedup.semanticStore(emb.filter(c % DeltaMod =!= 0), CosineTau)
-        (Seq(st.lsh.bucketed, st.assignment), 0L)
-      }
       Dedup.semanticKeepersDelta(
-        Dedup.SemanticStore(
-          // read-back names the build's parameters: the store above was
-          // built with the Dedup family's 6×4×64 defaults at CosineTau
-          Dedup.EmbeddingLshStore(StoredTable.read(s, paths.head),
-            nTables = 6, planesPerTable = 4, dim = 64),
-          StoredTable.read(s, paths(1)), CosineTau),
+        ServingIndexes.once(s, "semstore", d)(
+          Dedup.semanticStore(emb.filter(c % DeltaMod =!= 0), CosineTau)),
         emb.filter(c % DeltaMod === 0)).assignment
     }),
     "dd_minhash_dedup" -> ((s, d) => {
@@ -422,21 +414,14 @@ object DedupRegistry {
     "dd_exact_retract" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val c = org.apache.spark.sql.functions.col("doc_id")
-      val (paths, _) = ServingIndexes.once("exactstore", d) {
-        val st = Dedup.exactStore(docs)
-        (Seq(st.keepers, st.members), 0L)
-      }
-      val r = Dedup.exactRetract(Dedup.ExactStore(
-          StoredTable.read(s, paths.head), StoredTable.read(s, paths(1)), Nil),
+      val r = Dedup.exactRetract(
+        ServingIndexes.once(s, "exactstore", d)(Dedup.exactStore(docs)),
         docs.filter(c % RetractMod === RetractRem).select("doc_id"))
-      val pub = graft.sources.VersionedStore.write(
+      val pub = graft.sources.VersionedStore.publish(s,
         exactRetractStoreDir.getOrElseUpdate(d,
           graft.sources.Sinks.TempDirs.create("graft_exact_rstore")),
-        Seq("keepers" -> r.updatedStore.keepers,
-          "members" -> r.updatedStore.members))
-      val k1 = StoredTable.read(s, pub.head)
-      val m1 = StoredTable.read(s, pub(1))
-      m1.join(k1, Seq("fp"))
+        r.updatedStore)
+      pub.members.join(pub.keepers, Seq("fp"))
         .select(org.apache.spark.sql.functions.col("doc_id"),
           org.apache.spark.sql.functions.col("keep_id"),
           (org.apache.spark.sql.functions.col("doc_id") =!=
@@ -465,18 +450,11 @@ object DedupRegistry {
   )
 
   /** The semantic-best store built over `emb`, memoized per corpus dir
-    * under `kind` ([[ServingIndexes.once]]) and read back from its four
-    * tables in the store's field order. */
+    * under `kind` ([[ServingIndexes.once]]). */
   private def semanticBestMemo(s: SparkSession, d: String, kind: String,
-                               emb: => DataFrame): Dedup.SemanticBestStore = {
-    val (paths, _) = ServingIndexes.once(kind, d) {
-      val st = Dedup.semanticBestStore(emb, CosineTau, SimilarityRegistry.K)
-      (Seq(st.bits, st.graph, st.assignment, st.pairs), 0L)
-    }
-    val Seq(bits, graph, assignment, pairs) = paths.map(StoredTable.read(s, _))
-    Dedup.SemanticBestStore(bits, graph, assignment, pairs, CosineTau,
-      SimilarityRegistry.K)
-  }
+                               emb: => DataFrame): Dedup.SemanticBestStore =
+    ServingIndexes.once(s, kind, d)(
+      Dedup.semanticBestStore(emb, CosineTau, SimilarityRegistry.K))
 
   /** dd_semantic_best's full CTE chain — LSH pairs → closure →
     * nested pagerank replay → two-stage election — parameterized by

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Multimodal
-import graft.sources.{StoredTable, Tables}
+import graft.sources.Tables
 
 /** F-family bindings. The oracle works on `text` directly: the payload
   * is its UTF-8 encoding and the corpus is pure ASCII (verified, and
@@ -70,21 +70,11 @@ object MultimodalRegistry {
     "mm_payload_neardup_delta" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val c = col("doc_id")
-      val (paths, _) = ServingIndexes.once("mmframes", d) {
-        val st = Multimodal.payloadNearDupStore(
-          docs.filter(c % DedupRegistry.DeltaMod =!= 0), NearDupTau)
-        (Seq(st.store.rows, st.store.prefix), 0L)
-      }
-      // the read-back prefix-filter store (Dedup.ItemJaccardStore)
-      // takes its geometry from the named constants: the delta must
-      // slice the same frames the persisted rows/prefixes were built
-      // from — payloadNearDupStore's own defaults, never literals
+      // the read-back store keeps its build's frame geometry, so the
+      // delta slices the frames the stored rows/prefixes came from
       Multimodal.payloadNearDupDelta(
-        Multimodal.PayloadNearDupStore(
-          graft.operators.Dedup.ItemJaccardStore(
-            StoredTable.read(s, paths.head), StoredTable.read(s, paths(1)),
-            NearDupTau),
-          Multimodal.DefaultFrameLen, Multimodal.DefaultStride),
+        ServingIndexes.once(s, "mmframes", d)(Multimodal.payloadNearDupStore(
+          docs.filter(c % DedupRegistry.DeltaMod =!= 0), NearDupTau)),
         docs.filter(c % DedupRegistry.DeltaMod === 0), NearDupTau).pairs
     }),
   )

@@ -3,7 +3,7 @@ package graft.registry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.Similarity
-import graft.sources.{StoredTable, Tables}
+import graft.sources.{Stored, Tables}
 
 /** E-family bindings. Every E row is oracle-checked — the
   * hyperplanes and the seed codebook are deterministic, so the
@@ -165,22 +165,13 @@ object SimilarityRegistry {
       Similarity.knnLshIndexed(grown, probes(s, d), K)
     }),
     "knn_lsh_served" -> ((s, d) => {
-      val (paths, _) = ServingIndexes.once("lsh", d) {
-        (Seq(graft.operators.Dedup.embeddingLshStore(Tables.embeddings(s, d),
-          nTables = 4, planesPerTable = 6).bucketed), 0L)
-      }
-      Similarity.knnLshIndexed(graft.operators.Dedup.EmbeddingLshStore(
-        StoredTable.read(s, paths.head), 4, 6, 64), probes(s, d), K)
+      val lsh = ServingIndexes.once(s, "lsh", d)(
+        graft.operators.Dedup.embeddingLshStore(Tables.embeddings(s, d),
+          nTables = 4, planesPerTable = 6))
+      Similarity.knnLshIndexed(lsh, probes(s, d), K)
     }),
-    "knn_ivf_served" -> ((s, d) => {
-      val (paths, _) = ServingIndexes.once("ivf", d) {
-        val idx = Similarity.ivfIndex(Tables.embeddings(s, d), CentroidMod)
-        (Seq(idx.assigned, idx.centroids), 0L)
-      }
-      Similarity.knnIvfIndexed(
-        Similarity.IvfIndex(StoredTable.read(s, paths.head), StoredTable.read(s, paths(1))),
-        probes(s, d), K, NProbe)
-    }),
+    "knn_ivf_served" -> ((s, d) =>
+      Similarity.knnIvfIndexed(ivfServed(s, d), probes(s, d), K, NProbe)),
     // retraction reaching the VECTOR serving store (r18, VERDICT r17
     // item #4 — the E-family's first driver-graded takedown; until
     // now its retracts were spec-only): the SAME memoized IVF index
@@ -195,13 +186,8 @@ object SimilarityRegistry {
     // index rebuild (the build is the memoized warm-up, the
     // knn_ivf_served discipline).
     "knn_ivf_retract" -> ((s, d) => {
-      val (paths, _) = ServingIndexes.once("ivf", d) {
-        val idx = Similarity.ivfIndex(Tables.embeddings(s, d), CentroidMod)
-        (Seq(idx.assigned, idx.centroids), 0L)
-      }
       val c = org.apache.spark.sql.functions.col("vec_id")
-      val shrunk = Similarity.ivfRetract(
-        Similarity.IvfIndex(StoredTable.read(s, paths.head), StoredTable.read(s, paths(1))),
+      val shrunk = Similarity.ivfRetract(ivfServed(s, d),
         Tables.embeddings(s, d).filter(c % RetractVecMod === 0)
           .select("vec_id"))
       Similarity.knnIvfIndexed(shrunk,
@@ -216,14 +202,11 @@ object SimilarityRegistry {
     // predicate; a production id-list/range probe set lands in
     // PushedFilters, and a vec_id-bucketed graph layout prunes the
     // lookup to the touched groups.)
-    "knn_graph_served" -> ((s, d) => {
-      val (paths, _) = ServingIndexes.once("knngraph", d) {
-        (Seq(Similarity.knnGraph(Tables.embeddings(s, d), K)), 0L)
-      }
-      StoredTable.read(s, paths.head)
+    "knn_graph_served" -> ((s, d) =>
+      ServingIndexes.once(s, "knngraph", d)(
+        Stored.Table(Similarity.knnGraph(Tables.embeddings(s, d), K))).frame
         .filter(org.apache.spark.sql.functions.col("vec_id")
-          % ProbeMod === 0)
-    }),
+          % ProbeMod === 0)),
     // TRAINED-IVF serving (r13): the Lloyd's-refined codebook is the
     // most expensive index build in the family (3 training passes
     // over the corpus), which makes it the index MOST worth
@@ -233,14 +216,9 @@ object SimilarityRegistry {
     // fresh build and knn_ivf_trained's quantized-Lloyd's oracle
     // holds verbatim.
     "knn_ivf_trained_served" -> ((s, d) => {
-      val (paths, _) = ServingIndexes.once("ivf_trained", d) {
-        val idx = Similarity.ivfIndex(Tables.embeddings(s, d), CentroidMod,
-          trained = true)
-        (Seq(idx.assigned, idx.centroids), 0L)
-      }
-      Similarity.knnIvfIndexed(
-        Similarity.IvfIndex(StoredTable.read(s, paths.head), StoredTable.read(s, paths(1))),
-        probes(s, d), K, NProbe)
+      val idx = ServingIndexes.once(s, "ivf_trained", d)(
+        Similarity.ivfIndex(Tables.embeddings(s, d), CentroidMod, trained = true))
+      Similarity.knnIvfIndexed(idx, probes(s, d), K, NProbe)
     }),
     // attribute-filtered serving (r13): the ONE persisted
     // label-carrying IVF index answers every predicate value — the
@@ -248,35 +226,27 @@ object SimilarityRegistry {
     // shared scoring core, so a new filter value never rebuilds
     // anything and the query pays (cell occupancy ∩ class) work.
     "knn_ivf_filtered_served" -> ((s, d) => {
-      val (paths, _) = ServingIndexes.once("ivf_labeled", d) {
-        val idx = Similarity.ivfIndex(Tables.embeddings(s, d), CentroidMod,
-          carry = Seq("label"))
-        (Seq(idx.assigned, idx.centroids), 0L)
-      }
-      Similarity.knnIvfFilteredIndexed(
-        Similarity.IvfIndex(StoredTable.read(s, paths.head), StoredTable.read(s, paths(1))),
-        probes(s, d), K, NProbe)
+      val idx = ServingIndexes.once(s, "ivf_labeled", d)(
+        Similarity.ivfIndex(Tables.embeddings(s, d), CentroidMod,
+          carry = Seq("label")))
+      Similarity.knnIvfFilteredIndexed(idx, probes(s, d), K, NProbe)
     }),
     "knn_ivfpq_served" -> ((s, d) => {
-      val (paths, _) = ServingIndexes.once("ivfpq", d) {
-        val idx = Similarity.ivfPqIndex(Tables.embeddings(s, d), CentroidMod)
-        (Seq(idx.indexed, idx.centroids, idx.seeds), 0L)
-      }
-      Similarity.knnIvfPqIndexed(
-        Similarity.IvfPqIndex(StoredTable.read(s, paths.head),
-          StoredTable.read(s, paths(1)), StoredTable.read(s, paths(2))),
-        probes(s, d), K, NProbe)
+      val idx = ServingIndexes.once(s, "ivfpq", d)(
+        Similarity.ivfPqIndex(Tables.embeddings(s, d), CentroidMod))
+      Similarity.knnIvfPqIndexed(idx, probes(s, d), K, NProbe)
     }),
-    "knn_pq_served" -> ((s, d) => {
-      val (paths, _) = ServingIndexes.once("pq", d) {
-        val idx = Similarity.pqIndex(Tables.embeddings(s, d))
-        (Seq(idx.codes, idx.seeds), 0L)
-      }
-      Similarity.knnPqIndexed(
-        Similarity.PqIndex(StoredTable.read(s, paths.head), StoredTable.read(s, paths(1))),
-        probes(s, d), K)
-    }),
+    "knn_pq_served" -> ((s, d) =>
+      Similarity.knnPqIndexed(ServingIndexes.once(s, "pq", d)(
+        Similarity.pqIndex(Tables.embeddings(s, d))), probes(s, d), K)),
   )
+
+  /** The seed-codebook IVF index over the corpus, memoized per corpus
+    * dir: the one artifact knn_ivf_served, knn_ivf_retract and
+    * st_knn_indexed read. */
+  def ivfServed(s: SparkSession, d: String): Similarity.IvfIndex =
+    ServingIndexes.once(s, "ivf", d)(
+      Similarity.ivfIndex(Tables.embeddings(s, d), CentroidMod))
 
   /** knn_ivf's replay — ONE spelling shared by the build, served,
     * delta, and retract rows so the four oracles cannot drift (the

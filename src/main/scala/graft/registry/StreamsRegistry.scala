@@ -2,7 +2,6 @@ package graft.registry
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.{StoredTable, Tables}
 import graft.streaming.Streams
 
 /** G-family bindings. Both queries execute a real Structured Streaming
@@ -74,23 +73,15 @@ object StreamsRegistry {
     // store (the same persisted index the batch knn_ivf_served row
     // reads — one artifact, two consumers), probe-side work only per
     // batch; drained ≡ batch knn_ivf_served, its SQL verbatim.
-    "st_knn_indexed" -> ((s, d) => {
-      val (paths, _) = ServingIndexes.once("ivf", d) {
-        val idx = graft.operators.Similarity.ivfIndex(
-          Tables.embeddings(s, d), SimilarityRegistry.CentroidMod)
-        (Seq(idx.assigned, idx.centroids), 0L)
-      }
-      // mod passed EXPLICITLY (r15, ADVICE r14): the oracle is
-      // knn_ivf_served's SQL, which slices probes by vec_id %
-      // SimilarityRegistry.ProbeMod — relying on knnIndexedServe's
-      // default silently coinciding would desync the streamed probe
-      // set from the oracle if ProbeMod ever changed
-      Streams.knnIndexedServe(s, d,
-        graft.operators.Similarity.IvfIndex(
-          StoredTable.read(s, paths.head), StoredTable.read(s, paths(1))),
+    // mod passed EXPLICITLY (r15, ADVICE r14): the oracle is
+    // knn_ivf_served's SQL, which slices probes by vec_id %
+    // SimilarityRegistry.ProbeMod — relying on knnIndexedServe's
+    // default silently coinciding would desync the streamed probe set
+    // from the oracle if ProbeMod ever changed
+    "st_knn_indexed" -> ((s, d) =>
+      Streams.knnIndexedServe(s, d, SimilarityRegistry.ivfServed(s, d),
         SimilarityRegistry.K, SimilarityRegistry.NProbe,
-        SimilarityRegistry.ProbeMod)
-    }),
+        SimilarityRegistry.ProbeMod)),
     // streaming PII scrub: stateless append-mode projection — no state
     // store; drained ≡ the batch scrub, so its SQL is the oracle
     // verbatim.

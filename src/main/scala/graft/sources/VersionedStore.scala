@@ -166,6 +166,18 @@ object VersionedStore {
            tables: Seq[String]): Option[Seq[DataFrame]] =
     resolve(storeDir, tables).map(_.map(StoredTable.read(spark, _)))
 
+  /** [[read]] by a store's contract: the live version of `like`'s
+    * tables, as `like` over the read-back frames. */
+  def read[S <: Stored[S]](spark: SparkSession, storeDir: String,
+                           like: S): Option[S] =
+    read(spark, storeDir, like.tables.map(_._1)).map(like.withTables)
+
+  /** [[write]] `store`'s tables as one version, then the store over
+    * the version's read-back frames. */
+  def publish[S <: Stored[S]](spark: SparkSession, storeDir: String,
+                              store: S): S =
+    store.withTables(write(storeDir, store.tables).map(StoredTable.read(spark, _)))
+
   /** Persist all `tables` as ONE atomic store version: CLAIM a fresh
     * `vNNNNN/` subdir atomically (starting at max existing + 1 —
     * counting orphans from crashed writes so a retry never reuses a

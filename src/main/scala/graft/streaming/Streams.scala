@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 import graft.functions.Text
-import graft.sources.{StoredTable, Tables}
+import graft.sources.Tables
 
 /** G-family: Structured Streaming surfaces of the batch operators.
   *
@@ -1116,9 +1116,7 @@ object Streams {
   /** `store` with both tables eagerly checkpointed. */
   private def checkpointed(store: graft.operators.Dedup.SemanticStore)
       : graft.operators.Dedup.SemanticStore =
-    store.copy(
-      lsh = store.lsh.copy(bucketed = store.lsh.bucketed.localCheckpoint(true)),
-      assignment = store.assignment.localCheckpoint(true))
+    store.withTables(store.tables.map(_._2.localCheckpoint(true)))
 
   /** Streaming SEMANTIC-dedup maintenance + serving ≡ batch
     * [[graft.operators.Dedup.semanticKeepers]] — the D-family's live
@@ -1131,21 +1129,6 @@ object Streams {
   def semanticServe(spark: SparkSession, dir: String,
                     tau: Double): DataFrame =
     semanticServe(spark, dir, tau, TempDirs.create("graft_st_semantic"))
-
-  /** Resolve the LIVE semantic store tables under `storeDir`:
-    * (assignment path, lsh path) — or None when no COMPLETE store
-    * exists. r13 layout: a `CURRENT` pointer file names a versioned
-    * subdir (`v00001/…`) holding BOTH tables; a pointer naming a
-    * half-written or deleted version is REJECTED (both tables must
-    * exist — the r12 advice scenario where a crash left an assignment
-    * beside a stale/deleted lsh store can no longer be trusted into a
-    * drain). Resolution goes through the shared
-    * [[graft.sources.VersionedStore]] seam, so batch retraction
-    * write-backs get the same atomicity. */
-  private[graft] def semanticStorePaths(storeDir: String): Option[(String, String)] =
-    graft.sources.VersionedStore
-      .resolve(storeDir, Seq("assignment", "lsh"))
-      .map { case Seq(asg, lsh) => (asg, lsh) }
 
   /** [[semanticServe]] with a CALLER-SUPPLIED store path — the
     * production entry point. `storeDir` holds `assignment` and `lsh`
@@ -1163,30 +1146,22 @@ object Streams {
   def semanticServe(spark: SparkSession, dir: String, tau: Double,
                     storeDir: String): DataFrame = {
     val stream = FileStreamSource(s"$dir/embeddings.parquet").stream(spark)
-    // bootstrap: the live store when present AND complete, else an
-    // EMPTY store with the exact pipeline schemas (semanticStore over
-    // a zero-row slice — the closure on no pairs is the empty
-    // assignment)
-    val store0 = semanticStorePaths(storeDir) match {
-      case Some((asg, lsh)) =>
-        graft.operators.Dedup.SemanticStore(
-          // read-back names the geometry: this serve binding builds
-          // its store with the Dedup-family defaults
-          graft.operators.Dedup.EmbeddingLshStore(
-            StoredTable.read(spark, lsh), nTables = 6, planesPerTable = 4,
-            dim = 64),
-          StoredTable.read(spark, asg), tau)
-      case None => emptySemanticStore(Tables.embeddings(spark, dir), tau)
-    }
+    // bootstrap: the live store when present AND complete (a pointer
+    // naming a version that misses either table resolves to None, so
+    // a torn store never seeds a drain), read back at the Dedup
+    // family's default geometry; else an EMPTY store with the exact
+    // pipeline schemas (semanticStore over a zero-row slice — the
+    // closure on no pairs is the empty assignment)
+    val store0 = graft.sources.VersionedStore.read(spark, storeDir,
+      graft.operators.Dedup.semanticStoreShape(tau)).getOrElse(
+      emptySemanticStore(Tables.embeddings(spark, dir), tau))
     val store = semanticMaintainFromStream(stream, store0)
     // ONE atomic publish of both tables (r18: the r13 versioned-dir +
     // pointer-promote contract now lives in the shared
     // graft.sources.VersionedStore seam — identical semantics: fresh
     // vNNNNN, orphan-skipping numbering, atomic CURRENT move,
     // one-generation reader grace, flat/staging-leftover reclaim)
-    val paths = graft.sources.VersionedStore.write(storeDir,
-      Seq("assignment" -> store.assignment, "lsh" -> store.lsh.bucketed))
-    StoredTable.read(spark, paths.head)
+    graft.sources.VersionedStore.publish(spark, storeDir, store).assignment
       .select(col("vec_id"), col("cluster_id"),
         (col("vec_id") =!= col("cluster_id")).cast("int").as("is_dup"))
   }
@@ -1276,11 +1251,8 @@ object Streams {
     } finally { qI.stop(); qT.stop() }
     // durable publish + read-back serve: the graded frame comes off
     // the PUBLISHED store, not the in-memory one
-    val paths = graft.sources.VersionedStore.write(
-      TempDirs.create("graft_st_semantic_retract"),
-      Seq("assignment" -> store.get.assignment,
-        "lsh" -> store.get.lsh.bucketed))
-    StoredTable.read(spark, paths.head)
+    graft.sources.VersionedStore.publish(spark,
+      TempDirs.create("graft_st_semantic_retract"), store.get).assignment
       .select(col("vec_id"), col("cluster_id"),
         (col("vec_id") =!= col("cluster_id")).cast("int").as("is_dup"))
   }

@@ -7,8 +7,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.registry.ServingIndexes
-import graft.sources.{StoredTable, Tables, VersionedStore}
+import graft.operators.{Dedup, Multimodal, Similarity}
+import graft.registry.{ServingIndexes, TextAnalysisRegistry}
+import graft.sources.{Stored, StoredTable, Tables, VersionedStore}
 
 /** Reads with declared schemas: source tables carry a declared schema,
   * tables graft writes carry a recorded one, and neither read submits
@@ -21,20 +22,38 @@ class DeclaredSchemaSpec extends AnyFunSuite {
   private val sfs = Seq("0.001", "0.01", "0.1").map(sf => s"/root/testdata/sf$sf")
   private val d = sfs.head
 
-  /** Registry rows and the serving-index kind each one builds. */
-  private val indexRows = Seq(
-    "dd_semantic_delta" -> "semstore", "dd_semantic_best_delta" -> "sembest",
-    "dd_exact_retract" -> "exactstore", "dd_semantic_retract" -> "sembestfull",
-    "ta_search_served" -> "postings", "ta_lm_score_served" -> "lm",
-    "knn_lsh_served" -> "lsh", "knn_ivf_served" -> "ivf",
-    "knn_graph_served" -> "knngraph", "knn_ivf_trained_served" -> "ivf_trained",
-    "knn_ivf_filtered_served" -> "ivf_labeled", "knn_ivfpq_served" -> "ivfpq",
-    "knn_pq_served" -> "pq", "mm_payload_neardup_delta" -> "mmframes")
-
-  /** The paths of a serving index its registry row has built. */
-  private def indexPaths(row: String, kind: String): Seq[String] = {
+  /** The store of `kind` its registry row has built, read back. */
+  private def built[S <: Stored[S]](row: String, kind: String): S = {
     SparkEntry.queries(row)(spark, d)
-    ServingIndexes.once(kind, d)(fail(s"$row did not build index $kind"))._1
+    ServingIndexes.once[S](spark, kind, d)(fail(s"$row did not build index $kind"))
+  }
+
+  /** Every memoized store, each built by a registry row that reads it. */
+  private def indexes: Seq[(String, Stored[_])] = Seq(
+    "semstore" -> built[Dedup.SemanticStore]("dd_semantic_delta", "semstore"),
+    "sembest" -> built[Dedup.SemanticBestStore]("dd_semantic_best_delta", "sembest"),
+    "exactstore" -> built[Dedup.ExactStore]("dd_exact_retract", "exactstore"),
+    "sembestfull" ->
+      built[Dedup.SemanticBestStore]("dd_semantic_retract", "sembestfull"),
+    "postings" -> built[TextAnalysisRegistry.Postings]("ta_search_served", "postings"),
+    "lm" -> built[Stored.Table]("ta_lm_score_served", "lm"),
+    "lsh" -> built[Dedup.EmbeddingLshStore]("knn_lsh_served", "lsh"),
+    "ivf" -> built[Similarity.IvfIndex]("knn_ivf_served", "ivf"),
+    "knngraph" -> built[Stored.Table]("knn_graph_served", "knngraph"),
+    "ivf_trained" -> built[Similarity.IvfIndex]("knn_ivf_trained_served", "ivf_trained"),
+    "ivf_labeled" -> built[Similarity.IvfIndex]("knn_ivf_filtered_served", "ivf_labeled"),
+    "ivfpq" -> built[Similarity.IvfPqIndex]("knn_ivfpq_served", "ivfpq"),
+    "pq" -> built[Similarity.PqIndex]("knn_pq_served", "pq"),
+    "mmframes" ->
+      built[Multimodal.PayloadNearDupStore]("mm_payload_neardup_delta", "mmframes"))
+
+  /** The directory each of a read-back store's tables scans. */
+  private def tablePaths(st: Stored[_]): Seq[String] = st.tables.map { case (_, df) =>
+    df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+          .location.rootPaths.head.toString
+    }.get
   }
 
   private def jobsDuring[T](body: => T): Int =
@@ -57,23 +76,20 @@ class DeclaredSchemaSpec extends AnyFunSuite {
   }
 
   test("recorded schema == inferred schema for every serving-index table") {
-    for ((row, kind) <- indexRows; p <- indexPaths(row, kind))
+    for ((kind, st) <- indexes; p <- tablePaths(st))
       assert(StoredTable.schema(spark, p) == spark.read.parquet(p).schema, s"$kind: $p")
   }
 
   test("recorded schema == inferred schema for every store-version table") {
     val emb = Tables.embeddings(spark, d)
     val docs = Tables.documents(spark, d)
-    val best = operators.Dedup.semanticBestStore(emb, registry.DedupRegistry.CosineTau,
+    val best = Dedup.semanticBestStore(emb, registry.DedupRegistry.CosineTau,
       registry.SimilarityRegistry.K)
-    val sem = operators.Dedup.semanticStore(emb, registry.DedupRegistry.CosineTau)
-    val exact = operators.Dedup.exactStore(docs)
+    val sem = Dedup.semanticStore(emb, registry.DedupRegistry.CosineTau)
+    val exact = Dedup.exactStore(docs)
     val dir = Files.createTempDirectory("graft_recorded").toString
-    val paths = VersionedStore.write(dir, Seq(
-      "bits" -> best.bits, "graph" -> best.graph, "assignment" -> best.assignment,
-      "pairs" -> best.pairs, "sem_assignment" -> sem.assignment,
-      "lsh" -> sem.lsh.bucketed, "keepers" -> exact.keepers,
-      "members" -> exact.members))
+    val paths = VersionedStore.write(dir, best.tables ++
+      sem.tables.map { case (n, df) => s"sem_$n" -> df } ++ exact.tables)
     for (p <- paths)
       assert(StoredTable.schema(spark, p) == spark.read.parquet(p).schema, p)
   }
@@ -82,15 +98,15 @@ class DeclaredSchemaSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_read_jobs").toString
     VersionedStore.write(dir, Seq("a" -> Seq((1L, "x")).toDF("id", "v"),
       "b" -> Seq(2.5).toDF("w")))
-    val ivf = indexPaths("knn_ivf_served", "ivf")
+    built[Similarity.IvfIndex]("knn_ivf_served", "ivf")
     val (frames, jobs) = Jobs.during(spark.sparkContext) {
       (VersionedStore.read(spark, dir, Seq("a", "b")).get,
-        ivf.map(StoredTable.read(spark, _)))
+        ServingIndexes.once[Similarity.IvfIndex](spark, "ivf", d)(fail("no ivf index")))
     }
     assert(jobs.isEmpty)
-    // the read is still a real scan of the files
+    // the reads are still real scans of the files
     assert(frames._1.head.as[(Long, String)].collect().toSeq == Seq((1L, "x")))
-    assert(frames._2.head.count() > 0)
+    assert(frames._2.assigned.count() > 0 && frames._2.centroids.count() > 0)
   }
 
   test("a store or index table without its schema record fails loudly") {

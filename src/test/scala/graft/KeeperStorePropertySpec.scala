@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, Multimodal}
+import graft.sources.{Stored, VersionedStore}
 
 /** Seeded generated-input properties of the min-id keeper stores, which
   * keep a keeper table beside a members table: exact text and exact
@@ -21,7 +22,9 @@ import graft.operators.{Dedup, Multimodal}
   *   - retract(build(A), R) ≡ build(A∖R);
   *   - retract∘ingest ≡ build((A∪B)∖R);
   *   - re-ingesting the same batch changes no table;
-  *   - an empty delta is the identity. */
+  *   - an empty delta is the identity;
+  *   - build(A) published through VersionedStore and read back by its
+  *     store contract ingests and retracts like the in-memory store. */
 class KeeperStorePropertySpec extends AnyFunSuite {
   import KeeperStorePropertySpec._
 
@@ -68,24 +71,23 @@ class KeeperStorePropertySpec extends AnyFunSuite {
   private def bag(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
-  private val families: Seq[Family[_]] = Seq(
+  private val families: Seq[Family[_ <: Stored[_]]] = Seq(
     Family[Dedup.ExactStore]("exact text", Dedup.exactStore,
       Dedup.exactDelta, (s, r) => Dedup.exactRetract(s, r).updatedStore,
-      s => Seq(s.keepers, s.members), Dedup.exact),
+      Dedup.exact),
     Family[Dedup.ExactStore]("exact payload", Multimodal.payloadStore,
       Multimodal.payloadDedupDelta,
       (s, r) => Multimodal.payloadRetract(s, r).updatedStore,
-      s => Seq(s.keepers, s.members), Multimodal.payloadDedup),
+      Multimodal.payloadDedup),
     Family[Dedup.ParagraphStore]("paragraph", Dedup.paragraphStore(_, Span),
-      Dedup.paragraphDelta, Dedup.paragraphRetract,
-      s => Seq(s.keepers, s.members), Dedup.spanExact(_, Span))
+      Dedup.paragraphDelta, Dedup.paragraphRetract, Dedup.spanExact(_, Span))
   )
 
   /** Runs `body` for every family and seed, with the seed's corpus as
     * frames, inside one cache bracket. */
-  private def forAll(body: (Family[Any], Frames) => Unit): Unit =
+  private def forAll(body: (Family[Stored[_]], Frames) => Unit): Unit =
     for (f <- families; seed <- Seeds) Dedup.cached {
-      val fam = f.asInstanceOf[Family[Any]]
+      val fam = f.asInstanceOf[Family[Stored[_]]]
       val c = corpus(seed)
       val surv = (c.a ++ c.b).filterNot(r => c.r(r._1))
       import spark.implicits._
@@ -94,19 +96,28 @@ class KeeperStorePropertySpec extends AnyFunSuite {
         c.r.toSeq.toDF("doc_id"), c.r, c.b.map(_._1).toSet))
     }
 
-  private def sameTables(f: Family[Any], got: Any, want: Any,
+  private def sameTables(f: Family[Stored[_]], got: Stored[_], want: Stored[_],
                          what: String): Unit =
-    f.tables(got).zip(f.tables(want)).zipWithIndex.foreach {
-      case ((g, w), i) =>
-        val expected = bag(w)
-        assert(expected.nonEmpty, s"${f.name}: table $i of $what is empty")
-        assert(bag(g) == expected, s"${f.name}: table $i of $what")
+    got.tables.zip(want.tables).foreach { case ((name, g), (_, w)) =>
+      val expected = bag(w)
+      assert(expected.nonEmpty, s"${f.name}: table $name of $what is empty")
+      assert(bag(g) == expected, s"${f.name}: table $name of $what")
     }
+
+  /** `st` published through VersionedStore and read back by its store
+    * contract: its table names, then `withTables` over the read-back. */
+  private def published(st: Stored[_]): Stored[_] = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ksp").toString
+    VersionedStore.write(dir, st.tables)
+    st.withTables(VersionedStore.read(spark, dir, st.tables.map(_._1)).get)
+      .asInstanceOf[Stored[_]]
+  }
 
   test("R takes a keeper with survivors, a non-keeper and a whole group") {
     forAll { (f, x) =>
       // members: doc_id first, fp last; keepers: fp, then the keeper doc
-      val Seq(keepers, members) = f.tables(f.build(x.a))
+      val tables = f.build(x.a).tables.toMap
+      val (keepers, members) = (tables("keepers"), tables("members"))
       val keeperOf = keepers.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val docsOf = members.collect()
         .groupBy(r => r.getString(r.length - 1))
@@ -151,6 +162,14 @@ class KeeperStorePropertySpec extends AnyFunSuite {
     }
   }
 
+  test("a published build(A), read back, ingests and retracts like the in-memory store") {
+    forAll { (f, x) =>
+      val built = f.build(x.a)
+      def chain(st: Stored[_]) = f.retract(f.ingest(st, x.b).updatedStore, x.r)
+      sameTables(f, chain(published(built)), chain(built), s"seed ${x.seed}")
+    }
+  }
+
   test("an empty delta is the identity") {
     forAll { (f, x) =>
       val built = f.build(x.a)
@@ -172,11 +191,10 @@ object KeeperStorePropertySpec {
                           none: DataFrame, r: DataFrame, rIds: Set[Long],
                           bIds: Set[Long])
 
-  /** One store family; `tables` lists (keepers, members) and `full` is
-    * the batch assignment the ingest must reproduce over B. */
-  final case class Family[S](name: String, build: DataFrame => S,
-                             ingest: (S, DataFrame) => Dedup.AssignmentDelta[S],
-                             retract: (S, DataFrame) => S,
-                             tables: S => Seq[DataFrame],
-                             full: DataFrame => DataFrame)
+  /** One store family, whose contract lists its keepers and members
+    * tables; `full` is the batch assignment the ingest must reproduce
+    * over B. */
+  final case class Family[S <: Stored[_]](name: String, build: DataFrame => S,
+      ingest: (S, DataFrame) => Dedup.AssignmentDelta[S],
+      retract: (S, DataFrame) => S, full: DataFrame => DataFrame)
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
+import graft.sources.{Stored, VersionedStore}
 
 /** Seeded generated-input properties of the prefix-filter store
   * family: the shingle store (containment and n-gram Jaccard, served
@@ -20,7 +21,9 @@ import graft.operators.Dedup
   *   - an empty delta gives no pairs and leaves rows and prefix as
   *     they were;
   *   - re-ingesting the same batch gives the same pairs and the same
-  *     rows and prefix (as multisets). */
+  *     rows and prefix (as multisets);
+  *   - build(A) published through VersionedStore and read back by its
+  *     store contract ingests and retracts like the in-memory store. */
 class PrefixStorePropertySpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.get
 
@@ -62,6 +65,10 @@ class PrefixStorePropertySpec extends AnyFunSuite {
   /** A frame as a sorted multiset of rendered rows. */
   private def bag(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  /** Each of a store's contract tables as a multiset, by name. */
+  private def tables(st: Stored[_]): Map[String, Seq[String]] =
+    st.tables.map { case (name, df) => name -> bag(df) }.toMap
 
   /** Rendered pairs whose first two columns touch `ids`. */
   private def touching(pairs: DataFrame, ids: Set[Long]): Seq[String] =
@@ -135,12 +142,10 @@ class PrefixStorePropertySpec extends AnyFunSuite {
       val jd = Dedup.ngramJaccardDelta(st, none, JaccardTau)
       val id = Dedup.itemJaccardDelta(ist, items(none), JaccardTau)
       Seq(cd.pairs, jd.pairs, id.pairs).foreach(p => assert(p.isEmpty))
-      val (rows, prefix) = (bag(st.rows), bag(st.prefix))
       Seq(cd.updatedStore, jd.updatedStore).foreach { u =>
-        assert(bag(u.rows) == rows && bag(u.prefix) == prefix, s"seed $seed")
+        assert(tables(u) == tables(st), s"seed $seed")
       }
-      assert(bag(id.updatedStore.rows) == bag(ist.rows) &&
-        bag(id.updatedStore.prefix) == bag(ist.prefix), s"seed $seed: items")
+      assert(tables(id.updatedStore) == tables(ist), s"seed $seed: items")
     }}
   }
 
@@ -163,9 +168,37 @@ class PrefixStorePropertySpec extends AnyFunSuite {
         val once = bag(p1)
         assert(once.nonEmpty, s"seed $seed: no $measure pair")
         assert(bag(p2) == once, s"seed $seed: $measure pairs")
-        assert(bag(s2.rows) == bag(s1.rows), s"seed $seed: $measure rows")
-        assert(bag(s2.prefix) == bag(s1.prefix), s"seed $seed: $measure prefix")
+        assert(tables(s2) == tables(s1), s"seed $seed: $measure tables")
       }
+    }}
+  }
+
+  test("a published build(A), read back, ingests and retracts like the in-memory store") {
+    Seeds.foreach { seed => Dedup.cached {
+      val c = corpus(seed)
+      val (a, b) = (docs(c.a), docs(c.b))
+      val rIds = {
+        import spark.implicits._
+        c.r.toSeq.toDF("doc_id")
+      }
+      // `st` published through VersionedStore, read back by its contract
+      def published[S <: Stored[S]](st: S): S = {
+        val dir = java.nio.file.Files.createTempDirectory("graft_pfx").toString
+        VersionedStore.write(dir, st.tables)
+        VersionedStore.read(spark, dir, st).get
+      }
+      def same(got: Stored[_], want: Stored[_], what: String): Unit = {
+        assert(tables(want).values.forall(_.nonEmpty), s"seed $seed: $what is empty")
+        assert(tables(got) == tables(want), s"seed $seed: $what")
+      }
+      def shingles(s: Dedup.ShingleStore) = Dedup.prefixStoreRetract(
+        Dedup.containmentDelta(s, b, ContainTau).updatedStore, rIds)
+      val st = Dedup.shingleStore(a, 3, StoreTau)
+      same(shingles(published(st)), shingles(st), "shingle store")
+      def itemStore(s: Dedup.ItemJaccardStore) = Dedup.prefixStoreRetract(
+        Dedup.itemJaccardDelta(s, items(b), JaccardTau).updatedStore, rIds)
+      val ist = Dedup.itemJaccardStore(items(a), StoreTau)
+      same(itemStore(published(ist)), itemStore(ist), "item store")
     }}
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, Similarity}
+import graft.sources.{Stored, VersionedStore}
 
 /** Seeded generated-input properties of the projection stores, whose
   * rows are per-doc or per-vector projections: MinHash, SimHash,
@@ -22,7 +23,9 @@ import graft.operators.{Dedup, Similarity}
   *   - re-ingesting the same batch changes nothing (and emits the
   *     same pairs);
   *   - MinHash, SimHash and embedding LSH: the delta's pairs ≡ the full
-  *     run's over A∪B restricted to pairs touching B. */
+  *     run's over A∪B restricted to pairs touching B;
+  *   - build(A) published through VersionedStore and read back by its
+  *     store contract ingests and retracts like the in-memory store. */
 class ProjectionStorePropertySpec extends AnyFunSuite {
   import ProjectionStorePropertySpec._
 
@@ -85,64 +88,69 @@ class ProjectionStorePropertySpec extends AnyFunSuite {
       .filter(r => ids(r.getLong(0)) || ids(r.getLong(1)))
       .map(_.toSeq.mkString("|")).toSeq.sorted
 
-  private val families: Seq[Family[_, _]] = Seq(
+  private val families: Seq[Family[_ <: Stored[_], _]] = Seq(
     Family[Dedup.MinHashStore, String]("minhash", "doc_id", texts, docs,
       Dedup.minhashStore(_), (_, all) => Dedup.minhashStore(all),
       (s, b) => Dedup.minhashLshDelta(s, b).updatedStore,
-      Dedup.minhashStoreRetract, s => Seq(s.banded, s.shingles),
+      Dedup.minhashStoreRetract,
       Some(Pairs((s, b) => Dedup.minhashLshDelta(s, b).pairs,
         Dedup.minhashLsh(_)))),
-    Family[DataFrame, String]("simhash", "doc_id", texts, docs,
-      Dedup.simhashStore, (_, all) => Dedup.simhashStore(all),
-      (s, b) => Dedup.simhashDelta(s, b).updatedStore,
-      Dedup.simhashStoreRetract, s => Seq(s),
-      Some(Pairs((s, b) => Dedup.simhashDelta(s, b).pairs, Dedup.simhash))),
+    Family[Stored.Table, String]("simhash", "doc_id", texts, docs,
+      a => Stored.Table(Dedup.simhashStore(a)),
+      (_, all) => Stored.Table(Dedup.simhashStore(all)),
+      (s, b) => Stored.Table(Dedup.simhashDelta(s.frame, b).updatedStore),
+      (s, r) => Stored.Table(Dedup.simhashStoreRetract(s.frame, r)),
+      Some(Pairs((s, b) => Dedup.simhashDelta(s.frame, b).pairs, Dedup.simhash))),
     Family[Dedup.EmbeddingLshStore, Seq[Float]]("embedding lsh",
       "vec_id", vectors, embeddings,
       Dedup.embeddingLshStore(_), (s, all) => Dedup.embeddingLshStore(all,
         s.nTables, s.planesPerTable, s.dim),
       Dedup.embeddingLshStoreDelta, Dedup.embeddingLshStoreRetract,
-      s => Seq(s.bucketed),
       Some(Pairs((s, b) => Dedup.embeddingNearDupLshDelta(s, b, CosTau).pairs,
         Dedup.embeddingNearDupLsh(_, CosTau)))),
     Family[Similarity.IvfIndex, Seq[Float]]("ivf", "vec_id", vectors,
       embeddings, Similarity.ivfIndex(_, centroidMod = 4),
       (s, all) => Similarity.ivfIndexWith(all, s.centroids),
-      Similarity.ivfDelta, Similarity.ivfRetract,
-      s => Seq(s.assigned, s.centroids), None),
+      Similarity.ivfDelta, Similarity.ivfRetract, None),
     Family[Similarity.PqIndex, Seq[Float]]("pq", "vec_id", vectors,
       embeddings, Similarity.pqIndex(_, seedMod = 3),
       (s, all) => Similarity.PqIndex(Similarity.pqCodes(
         all.select(col("vec_id"), col("embedding").as("v")), s.seeds), s.seeds),
-      Similarity.pqDelta(_, _), Similarity.pqRetract,
-      s => Seq(s.codes, s.seeds), None),
+      Similarity.pqDelta(_, _), Similarity.pqRetract, None),
     Family[Similarity.IvfPqIndex, Seq[Float]]("ivf-pq", "vec_id",
       vectors, embeddings,
       Similarity.ivfPqIndex(_, centroidMod = 4, seedMod = 3),
       (s, all) => Similarity.ivfPqIndexWith(all, s.centroids, s.seeds),
-      Similarity.ivfPqDelta(_, _), Similarity.ivfPqRetract,
-      s => Seq(s.indexed, s.centroids, s.seeds), None)
+      Similarity.ivfPqDelta(_, _), Similarity.ivfPqRetract, None)
   )
 
   /** Runs `body` for every family and seed, with the seed's corpus as
     * frames, inside one cache bracket. */
-  private def forAll(body: (Family[Any, Any], Frames) => Unit): Unit =
+  private def forAll(body: (Family[Stored[_], Any], Frames) => Unit): Unit =
     for (f <- families; seed <- Seeds) Dedup.cached {
-      val fam = f.asInstanceOf[Family[Any, Any]]
+      val fam = f.asInstanceOf[Family[Stored[_], Any]]
       val c = fam.corpus(seed)
       body(fam, Frames(seed, fam.frame(c.a), fam.frame(c.b),
         fam.frame(c.a ++ c.b), fam.frame(c.a.filterNot(r => c.r(r._1))),
         fam.frame(Nil), ids(fam.id, c.r), c.b.map(_._1).toSet))
     }
 
-  private def sameTables(f: Family[Any, Any], got: Any, want: Any,
-                         what: String): Unit =
-    f.tables(got).zip(f.tables(want)).zipWithIndex.foreach {
-      case ((g, w), i) =>
-        val expected = bag(w)
-        assert(expected.nonEmpty, s"${f.name}: table $i of $what is empty")
-        assert(bag(g) == expected, s"${f.name}: table $i of $what")
+  private def sameTables(f: Family[Stored[_], Any], got: Stored[_],
+                         want: Stored[_], what: String): Unit =
+    got.tables.zip(want.tables).foreach { case ((name, g), (_, w)) =>
+      val expected = bag(w)
+      assert(expected.nonEmpty, s"${f.name}: table $name of $what is empty")
+      assert(bag(g) == expected, s"${f.name}: table $name of $what")
     }
+
+  /** `st` published through VersionedStore and read back by its store
+    * contract: its table names, then `withTables` over the read-back. */
+  private def published(st: Stored[_]): Stored[_] = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_psp").toString
+    VersionedStore.write(dir, st.tables)
+    st.withTables(VersionedStore.read(spark, dir, st.tables.map(_._1)).get)
+      .asInstanceOf[Stored[_]]
+  }
 
   test("ingest(build(A), B) == build(A ∪ B), and its pairs are the full run's touching B") {
     forAll { (f, x) =>
@@ -183,6 +191,14 @@ class ProjectionStorePropertySpec extends AnyFunSuite {
     }
   }
 
+  test("a published build(A), read back, ingests and retracts like the in-memory store") {
+    forAll { (f, x) =>
+      val built = f.build(x.a)
+      def chain(st: Stored[_]) = f.retract(f.ingest(st, x.b), x.r)
+      sameTables(f, chain(published(built)), chain(built), s"seed ${x.seed}")
+    }
+  }
+
   test("re-ingesting the same delta is idempotent: same tables, same pairs") {
     forAll { (f, x) =>
       val once = f.ingest(f.build(x.a), x.b)
@@ -211,15 +227,14 @@ object ProjectionStorePropertySpec {
                             full: DataFrame => DataFrame)
 
   /** One store family: `rebuild(like, rows)` builds over `rows` under
-    * `like`'s frozen parameters (geometry, quantizers); `tables` lists
-    * the store's frames in a fixed order. */
-  final case class Family[S, T](name: String, id: String,
-                                corpus: Long => Corpus[T],
-                                frame: Seq[(Long, T)] => DataFrame,
-                                build: DataFrame => S,
-                                rebuild: (S, DataFrame) => S,
-                                ingest: (S, DataFrame) => S,
-                                retract: (S, DataFrame) => S,
-                                tables: S => Seq[DataFrame],
-                                pairs: Option[Pairs[S]])
+    * `like`'s frozen parameters (geometry, quantizers); the store's
+    * contract lists its tables. */
+  final case class Family[S <: Stored[_], T](name: String, id: String,
+                                              corpus: Long => Corpus[T],
+                                              frame: Seq[(Long, T)] => DataFrame,
+                                              build: DataFrame => S,
+                                              rebuild: (S, DataFrame) => S,
+                                              ingest: (S, DataFrame) => S,
+                                              retract: (S, DataFrame) => S,
+                                              pairs: Option[Pairs[S]])
 }

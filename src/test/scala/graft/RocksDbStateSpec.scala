@@ -7,10 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.Streams
 
-/** The G-family under the RocksDB state store (GraftSession's
-  * `rocksDbState` flag): identical results and the same bounded-state
-  * behavior as the default provider, with state now living off-heap/
-  * on-disk — the configuration a 100 TB session-state footprint needs.
+/** The G-family under the RocksDB state store
+  * ([[GraftSession.RocksDbProvider]] as the provider conf): identical
+  * results and the same bounded-state behavior as the default
+  * provider, with state now living off-heap/on-disk — the configuration a 100 TB session-state footprint needs.
   * The provider conf is read at query start, so the shared test
   * session can flip it per test and restore it after.
   */

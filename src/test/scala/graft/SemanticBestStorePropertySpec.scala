@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
+import graft.sources.VersionedStore
 
 /** Seeded generated-input properties of the semantic-best store: sign
   * words, the kNN graph at surplus depth, the verified pair table and
@@ -22,7 +23,9 @@ import graft.operators.Dedup
   *   - retract(build(A), R) ≡ build(A∖R), every surviving graph row at
   *     its fresh rank;
   *   - retract∘ingest ≡ ingest∘retract ≡ build((A∪B)∖R);
-  *   - re-ingesting B changes no table. */
+  *   - re-ingesting B changes no table;
+  *   - build(A) published through VersionedStore and read back by its
+  *     store contract ingests and retracts like the in-memory store. */
 class SemanticBestStorePropertySpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.get
   import spark.implicits._
@@ -56,17 +59,11 @@ class SemanticBestStorePropertySpec extends AnyFunSuite {
   private def build(rows: Seq[(Long, Seq[Float])]): Dedup.SemanticBestStore =
     materialize(Dedup.semanticBestStore(frame(rows), Tau, K))
 
-  /** The store written to parquet and read back, as a store cycle reads
-    * it. */
-  private def materialize(st: Dedup.SemanticBestStore): Dedup.SemanticBestStore = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sbp").toString
-    def rt(df: DataFrame, name: String): DataFrame = {
-      df.write.parquet(s"$dir/$name")
-      spark.read.parquet(s"$dir/$name")
-    }
-    st.copy(bits = rt(st.bits, "bits"), graph = rt(st.graph, "graph"),
-      assignment = rt(st.assignment, "assignment"), pairs = rt(st.pairs, "pairs"))
-  }
+  /** The store published through VersionedStore and read back by its
+    * store contract, as a store cycle reads it. */
+  private def materialize(st: Dedup.SemanticBestStore): Dedup.SemanticBestStore =
+    VersionedStore.publish(spark,
+      java.nio.file.Files.createTempDirectory("graft_sbp").toString, st)
 
   private def ingest(st: Dedup.SemanticBestStore,
                      rows: Seq[(Long, Seq[Float])]): Dedup.SemanticBestStore =
@@ -80,12 +77,17 @@ class SemanticBestStorePropertySpec extends AnyFunSuite {
   private def bag(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
-  private def tables(st: Dedup.SemanticBestStore): Seq[(String, Seq[String])] = Seq(
-    "assignment" -> bag(st.assignment.select("vec_id", "keep_id", "is_dup")),
-    "top-k edges" -> bag(st.graph.filter(col("rnk") <= K)
-      .select("src", "dst", "rnk", "cos_sim")),
-    "sign words" -> bag(st.bits.select("vec_id", "bits")),
-    "pairs" -> bag(st.pairs.select("id_a", "id_b")))
+  /** What each contract table is compared on: the graph's `rnk <= k`
+    * edges with their scores (its surplus rows legitimately differ) and
+    * every other table's columns. */
+  private val compared: Map[String, DataFrame => DataFrame] = Map(
+    "assignment" -> (_.select("vec_id", "keep_id", "is_dup")),
+    "graph" -> (_.filter(col("rnk") <= K).select("src", "dst", "rnk", "cos_sim")),
+    "bits" -> (_.select("vec_id", "bits")),
+    "pairs" -> (_.select("id_a", "id_b")))
+
+  private def tables(st: Dedup.SemanticBestStore): Seq[(String, Seq[String])] =
+    st.tables.map { case (name, df) => name -> bag(compared(name)(df)) }
 
   private def same(got: Dedup.SemanticBestStore, want: Dedup.SemanticBestStore,
                    what: String): Unit =
@@ -170,6 +172,17 @@ class SemanticBestStorePropertySpec extends AnyFunSuite {
       val want = build((x.a ++ x.b).filterNot(e => r(e._1)))
       same(retract(ingest(built, x.b), r), want, s"seed $seed: retract∘ingest")
       same(ingest(retract(built, r), x.b), want, s"seed $seed: ingest∘retract")
+    }
+  }
+
+  test("a published build(A), read back, ingests and retracts like the in-memory store") {
+    forAll { (seed, x) =>
+      val inMemory = Dedup.semanticBestStore(frame(x.a), Tau, K)
+      val r = plant(inMemory, x, seed)
+      def chain(st: Dedup.SemanticBestStore) = Dedup.semanticBestRetract(
+        Dedup.semanticKeepersBestDelta(st, frame(x.b), Tau, K).updatedStore,
+        r.toSeq.toDF("vec_id"), Tau, K).updatedStore
+      same(chain(build(x.a)), chain(inMemory), s"seed $seed")
     }
   }
 

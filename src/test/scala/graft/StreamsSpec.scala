@@ -14,6 +14,12 @@ import graft.streaming.Streams.SessionEvent
 class StreamsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.get
 
+  /** The live semantic store's (assignment, lsh) table paths under
+    * `storeDir`, or None when no complete version is published. */
+  private def semanticStorePaths(storeDir: String): Option[(String, String)] =
+    graft.sources.VersionedStore.resolve(storeDir, Seq("assignment", "lsh"))
+      .map { case Seq(asg, lsh) => (asg, lsh) }
+
   test("streaming knn: probes answered per micro-batch, union equals batch knn") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -380,7 +386,7 @@ class StreamsSpec extends AnyFunSuite {
     // the store is DURABLE at the caller's path: the assignment table
     // re-serves without a stream or rebuild, resolved through the
     // versioned CURRENT pointer (r13 layout)
-    val (asgPath, lshPath) = Streams.semanticStorePaths(storeDir).get
+    val (asgPath, lshPath) = semanticStorePaths(storeDir).get
     assert(new java.io.File(lshPath).isDirectory)
     val reServed = spark.read.parquet(asgPath)
       .select(col("vec_id"), col("cluster_id"),
@@ -400,14 +406,14 @@ class StreamsSpec extends AnyFunSuite {
     // a TORN store must not bootstrap (the r12 advice scenario: a
     // crash between table writes) — delete the live version's lsh
     // half and the resolver refuses the whole version...
-    val (_, lshPath2) = Streams.semanticStorePaths(storeDir).get
+    val (_, lshPath2) = semanticStorePaths(storeDir).get
     scala.reflect.io.Directory(new java.io.File(lshPath2)).deleteRecursively()
-    assert(Streams.semanticStorePaths(storeDir).isEmpty)
+    assert(semanticStorePaths(storeDir).isEmpty)
     // ...and the next drain recovers: bootstraps empty, re-ingests,
     // promotes a fresh COMPLETE version behind the atomic pointer
     val recovered = asn(Streams.semanticServe(spark, dir, tau, storeDir))
     assert(recovered == batchRun)
-    val (asgPath3, lshPath3) = Streams.semanticStorePaths(storeDir).get
+    val (asgPath3, lshPath3) = semanticStorePaths(storeDir).get
     assert(new java.io.File(lshPath3).isDirectory)
     assert(asn(spark.read.parquet(asgPath3)
       .select(col("vec_id"), col("cluster_id"),
@@ -422,7 +428,7 @@ class StreamsSpec extends AnyFunSuite {
     // version, retract, publish the shrunk store as the NEXT version
     // through the same graft.sources.VersionedStore seam the drain
     // writes through, and the resolver serves the survivors
-    val (asgPath4, lshPath4) = Streams.semanticStorePaths(storeDir).get
+    val (asgPath4, lshPath4) = semanticStorePaths(storeDir).get
     val live = graft.operators.Dedup.SemanticStore(
       graft.operators.Dedup.EmbeddingLshStore(spark.read.parquet(lshPath4),
         6, 4, 64),
@@ -432,7 +438,7 @@ class StreamsSpec extends AnyFunSuite {
       .updatedStore
     graft.sources.VersionedStore.write(storeDir, Seq(
       "assignment" -> shrunk.assignment, "lsh" -> shrunk.lsh.bucketed))
-    val (asgPath5, _) = Streams.semanticStorePaths(storeDir).get
+    val (asgPath5, _) = semanticStorePaths(storeDir).get
     assert(asgPath5.contains("v00004"), s"takedown should publish v00004, got $asgPath5")
     val survRun = asn(graft.operators.Dedup.semanticKeepers(
       emb.filter(col("vec_id") % 5 =!= 0), tau))
