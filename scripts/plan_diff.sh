@@ -11,8 +11,10 @@
 #            RDD ids and call sites, lambda variable numbers, temp dirs
 #            (graft_<name><digits>), memory-sink names (st_<name>_<uuid>),
 #            AQE query-stage ids);
-#   - nodes: per row, the count of Exchange, *Join, HashAggregate, Window and
-#            InMemoryTableScan nodes, for when the norm diff is not empty.
+#   - nodes: per row, the count of Exchange, *Join, HashAggregate, Window,
+#            InMemoryTableScan and LocalTableScan nodes, for when the norm
+#            diff is not empty (a driver-built relation shows as a
+#            LocalTableScan beside the joins and exchanges it replaced).
 # Exits 0 when both diffs are empty, 1 when either is not, 2 on a failed run.
 # The temp dir (parent tree, plan dumps, stderr logs) is removed on exit 0
 # and kept, with its path printed, otherwise.
@@ -54,7 +56,7 @@ nodes() {
     /^\(/ {next}
     {
       s = $0
-      while (match(s, /[A-Za-z]*(Exchange|Join|HashAggregate|Window|InMemoryTableScan)( [A-Za-z]+)* \([0-9]+\)/)) {
+      while (match(s, /[A-Za-z]*(Exchange|Join|HashAggregate|Window|InMemoryTableScan|LocalTableScan)( [A-Za-z]+)* \([0-9]+\)/)) {
         split(substr(s, RSTART, RLENGTH), w, " ")
         c[row " " w[1]]++
         s = substr(s, RSTART + RLENGTH)

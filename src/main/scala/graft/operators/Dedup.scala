@@ -1248,25 +1248,10 @@ object Dedup {
     // construction, and downstream joins against it broadcast instead
     // of shuffling. Over the cap — the 100 TB posture, where the pair
     // list is not driver-material — the pointer-doubling loop below
-    // runs unchanged (the r19-priced distributed shape). The limit
-    // scans the already-materialized checkpoint blocks, so the probe
-    // never re-executes the pair stage.
-    // r21 (VERDICT r20 item #3): the probe is a bounded COUNT over the
-    // checkpointed blocks — never a collect — so the over-cap path (the
-    // 100 TB posture) materializes ZERO pair rows on the driver where
-    // the r20 probe pulled cap+1 (~4M) Rows only to discard them. Each
-    // partition iterates at most cap+1 cached InternalRows and ships
-    // ONE long (a limit(cap+1).count() would instead funnel up to
-    // cap+1 rows per partition through a single-partition shuffle);
-    // a partition alone exceeding the cap already proves over-cap, so
-    // the truncated per-partition counts still decide correctly.
-    // Under the cap this costs one extra tiny job on cached blocks —
-    // the price of making the scale path driver-safe.
-    val cap = ClustersEdgeCap
-    val underCap = p2.queryExecution.toRdd
-      .mapPartitions(it => Iterator(it.take(cap + 1).size.toLong))
-      .collect().sum <= cap
-    if (underCap) {
+    // runs unchanged (the r19-priced distributed shape). The probe
+    // scans the already-materialized checkpoint blocks, so it never
+    // re-executes the pair stage.
+    if (fitsDriver(p2, ClustersEdgeCap)) {
       val labels = unionFindMinLabels(p2.collect().iterator
         .map(r => (r.getLong(0), r.getLong(1))))
       val sp = pairs.sparkSession
@@ -1763,9 +1748,10 @@ object Dedup {
     *    #buckets); the grown edge list is
     *    row-for-row the fresh build's (total heap order, immutable
     *    old-old scores).
-    *  - pagerank + election: rerun globally — 3 edge-keyed joins
-    *    over the k·N-bounded graph plus two cluster-keyed
-    *    aggregates, all map-side-combined and corpus-LINEAR. Rank is
+    *  - pagerank + election: rerun globally — 3 rounds over the
+    *    k·N-bounded graph (on the driver while it fits
+    *    [[ClustersLocalRelationCap]], edge-keyed joins over it) plus
+    *    two cluster-keyed aggregates, all corpus-LINEAR. Rank is
     *    a global fixpoint (one new hub vector legitimately shifts
     *    every rank), so any "incremental" shortcut here would be a
     *    different, wrong answer; linear passes are the honest floor.
@@ -1921,9 +1907,9 @@ object Dedup {
     *    every probe but those that lose more than their surplus,
     *    which re-rank over their surviving bucket mates.
     *  - '''pagerank + election''': global by nature, rerun — 3
-    *    edge-keyed joins over the k·N' graph plus two cluster-keyed
-    *    aggregates, corpus-linear, same honest floor as the ingest
-    *    (a removed hub legitimately shifts every rank).
+    *    rounds over the k·N' graph, as in the ingest, plus two
+    *    cluster-keyed aggregates, corpus-linear, same honest floor
+    *    as the ingest (a removed hub legitimately shifts every rank).
     *
     * Retraction composes with ingest in either order: both maintain
     * the same four content-determined tables, so retract∘ingest ≡
@@ -2628,10 +2614,27 @@ object Dedup {
     * broadcast per join); above it the labels ship once as a
     * parallelized dataset instead (r21 — the edge cap was doing
     * double duty as collect guard AND relation-size guard, and 2x
-    * 4M labels is far past sensible broadcast size). */
+    * 4M labels is far past sensible broadcast size). Its second user
+    * is [[Similarity.pagerankFromEdges]]: at or under this many edge
+    * rows the iteration runs on the driver and returns a broadcast
+    * local relation of at most that many inflow rows. */
   private[graft] def ClustersLocalRelationCap: Int =
     sys.props.get("graft.clusters.local.relation.cap").map(_.toInt)
       .getOrElse(1000000)
+
+  /** Whether `df` has at most `cap` rows, decided by a bounded count per
+    * partition that never collects a row: each partition iterates at
+    * most cap+1 InternalRows and ships one long, and a partition alone
+    * past the cap already proves the frame is. So an over-cap frame
+    * (the 100 TB posture) puts nothing on the driver, where a
+    * `limit(cap+1).count()` would funnel up to cap+1 rows per partition
+    * through a single-partition shuffle. One job; callers probe a
+    * checkpointed or cached frame so the collect that follows a "yes"
+    * does not recompute it. A negative cap is never met. */
+  private[graft] def fitsDriver(df: DataFrame, cap: Int): Boolean =
+    df.queryExecution.toRdd
+      .mapPartitions(it => Iterator(it.take(cap + 1).size.toLong))
+      .collect().sum <= cap
 
   /** Path-compressed min-label union-find over an edge iterator —
     * the shared driver core of [[quotientRemap]] and [[clusters]]'

@@ -1034,11 +1034,13 @@ object Similarity {
     * run-to-convergence) of the standard damped update
     * p' = (1−d)/N + d·Σ_in p/outdeg over [[knnGraph]]'s edges.
     *
-    * Scale shape: the edge list is k·N rows (bounded by construction);
-    * each iteration is one edge-keyed join + one map-side-combinable
-    * sum per node — no windows, no driver loops over data (the
-    * iteration count is a constant, not data-dependent). The iteration
-    * runs in N-SCALED rank space (r = N·p, r₀ = 1, update
+    * Scale shape: the edge list is k·N rows (bounded by construction)
+    * and the iteration count is a constant, not data-dependent. At or
+    * under [[Dedup.ClustersLocalRelationCap]] edge rows the edges are
+    * collected once and the rounds run on the driver; over it each
+    * round is one edge-keyed join + one map-side-combinable sum per
+    * node. Both paths give the same doubles. The iteration runs in
+    * N-SCALED rank space (r = N·p, r₀ = 1, update
     * r' = (1−d) + d·Σ r/outdeg): values stay O(1) regardless of
     * corpus size, so the 1e-6 contribution quantization keeps ~1e-6
     * RELATIVE precision at any N — iterating raw p = 1/N would
@@ -1065,9 +1067,16 @@ object Similarity {
     * [[graft.operators.Dedup.semanticKeepersBest]] can run the
     * identical arithmetic over a graph built from its own shared
     * bucketed projection instead of paying [[knnGraph]]'s second
-    * corpus plane-hash. `edges` is read by one checkpoint job (the
-    * rows and their outdeg aggregate). Same quantized, N-scaled,
+    * corpus plane-hash. `edges` is probed with [[Dedup.fitsDriver]]:
+    * at or under [[Dedup.ClustersLocalRelationCap]] rows it is
+    * collected once and iterated on the driver ([[driverInflow]]),
+    * over the cap it is read by one checkpoint job (the rows and their
+    * outdeg aggregate) and iterated as joins. Same quantized, N-scaled,
     * bit-replayable update as [[knnPagerank]] — see that scaladoc.
+    *
+    * Malformed edges, alike on both paths: a null-src row contributes
+    * nothing, a null-dst row counts toward its source's outdeg and
+    * lands nowhere, and a duplicate row counts twice.
     *
     * Precondition: `edges.src ⊆ ids`. It is not checked. A source
     * outside `ids` still sends rank along its out-edges (1 in the first
@@ -1076,10 +1085,83 @@ object Similarity {
   private[graft] def pagerankFromEdges(edges: DataFrame, ids: DataFrame,
                                            iters: Int,
                                            damping: Double): DataFrame = {
+    require(iters >= 1, s"pagerank needs at least one iteration, got $iters")
     // N is counted once on the driver; `nodes` is read twice (the count
     // and the final join), both cheap column reads at every caller
     val nodes = ids.select(col("vec_id"))
     val n = nodes.count()
+    def rankOf(inflow: Column) =
+      lit(1.0 - damping) + lit(damping) * coalesce(inflow, lit(0.0))
+    val e = edges.select(col("src"), col("dst"))
+    val inflow =
+      if (Dedup.fitsDriver(e, Dedup.ClustersLocalRelationCap))
+        broadcast(driverInflow(e, iters, damping))
+      else distributedInflow(edges, iters, rankOf)
+    nodes.join(inflow, Seq("vec_id"), "left")
+      .select(col("vec_id"), (rankOf(col("inflow")) / lit(n)).as("pagerank"))
+  }
+
+  /** [[pagerankFromEdges]]' rounds on the driver: the edges are collected
+    * once into primitive arrays (null-src rows skipped, a null-dst row
+    * kept only as its source's outdeg), node ids are indexed by binary
+    * search over their sorted distinct array, and each round applies
+    * the distributed loop's arithmetic to every edge: round 1 has
+    * r = 1.0, an edge sends c = floor(r / outdeg · 1e6) as a long, a
+    * node's inflow is Σc as a double / 1e6, and the next round's
+    * r = (1−d) + d·inflow. Returns (vec_id, inflow) for every node
+    * some edge lands on — at most one row per edge. */
+  private def driverInflow(e: DataFrame, iters: Int,
+                           damping: Double): DataFrame = {
+    val parts = e.select(col("src").cast("long"), col("dst").cast("long"))
+      .queryExecution.toRdd.mapPartitions { it =>
+        val src = Array.newBuilder[Long]
+        val dst = Array.newBuilder[Long]
+        val dangling = Array.newBuilder[Long]
+        it.foreach { r =>
+          if (!r.isNullAt(0)) {
+            if (r.isNullAt(1)) dangling += r.getLong(0)
+            else { src += r.getLong(0); dst += r.getLong(1) }
+          }
+        }
+        Iterator((src.result(), dst.result(), dangling.result()))
+      }.collect()
+    val src = Array.concat(parts.map(_._1).toIndexedSeq: _*)
+    val dst = Array.concat(parts.map(_._2).toIndexedSeq: _*)
+    val dangling = Array.concat(parts.map(_._3).toIndexedSeq: _*)
+    val keys = Array.concat(src, dst, dangling)
+    java.util.Arrays.sort(keys)
+    var m = 0
+    for (i <- keys.indices) if (i == 0 || keys(i) != keys(i - 1)) {
+      keys(m) = keys(i); m += 1
+    }
+    def index(v: Long) = java.util.Arrays.binarySearch(keys, 0, m, v)
+    val s = src.map(index)
+    val d = dst.map(index)
+    val outdeg = new Array[Long](m)
+    s.foreach(i => outdeg(i) += 1)
+    dangling.foreach(v => outdeg(index(v)) += 1)
+    var inflow: Array[Double] = null
+    for (_ <- 1 to iters) {
+      val sums = new Array[Long](m)
+      for (j <- s.indices) {
+        val r = if (inflow == null) 1.0
+          else (1.0 - damping) + damping * inflow(s(j))
+        sums(d(j)) += math.floor(r / outdeg(s(j)) * 1000000.0).toLong
+      }
+      inflow = sums.map(_.toDouble / 1000000.0)
+    }
+    val landed = new Array[Boolean](m)
+    d.foreach(landed(_) = true)
+    val sp = e.sparkSession
+    import sp.implicits._
+    (0 until m).filter(landed(_)).map(i => (keys(i), inflow(i)))
+      .toDF("vec_id", "inflow")
+  }
+
+  /** [[pagerankFromEdges]]' rounds as Spark joins, for an edge list past
+    * the driver cap. */
+  private def distributedInflow(edges: DataFrame, iters: Int,
+                                rankOf: Column => Column): DataFrame = {
     // outdeg is attached to the edge list once, and the eager checkpoint
     // truncates ew to a LogicalRDD: the 3 unrolled iterations re-embed
     // ew's tree, and Catalyst re-optimizing the duplicated edge subtree
@@ -1088,21 +1170,12 @@ object Similarity {
           "src")
       .select(col("src"), col("dst"), col("outdeg"))
       .localCheckpoint(true)
-    // The loop iterates the INFLOW frame, not the rank frame (r21,
-    // guide §2.4): the damped rank r = (1−d) + d·inflow is a per-row
-    // expression of inflow, so attaching it to every node each round
-    // (the old nodes ⋈ inflow teleport join, one join + exchange per
-    // iteration) is only needed where a rank is actually READ — the
-    // edge sources of the next round (a LEFT join of ew alone; a
-    // source with no inflow row coalesces to the same (1−d) the old
-    // join produced) and the final output (the one nodes join kept,
-    // below). Round 1's rank is the constant 1.0, so its old
-    // identity-attach join folds away too: 6 joins → 2 across the 3
-    // iterations, with bit-identical doubles (same expression tree,
-    // same floor-quantized sums — the oracle's unrolled replay is
-    // unchanged).
-    def rankOf(inflow: org.apache.spark.sql.Column) =
-      lit(1.0 - damping) + lit(damping) * coalesce(inflow, lit(0.0))
+    // The loop iterates the INFLOW frame, not the rank frame: the damped
+    // rank r = (1−d) + d·inflow is a per-row expression of inflow, so it
+    // is attached only where it is read — the next round's edge sources
+    // (a LEFT join of ew; a source with no inflow row coalesces to 1−d)
+    // and the caller's one final nodes join. Round 1's rank is the
+    // constant 1.0, so it needs no join at all.
     var inflow: Option[DataFrame] = None
     for (_ <- 1 to iters) {
       val contrib = (inflow match {
@@ -1117,8 +1190,7 @@ object Similarity {
       inflow = Some(contrib.groupBy(col("vec_id"))
         .agg((sum(col("c")).cast("double") / lit(1000000.0)).as("inflow")))
     }
-    nodes.join(inflow.get, Seq("vec_id"), "left")
-      .select(col("vec_id"), (rankOf(col("inflow")) / lit(n)).as("pagerank"))
+    inflow.get
   }
 
   /** ANN via multi-table random-hyperplane LSH: `nTables` independent

@@ -17,10 +17,12 @@ class StoreCycleSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.get
   val d = "/root/testdata/sf0.001"
 
-  /** Jobs per cycle on this fixture: measured 96 in each of 3 cycles on
-    * 4 cores (141 with the session persists this spec rules out). Raise
-    * it only with a CHANGES.md entry that gives the measured reason. */
-  private val JobBudget = 100
+  /** Jobs per cycle on this fixture: measured 79 in each of 3 cycles on
+    * 4 cores with PageRank iterated on the driver (96 with its three
+    * rounds as Spark joins, 141 with the session persists this spec
+    * rules out). Raise it only with a CHANGES.md entry that gives the
+    * measured reason. */
+  private val JobBudget = 83
 
   test("a semantic-best store cycle leaves nothing cached, within a job budget") {
     val (tau, k) = (0.35, 5)
