@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.{Hashing, Text, Vec}
 import graft.sources.Stored
@@ -1200,8 +1201,8 @@ object Dedup {
     * min(label, neighbors' labels) — and (b) a shortcut — label ←
     * label's label — which halves every label chain, so convergence is
     * O(log diameter) rounds, not O(diameter): a 10M-doc boilerplate
-    * chain converges in ~24 rounds instead of ~10M (and the round-8
-    * bench's diameter-15 pair graph in 5 rounds instead of 16). Both
+    * chain converges in ~24 rounds instead of ~10M (and a bench
+    * pair graph of diameter 15 in 5 rounds instead of 16). Both
     * steps preserve "my label is a smaller-or-equal id in my
     * component"; at the joint fixed point labels are constant along
     * every edge and every label points at itself, which forces label =
@@ -1211,69 +1212,37 @@ object Dedup {
     * truncates lineage so plans stay flat. Output: (doc_id,
     * cluster_id = min doc_id in the component).
     *
-    * ADAPTIVE (r20): a pair list at or under [[ClustersEdgeCap]] is
-    * closed on the driver with the same path-compressed min-label
-    * union-find [[quotientRemap]] uses — identical output, none of
-    * the loop's per-round planning/scheduling tax (the dominant cost
-    * of every clusters-bearing bench row at the graded SFs: ~0.4-0.6 s
-    * x O(log diameter) rounds of driver latency on few-thousand-edge
-    * graphs). Over the cap the loop below runs unchanged — the
-    * distributed shape is the 100 TB posture and §6 r19 priced it at
-    * 1.2-1.7x the driver form, a constant factor, not a cliff. */
+    * A pair list within [[DriverGate]]'s `clusters.edge` cap is
+    * closed on the driver with the path-compressed min-label union-find
+    * ([[unionFindMinLabels]]): identical labels, none of the loop's
+    * per-round planning and scheduling tax (~0.4-0.6 s x O(log
+    * diameter) rounds on few-thousand-edge graphs, the dominant cost of
+    * every clusters-bearing bench row at the graded SFs), and the
+    * labels come back as a [[DriverGate.frame]]. Over the cap the loop
+    * below runs; its distributed shape was priced at 1.2-1.7x the
+    * driver form, a constant factor, not a cliff. A pair row with a
+    * null endpoint, or a string id that does not cast to long (try_cast,
+    * since a plain cast throws under ANSI), contributes nothing on
+    * either path. */
   def clusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // ONE direction checkpointed (r20): the driver fast path below
-    // reads undirected pairs, and the loop path derives the doubled
-    // edge frame from the cached blocks — the checkpoint materializes
-    // half the rows the old both-directions checkpoint wrote.
-    // null endpoints dropped up front (r21, ADVICE r20): the driver
-    // fast path read ids with Row.getLong (NPE on null) while the
-    // distributed loop silently dropped them through its joins — both
-    // paths now agree that a malformed pair row contributes nothing.
-    // The filter runs AFTER the cast, and try_cast (a plain cast throws
-    // under ANSI) turns a non-numeric string id into a null, so such a
-    // row is dropped on both paths too.
+    // one direction checkpointed: the driver path reads undirected
+    // pairs and the loop derives the doubled edge frame from the blocks.
+    // LAZY: the gate's probe job is what materializes it, so the driver
+    // path costs that probe plus one collect.
     val p2 = pairs
       .select(col("id_a").try_cast("long").as("src"),
         col("id_b").try_cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-      .localCheckpoint(true)
-    // Driver fast path (r20, optimization round — [[quotientRemap]]'s
-    // measured rationale applied to the batch closure: the distributed
-    // loop pays a per-round planning + scheduling tax on tiny
-    // join-derived frames, ~0.4-0.6 s x O(log diameter) rounds at the
-    // graded SFs while the pair graph is a few thousand edges): when
-    // the checkpointed pair list fits [[ClustersEdgeCap]], close it
-    // with the same path-compressed min-label union-find and return a
-    // local relation — identical labels (component min) by
-    // construction, and downstream joins against it broadcast instead
-    // of shuffling. Over the cap — the 100 TB posture, where the pair
-    // list is not driver-material — the pointer-doubling loop below
-    // runs unchanged (the r19-priced distributed shape). The probe
-    // scans the already-materialized checkpoint blocks, so it never
-    // re-executes the pair stage.
-    if (fitsDriver(p2, ClustersEdgeCap)) {
-      val labels = unionFindMinLabels(p2.collect().iterator
-        .map(r => (r.getLong(0), r.getLong(1))))
-      val sp = pairs.sparkSession
-      import sp.implicits._
-      val seq = labels.toSeq
-      // r21 (VERDICT r20 item #7): a LocalRelation is embedded in every
-      // downstream plan and broadcast per join — fine for the typical
-      // few-thousand-label closure, wasteful near the edge cap (up to
-      // 2x cap labels ≈ hundreds of MB). Past the relation cap the
-      // labels ship once as a parallelized dataset and downstream
-      // joins plan distributed instead.
-      return (if (seq.size <= ClustersLocalRelationCap)
-          seq.toDF("doc_id", "cluster_id")
-        else sp.createDataset(sp.sparkContext.parallelize(seq,
-            math.max(2, sp.sparkContext.defaultParallelism)))
-          .toDF("doc_id", "cluster_id"))
-    }
-    // NOT a second eager checkpoint (r21, ADVICE r20): the doubled
-    // frame is a narrow union of two scans of p2's already-cached
-    // blocks — each loop round reads E rows twice either way, and
-    // skipping the materialization saves a full 2E-row checkpoint job
-    // exactly on the path where E is corpus-scale.
+      .localCheckpoint(false)
+    if (DriverGate.fits(p2, "clusters.edge"))
+      return DriverGate.frame(pairs.sparkSession, Labels,
+        unionFindMinLabels(p2.collect().iterator
+          .map(r => (r.getLong(0), r.getLong(1))))
+          .iterator.map { case (n, l) => Row(n, l) }.toIndexedSeq)
+    // NOT a second eager checkpoint: the doubled frame is a narrow
+    // union of two scans of p2's blocks — each loop round reads E rows
+    // twice either way, and skipping the materialization saves a full
+    // 2E-row checkpoint job exactly on the path where E is corpus-scale.
     val edges = p2
       .union(p2.select(col("dst").as("src"), col("src").as("dst")))
     // seeded init = round 0's hook for free: every node starts at
@@ -1734,7 +1703,7 @@ object Dedup {
     *  - cluster pairs: delta × (store ∪ delta) through the 6×4
     *    bucket join — [[embeddingNearDupLshDelta]]'s bound; old-old
     *    pairs never re-form. The partition updates through the
-    *    ingest-bounded quotient ([[quotientRemap]]'s union-find +
+    *    ingest-bounded quotient ([[quotientRemap]]'s driver closure +
     *    broadcast remap; min-id labels are not needed — any
     *    canonical label induces the same GROUPING, which is all the
     *    election reads).
@@ -1750,7 +1719,7 @@ object Dedup {
     *    old-old scores).
     *  - pagerank + election: rerun globally — 3 rounds over the
     *    k·N-bounded graph (on the driver while it fits
-    *    [[ClustersLocalRelationCap]], edge-keyed joins over it) plus
+    *    [[DriverGate]]'s relation cap, edge-keyed joins over it) plus
     *    two cluster-keyed aggregates, all corpus-LINEAR. Rank is
     *    a global fixpoint (one new hub vector legitimately shifts
     *    every rank), so any "incremental" shortcut here would be a
@@ -1802,7 +1771,7 @@ object Dedup {
       .filter(col("id_a") =!= col("id_b"))
       .distinct()
     // the quotient's driver closure overlaps the graph branch below
-    val remapF = onThread(quotientRemap(quotient, delta.sparkSession))
+    val remapF = onThread(quotientRemap(quotient))
     // kNN graph, exact merged top-k: a non-delta probe's fresh ranking is
     // topK(its stored prefix ∪ its scores against delta bucket mates).
     // The three merged inputs are disjoint (kept: neither endpoint in the
@@ -1925,7 +1894,6 @@ object Dedup {
                           tau: Double,
                           k: Int): AssignmentDelta[SemanticBestStore] = {
     requireMaintainable("semanticBestRetract", store, tau, k)
-    val sp = retractIds.sparkSession
     val rIds = retractIds.select(col("vec_id")).distinct().localCheckpoint(true)
     def isRetracted(name: String) = rIds.select(col("vec_id").as(name))
     val bits = store.bits.join(isRetracted("vec_id"), Seq("vec_id"), "left_anti")
@@ -1951,7 +1919,7 @@ object Dedup {
       .join(touchedIds.select(col("vec_id").as("id_a")), Seq("id_a"))
       .select(col("id_a"), col("id_b"))
     // the touched components' driver closure overlaps the graph branch
-    val remapF = onThread(quotientRemap(tPairs, sp))
+    val remapF = onThread(quotientRemap(tPairs))
     // ---- graph: filter and re-densify every probe but the few that
     // lost more than their surplus, which re-rank over bucket mates
     val g = retractedGraph(store.graph, rIds, k)
@@ -2557,90 +2525,30 @@ object Dedup {
       .agg(count(lit(1)).as("n_clusters"),
         sum(col("cluster_size")).as("n_docs"))
 
-  /** Close an ingest-bounded QUOTIENT graph with a path-compressed
-    * union-find on the driver and return the (node, merged) remap —
-    * broadcast when the edge set fits [[QuotientEdgeCap]], the
-    * distributed [[clusters]] closure otherwise (logged, never
-    * wrong). Shared by [[semanticKeepersDelta]] and
-    * [[semanticKeepersBestDelta]] — the size argument (the remap is
-    * broadcast anyway, so the operator is already committed to a
-    * driver-memory-bounded quotient) and the r12 measured rationale
-    * (the distributed loop pays an exponentially growing per-round
-    * planning tax on tiny join-derived frames) live with the code
-    * once. Only labels that actually MOVED ride the result. */
-  private def quotientRemap(quotient: DataFrame,
-                            sp: org.apache.spark.sql.SparkSession): DataFrame = {
-    val quotientEdges = quotient.limit(QuotientEdgeCap + 1).collect()
-    if (quotientEdges.length <= QuotientEdgeCap) {
-      val labels = unionFindMinLabels(quotientEdges.iterator
-        .map(row => (row.getLong(0), row.getLong(1))))
-      // only the labels that actually moved ride the broadcast
-      val moved = labels.iterator
-        .filter { case (n, m) => m != n }.toSeq
-      import sp.implicits._
-      broadcast(moved.toDF("node", "merged"))
-    } else {
-      System.err.println(s"[graft] quotientRemap: quotient " +
-        s"exceeds $QuotientEdgeCap distinct edges; falling back to the " +
-        "distributed closure (driver union-find skipped)")
-      clusters(quotient.localCheckpoint(true))
-        .filter(col("doc_id") =!= col("cluster_id"))
-        .select(col("doc_id").as("node"), col("cluster_id").as("merged"))
-    }
+  /** The (node, merged) remap of an ingest-bounded QUOTIENT graph: its
+    * [[clusters]] labels, only those that moved. Shared by
+    * [[semanticKeepersDelta]], [[semanticKeepersBestDelta]] and
+    * [[semanticBestRetract]]. Labels closed on the driver are broadcast
+    * (the operator already commits to a driver-sized quotient: at most
+    * one edge per delta pair, never the corpus); labels from the
+    * distributed loop join plainly, so an over-cap quotient never
+    * reaches the driver. */
+  private[graft] def quotientRemap(quotient: DataFrame): DataFrame = {
+    val labels = clusters(quotient)
+    val moved = labels.filter(col("doc_id") =!= col("cluster_id"))
+      .select(col("doc_id").as("node"), col("cluster_id").as("merged"))
+    if (labels.isLocal) broadcast(moved) else moved
   }
 
-  /** Driver-closure guard for the quotient union-find: above this
-    * many DISTINCT quotient edges the collect is refused
-    * and the pass closes the quotient with the distributed
-    * [[clusters]] loop instead. 4M edges ≈ a few hundred MB of Row
-    * overhead on the driver — far above any ingest-bounded quotient
-    * seen in practice, far below a heap-threatening collect. */
-  private[graft] def QuotientEdgeCap: Int =
-    sys.props.get("graft.quotient.edge.cap").map(_.toInt).getOrElse(4000000)
-
-  /** Driver-closure guard for [[clusters]]' fast path (r20): at or
-    * under this many UNDIRECTED pair rows the checkpointed pair list
-    * is collected and closed with the path-compressed union-find;
-    * above it the pointer-doubling loop runs unchanged. Same 4M
-    * bound and driver-memory argument as [[QuotientEdgeCap]] (a few
-    * hundred MB of transient Row overhead); at the 100 TB posture a
-    * corpus-scale pair list blows past it and takes the distributed
-    * loop, which §6 r19 priced at 1.2-1.7x the driver form. */
-  private[graft] def ClustersEdgeCap: Int =
-    sys.props.get("graft.clusters.edge.cap").map(_.toInt).getOrElse(4000000)
-
-  /** Label-count bound for returning [[clusters]]' fast-path result
-    * as a driver LocalRelation (embedded in downstream plans and
-    * broadcast per join); above it the labels ship once as a
-    * parallelized dataset instead (r21 — the edge cap was doing
-    * double duty as collect guard AND relation-size guard, and 2x
-    * 4M labels is far past sensible broadcast size). Its second user
-    * is [[Similarity.pagerankFromEdges]]: at or under this many edge
-    * rows the iteration runs on the driver and returns a broadcast
-    * local relation of at most that many inflow rows. */
-  private[graft] def ClustersLocalRelationCap: Int =
-    sys.props.get("graft.clusters.local.relation.cap").map(_.toInt)
-      .getOrElse(1000000)
-
-  /** Whether `df` has at most `cap` rows, decided by a bounded count per
-    * partition that never collects a row: each partition iterates at
-    * most cap+1 InternalRows and ships one long, and a partition alone
-    * past the cap already proves the frame is. So an over-cap frame
-    * (the 100 TB posture) puts nothing on the driver, where a
-    * `limit(cap+1).count()` would funnel up to cap+1 rows per partition
-    * through a single-partition shuffle. One job; callers probe a
-    * checkpointed or cached frame so the collect that follows a "yes"
-    * does not recompute it. A negative cap is never met. */
-  private[graft] def fitsDriver(df: DataFrame, cap: Int): Boolean =
-    df.queryExecution.toRdd
-      .mapPartitions(it => Iterator(it.take(cap + 1).size.toLong))
-      .collect().sum <= cap
+  /** The schema of [[clusters]]' driver result. */
+  private val Labels = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("cluster_id", LongType, nullable = false)))
 
   /** Path-compressed min-label union-find over an edge iterator —
-    * the shared driver core of [[quotientRemap]] and [[clusters]]'
-    * fast path: every node that appears in any edge maps to the MIN
-    * id of its connected component (the distributed closure's fixed
-    * point, the oracle's recursive-CTE answer). */
+    * [[clusters]]' driver path: every node that appears in any edge
+    * maps to the MIN id of its connected component (the distributed
+    * closure's fixed point, the oracle's recursive-CTE answer). */
   private def unionFindMinLabels(
       edges: Iterator[(Long, Long)]): scala.collection.mutable.HashMap[Long, Long] = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
@@ -2868,38 +2776,24 @@ object Dedup {
     // the SAME (label, delta-id) edge), which is also the case where
     // raw pair count is quadratic in the ingest — dedup in the
     // executors so the driver only ever sees the quotient's true edge
-    // set (r12 advice: an all-duplicate micro-batch must not OOM the
-    // driver through an un-deduped collect).
+    // set (an all-duplicate micro-batch must not OOM the driver through
+    // an un-deduped collect).
     val quotient = dPairs.union(memberEdges).union(knownEdges)
       .join(la, Seq("id_a"), "left").join(lb, Seq("id_b"), "left")
       .select(coalesce(col("la"), col("id_a")).as("id_a"),
         coalesce(col("lb"), col("id_b")).as("id_b"))
       .filter(col("id_a") =!= col("id_b"))
       .distinct()
-    // Quotient closure on the DRIVER (union-find), not [[clusters]]:
-    // the remap below is BROADCAST — the operator already commits to
-    // the quotient being driver-memory-sized (it is ingest-bounded:
-    // ≤ one edge per delta pair, nodes ≤ 2× that; never the corpus) —
-    // so collecting the edge list is the same size class as the
-    // broadcast it feeds, and a path-compressed union-find closes a
-    // multi-million-edge quotient in seconds with ZERO per-round
-    // Spark jobs. The distributed loop was also measured pathological
-    // here: [[clusters]] over the tiny join-derived frame paid an
-    // exponentially growing per-round localCheckpoint planning tax
-    // (0.7→2→6→15 s/round at sf0.1; the same loop over the corpus
-    // pair graph is 0.1 s/round — probed r12), so the driver closure
-    // is both the honest size-class AND 10× faster end-to-end.
-    // counted cap (r12 advice): the driver closure's size argument is
-    // "ingest-bounded quotient ≈ the broadcast it feeds" — true for
-    // every sane micro-batch, but a pathological ingest could still
-    // exceed driver heap, so the collect is capped. limit(cap+1)
-    // either returns the FULL (distinct) edge set (≤ cap — the common
-    // case, closed in driver memory with zero per-round Spark jobs)
-    // or proves the quotient oversized, in which case the pass falls
-    // back to the distributed [[clusters]] closure over the eagerly
-    // checkpointed quotient and a plain (non-broadcast) remap join —
-    // slower, never wrong, and logged.
-    val remap = quotientRemap(quotient, delta.sparkSession)
+    // the quotient closes through [[clusters]]: ingest-bounded (≤ one
+    // edge per delta pair, nodes ≤ 2× that, never the corpus), so it
+    // fits the driver gate and a union-find closes a multi-million-edge
+    // quotient in seconds with zero per-round jobs. The distributed
+    // loop over this tiny join-derived frame measured a growing
+    // per-round planning tax (0.7→2→6→15 s/round at sf0.1, against
+    // 0.1 s/round over the corpus pair graph); it runs only past the
+    // gate's cap, where the remap joins un-broadcast — slower, never
+    // wrong.
+    val remap = quotientRemap(quotient)
     val storedNew = storedAsg
       .join(remap, storedAsg("cluster_id") === remap("node"), "left")
       .select(storedAsg("vec_id"),

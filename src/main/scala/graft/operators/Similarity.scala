@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.functions.Vec
 import graft.plans.Exprs
@@ -58,32 +59,14 @@ object Similarity {
         s"key, so the $side frame must carry a 'label' column beside " +
         s"(vec_id, embedding); got [${df.columns.mkString(", ")}]")
 
-  /** Broadcasting the probe side is an optimization that only holds
-    * while the probe set is driver-sized; a probe frame that grows with
-    * the corpus would OOM every executor. Cap: `DefaultMaxBroadcastProbes`
-    * rows (~100k 64-float vectors ≈ 30 MB). The row-count guard scans at
-    * most cap+1 rows (`limit(n+1).count()`), never the full frame. Over
-    * the cap the join runs un-hinted — a shuffle equi-join where a
-    * bucket/cell key exists, a partitioned cartesian for brute force —
-    * which is the honest distributed shape for a corpus-sized probe set. */
-  val DefaultMaxBroadcastProbes: Long = 100000
+  /** Over-cap probe shards past which brute force stops sharding: each
+    * shard costs one full corpus pass, so sharding only beats the single
+    * shuffled pass while the count stays small. Past it the probe set is
+    * corpus-scaled and the honest shape is the un-hinted join. */
+  private val MaxProbeShards = 32
 
-  /** Row-count guard, bounded: scans at most maxRows+1 rows. Run it on
-    * the RAW probe frame, not a derived one — counting a frame that
-    * already applies the cell-assignment/bucketing expressions would
-    * evaluate them twice per query. */
-  private def fitsBroadcast(df: DataFrame, maxRows: Long): Boolean = {
-    // clamp BEFORE the +1: maxRows = Long.MaxValue ("always broadcast")
-    // must not overflow into a negative limit.
-    val capped = (math.min(maxRows, Int.MaxValue - 1L) + 1L).toInt
-    df.limit(capped).count() <= maxRows
-  }
-
-  /** Max shard fan-out for an over-cap probe frame: each shard costs
-    * one full corpus pass, so sharding only beats the single shuffled
-    * pass while the shard count stays small. Past this, the probe set
-    * is corpus-scaled and the honest shape is the un-hinted join. */
-  val DefaultMaxProbeShards: Int = 32
+  /** The [[DriverGate]] that decides whether a probe frame is broadcast. */
+  private val BroadcastProbes = "knn.broadcast.probes"
 
   /** The cosine of two vectors whose norms `na` and `nb` are HOISTED:
     * each side carries a per-row norm computed once at projection
@@ -141,27 +124,25 @@ object Similarity {
     * are excluded by vec_id. Deterministic rank: cosine desc, then
     * neighbor id.
     *
-    * Probe-size ladder: under `maxBroadcastProbes` the probe frame is
-    * broadcast (one shuffle-free corpus pass, k x partitions rows per
-    * probe to the exchange). Over the cap it is SPLIT into
+    * Probe-size ladder: within the [[DriverGate]] `knn.broadcast.probes`
+    * cap the probe frame is broadcast (one shuffle-free corpus pass,
+    * k x partitions rows per probe to the exchange). Over the cap it is SPLIT into
     * deterministic hash shards of ≤ ~cap rows (pmod(xxhash64(id)) —
     * reproducible across runs and partitionings, total over any id
     * range), each broadcast and scored in its own corpus pass: every probe is
     * in exactly one shard and rankTopK is per-probe, so the unioned
     * result is IDENTICAL to the single-pass answer (spec-proven) while
     * no broadcast ever exceeds the executor-memory cap. Only past
-    * `maxProbeShards` shards (a probe set ~32x the broadcast cap —
+    * [[MaxProbeShards]] shards (a probe set ~32x the broadcast cap —
     * corpus-scaled) does it fall back to the one shuffled/cartesian
     * pass, which trades per-pass scan cost for shuffling the full
     * score set. */
-  def knnBruteForce(embeddings: DataFrame, probes: DataFrame, k: Int,
-                    maxBroadcastProbes: Long = DefaultMaxBroadcastProbes,
-                    maxProbeShards: Int = DefaultMaxProbeShards): DataFrame = {
+  def knnBruteForce(embeddings: DataFrame, probes: DataFrame, k: Int): DataFrame = {
     val e = embeddings.select(col("vec_id"), col("embedding").as("v"),
       Vec.norm(col("embedding")).as("vnrm"))
     val p = probes.select(col("vec_id").as("probe_id"), col("embedding").as("pv"),
       Vec.norm(col("embedding")).as("pnrm"))
-    if (fitsBroadcast(p, maxBroadcastProbes))
+    if (DriverGate.fits(p, BroadcastProbes))
       rankTopK(scoreAgainst(broadcast(p), e), k)
     else {
       // over the cap: persist the probe frame once — the exact count
@@ -174,9 +155,9 @@ object Similarity {
       val pc = CacheTracker.persistTracked(p)
       val total = pc.count()
       // shards target ~90% of the cap so hash variance stays under it
-      val target = math.max(1L, maxBroadcastProbes * 9L / 10L)
-      val shards = ((total + target - 1L) / target).toInt
-      if (shards <= maxProbeShards) {
+      val target = math.max(1L, DriverGate.cap(BroadcastProbes) * 9L / 10L)
+      val shards = math.max(1L, (total + target - 1L) / target).toInt
+      if (shards <= MaxProbeShards) {
         // pmod(xxhash64): total over [0, shards) for ANY id value —
         // a plain `id % p * a % m % shards` is negative for negative
         // ids (those probes would match no shard and vanish from the
@@ -429,11 +410,9 @@ object Similarity {
     * per-probe work is bounded by cell occupancy. Recall trades
     * against nProbe; scores of returned pairs are exact. */
   def knnIvf(embeddings: DataFrame, probes: DataFrame, k: Int,
-             centroidMod: Int = 37, nProbe: Int = 2,
-             maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame = {
+             centroidMod: Int = 37, nProbe: Int = 2): DataFrame = {
     val e = embeddings.select(col("vec_id"), col("embedding").as("v"))
-    knnIvfWith(e, seedCentroids(e, centroidMod), probes, k, nProbe,
-      maxBroadcastProbes)
+    knnIvfWith(e, seedCentroids(e, centroidMod), probes, k, nProbe)
   }
 
   /** IVF over a Lloyd's-trained codebook: same index/search shapes as
@@ -444,11 +423,9 @@ object Similarity {
     * shuffle. */
   def knnIvfTrained(embeddings: DataFrame, probes: DataFrame, k: Int,
                     centroidMod: Int = 37, nProbe: Int = 2,
-                    iters: Int = 3, dim: Int = 64,
-                    maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame = {
+                    iters: Int = 3, dim: Int = 64): DataFrame = {
     val e = embeddings.select(col("vec_id"), col("embedding").as("v"))
-    knnIvfWith(e, trainCentroids(e, centroidMod, iters, dim), probes, k,
-      nProbe, maxBroadcastProbes)
+    knnIvfWith(e, trainCentroids(e, centroidMod, iters, dim), probes, k, nProbe)
   }
 
   /** FILTERED IVF — [[knnFiltered]]'s scale path: the attribute
@@ -463,8 +440,7 @@ object Similarity {
     * join. Same recall/nProbe trade as [[knnIvf]]; returned scores
     * exact; rank deterministic (cos desc, id asc). */
   def knnIvfFiltered(embeddings: DataFrame, probes: DataFrame, k: Int,
-                     centroidMod: Int = 37, nProbe: Int = 2,
-                     maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame = {
+                     centroidMod: Int = 37, nProbe: Int = 2): DataFrame = {
     requireLabel(embeddings, "corpus", "knnIvfFiltered")
     requireLabel(probes, "probe", "knnIvfFiltered")
     val e = embeddings.select(col("vec_id"), col("embedding").as("v"))
@@ -477,8 +453,7 @@ object Similarity {
         col("embedding").as("v")),
       cents, carry = Seq("label"))
       .withColumn("vnrm", Vec.norm(col("v")))
-    knnIvfAssigned(assigned, cents, probes, k, nProbe, maxBroadcastProbes,
-      joinKeys = Seq("label"))
+    knnIvfAssigned(assigned, cents, probes, k, nProbe, joinKeys = Seq("label"))
   }
 
   /** PQ geometry: [[PqM]] = 8 subspaces over the 64-dim embeddings
@@ -549,11 +524,10 @@ object Similarity {
     * neighbor representation; AnnRecallSpec pins the recall floor.
     * Deterministic quantizer → the oracle replays the whole pipeline. */
   def knnPq(embeddings: DataFrame, probes: DataFrame, k: Int,
-            kSub: Int = PqKSub, seedMod: Int = PqSeedMod,
-            maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame = {
+            kSub: Int = PqKSub, seedMod: Int = PqSeedMod): DataFrame = {
     val e = embeddings.select(col("vec_id"), col("embedding").as("v"))
     val seeds = pqSeeds(e, kSub, seedMod)
-    knnPqWith(pqCodes(e, seeds), seeds, probes, k, maxBroadcastProbes)
+    knnPqWith(pqCodes(e, seeds), seeds, probes, k)
   }
 
   /** The persisted PQ index: the 4-byte/vector code table plus the
@@ -607,20 +581,19 @@ object Similarity {
     * of [[knnLshIndexed]] / [[knnIvfIndexed]]): per query batch only
     * the probe LUTs are computed; the corpus-side encode is the
     * persisted code table. */
-  def knnPqIndexed(index: PqIndex, probes: DataFrame, k: Int,
-                   maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame =
-    knnPqWith(index.codes, index.seeds, probes, k, maxBroadcastProbes)
+  def knnPqIndexed(index: PqIndex, probes: DataFrame, k: Int): DataFrame =
+    knnPqWith(index.codes, index.seeds, probes, k)
 
   /** Shared probe-side tail of both PQ paths: LUT projection under the
     * broadcast seeds, ADC scoring against the code table, bounded
     * top-k. */
   private def knnPqWith(codes: DataFrame, seeds: DataFrame, probes: DataFrame,
-                        k: Int, maxBroadcastProbes: Long): DataFrame = {
+                        k: Int): DataFrame = {
     val p0 = probes.select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
     val pl = p0.crossJoin(broadcast(seeds))
       .select(col("probe_id"),
         Exprs.pqLut(unitOf(col("pv")), col("seeds"), PqM).as("lut"))
-    val pj = if (fitsBroadcast(p0, maxBroadcastProbes)) broadcast(pl) else pl
+    val pj = if (DriverGate.fits(p0, BroadcastProbes)) broadcast(pl) else pl
     val scored = pj.join(codes, col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
         Exprs.pqAdc(col("lut"), col("codes")).as("cos_sim"))
@@ -639,14 +612,13 @@ object Similarity {
     * pipeline. */
   def knnIvfPq(embeddings: DataFrame, probes: DataFrame, k: Int,
                centroidMod: Int = 37, nProbe: Int = 2,
-               kSub: Int = PqKSub, seedMod: Int = PqSeedMod,
-               maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame =
+               kSub: Int = PqKSub, seedMod: Int = PqSeedMod): DataFrame =
     // the one-shot path IS build + serve composed: the same indexed
     // projection ([[ivfPqIndexWith]]) and the same probe LUT/cell +
     // ADC tail ([[knnIvfPqIndexed]]) — one definition each, so the
     // build, served, and delta paths cannot de-synchronize
     knnIvfPqIndexed(ivfPqIndex(embeddings, centroidMod, kSub, seedMod),
-      probes, k, nProbe, maxBroadcastProbes)
+      probes, k, nProbe)
 
   /** The persisted composed IVF+PQ index: `indexed` = (vec_id, cell,
     * codes) rows — 4 bytes of PQ codes plus a cell id per vector, the
@@ -718,8 +690,7 @@ object Similarity {
     * broadcast quantizer frames; the corpus-side (cell, codes) table
     * is the persisted index. */
   def knnIvfPqIndexed(index: IvfPqIndex, probes: DataFrame, k: Int,
-                      nProbe: Int = 2,
-                      maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame = {
+                      nProbe: Int = 2): DataFrame = {
     val p0 = probes.select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
     val probeCells = p0
       .crossJoin(broadcast(codebook(index.centroids)))
@@ -728,7 +699,7 @@ object Similarity {
         Exprs.pqLut(unitOf(col("pv")), col("seeds"), PqM).as("lut"),
         explode(Exprs.nearestCells(col("pv"), col("cids"), col("units"), nProbe))
           .as("pcell"))
-    val pj = if (fitsBroadcast(p0, maxBroadcastProbes)) broadcast(probeCells)
+    val pj = if (DriverGate.fits(p0, BroadcastProbes)) broadcast(probeCells)
              else probeCells
     val scored = pj
       .join(index.indexed,
@@ -814,10 +785,8 @@ object Similarity {
     * are ranked against the broadcast codebook; the corpus-side
     * assignment is the persisted index table. */
   def knnIvfIndexed(index: IvfIndex, probes: DataFrame, k: Int,
-                    nProbe: Int = 2,
-                    maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame =
-    knnIvfAssigned(index.assigned, index.centroids, probes, k, nProbe,
-      maxBroadcastProbes)
+                    nProbe: Int = 2): DataFrame =
+    knnIvfAssigned(index.assigned, index.centroids, probes, k, nProbe)
 
   /** [[knnIvfFiltered]] over a PREBUILT label-carrying [[IvfIndex]]
     * ([[ivfIndex]] with `carry = Seq("label")`) — the serving shape
@@ -830,20 +799,18 @@ object Similarity {
     * On a (label)-bucketed index layout the scan prunes to the
     * classes present in the probe batch before the join. */
   def knnIvfFilteredIndexed(index: IvfIndex, probes: DataFrame, k: Int,
-                            nProbe: Int = 2,
-                            maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame = {
+                            nProbe: Int = 2): DataFrame = {
     requireLabel(index.assigned, "index", "knnIvfFilteredIndexed")
     requireLabel(probes, "probe", "knnIvfFilteredIndexed")
     knnIvfAssigned(index.assigned, index.centroids, probes, k, nProbe,
-      maxBroadcastProbes, joinKeys = Seq("label"))
+      joinKeys = Seq("label"))
   }
 
   private def knnIvfWith(e: DataFrame, cents: DataFrame, probes: DataFrame,
-                         k: Int, nProbe: Int,
-                         maxBroadcastProbes: Long): DataFrame =
+                         k: Int, nProbe: Int): DataFrame =
     knnIvfAssigned(
       assignCells(e, cents).withColumn("vnrm", Vec.norm(col("v"))),
-      cents, probes, k, nProbe, maxBroadcastProbes)
+      cents, probes, k, nProbe)
 
   /** Shared IVF candidate/scoring core. `joinKeys` are optional
     * attribute equalities (assigned `k` = probe `p_k`) for FILTERED
@@ -854,7 +821,6 @@ object Similarity {
     * execution). */
   private def knnIvfAssigned(assigned: DataFrame, cents: DataFrame,
                              probes: DataFrame, k: Int, nProbe: Int,
-                             maxBroadcastProbes: Long,
                              joinKeys: Seq[String] = Nil): DataFrame = {
     val cb = broadcast(codebook(cents))
     val p = probes.select(
@@ -867,10 +833,10 @@ object Similarity {
         joinKeys.map(kk => col(s"p_$kk")) :+
         explode(Exprs.nearestCells(col("pv"), col("cids"), col("units"), nProbe))
           .as("pcell"): _*)
-    // guard on the raw probe frame (cheap count); broadcast the
-    // nProbe-expanded cell frame only if it fits. Over the cap the
-    // cell key carries an ordinary shuffle equi-join instead.
-    val pj = if (fitsBroadcast(p, maxBroadcastProbes)) broadcast(probeCells)
+    // gate the probe frame, not its nProbe-expanded cell frame, which
+    // is broadcast only if the probes fit. Over the cap the cell key
+    // carries an ordinary shuffle equi-join instead.
+    val pj = if (DriverGate.fits(p, BroadcastProbes)) broadcast(probeCells)
              else probeCells
     val cond = joinKeys.map(kk => col(kk) === col(s"p_$kk"))
       .foldLeft(col("cell") === col("pcell") &&
@@ -1035,8 +1001,8 @@ object Similarity {
     * p' = (1−d)/N + d·Σ_in p/outdeg over [[knnGraph]]'s edges.
     *
     * Scale shape: the edge list is k·N rows (bounded by construction)
-    * and the iteration count is a constant, not data-dependent. At or
-    * under [[Dedup.ClustersLocalRelationCap]] edge rows the edges are
+    * and the iteration count is a constant, not data-dependent. Within
+    * [[DriverGate]]'s `clusters.local.relation` cap the edges are
     * collected once and the rounds run on the driver; over it each
     * round is one edge-keyed join + one map-side-combinable sum per
     * node. Both paths give the same doubles. The iteration runs in
@@ -1055,20 +1021,27 @@ object Similarity {
     * standard no-redistribution treatment: their mass exits the
     * system and the teleport term keeps every rank positive. */
   def knnPagerank(embeddings: DataFrame, k: Int, iters: Int = 3,
-                  damping: Double = 0.85): DataFrame =
+                  damping: Double = 0.85): DataFrame = {
+    requireIters(iters)
+    // a lazy checkpoint: the gate's probe materializes the graph once
+    // for the collect or the outdeg join that follows, and no session
+    // cache entry outlives the call
     pagerankFromEdges(
-      CacheTracker.persistTracked(
-        knnGraph(embeddings, k).select(col("vec_id").as("src"),
-          col("neighbor_id").as("dst"))),
+      knnGraph(embeddings, k).select(col("vec_id").as("src"),
+        col("neighbor_id").as("dst")).localCheckpoint(false),
       embeddings.select(col("vec_id")), iters, damping)
+  }
+
+  private def requireIters(iters: Int): Unit =
+    require(iters >= 1, s"pagerank needs at least one iteration, got $iters")
 
   /** The damped power iteration alone, over a CALLER-SUPPLIED edge
     * frame (src, dst) — factored out (r14) so
     * [[graft.operators.Dedup.semanticKeepersBest]] can run the
     * identical arithmetic over a graph built from its own shared
     * bucketed projection instead of paying [[knnGraph]]'s second
-    * corpus plane-hash. `edges` is probed with [[Dedup.fitsDriver]]:
-    * at or under [[Dedup.ClustersLocalRelationCap]] rows it is
+    * corpus plane-hash. `edges` is probed with [[DriverGate.fits]]:
+    * within the `clusters.local.relation` cap it is
     * collected once and iterated on the driver ([[driverInflow]]),
     * over the cap it is read by one checkpoint job (the rows and their
     * outdeg aggregate) and iterated as joins. Same quantized, N-scaled,
@@ -1085,7 +1058,7 @@ object Similarity {
   private[graft] def pagerankFromEdges(edges: DataFrame, ids: DataFrame,
                                            iters: Int,
                                            damping: Double): DataFrame = {
-    require(iters >= 1, s"pagerank needs at least one iteration, got $iters")
+    requireIters(iters)
     // N is counted once on the driver; `nodes` is read twice (the count
     // and the final join), both cheap column reads at every caller
     val nodes = ids.select(col("vec_id"))
@@ -1094,7 +1067,7 @@ object Similarity {
       lit(1.0 - damping) + lit(damping) * coalesce(inflow, lit(0.0))
     val e = edges.select(col("src"), col("dst"))
     val inflow =
-      if (Dedup.fitsDriver(e, Dedup.ClustersLocalRelationCap))
+      if (DriverGate.fits(e, "clusters.local.relation"))
         broadcast(driverInflow(e, iters, damping))
       else distributedInflow(edges, iters, rankOf)
     nodes.join(inflow, Seq("vec_id"), "left")
@@ -1152,11 +1125,14 @@ object Similarity {
     }
     val landed = new Array[Boolean](m)
     d.foreach(landed(_) = true)
-    val sp = e.sparkSession
-    import sp.implicits._
-    (0 until m).filter(landed(_)).map(i => (keys(i), inflow(i)))
-      .toDF("vec_id", "inflow")
+    DriverGate.frame(e.sparkSession, Inflow, (0 until m).filter(landed(_))
+      .map(i => Row(keys(i), inflow(i))))
   }
+
+  /** The schema of [[driverInflow]]'s result. */
+  private val Inflow = StructType(Seq(
+    StructField("vec_id", LongType, nullable = false),
+    StructField("inflow", DoubleType, nullable = false)))
 
   /** [[pagerankFromEdges]]' rounds as Spark joins, for an edge list past
     * the driver cap. */
@@ -1201,11 +1177,10 @@ object Similarity {
     * probe is bounded by bucket occupancy, not corpus size. */
   def knnLsh(embeddings: DataFrame, probes: DataFrame, k: Int,
              nTables: Int = 4, planesPerTable: Int = 6,
-             dim: Int = 64,
-             maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame =
+             dim: Int = 64): DataFrame =
     knnLshIndexed(
       Dedup.embeddingLshStore(embeddings, nTables, planesPerTable, dim),
-      probes, k, maxBroadcastProbes)
+      probes, k)
 
   /** [[knnLsh]] over a PREBUILT index — the serving shape. [[knnLsh]]
     * re-buckets the whole corpus on every call (nTables×planesPerTable
@@ -1216,17 +1191,16 @@ object Similarity {
     * query batch from it — per-batch work is then probe bucketing under
     * the store's geometry + the bucket-key join only. */
   def knnLshIndexed(store: Dedup.EmbeddingLshStore, probes: DataFrame,
-                    k: Int,
-                    maxBroadcastProbes: Long = DefaultMaxBroadcastProbes): DataFrame = {
+                    k: Int): DataFrame = {
     // bucketing is per-row deterministic, so bucketing the probe frame
     // directly equals filtering the bucketed corpus
     val p = probes.select(col("vec_id"), col("embedding").as("v"))
     val pBucketed = lshBucketed(p, store.nTables, store.planesPerTable,
       store.dim)
-    // guard on the raw probe frame (cheap count; the bucketed frame is
-    // nTables rows per probe and would re-evaluate the plane dots).
-    // Over the cap the (table, bucket) key carries a shuffle equi-join.
-    val pj = if (fitsBroadcast(p, maxBroadcastProbes)) broadcast(pBucketed)
+    // gate the probe frame, not the bucketed one (nTables rows per
+    // probe). Over the cap the (table, bucket) key carries a shuffle
+    // equi-join.
+    val pj = if (DriverGate.fits(p, BroadcastProbes)) broadcast(pBucketed)
              else pBucketed
     rankTopK(bucketMates(pj, store.bucketed), k)
   }

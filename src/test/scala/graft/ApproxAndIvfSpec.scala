@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.Caps.withCaps
 import graft.operators.{Similarity, WordCount}
 import graft.sources.Tables
 
@@ -43,22 +44,24 @@ class ApproxAndIvfSpec extends AnyFunSuite {
   test("probe set over the broadcast cap: shuffle fallback, identical results") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, d)
-    val probes = Similarity.probeEvery(emb, 20) // > the tiny cap below
+    // more probes than the shard ladder's 32 one-probe shards at cap 1,
+    // so brute force reaches the final un-hinted rung (the ladder
+    // itself is spec'd below)
+    val probes = Similarity.probeEvery(emb, 10)
+    assert(probes.count() > 32)
     def sorted(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4)).toSeq
-    // brute force: cartesian instead of broadcast-nested-loop
-    // (maxProbeShards = 1 disables the shard ladder so this exercises
-    // the final fallback rung; the ladder itself is spec'd below)
     val bfB = Similarity.knnBruteForce(emb, probes, k = 5)
-    val bfS = Similarity.knnBruteForce(emb, probes, k = 5,
-      maxBroadcastProbes = 3, maxProbeShards = 1)
-    assert(sorted(bfB) == sorted(bfS) && sorted(bfB).nonEmpty)
-    // lsh + ivf: plain shuffle equi-join on the bucket/cell key
     val lshB = Similarity.knnLsh(emb, probes, k = 5)
-    val lshS = Similarity.knnLsh(emb, probes, k = 5, maxBroadcastProbes = 3)
-    assert(sorted(lshB) == sorted(lshS))
     val ivfB = Similarity.knnIvf(emb, probes, k = 5)
-    val ivfS = Similarity.knnIvf(emb, probes, k = 5, maxBroadcastProbes = 3)
+    // brute force: cartesian instead of broadcast-nested-loop; lsh +
+    // ivf: plain shuffle equi-join on the bucket/cell key
+    val (bfS, lshS, ivfS) = withCaps("knn.broadcast.probes" -> "1")(
+      (Similarity.knnBruteForce(emb, probes, k = 5),
+        Similarity.knnLsh(emb, probes, k = 5),
+        Similarity.knnIvf(emb, probes, k = 5)))
+    assert(sorted(bfB) == sorted(bfS) && sorted(bfB).nonEmpty)
+    assert(sorted(lshB) == sorted(lshS))
     assert(sorted(ivfB) == sorted(ivfS))
     // the guard really removes the forced hint (AQE may still choose a
     // runtime broadcast at this toy scale — what must go is OUR hint
@@ -77,20 +80,45 @@ class ApproxAndIvfSpec extends AnyFunSuite {
       df.as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4)).toSeq
     // ground truth: everything broadcast in one pass
     val one = Similarity.knnBruteForce(emb, probes, k = 5)
-    // cap 4 → ~9 shards of ≤ ~4 probes, still within maxProbeShards
-    val sharded = Similarity.knnBruteForce(emb, probes, k = 5,
-      maxBroadcastProbes = 4)
+    // cap 4 → ~9 shards of ≤ ~4 probes, within the 32-shard ladder
+    val sharded = withCaps("knn.broadcast.probes" -> "4")(
+      Similarity.knnBruteForce(emb, probes, k = 5))
     assert(sorted(sharded) == sorted(one) && sorted(one).nonEmpty)
     // the shard path really is per-shard broadcasts: several bounded
     // hints, not one probe-scaled hint and not zero
     val hints = "ResolvedHint".r
       .findAllIn(sharded.queryExecution.analyzed.toString).size
     assert(hints > 1, s"expected shard-count hints, got $hints")
-    // over maxProbeShards the ladder falls through to the un-hinted pass
-    val fell = Similarity.knnBruteForce(emb, probes, k = 5,
-      maxBroadcastProbes = 3, maxProbeShards = 2)
+    // past 32 shards the ladder falls through to the un-hinted pass:
+    // cap 1 targets one probe per shard, and here are more than 32
+    val many = Similarity.probeEvery(emb, 10)
+    assert(many.count() > 32)
+    val fell = withCaps("knn.broadcast.probes" -> "1")(
+      Similarity.knnBruteForce(emb, many, k = 5))
     assert(!fell.queryExecution.analyzed.toString.contains("ResolvedHint"))
-    assert(sorted(fell) == sorted(one))
+    assert(sorted(fell) == sorted(Similarity.knnBruteForce(emb, many, k = 5)))
+  }
+
+  test("empty and null-id probe frames give the same rows under and over the probe cap") {
+    import org.apache.spark.sql.functions.lit
+    val emb = Tables.embeddings(spark, d)
+    val nullId = emb.limit(1)
+      .withColumn("vec_id", lit(null).cast(emb.schema("vec_id").dataType))
+    val frames = Seq("empty" -> emb.limit(0),
+      "null vec_id" -> Similarity.probeEvery(emb, 50).union(nullId))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    def searches(probes: org.apache.spark.sql.DataFrame) = Seq(
+      "knnBruteForce" -> Similarity.knnBruteForce(emb, probes, k = 5),
+      "knnLsh" -> Similarity.knnLsh(emb, probes, k = 5),
+      "knnIvf" -> Similarity.knnIvf(emb, probes, k = 5))
+    for ((shape, probes) <- frames) {
+      val under = searches(probes)
+      // a negative cap is never met, so even the empty frame is over it
+      val over = withCaps("knn.broadcast.probes" -> "-1")(searches(probes))
+      for (((op, u), (_, o)) <- under.zip(over))
+        assert(rows(u) == rows(o), s"$op on the $shape probe frame")
+    }
   }
 
   test("trained-codebook IVF: centroids move, scores stay exact, results bounded") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.Caps.withCaps
 import graft.operators.Dedup
 
 /** Connected-component clustering vs a reference union-find. */
@@ -79,16 +80,9 @@ class ClustersSpec extends AnyFunSuite {
     val expected = Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 6L -> 5L)
     val fast = Dedup.clusters(pairs).as[(Long, Long)].collect().toMap
     assert(fast == expected)
-    val key = "graft.clusters.edge.cap"
-    val old = sys.props.get(key)
-    sys.props(key) = "0"
-    try {
-      val loop = Dedup.clusters(pairs).as[(Long, Long)].collect().toMap
-      assert(loop == expected)
-    } finally old match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
-    }
+    val loop = withCaps("clusters.edge" -> "0")(
+      Dedup.clusters(pairs).as[(Long, Long)].collect().toMap)
+    assert(loop == expected)
   }
 
   test("a string id that casts to null is ignored on both paths") {
@@ -99,17 +93,10 @@ class ClustersSpec extends AnyFunSuite {
       .toDF("id_a", "id_b")
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L)
     val fast = Dedup.clusters(pairs).as[(Long, Long)].collect().toMap
-    val key = "graft.clusters.edge.cap"
-    val old = sys.props.get(key)
-    sys.props(key) = "0"
-    try {
-      val loop = Dedup.clusters(pairs).as[(Long, Long)].collect().toMap
-      assert(fast == loop)
-      assert(fast == expected)
-    } finally old match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
-    }
+    val loop = withCaps("clusters.edge" -> "0")(
+      Dedup.clusters(pairs).as[(Long, Long)].collect().toMap)
+    assert(fast == loop)
+    assert(fast == expected)
   }
 
   test("fast path past the local-relation cap returns identical labels (r21)") {
@@ -117,16 +104,10 @@ class ClustersSpec extends AnyFunSuite {
       .toDF("id_a", "id_b")
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L)
-    val key = "graft.clusters.local.relation.cap"
-    val old = sys.props.get(key)
-    sys.props(key) = "0" // force the parallelized-dataset return
-    try {
-      val got = Dedup.clusters(pairs).as[(Long, Long)].collect().toMap
-      assert(got == expected)
-    } finally old match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
-    }
+    // force the parallelized-dataset return
+    val got = withCaps("clusters.local.relation" -> "0")(
+      Dedup.clusters(pairs).as[(Long, Long)].collect().toMap)
+    assert(got == expected)
   }
 
   test("random graphs match union-find") {
@@ -155,17 +136,30 @@ class ClustersSpec extends AnyFunSuite {
     val pairs = (chain ++ rand ++ Seq((89L, 100L), (500L, 501L), (501L, 500L)))
       .toDF("id_a", "id_b")
     val fast = Dedup.clusters(pairs).as[(Long, Long)].collect().toMap
-    val key = "graft.clusters.edge.cap"
-    val old = sys.props.get(key)
-    sys.props(key) = "0"
-    try {
-      val loop = Dedup.clusters(pairs).as[(Long, Long)].collect().toMap
-      assert(fast == loop)
-    } finally old match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
-    }
+    val loop = withCaps("clusters.edge" -> "0")(
+      Dedup.clusters(pairs).as[(Long, Long)].collect().toMap)
+    assert(fast == loop)
     // sanity: the bridged chain collapses into 89's component
     assert(fast(164L) == fast(89L))
+  }
+
+  test("quotient remap: moved labels identical with the edge cap at 0 and at its default") {
+    // quotient-shaped: distinct long edges between labels, no self
+    // edges, a chain whose min is not its first node, and a bridge
+    val q = Seq((7L, 3L), (3L, 9L), (9L, 12L), (40L, 41L), (12L, 40L),
+      (100L, 55L), (200L, 201L)).toDF("id_a", "id_b")
+    def moved(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long)].collect().toSet
+    def hinted(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.toString.contains("ResolvedHint")
+    val driver = Dedup.quotientRemap(q)
+    val atDefault = moved(driver)
+    val loop = withCaps("clusters.edge" -> "0")(Dedup.quotientRemap(q))
+    val atZero = moved(loop)
+    assert(atDefault == atZero)
+    assert(atDefault == Set(7L -> 3L, 9L -> 3L, 12L -> 3L, 40L -> 3L,
+      41L -> 3L, 100L -> 55L, 201L -> 200L))
+    // a driver closure is broadcast; the loop's labels join plainly
+    assert(hinted(driver) && !hinted(loop))
   }
 }

@@ -1,13 +1,16 @@
 package graft
 
+import org.apache.spark.graftspec.Jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.graftspec.CacheEntries
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, Similarity}
+import graft.Caps.withCaps
+import graft.operators.{DriverGate, Similarity}
 
-/** `Similarity.pagerankFromEdges` has a driver path (edges at or under
-  * `Dedup.ClustersLocalRelationCap`, iterated on collected arrays) and a
+/** `Similarity.pagerankFromEdges` has a driver path (edges within the
+  * `clusters.local.relation` gate, iterated on collected arrays) and a
   * distributed path (one join + sum per round). On generated graphs,
   * malformed edges included, both must give the same (vec_id, pagerank)
   * rows, doubles compared exactly. */
@@ -30,12 +33,11 @@ class PagerankPathSpec extends AnyFunSuite {
   private def bothPaths(edges: DataFrame, ids: DataFrame, iters: Int) = {
     val (driver, driverAggregates) = run(edges, ids, iters)
     assert(!driverAggregates, "driver path planned an aggregate")
-    System.setProperty("graft.clusters.local.relation.cap", "-1")
     val (distributed, distAggregates) =
-      try {
-        assert(Dedup.ClustersLocalRelationCap == -1)
+      withCaps("clusters.local.relation" -> "-1") {
+        assert(DriverGate.cap("clusters.local.relation") == -1)
         run(edges, ids, iters)
-      } finally System.clearProperty("graft.clusters.local.relation.cap")
+      }
     assert(distAggregates, "distributed path planned no aggregate")
     (driver, distributed)
   }
@@ -108,14 +110,16 @@ class PagerankPathSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       Similarity.pagerankFromEdges(edges, ids, 0, Damping))
     assert(e.getMessage.contains("at least one iteration"))
-    System.setProperty("graft.clusters.local.relation.cap", "-1")
-    try intercept[IllegalArgumentException](
-      Similarity.pagerankFromEdges(edges, ids, 0, Damping))
-    finally System.clearProperty("graft.clusters.local.relation.cap")
+    withCaps("clusters.local.relation" -> "-1")(
+      intercept[IllegalArgumentException](
+        Similarity.pagerankFromEdges(edges, ids, 0, Damping)))
     val emb = Seq((1L, Array.fill(64)(0.5f)), (2L, Array.tabulate(64)(_.toFloat)))
       .toDF("vec_id", "embedding")
-    // the bracket drops the graph persist knnPagerank makes before the check
-    Similarity.cached(intercept[IllegalArgumentException](
-      Similarity.knnPagerank(emb, 5, iters = 0)))
+    // knnPagerank refuses before it builds the graph: no job, no cache entry
+    val before = CacheEntries(spark)
+    val (_, jobs) = Jobs.during(spark.sparkContext)(
+      intercept[IllegalArgumentException](Similarity.knnPagerank(emb, 5, iters = 0)))
+    assert(jobs.isEmpty, s"${jobs.size} jobs")
+    assert(CacheEntries(spark) - before == 0)
   }
 }

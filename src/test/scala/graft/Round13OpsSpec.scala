@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Dedup
+import graft.Caps.withCaps
+import graft.operators.{Dedup, DriverGate}
 
 /** Round-13: the composed exact-first SEMANTIC order
   * ([[Dedup.semanticKeepersDedup]]) and the delta pass's
@@ -247,14 +248,13 @@ class Round13OpsSpec extends AnyFunSuite {
     val old = emb.filter(col("vec_id") % 3 =!= 0)
     val delta = emb.filter(col("vec_id") % 3 === 0)
     val full = asn(Dedup.semanticKeepers(emb, tau))
-    // force the capped collect to refuse: every quotient closes
-    // through the distributed clusters() path instead
-    System.setProperty("graft.quotient.edge.cap", "-1")
-    try {
-      assert(Dedup.QuotientEdgeCap == -1)
+    // force the edge gate to refuse: every quotient closes through the
+    // distributed clusters() loop instead
+    withCaps("clusters.edge" -> "-1") {
+      assert(DriverGate.cap("clusters.edge") == -1)
       val r = Dedup.semanticKeepersDelta(Dedup.semanticStore(old, tau), delta)
       assert(asn(r.assignment) == full)
-    } finally System.clearProperty("graft.quotient.edge.cap")
+    }
   }
 
   // the best-delta and retract paths close their quotient on a helper
@@ -264,13 +264,11 @@ class Round13OpsSpec extends AnyFunSuite {
     df.select(col("vec_id"), col("keep_id"), col("is_dup"))
       .as[(Long, Long, Int)].collect().toSet
 
-  private def underForcedQuotientFallback[T](body: => T): T = {
-    System.setProperty("graft.quotient.edge.cap", "-1")
-    try {
-      assert(Dedup.QuotientEdgeCap == -1)
+  private def underForcedQuotientFallback[T](body: => T): T =
+    withCaps("clusters.edge" -> "-1") {
+      assert(DriverGate.cap("clusters.edge") == -1)
       body
-    } finally System.clearProperty("graft.quotient.edge.cap")
-  }
+    }
 
   test("semanticKeepersBestDelta: distributed-closure fallback == driver union-find == rebuild") {
     val emb = graft.sources.Tables.embeddings(spark, dir)

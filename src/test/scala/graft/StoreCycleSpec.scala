@@ -17,11 +17,13 @@ class StoreCycleSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.get
   val d = "/root/testdata/sf0.001"
 
-  /** Jobs per cycle on this fixture: measured 79 in each of 3 cycles on
-    * 4 cores with PageRank iterated on the driver (96 with its three
-    * rounds as Spark joins, 141 with the session persists this spec
-    * rules out). Raise it only with a CHANGES.md entry that gives the
-    * measured reason. */
+  /** Jobs per cycle on this fixture: measured 81 in each of 3 cycles on
+    * 4 cores with the quotient closed through `clusters`' gate probe and
+    * collect (79 with one `limit(cap+1).collect()`, 83 with an eager
+    * pair checkpoint before the probe), PageRank iterated on the driver
+    * (96 with its three rounds as Spark joins), and no session persist
+    * (141 with them). Raise it only with a CHANGES.md entry that gives
+    * the measured reason. */
   private val JobBudget = 83
 
   test("a semantic-best store cycle leaves nothing cached, within a job budget") {
